@@ -1,7 +1,11 @@
 package graft.engine
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement,
+  Project, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 
 /** Spark-native re-expression of Mallard's Flight-server capability
@@ -79,14 +83,7 @@ final class Engine(val spark: SparkSession) {
     */
   def mutationStamp: (Long, Long) = (catalog.version.get, epoch.get)
 
-  // ---- A1/A2: GET — SQL routed by leading keyword ----------------------
-
-  private val ddlPrefixes = Seq("CREATE", "DROP", "ALTER")
-
-  private def isDdl(sql: String): Boolean = {
-    val u = sql.trim.toUpperCase
-    ddlPrefixes.exists(u.startsWith)
-  }
+  // ---- A1/A2: GET — SQL routed by Spark's parsed plan ------------------
 
   /** Commands that inspect state without mutating it, classified by
     * class-name prefix so new SHOW/DESCRIBE variants stay covered.
@@ -95,96 +92,120 @@ final class Engine(val spark: SparkSession) {
     name.startsWith("Explain") || name.startsWith("Show") ||
       name.startsWith("Describe") || name.startsWith("Desc")
 
-  /** (isPure, isPlainQuery) per statement text, decided from the PARSED
-    * plan, not the leading keyword. Keyword sniffing has a real hole:
-    * Spark's grammar allows `WITH t AS (…) INSERT INTO …` — a DML
-    * statement whose first keyword is `WITH`. Treating it as pure would
-    * (a) skip the epoch bump, so TcpGate's Arrow cache keeps serving
-    * pre-mutation bytes (silent stale read), and (b) let the statement
-    * itself be cached, replaying the GET bytes WITHOUT re-executing the
-    * write. Parsing finds the `InsertIntoStatement` under the CTE node.
+  /** Spark's parse of `sql`, or the parser's error. */
+  private def parse(sql: String): Either[Throwable, LogicalPlan] =
+    try Right(spark.sessionState.sqlParser.parsePlan(sql))
+    catch { case NonFatal(t) => Left(t) }
+
+  /** What a statement's PARSED plan says about it — not its leading
+    * keyword. Keyword sniffing has a real hole: Spark's grammar allows
+    * `WITH t AS (…) INSERT INTO …` — a DML statement whose first keyword
+    * is `WITH`. Treating it as pure would (a) skip the epoch bump, so
+    * TcpGate's Arrow cache keeps serving pre-mutation bytes (silent
+    * stale read), and (b) let the statement itself be cached, replaying
+    * the GET bytes WITHOUT re-executing the write. Parsing finds the
+    * `InsertIntoStatement` under the CTE node.
     *
-    *  - isPure: no node in the tree is a mutating `Command` or DML
+    *  - pure: no node in the tree is a mutating `Command` or DML
     *    `ParsedStatement`. SHOW/DESCRIBE/EXPLAIN are commands but
     *    read-only, so they stay pure (no epoch bump).
-    *  - isPlainQuery: no command node AT ALL — the only statements
+    *  - plainQuery: no command node AT ALL — the only statements
     *    TcpGate may install in its Arrow result cache. SHOW/DESCRIBE
     *    output is driver-formatted metadata; cheap, not worth caching.
+    *  - scan: the table a bare full-table scan reads (`TABLE t`,
+    *    `SELECT * FROM t`, any spelling, comments or backticks), as
+    *    written — TcpGate's per-table cache key.
     *
-    * Unparseable text (wire verbs, DuckDB-dialect COPY) classifies
-    * (false, false) — erring non-pure is always sound: the cost is a
-    * cold cache, never a wrong result. Memoized because the gate asks
-    * once for cacheability and once for the epoch decision per
-    * statement, and serving workloads repeat statement texts heavily.
+    * Unparseable text (wire verbs, DuckDB-dialect COPY) is neither pure
+    * nor plain — erring non-pure is always sound: the cost is a cold
+    * cache, never a wrong result.
+    */
+  private case class Shape(pure: Boolean, plainQuery: Boolean, scan: Option[String])
+
+  private def shape(parsed: Either[Throwable, LogicalPlan]): Shape = parsed match {
+    case Left(_) => Shape(pure = false, plainQuery = false, scan = None)
+    case Right(plan) =>
+      val hasCommand = plan.exists {
+        case _: Command | _: ParsedStatement => true
+        case _                               => false
+      }
+      val mutating = plan.exists {
+        case c if isReadOnlyCommand(c.getClass.getSimpleName) => false
+        case _: Command | _: ParsedStatement                  => true
+        case _                                                => false
+      }
+      val scan = plan match {
+        case UnresolvedRelation(Seq(t), _, false) => Some(t)
+        case Project(Seq(UnresolvedStar(None)), UnresolvedRelation(Seq(t), _, false)) => Some(t)
+        case _ => None
+      }
+      Shape(!mutating, !hasCommand, scan)
+  }
+
+  /** [[shape]] per statement text, memoized because the gate asks for
+    * cacheability, the scan key and the epoch decision per statement,
+    * and serving workloads repeat statement texts heavily.
     */
   private val classifyMemo =
-    new java.util.LinkedHashMap[String, (Boolean, Boolean)](128, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Boolean, Boolean)]): Boolean =
+    new java.util.LinkedHashMap[String, Shape](128, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Shape]): Boolean =
         size > 4096
     }
 
-  private def classify(sql: String): (Boolean, Boolean) = {
+  private def classify(sql: String): Shape = {
     val hit = classifyMemo.synchronized(classifyMemo.get(sql))
     if (hit != null) hit
     else {
-      import org.apache.spark.sql.catalyst.plans.logical.{Command, ParsedStatement}
-      val r =
-        try {
-          val plan = spark.sessionState.sqlParser.parsePlan(sql)
-          val hasCommand = plan.exists {
-            case _: Command | _: ParsedStatement => true
-            case _                               => false
-          }
-          val mutating = plan.exists {
-            case c if isReadOnlyCommand(c.getClass.getSimpleName) => false
-            case _: Command | _: ParsedStatement                  => true
-            case _                                                => false
-          }
-          (!mutating, !hasCommand)
-        } catch { case scala.util.control.NonFatal(_) => (false, false) }
+      val r = shape(parse(sql))
       classifyMemo.synchronized(classifyMemo.put(sql, r))
       r
     }
   }
 
   /** True iff the statement cannot mutate engine-visible state. */
-  def isPureQuery(sql: String): Boolean = classify(sql)._1
+  def isPureQuery(sql: String): Boolean = classify(sql).pure
 
   /** True iff the statement parses to a plain query plan (no command
     * nodes) — the precondition for TcpGate's Arrow result cache.
     */
-  def isCacheableQuery(sql: String): Boolean = classify(sql)._2
+  def isCacheableQuery(sql: String): Boolean = classify(sql).plainQuery
 
-  /** Run any SQL. DML/DDL verbs the catalog can rewrite (`UPDATE`/
-    * `DELETE`/`INSERT`/`ALTER` on catalog tables, which Mallard's
-    * router passes verbatim to DuckDB, `flight_server.py:320-331`,
-    * `:354-355`) execute as functional catalog rewrites (see
-    * [[SqlVerbs]]) and return a one-row `{status: "OK"}` frame
-    * (`flight_server.py:357-359`); unclaimed DDL (detected by prefix,
-    * mirroring `_is_ddl_statement`) goes to `spark.sql` for side
-    * effects and returns the same status row; everything else returns
-    * the lazy query result. Spark's parser replaces Mallard's keyword
-    * sniffing, but the routing contract (statement → side effect +
-    * status row, query → stream) is preserved.
+  /** The single-part table a bare full-table scan reads, as written. */
+  private[engine] def scannedTable(sql: String): Option[String] = classify(sql).scan
+
+  /** Run any SQL. The statement is parsed once; DML/DDL verbs the
+    * catalog can rewrite (`UPDATE`/`DELETE`/`INSERT`/`MERGE`/`ALTER` on
+    * catalog tables, plus DuckDB's `COPY … TO` and `INSERT … ON
+    * CONFLICT`, which Mallard's router passes verbatim to DuckDB,
+    * `flight_server.py:320-331`, `:354-355`) execute as functional
+    * catalog rewrites on that plan (see [[SqlVerbs]]) and return a
+    * one-row `{status: "OK"}` frame (`flight_server.py:357-359`).
+    * Everything else runs on the same parsed plan, as `spark.sql` would
+    * run it: a statement whose plan is not pure (DDL, SET, CACHE, DML on
+    * Spark-catalog tables, SQL scripts) runs for its side effects, bumps
+    * the epoch and returns the same status row; a pure one returns the
+    * lazy query result; unparseable text bumps the epoch and raises the
+    * parser's error. Spark's
+    * parser replaces Mallard's keyword sniffing (`_is_ddl_statement`),
+    * but the routing contract (statement → side effect + status row,
+    * query → stream) is preserved.
     */
-  def query(sql: String): DataFrame =
-    SqlVerbs.execute(this, sql).getOrElse {
-      if (isDdl(sql)) {
+  def query(sql: String): DataFrame = {
+    val parsed = parse(sql)
+    def run(): DataFrame = parsed.fold(throw _, GraftBridge.ofRows(spark, _))
+    SqlVerbs.execute(this, sql, parsed).getOrElse {
+      if (shape(parsed).pure) run()
+      else {
+        // any non-pure statement invalidates cached results, even
+        // though the catalog counter can't see it. Commands execute
+        // eagerly when their frame is built; the routing contract
+        // returns the status row.
         epoch.incrementAndGet()
-        spark.sql(sql)
+        run()
         statusOk
-      } else if (!isPureQuery(sql)) {
-        // any non-pure statement — INSERT INTO a raw-DDL table, a
-        // WITH-prefixed DML (`WITH t AS (…) INSERT INTO …`), SET,
-        // MERGE, CACHE … — invalidates cached results, even though the
-        // catalog counter can't see it. Commands execute eagerly in
-        // spark.sql; the routing contract returns the status row.
-        epoch.incrementAndGet()
-        spark.sql(sql)
-        statusOk
-      } else spark.sql(sql)
+      }
     }
+  }
 
   def statusOk: DataFrame = spark.range(1).select(lit("OK").as("status"))
 
@@ -224,19 +245,20 @@ final class Engine(val spark: SparkSession) {
     * `flight_server.py:402-427`); a wire protocol can't ship JVM
     * closures, but it can ship SQL, which covers the overwhelming share
     * of real transforms. The SQL text sees the exchange input as the
-    * relation `__input__`; the input is registered under a collision-free
-    * temp name for exactly the duration of analysis (spark.sql resolves
-    * eagerly), then dropped, so concurrent exchanges cannot cross wires.
+    * relation `__input__`: each call parses the text afresh (plan nodes
+    * are never shared across concurrent exchanges) and binds every
+    * `__input__` relation reference — in subqueries and CTEs too, never
+    * inside a string literal — to the input's plan.
     */
   def registerSqlExchanger(name: String, sqlText: String): Unit =
     registerExchanger(name) { df =>
-      val v = s"graft_xin_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-      val local = org.apache.spark.sql.GraftBridge.rebind(spark, df)
-      local.createOrReplaceTempView(v)
-      // quote-aware substitution: '__input__' inside a string literal
-      // is data, not a relation reference
-      try spark.sql(SqlVerbs.replaceIdent(sqlText, "__input__", v))
-      finally org.apache.spark.sql.GraftBridge.dropTempView(spark, v)
+      val input = SubqueryAlias("__input__", df.queryExecution.analyzed)
+      def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+        case UnresolvedRelation(Seq(n), _, _) if n.equalsIgnoreCase("__input__") => input
+        case w: UnresolvedWith => w.copy(cteRelations =
+          w.cteRelations.map { case (n, q, d) => (n, q.copy(child = bind(q.child)), d) })
+      }
+      GraftBridge.ofRows(spark, bind(spark.sessionState.sqlParser.parsePlan(sqlText)))
     }
 
   def exchangerCommands: Seq[String] = exchangers.keys.toSeq.sorted

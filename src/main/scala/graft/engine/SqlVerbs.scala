@@ -1,38 +1,72 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.Try
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.analysis._
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal, PredicateHelper,
+  SubqueryExpression}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** DML verb routing for `Engine.query` — reference parity with
   * Mallard's router, which hands `UPDATE` / `DELETE` / `INSERT`
   * statements verbatim to DuckDB (`flight_server.py:320-331`).
   *
   * Spark has no mutable temp views, so the verbs are re-expressed as
-  * *functional* catalog rewrites: parse the statement's skeleton
-  * (target table, SET/WHERE/source clauses), parse the scalar pieces
-  * with Spark's own `expr()` parser, build the post-statement
-  * DataFrame, and swap it into the `Catalog` (view-replacement).
-  * Readers see exactly what they would see after an in-place mutation;
-  * the plan stays lazy, so Catalyst optimizes through the rewrite
-  * (e.g. a later filter pushes below the UPDATE's projection).
+  * *functional* catalog rewrites: take the statement's pieces from the
+  * plan Spark's parser built (target, SET/WHERE expressions, source
+  * query), build the post-statement DataFrame from them, and swap it
+  * into the `Catalog` (view-replacement). Readers see exactly what they
+  * would see after an in-place mutation; the plan stays lazy, so
+  * Catalyst optimizes through the rewrite (e.g. a later filter pushes
+  * below the UPDATE's projection).
   *
-  * Routing contract: this layer claims a statement ONLY when (a) its
-  * skeleton matches the simple form the catalog can rewrite AND (b)
-  * the target is a catalog table. Anything else — `INSERT OVERWRITE`,
-  * qualified names, a target that lives in Spark's own catalog —
-  * returns None and falls through to `spark.sql`, so no statement
-  * that worked before this layer existed can regress.
+  * Routing contract: `Engine.query` parses each statement once and
+  * hands the plan here. This layer dispatches on the node Spark
+  * returns — `UpdateTable`, `DeleteFromTable`, `InsertIntoStatement`
+  * (also under a leading `WITH`), `MergeIntoTable`, `AddColumns`,
+  * `DropColumns`, `RenameColumn`, `RenameTable` — and claims the
+  * statement ONLY when its target is a single-part catalog table.
+  * Anything else — `INSERT OVERWRITE`, qualified names, a target that
+  * lives in Spark's own catalog — returns None and falls through to
+  * `spark.sql`, so no statement that worked before this layer existed
+  * can regress. Backticks, comments and CTE prefixes are the parser's
+  * business, not ours.
   *
-  * The skeleton scan is top-level-aware (parens, single- AND
-  * double-quoted strings, backslash escapes), so `WHERE`/`,`/`=`
-  * inside subqueries, function calls, or string literals do not
-  * confuse it. Statement-level SQL semantics are preserved
-  * deliberately:
+  * Five DuckDB-only forms that Spark's parser rejects keep a small
+  * front, keyed on where the parser stopped (`ParseException` line and
+  * position):
+  *  - `COPY t TO '<path>' …` — matched whole by [[CopyRe]];
+  *  - `INSERT … ON CONFLICT …` — the parser stops at that `ON`; the
+  *    head re-parses as a plain INSERT, the tail is [[ConflictRe]] and
+  *    its DO UPDATE list re-parses as `UPDATE t SET <list>`;
+  *  - `WHEN MATCHED BY TARGET` — the parser stops at `BY`; rejected
+  *    naming the construct (SQL:2023 allows BY TARGET only after NOT
+  *    MATCHED, which Spark parses);
+  *  - `ADD [COLUMN] IF NOT EXISTS` — the parser stops at `EXISTS`; the
+  *    `IF NOT EXISTS` is stripped by [[AddIfNotExistsRe]] and the rest
+  *    re-parsed;
+  *  - MERGE `THEN INSERT VALUES (…)` without a column list — the parser
+  *    stops at `VALUES`; the target's columns are spliced in before it
+  *    and the statement re-parsed.
+  *
+  * Column references resolve the way Spark resolves any query: the
+  * target frame is aliased by its alias (or its own name), so `t.c` is
+  * the target's column at the top level and an outer reference inside a
+  * correlated subquery, while a bare name there binds to the innermost
+  * relation first. Only the source row of a MERGE (`s.c`) and the
+  * incoming row of an upsert (`excluded.c`) are renamed, on the parsed
+  * name parts.
+  *
+  * Statement-level SQL semantics are preserved deliberately:
   *  - all `SET` expressions evaluate against PRE-update rows (one
   *    simultaneous projection, not a `withColumn` chain);
-  *  - a SET/INSERT column that does not exist in the target errors
-  *    (DuckDB raises a binder error; silently dropping an assignment
-  *    while answering OK would be corruption);
+  *  - a SET/INSERT column that does not exist in the target errors,
+  *    and so does one assigned or listed twice (DuckDB raises a binder
+  *    error; silently dropping an assignment while answering OK would
+  *    be corruption — the parser accepts both);
   *  - `DELETE … WHERE c` removes rows where `c` IS TRUE — rows where
   *    `c` is NULL survive;
   *  - updated columns cast back to their declared type (a DuckDB
@@ -45,37 +79,541 @@ import org.apache.spark.sql.functions._
   *    mutator lock (`Catalog.replaceWith`), so a concurrent PUT can
   *    neither interleave nor be lost.
   */
-private[graft] object SqlVerbs {
+private[graft] object SqlVerbs extends PredicateHelper {
 
-  /** Execute `sqlText` if it is a DML verb this layer can rewrite;
-    * None → not claimed, caller falls through to `spark.sql`.
+  /** Execute the statement if this layer claims it. `parsed` is
+    * Spark's parse of `sqlText`, or the parser's error. None → not
+    * claimed, the caller falls through to `spark.sql`.
     */
-  def execute(engine: Engine, sqlText: String): Option[DataFrame] = {
-    val t = sqlText.trim
-    t.split("\\s+", 2)(0).toUpperCase match {
-      case "UPDATE" => update(engine, t).map(_ => engine.statusOk)
-      case "DELETE" => delete(engine, t).map(_ => engine.statusOk)
-      case "INSERT" => insert(engine, t).map(_ => engine.statusOk)
-      case "MERGE"  => merge(engine, t).map(_ => engine.statusOk)
-      case "ALTER"  => alter(engine, t).map(_ => engine.statusOk)
-      case "COPY"   => copy(engine, t)
-      case _        => None
+  def execute(e: Engine, sqlText: String,
+      parsed: Either[Throwable, LogicalPlan]): Option[DataFrame] = parsed match {
+    case Right(plan)               => dispatch(e, sqlText, plan).map(_ => e.statusOk)
+    case Left(err: ParseException) => front(e, sqlText, err)
+    case Left(_)                   => None
+  }
+
+  private def dispatch(e: Engine, sql: String, plan: LogicalPlan): Option[Unit] = plan match {
+    case UpdateTable(tgt, sets, cond) =>
+      target(e, tgt).map { case (t, q) => update(e, sql, t, q, sets, cond) }
+    case DeleteFromTable(tgt, cond) =>
+      target(e, tgt).map { case (t, q) => delete(e, t, q, cond) }
+    case Insert(ins, source) => insert(e, sql, ins, source, None)
+    case m: MergeIntoTable =>
+      target(e, m.targetTable).map { case (t, q) => merge(e, sql, t, q, m) }
+    case AddColumns(tgt, cols) =>
+      target(e, tgt).flatMap { case (t, _) => addColumns(e, t, cols, ifNotExists = false) }
+    case DropColumns(tgt, cols, ifExists) =>
+      for ((t, _) <- target(e, tgt); names <- simpleNames(cols)) yield dropColumns(e, t, names, ifExists)
+    case RenameColumn(tgt, UnresolvedFieldName(Seq(from)), to) =>
+      target(e, tgt).map { case (t, _) => renameColumn(e, t, from, to) }
+    case RenameTable(tgt, Seq(to), _) =>
+      target(e, tgt).map { case (t, _) => e.catalog.rename(t, to) }
+    case _ => None
+  }
+
+  /** (catalog table, the name that qualifies its columns: its alias or
+    * its own name) when `plan` names a single-part catalog table,
+    * optionally aliased — the claim condition. Qualified names and
+    * unmanaged tables → None.
+    */
+  private def target(e: Engine, plan: LogicalPlan): Option[(String, String)] = plan match {
+    case SubqueryAlias(alias, child) => target(e, child).map { case (t, _) => (t, alias.name) }
+    case UnresolvedRelation(Seq(t), _, _) if e.catalog.contains(t)   => Some((t, t))
+    case UnresolvedTable(Seq(t), _, _) if e.catalog.contains(t)      => Some((t, t))
+    case UnresolvedTableOrView(Seq(t), _, _) if e.catalog.contains(t) => Some((t, t))
+    case _ => None
+  }
+
+  /** An INSERT and its source plan; a leading `WITH` stays attached to
+    * the source, where its CTEs are in scope.
+    */
+  private object Insert {
+    def unapply(plan: LogicalPlan): Option[(InsertIntoStatement, LogicalPlan)] = plan match {
+      case i: InsertIntoStatement                          => Some((i, i.query))
+      case w @ UnresolvedWith(i: InsertIntoStatement, _, _) => Some((i, w.copy(child = i.query)))
+      case _                                               => None
     }
   }
 
-  // ---- COPY <table> TO '<path>' [(FORMAT …[, HEADER …])] ---------------
-  // The reference's export path: `COPY flights_temp TO '<f>' (FORMAT
-  // PARQUET)` (`demo.py:233`) — DuckDB syntax, which Spark's parser
-  // rejects outright. Claimed only for catalog tables with a format
-  // this engine can write; anything else (COPY FROM, SELECT sources,
-  // partition options) falls through and raises Spark's parse error.
-  // Like DuckDB, the result is a one-row `Count` of rows written.
+  // ---- names and expressions from the parsed plan -----------------------
 
+  /** The target column a SET or INSERT list entry names, unqualified
+    * when `q` (the target's alias or name) qualifies it.
+    */
+  private def colName(q: String)(key: Expression): String = key match {
+    case UnresolvedAttribute(Seq(a, c)) if a.equalsIgnoreCase(q) => c
+    case UnresolvedAttribute(parts)                              => parts.mkString(".")
+    case other                                                   => other.sql
+  }
+
+  /** `ex` as a Column, with `qual.c` renamed to the single-part `to(c)`
+    * (`s.c` → `__src_c`, `excluded.c` → `__excluded_c`). The rewrite
+    * works on the parsed name parts, so literals and comments are never
+    * touched, and reaches into subqueries — except one that binds
+    * `qual` itself (`FROM x AS s`), where the name is the subquery's own.
+    */
+  private def column(ex: Expression, qual: String, to: String => String): Column = {
+    val attr: PartialFunction[Expression, Expression] = {
+      case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(qual) => UnresolvedAttribute(Seq(to(c)))
+    }
+    def binds(p: LogicalPlan) = p.collectWithSubqueries {
+      case SubqueryAlias(a, _) if a.name.equalsIgnoreCase(qual) => ()
+      case UnresolvedRelation(parts, _, _) if parts.last.equalsIgnoreCase(qual) => ()
+    }.nonEmpty
+    GraftBridge.column(ex.transformUp(attr.orElse {
+      case s: SubqueryExpression if !binds(s.plan) =>
+        s.withNewPlan(s.plan.transformAllExpressionsWithSubqueries(attr))
+    }))
+  }
+
+  private def simpleNames(fields: Seq[FieldName]): Option[Seq[String]] =
+    Some(fields.collect { case UnresolvedFieldName(Seq(n)) => n }).filter(_.size == fields.size)
+
+  private def fail(sqlText: String, what: String): Nothing =
+    throw new IllegalArgumentException(s"Cannot parse $what: $sqlText")
+
+  private def unknownColumn(table: String, colName: String, known: Seq[String]): Nothing =
+    throw new IllegalArgumentException(
+      s"Column '$colName' does not exist in table '$table'. Columns: ${known.mkString(", ")}")
+
+  private def requireColumns(table: String, known: Seq[String], names: Seq[String]): Unit =
+    names.find(n => !known.exists(_.equalsIgnoreCase(n))).foreach(unknownColumn(table, _, known))
+
+  private def requireDistinct(names: Seq[String])(msg: String => String): Unit =
+    names.groupBy(_.toLowerCase).collectFirst { case (_, vs) if vs.size > 1 => vs.head }
+      .foreach(c => throw new IllegalArgumentException(msg(c)))
+
+  /** SET list → (unqualified column, value). A column assigned twice
+    * errors: DuckDB raises a binder error, and keeping the last would
+    * drop an assignment while answering OK.
+    */
+  private def setList(sql: String, q: String, sets: Seq[Assignment]): Seq[(String, Expression)] = {
+    val named = sets.map(a => colName(q)(a.key) -> a.value)
+    requireDistinct(named.map(_._1))(c => s"Duplicate assignment to column '$c': $sql")
+    named
+  }
+
+  // ---- UPDATE t SET a = e1, b = e2 [WHERE c] ---------------------------
+
+  private def update(e: Engine, sql: String, table: String, q: String,
+      sets: Seq[Assignment], cond: Option[Expression]): Unit = {
+    val assigns = setList(sql, q, sets)
+    val where = cond.map(GraftBridge.column)
+    // read + swap under the catalog's mutator lock: a concurrent PUT
+    // can neither interleave with the snapshot nor be lost
+    e.catalog.replaceWith(table) { df =>
+      val fields = df.schema.fields.toSeq
+      requireColumns(table, fields.map(_.name), assigns.map(_._1))
+      // one simultaneous projection: every SET expression sees the
+      // pre-update row, matching statement-level UPDATE semantics
+      df.as(q).select(fields.map { f =>
+        assigns.collectFirst { case (c, v) if c.equalsIgnoreCase(f.name) =>
+          val ex = GraftBridge.column(v)
+          where.fold(ex)(w => when(w, ex).otherwise(col(f.name))).cast(f.dataType).as(f.name)
+        }.getOrElse(col(f.name))
+      }: _*)
+    }
+  }
+
+  // ---- DELETE FROM t [WHERE c] -----------------------------------------
+
+  private def delete(e: Engine, table: String, q: String, cond: Expression): Unit =
+    e.catalog.replaceWith(table) { df =>
+      if (cond == Literal.TrueLiteral) df.limit(0) // no WHERE
+      // keep rows where the predicate is FALSE *or* NULL
+      else df.as(q).filter(!coalesce(GraftBridge.column(cond), lit(false)))
+    }
+
+  // ---- INSERT INTO t [(cols)] SELECT …|VALUES … ------------------------
+  //      (+ … ON CONFLICT (keys) DO NOTHING | DO UPDATE SET …)
+
+  /** The raw `ON CONFLICT` pieces: the key list and the text after
+    * `DO UPDATE` (None for DO NOTHING).
+    */
+  private case class Conflict(keys: String, update: Option[String])
+
+  /** Claims ONLY catalog-resident targets. The reference hands INSERT to
+    * DuckDB, which raises a catalog error for a missing table —
+    * create-if-absent is its *PUT* semantic (`flight_server.py:388-400`),
+    * not its SQL semantic. An unmanaged target falls through to
+    * `spark.sql`, which raises the resolution error (or inserts into a
+    * real Spark-catalog table, which is its business).
+    */
+  private def insert(e: Engine, sql: String, ins: InsertIntoStatement, source: LogicalPlan,
+      conflict: Option[Conflict]): Option[Unit] =
+    if (ins.partitionSpec.nonEmpty || ins.overwrite || ins.ifPartitionNotExists || ins.byName) None
+    else target(e, ins.table).map { case (table, _) =>
+      val cols = ins.userSpecifiedCols
+      requireDistinct(cols)(c => s"INSERT lists column '$c' more than once: $sql")
+      val src = GraftBridge.ofRows(e.spark, source)
+      conflict match {
+        case None    => e.catalog.put(table, aligned(table, e.catalog.get(table).schema, cols, src))
+        case Some(c) => upsert(e, sql, table, cols, src, c)
+      }
+    }
+
+  /** `src` positionally renamed onto `cols` (or every target column),
+    * cast to the declared types; unlisted columns are NULL.
+    */
+  private def aligned(table: String, schema: StructType, cols: Seq[String], src: DataFrame): DataFrame = {
+    val order = if (cols.isEmpty) schema.fieldNames.toSeq else cols
+    requireColumns(table, schema.fieldNames.toSeq, order)
+    require(src.columns.length == order.length,
+      s"INSERT expects ${order.length} columns, query produced ${src.columns.length}")
+    src.toDF(order: _*).select(schema.fields.toSeq.map { f =>
+      if (order.exists(_.equalsIgnoreCase(f.name))) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
+  }
+
+  /** Upsert — DuckDB's `INSERT … ON CONFLICT` (the reference routes any
+    * DuckDB SQL, `flight_server.py:320-331`), rewritten functionally:
+    * conflicting target rows get the DO UPDATE projection (SET
+    * expressions see the EXISTING row unqualified or by the table's
+    * name, and the incoming row as `excluded.<col>`, exactly DuckDB's
+    * scoping; an optional WHERE
+    * limits which conflicting rows update), non-conflicting source rows
+    * append, everything else passes through — one catalog swap under
+    * the mutator lock. Graft has no constraint registry, so the ON
+    * CONFLICT column list IS the match key (DuckDB additionally
+    * requires it to name a UNIQUE/PK constraint). Source rows that
+    * collide on the key error for DO UPDATE (DuckDB: "can not update
+    * the same row twice") and dedupe for DO NOTHING (DuckDB keeps the
+    * first in insertion order; which row wins is engine-internal).
+    */
+  private def upsert(e: Engine, sql: String, table: String, cols: Seq[String],
+      src: DataFrame, conflict: Conflict): Unit = {
+    val parser = e.spark.sessionState.sqlParser
+    val keys = conflict.keys.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+      .map(parser.parseMultipartIdentifier(_).mkString("."))
+    if (keys.isEmpty) fail(sql, "ON CONFLICT column list")
+    val doUpdate = conflict.update.map(u =>
+      Try(parser.parsePlan(s"UPDATE t$u")).toOption.collect { case p: UpdateTable => p }
+        .getOrElse(fail(sql, "ON CONFLICT DO UPDATE clause")))
+    e.catalog.replaceWith(table) { df =>
+      val fields = df.schema.fields.toSeq
+      def field(name: String) = fields.find(_.name.equalsIgnoreCase(name))
+        .getOrElse(unknownColumn(table, name, fields.map(_.name)))
+      val keyNames = keys.map(field(_).name)
+      val srcAligned = aligned(table, df.schema, cols, src)
+      // every conflict key must be among the inserted columns — an
+      // unlisted key would make every source row "new" with a NULL key
+      keyNames.find(k => cols.nonEmpty && !cols.exists(_.equalsIgnoreCase(k)))
+        .foreach(k => throw new IllegalArgumentException(
+          s"ON CONFLICT key '$k' is not among the inserted columns: $sql"))
+      val targetKeys = df.select(keyNames.map(col): _*)
+      doUpdate match {
+        case None =>
+          val fresh = srcAligned.dropDuplicates(keyNames).join(targetKeys, keyNames, "left_anti")
+          df.unionByName(fresh)
+        case Some(UpdateTable(_, sets, cond)) =>
+          val assigns = setList(sql, table, sets)
+          requireColumns(table, fields.map(_.name), assigns.map(_._1))
+          // two source rows hitting one target row is a DuckDB error,
+          // not a nondeterministic last-writer-wins
+          if (srcAligned.groupBy(keyNames.map(col): _*).count()
+              .filter(col("count") > 1).limit(1).count() > 0)
+            throw new IllegalArgumentException(
+              s"ON CONFLICT DO UPDATE source contains duplicate conflict-key rows " +
+                s"(DuckDB: can not update the same row twice): $sql")
+          // the incoming row is exposed as __excluded_<col>
+          def ex(x: Expression) = column(x, "excluded", c => s"__excluded_${field(c).name}")
+          val exc = srcAligned
+            .select(fields.map(f => col(f.name).as(s"__excluded_${f.name}")): _*)
+            .withColumn("__graft_matched", lit(true))
+          val on = keyNames.map(k => col(k) === col(s"__excluded_$k")).reduce(_ && _)
+          val matched0 = coalesce(col("__graft_matched"), lit(false))
+          val matched = cond.fold(matched0)(w => matched0 && coalesce(ex(w), lit(false)))
+          val proj = fields.map { f =>
+            assigns.collectFirst { case (c, v) if c.equalsIgnoreCase(f.name) =>
+              when(matched, ex(v)).otherwise(col(f.name)).cast(f.dataType).as(f.name)
+            }.getOrElse(col(f.name))
+          }
+          val updated = df.as(table).join(exc, on, "left").select(proj: _*)
+          updated.unionByName(srcAligned.join(targetKeys, keyNames, "left_anti"))
+      }
+    }
+  }
+
+  // ---- MERGE INTO t USING src ON cond WHEN [NOT] MATCHED … --------------
+
+  /** `MERGE INTO` — the general WHEN MATCHED / WHEN NOT MATCHED form
+    * the `ON CONFLICT` upsert cannot express (conditional updates,
+    * matched DELETE, a source relation with its own column names).
+    * Rewritten functionally like every other verb: one catalog swap
+    * under the mutator lock whose DataFrame encodes the statement's
+    * semantics.
+    *
+    * ANSI semantics preserved deliberately:
+    *  - clauses apply FIRST-MATCH-WINS in statement order, per row;
+    *  - a source that matches one target row more than once errors
+    *    (the standard's cardinality violation; DuckDB: "can not
+    *    update the same row twice") instead of non-deterministic
+    *    last-writer-wins;
+    *  - UPDATE SET expressions see the PRE-merge target row
+    *    (unqualified, or qualified by the target's alias, else its
+    *    name) and the source row (source-qualified) simultaneously;
+    *  - WHEN NOT MATCHED INSERT aligns its column list (every target
+    *    column when it has none) and casts to declared types; unlisted
+    *    columns become NULL.
+    *
+    * Claimed subset: catalog-table target, a source that is a table or
+    * an aliased subquery, and an ON condition that is a conjunction of
+    * `target.col = source.col` equalities — the match-key form every
+    * production MERGE uses, and the one a functional rewrite can verify
+    * the cardinality rule against. A non-equi ON errors loudly (a
+    * silent fall-through to spark.sql would produce a confusing error
+    * for a statement this layer DID recognize as MERGE). `WHEN [NOT]
+    * MATCHED BY SOURCE` and the `*` actions error the same way.
+    *
+    * At 100 TB the shape is one shuffled equi-join on the merge key
+    * plus one anti-join — exactly the MERGE plan Delta/Iceberg
+    * execute — with the first-match-wins projection a per-row
+    * CASE chain, never a second pass.
+    */
+  private def merge(e: Engine, sql: String, table: String, tq: String,
+      m: MergeIntoTable): Unit = {
+    if (m.notMatchedBySourceActions.nonEmpty)
+      throw new IllegalArgumentException(
+        "MERGE: WHEN [NOT] MATCHED BY SOURCE is not supported " +
+          s"(matched/not-matched-by-target clauses only): $sql")
+    val sAlias = m.sourceTable match {
+      case SubqueryAlias(alias, _)         => alias.name
+      case UnresolvedRelation(parts, _, _) => parts.last
+      case _                               => fail(sql, "source alias (required)")
+    }
+    val src = GraftBridge.ofRows(e.spark, m.sourceTable)
+    val sCols = src.columns.toSeq
+    e.catalog.replaceWith(table) { df =>
+      val fields = df.schema.fields.toSeq
+      val known = fields.map(_.name)
+      def tField(n: String) = fields.find(_.name.equalsIgnoreCase(n))
+        .getOrElse(unknownColumn(table, n, known))
+      def sCol(n: String) = sCols.find(_.equalsIgnoreCase(n))
+        .getOrElse(throw new IllegalArgumentException(s"MERGE source has no column '$n': $sql"))
+      // the source row is exposed as __src_<col>; the target, aliased
+      // `tq`, resolves its own names
+      def named(x: Expression) = column(x, sAlias, c => s"__src_${sCol(c)}")
+      def side(x: Expression): Option[Either[String, String]] = x match {
+        case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(tq)           => Some(Left(tField(c).name))
+        case UnresolvedAttribute(Seq(q, c)) if q.equalsIgnoreCase(sAlias)       => Some(Right(sCol(c)))
+        case UnresolvedAttribute(Seq(c)) if known.exists(_.equalsIgnoreCase(c)) => Some(Left(tField(c).name))
+        case UnresolvedAttribute(Seq(c)) if sCols.exists(_.equalsIgnoreCase(c)) => Some(Right(sCol(c)))
+        case _ => None
+      }
+      // (target column, source column) per ON conjunct
+      val keys: Seq[(String, String)] = splitConjunctivePredicates(m.mergeCondition).map {
+        case EqualTo(a, b) => (side(a), side(b)) match {
+          case (Some(Left(t)), Some(Right(s))) => (t, s)
+          case (Some(Right(s)), Some(Left(t))) => (t, s)
+          case _ => fail(sql, "target.col = source.col ON conjunct")
+        }
+        case _ => fail(sql, "equi-join ON condition")
+      }
+      // matched actions: (predicate, Some(SET list) | None for DELETE)
+      val acts = m.matchedActions.map {
+        case UpdateAction(p, sets, _) =>
+          val assigns = setList(sql, tq, sets)
+          requireColumns(table, known, assigns.map(_._1))
+          (p, Some(assigns))
+        case DeleteAction(p) => (p, None)
+        case _               => fail(sql, "WHEN MATCHED action")
+      }
+      val inserts = m.notMatchedActions.map {
+        case InsertAction(p, sets) =>
+          val cols = sets.map(a => colName(tq)(a.key) -> a.value)
+          requireDistinct(cols.map(_._1))(c => s"INSERT lists column '$c' more than once: $sql")
+          requireColumns(table, known, cols.map(_._1))
+          (p, cols)
+        case _ => fail(sql, "WHEN NOT MATCHED action")
+      }
+      def pred(p: Option[Expression]): Column =
+        p.map(x => coalesce(named(x), lit(false))).getOrElse(lit(true))
+      // ANSI cardinality rule: a TARGET row touched by two source
+      // rows errors. Checked on exactly that set — source rows that
+      // match at least one target row (the semi join) — so duplicate
+      // NOT-MATCHED keys insert freely and NULL keys (which an
+      // equi-join can never match) pass through, both per the
+      // standard. SKIPPED for insert-only statements (no WHEN MATCHED
+      // clause): the violation exists only when a target row would be
+      // updated or deleted more than once — an insert-only MERGE
+      // touches no matched row, and ANSI/DuckDB raise nothing there.
+      if (acts.nonEmpty) {
+        val tgtKeys = df.select(keys.map { case (t, s) => col(t).as(s) }: _*).dropDuplicates()
+        val matchingSrc = src.select(keys.map(k => col(k._2)): _*)
+          .join(tgtKeys, keys.map(_._2), "left_semi")
+        if (matchingSrc.groupBy(keys.map(k => col(k._2)): _*).count()
+            .filter(col("count") > 1).limit(1).count() > 0)
+          throw new IllegalArgumentException(
+            s"MERGE source matches a target row more than once " +
+              s"(DuckDB: can not update the same row twice): $sql")
+      }
+      val srcR = src
+        .select(sCols.map(c => col(c).as(s"__src_$c")): _*)
+        .withColumn("__graft_matched", lit(true))
+      val joinCond = keys.map { case (t, s) => col(t) === col(s"__src_$s") }.reduce(_ && _)
+      val matchedC = coalesce(col("__graft_matched"), lit(false))
+      // insert-only statements NEVER build the matched-side join:
+      // beyond being wasted analysis, the left join would FAN OUT a
+      // target row matched by several source rows — a state the
+      // (skipped-here) cardinality check otherwise forbids — and
+      // duplicate it in the output. Matched rows are kept as-is.
+      val updated = if (acts.isEmpty) df else {
+        val joined = df.as(tq).join(srcR, joinCond, "left")
+        // matched clauses: effective condition = matched AND pred AND
+        // no earlier matched clause fired (first-match-wins)
+        var priorM: Column = lit(false)
+        val effective = acts.map { case (p, set) =>
+          val eff = matchedC && pred(p) && !priorM
+          priorM = priorM || (matchedC && pred(p))
+          (set, eff)
+        }
+        val delCond = effective.collect { case (None, eff) => eff }
+          .reduceOption(_ || _).getOrElse(lit(false))
+        val proj = fields.map { f =>
+          effective.collect { case (Some(set), eff) if set.exists(_._1.equalsIgnoreCase(f.name)) =>
+            (eff, set.find(_._1.equalsIgnoreCase(f.name)).get._2)
+          }.foldRight(col(f.name)) { case ((eff, v), acc) =>
+            when(eff, named(v).cast(f.dataType)).otherwise(acc)
+          }.as(f.name)
+        }
+        joined.filter(!delCond).select(proj: _*)
+      }
+      // NOT MATCHED inserts: source rows with no target match,
+      // first-match-wins across the insert clauses
+      val srcUn = srcR.join(df.select(keys.map(k => col(k._1)): _*).dropDuplicates(),
+        joinCond, "left_anti")
+      var priorI: Column = lit(false)
+      val inserted = inserts.map { case (p, cols) =>
+        val eff = pred(p) && !priorI
+        priorI = priorI || pred(p)
+        srcUn.filter(eff).select(fields.map { f =>
+          cols.find(_._1.equalsIgnoreCase(f.name))
+            .map(v => named(v._2).cast(f.dataType).as(f.name))
+            .getOrElse(lit(null).cast(f.dataType).as(f.name))
+        }: _*)
+      }
+      inserted.foldLeft(updated)(_ unionByName _)
+    }
+  }
+
+  // ---- ALTER TABLE t ADD|DROP|RENAME COLUMN … / RENAME TO … -------------
+  //
+  // Schema evolution as a projection rewrite — the Mallard router
+  // accepts ALTER by prefix and DuckDB executes it
+  // (`flight_server.py:354-355`, `:324-331`). Spark cannot ALTER a temp
+  // view, so for catalog tables the statement becomes a catalog swap
+  // under the mutator lock: ADD → NULL-filled projection (DuckDB's
+  // added column is NULL); DROP → project all but the column; RENAME
+  // COLUMN → one alias; RENAME TO → registry move (`Catalog.rename`).
+  // Unknown/duplicate columns error (DuckDB binder parity); nested,
+  // positioned or defaulted columns fall through to `spark.sql`.
+
+  private def addColumns(e: Engine, table: String, cols: Seq[QualifiedColType],
+      ifNotExists: Boolean): Option[Unit] =
+    if (cols.exists(c => c.path.nonEmpty || c.position.nonEmpty || c.default.nonEmpty)) None
+    else Some(e.catalog.replaceWith(table) { df =>
+      cols.foldLeft(df) { (d, c) =>
+        if (!d.columns.exists(_.equalsIgnoreCase(c.colName)))
+          d.withColumn(c.colName, lit(null).cast(c.dataType))
+        else if (ifNotExists) d // IF NOT EXISTS: no-op, DuckDB parity
+        else throw new IllegalArgumentException(
+          s"Column '${c.colName}' already exists in table '$table'")
+      }
+    })
+
+  private def dropColumns(e: Engine, table: String, names: Seq[String], ifExists: Boolean): Unit =
+    e.catalog.replaceWith(table) { df =>
+      if (!ifExists) requireColumns(table, df.columns.toSeq, names) // IF EXISTS: missing is a no-op
+      df.select(df.columns.toSeq.filterNot(c => names.exists(_.equalsIgnoreCase(c))).map(col): _*)
+    }
+
+  private def renameColumn(e: Engine, table: String, from: String, to: String): Unit =
+    e.catalog.replaceWith(table) { df =>
+      requireColumns(table, df.columns.toSeq, Seq(from))
+      if (df.columns.exists(_.equalsIgnoreCase(to)))
+        throw new IllegalArgumentException(s"Column '$to' already exists in table '$table'")
+      df.withColumnRenamed(from, to)
+    }
+
+  // ---- DuckDB-only forms Spark's parser rejects -------------------------
+
+  /** `COPY <table> TO '<path>' [(FORMAT …[, HEADER …])]` — the
+    * reference's export path (`demo.py:233`).
+    */
   private val CopyRe =
     "(?is)^COPY\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+TO\\s+'([^']+)'\\s*(?:\\((.*)\\))?\\s*;?\\s*$".r
 
-  private def copy(e: Engine, sqlText: String): Option[DataFrame] = sqlText match {
-    case CopyRe(table, path, optsRaw) if e.catalog.contains(table) =>
+  /** The tail of `INSERT … ON CONFLICT (keys) DO NOTHING | DO UPDATE
+    * SET …`, from the `ON` where Spark's parser stops; group 2 is the
+    * text after `DO UPDATE` (null for DO NOTHING).
+    */
+  private val ConflictRe =
+    "(?is)ON\\s+CONFLICT\\s*\\(([^)]*)\\)\\s*DO\\s+(?:NOTHING\\s*;?\\s*|UPDATE(\\s.*))".r
+
+  /** The text of `ALTER TABLE t ADD [COLUMN] IF NOT EXISTS …` before the
+    * `EXISTS` where Spark's parser stops; group 1 drops the `IF NOT`.
+    */
+  private val AddIfNotExistsRe = "(?is)(.*\\sADD(?:\\s+COLUMNS?)?\\s+)IF\\s+NOT\\s+".r
+
+  private def front(e: Engine, sql: String, err: ParseException): Option[DataFrame] = sql.trim match {
+    case CopyRe(table, path, opts) => copy(e, table, path, opts)
+    case _ =>
+      def parse(s: String) = Try(e.spark.sessionState.sqlParser.parsePlan(s)).toEither
+      def word(s: String) = s.takeWhile(c => c.isLetterOrDigit || c == '_').toUpperCase
+      def endsWithWord(s: String, w: String) = word(s.stripTrailing.reverse) == w.reverse
+      stopOffset(sql, err).flatMap { stop =>
+        // the parser stops at ON CONFLICT's `ON` — or at `CONFLICT` when
+        // it took that `ON` for an alias (`SELECT 1, 'h' ON CONFLICT …`)
+        val at = if (word(sql.substring(stop)) == "CONFLICT" && endsWithWord(sql.take(stop), "ON"))
+          sql.take(stop).stripTrailing.length - 2 else stop
+        val (head, tail) = sql.splitAt(at)
+        (head, tail) match {
+          case (_, ConflictRe(keys, update)) =>
+            parse(head).toOption.flatMap {
+              case Insert(ins, source) => insert(e, sql, ins, source, Some(Conflict(keys, Option(update))))
+              case _                   => None
+            }
+          case (AddIfNotExistsRe(rest), _) if word(tail) == "EXISTS" =>
+            parse(rest + tail.drop("EXISTS".length)).toOption.flatMap {
+              case AddColumns(tgt, cols) =>
+                target(e, tgt).flatMap { case (t, _) => addColumns(e, t, cols, ifNotExists = true) }
+              case _ => None
+            }
+          case _ if word(tail) == "BY" && word(tail.drop(2).trim) == "TARGET" &&
+              endsWithWord(head, "MATCHED") =>
+            throw new IllegalArgumentException(
+              "MERGE: BY TARGET is only valid after WHEN NOT MATCHED " +
+                s"(SQL:2023) — 'WHEN MATCHED BY TARGET' is not a clause: $sql")
+          case _ if word(tail) == "VALUES" && endsWithWord(head, "INSERT") =>
+            // `head` + `*` is the MERGE up to this clause, which names the target
+            parse(head + "*").toOption.collect { case m: MergeIntoTable => m }
+              .flatMap(m => target(e, m.targetTable)).flatMap { case (t, _) =>
+                val cols = e.catalog.get(t).columns.map(c => s"`${c.replace("`", "``")}`")
+                val full = head + cols.mkString("(", ", ", ") ") + tail
+                execute(e, full, parse(full))
+              }.map(_ => ())
+          case _ => None
+        }
+      }.map(_ => e.statusOk)
+  }
+
+  /** Char offset of the token where Spark's parser stopped: it reports
+    * a 1-based line and a column counted in code points.
+    */
+  private def stopOffset(sql: String, err: ParseException): Option[Int] =
+    for (line <- err.line; pos <- err.startPosition;
+         lineStart = (1 until line).foldLeft(0)((i, _) => sql.indexOf('\n', i) + 1);
+         at <- Try(sql.offsetByCodePoints(lineStart, pos)).toOption) yield at
+
+  /** Claimed only for catalog tables with a format this engine can
+    * write; anything else (COPY FROM, SELECT sources, partition
+    * options) falls through and raises Spark's parse error. Like
+    * DuckDB, the result is a one-row `Count` of rows written.
+    */
+  private def copy(e: Engine, table: String, path: String, optsRaw: String): Option[DataFrame] =
+    if (!e.catalog.contains(table)) None
+    else {
       // DuckDB option list: comma-separated KEY [value] pairs. DuckDB
       // infers format from the file extension when FORMAT is absent;
       // restrict to an explicit or unambiguous extension-derived one.
@@ -107,795 +645,8 @@ private[graft] object SqlVerbs {
                 !opts.get("HEADER").exists(v => v.equalsIgnoreCase("false") || v == "0")
               w.option("header", header.toString).csv(path)
           }
-          Some(e.spark.range(1).select(
-            org.apache.spark.sql.functions.lit(df.count()).as("Count")))
+          Some(e.spark.range(1).select(lit(df.count()).as("Count")))
         case _ => None // unsupported format/options → spark.sql error
       }
-    case _ => None // COPY FROM / subquery source / non-catalog target
-  }
-
-  // ---- skeleton scanning (top-level aware) -----------------------------
-
-  /** Positions in `s` that are outside parens and quoted literals.
-    * Tracks both '…' and "…" (Spark's parser treats both as strings)
-    * and skips backslash-escaped characters inside them.
-    */
-  private def topLevel(s: String): Array[Boolean] = {
-    val out = new Array[Boolean](s.length)
-    var depth = 0; var quote: Char = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      var escaped = false
-      if (quote != 0) {
-        if (c == '\\' && i + 1 < s.length) { out(i) = false; i += 1; escaped = true }
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      if (!escaped)
-        out(i) = quote == 0 && depth == 0 && c != '(' && c != ')' && c != '\'' && c != '"'
-      else out(i) = false
-      i += 1
     }
-    out
-  }
-
-  /** Identifier characters for word-boundary tests: letters, digits AND
-    * underscore — `col_where_x` must not be read as containing a
-    * top-level WHERE.
-    */
-  private def isIdentChar(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_'
-
-  /** First top-level, word-bounded, case-insensitive `kw` at/after `from`. */
-  private def findKeyword(s: String, kw: String, from: Int = 0): Int = {
-    val tl = topLevel(s)
-    var i = from
-    while (i + kw.length <= s.length) {
-      if (tl(i) && s.regionMatches(true, i, kw, 0, kw.length) &&
-        (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-        (i + kw.length == s.length ||
-          !isIdentChar(s.charAt(i + kw.length)))) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Replace every word-bounded occurrence of identifier `from` with
-    * `to`, EXCEPT inside string literals (used by
-    * `Engine.registerSqlExchanger` for `__input__`; a textual
-    * replaceAll would rewrite quoted literals too). Unlike
-    * `topLevel`-based scanning, paren depth does NOT suppress the
-    * replacement — subqueries legitimately reference the input
-    * relation. Case-insensitive, like SQL identifiers.
-    */
-  private[engine] def replaceIdent(s: String, from: String, to: String): String = {
-    val out = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        out += c
-        if (c == '\\' && i + 1 < s.length) { out += s.charAt(i + 1); i += 1 }
-        else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') {
-        quote = c; out += c; i += 1
-      } else if (i + from.length <= s.length &&
-        s.regionMatches(true, i, from, 0, from.length) &&
-        (i == 0 || !isIdentChar(s.charAt(i - 1))) &&
-        (i + from.length == s.length || !isIdentChar(s.charAt(i + from.length)))) {
-        out ++= to; i += from.length
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
-
-  /** Split on top-level `sep` characters. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val tl = topLevel(s)
-    val parts = Seq.newBuilder[String]
-    var start = 0
-    for (i <- 0 until s.length if tl(i) && s.charAt(i) == sep) {
-      parts += s.substring(start, i); start = i + 1
-    }
-    (parts += s.substring(start)).result().map(_.trim)
-  }
-
-  private def fail(sqlText: String, what: String): Nothing =
-    throw new IllegalArgumentException(s"Cannot parse $what: $sqlText")
-
-  private def unknownColumn(table: String, colName: String, known: Seq[String]): Nothing =
-    throw new IllegalArgumentException(
-      s"Column '$colName' does not exist in table '$table'. " +
-        s"Columns: ${known.mkString(", ")}")
-
-  // ---- UPDATE t SET a = e1, b = e2 [WHERE c] ---------------------------
-
-  private val UpdateRe = "(?is)^UPDATE\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+SET\\s+(.*)$".r
-
-  private def update(e: Engine, sqlText: String): Option[Unit] = sqlText match {
-    case UpdateRe(table, rest) if e.catalog.contains(table) =>
-      val wherePos = findKeyword(rest, "WHERE")
-      val (setPart, cond) =
-        if (wherePos < 0) (rest, None)
-        else (rest.substring(0, wherePos),
-          Some(expr(rest.substring(wherePos + 5))))
-      val assignList: Seq[(String, Column)] =
-        splitTopLevel(setPart, ',').map { a =>
-          val tl = topLevel(a)
-          val eq = (0 until a.length).find(i => tl(i) && a.charAt(i) == '=')
-            .getOrElse(fail(sqlText, "SET assignment"))
-          a.substring(0, eq).trim.toLowerCase -> expr(a.substring(eq + 1))
-        }
-      // duplicate assignment (SET a=1, a=2) is a binder error in DuckDB;
-      // keeping the last one silently would drop an assignment while
-      // answering OK — the corruption this file's contract forbids
-      assignList.groupBy(_._1).collectFirst { case (c, as) if as.size > 1 =>
-        throw new IllegalArgumentException(
-          s"Duplicate assignment to column '$c' in UPDATE: $sqlText")
-      }
-      val assigns: Map[String, Column] = assignList.toMap
-      // read + swap under the catalog's mutator lock: a concurrent PUT
-      // can neither interleave with the snapshot nor be lost
-      e.catalog.replaceWith(table) { df =>
-        val fields = df.schema.fields
-        val known = fields.map(_.name.toLowerCase)
-        assigns.keys.find(!known.contains(_))
-          .foreach(unknownColumn(table, _, fields.map(_.name).toIndexedSeq))
-        // one simultaneous projection: every SET expression sees the
-        // pre-update row, matching statement-level UPDATE semantics
-        val proj = fields.map { f =>
-          assigns.get(f.name.toLowerCase) match {
-            case Some(ex) =>
-              val v = cond.map(c => when(c, ex).otherwise(col(f.name))).getOrElse(ex)
-              v.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }
-        df.select(proj.toIndexedSeq: _*)
-      }
-      Some(())
-    case _ => None // not a catalog table / not the simple form → spark.sql
-  }
-
-  // ---- DELETE FROM t [WHERE c] -----------------------------------------
-
-  private val DeleteRe = "(?is)^DELETE\\s+FROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*(.*)$".r
-
-  private def delete(e: Engine, sqlText: String): Option[Unit] = sqlText match {
-    case DeleteRe(table, rest0) if e.catalog.contains(table) =>
-      val rest = rest0.trim
-      e.catalog.replaceWith(table) { df =>
-        if (rest.isEmpty) df.limit(0)
-        else if (rest.toUpperCase.startsWith("WHERE"))
-          // keep rows where the predicate is FALSE *or* NULL
-          df.filter(!coalesce(expr(rest.substring(5)), lit(false)))
-        else fail(sqlText, "DELETE tail")
-      }
-      Some(())
-    case _ => None
-  }
-
-  // ---- INSERT INTO t [(cols)] SELECT …|VALUES … ------------------------
-  //      (+ … ON CONFLICT (keys) DO NOTHING | DO UPDATE SET …)
-
-  private val InsertRe = "(?is)^INSERT\\s+INTO\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+(.*)$".r
-
-  /** Index of a top-level `ON` immediately followed by the word
-    * `CONFLICT`, or -1. A plain `JOIN … ON cond` in the source query
-    * never matches (its next word is a condition, not CONFLICT).
-    */
-  private def findOnConflict(s: String): Int = {
-    var i = findKeyword(s, "ON")
-    while (i >= 0) {
-      var j = i + 2
-      while (j < s.length && s.charAt(j).isWhitespace) j += 1
-      if (j > i + 2 && s.regionMatches(true, j, "CONFLICT", 0, 8) &&
-        (j + 8 == s.length || !isIdentChar(s.charAt(j + 8)))) return i
-      i = findKeyword(s, "ON", i + 2)
-    }
-    -1
-  }
-
-  private def insert(e: Engine, sqlText: String): Option[Unit] = sqlText match {
-    // claim ONLY catalog-resident targets. The reference hands INSERT
-    // to DuckDB, which raises a catalog error for a missing table —
-    // create-if-absent is its *PUT* semantic (`flight_server.py:388-400`),
-    // not its SQL semantic. An unmanaged target falls through to
-    // `spark.sql`, which raises the resolution error (or inserts into a
-    // real Spark-catalog table, which is its business).
-    case InsertRe(table, rest0) if e.catalog.contains(table) =>
-      var rest = rest0.trim
-      val colList: Option[Seq[String]] =
-        if (rest.startsWith("(")) {
-          val close = rest.indexOf(')')
-          if (close < 0) fail(sqlText, "INSERT column list")
-          val names = rest.substring(1, close).split(',').map(_.trim).toSeq
-          rest = rest.substring(close + 1).trim
-          Some(names)
-        } else None
-      val conflictPos = findOnConflict(rest)
-      if (conflictPos >= 0)
-        return upsert(e, sqlText, table, colList,
-          rest.substring(0, conflictPos).trim, rest.substring(conflictPos))
-      // SELECT / WITH / VALUES are all valid standalone Spark queries
-      val src = e.spark.sql(rest)
-      val target = e.catalog.get(table).schema
-      val known = target.fieldNames.map(_.toLowerCase)
-      colList.foreach(_.find(c => !known.contains(c.toLowerCase))
-        .foreach(unknownColumn(table, _, target.fieldNames.toIndexedSeq)))
-      val order = colList.getOrElse(target.fieldNames.toIndexedSeq)
-      require(src.columns.length == order.length,
-        s"INSERT expects ${order.length} columns, query produced ${src.columns.length}")
-      val named = src.toDF(order: _*) // positional → target names
-      val aligned = target.fields.map { f =>
-        if (order.exists(_.equalsIgnoreCase(f.name)))
-          col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name) // unlisted → NULL
-      }
-      e.catalog.put(table, named.select(aligned.toIndexedSeq: _*))
-      Some(())
-    case _ => None // absent target / INSERT OVERWRITE / qualified name
-  }
-
-  // ---- INSERT … ON CONFLICT (keys) DO NOTHING | DO UPDATE SET … --------
-
-  private val ConflictNothingRe =
-    "(?is)^ON\\s+CONFLICT\\s*\\(([^)]*)\\)\\s+DO\\s+NOTHING\\s*$".r
-  private val ConflictUpdateRe =
-    "(?is)^ON\\s+CONFLICT\\s*\\(([^)]*)\\)\\s+DO\\s+UPDATE\\s+SET\\s+(.+)$".r
-
-  /** `a = e1, b = e2` split on top-level commas/equals →
-    * (lowercased column, expression TEXT); duplicates error (DuckDB
-    * binder parity — silently keeping the last would be corruption).
-    */
-  private def parseAssignments(setPart: String, sqlText: String): Seq[(String, String)] = {
-    val list = splitTopLevel(setPart, ',').map { a =>
-      val tl = topLevel(a)
-      val eq = (0 until a.length).find(i => tl(i) && a.charAt(i) == '=')
-        .getOrElse(fail(sqlText, "SET assignment"))
-      a.substring(0, eq).trim.toLowerCase -> a.substring(eq + 1)
-    }
-    list.groupBy(_._1).collectFirst { case (c, as) if as.size > 1 =>
-      throw new IllegalArgumentException(
-        s"Duplicate assignment to column '$c' in: $sqlText")
-    }
-    list
-  }
-
-  /** Upsert — DuckDB's `INSERT … ON CONFLICT` (the reference routes any
-    * DuckDB SQL, `flight_server.py:320-331`), rewritten functionally:
-    * conflicting target rows get the DO UPDATE projection (SET
-    * expressions see the EXISTING row unqualified and the incoming row
-    * as `excluded.<col>`, exactly DuckDB's scoping), non-conflicting
-    * source rows append, everything else passes through — one catalog
-    * swap under the mutator lock. Graft has no constraint registry, so
-    * the ON CONFLICT column list IS the match key (DuckDB additionally
-    * requires it to name a UNIQUE/PK constraint). Source rows that
-    * collide on the key error for DO UPDATE (DuckDB: "can not update
-    * the same row twice") and dedupe for DO NOTHING (DuckDB keeps the
-    * first in insertion order; which row wins is engine-internal).
-    */
-  private def upsert(e: Engine, sqlText: String, table: String,
-      colList: Option[Seq[String]], srcSql: String,
-      conflictTail: String): Option[Unit] = {
-    val (keysCsv, setPart) = conflictTail match {
-      case ConflictNothingRe(k)   => (k, None)
-      case ConflictUpdateRe(k, s) => (k, Some(s))
-      case _                      => fail(sqlText, "ON CONFLICT clause")
-    }
-    val keys = keysCsv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    if (keys.isEmpty) fail(sqlText, "ON CONFLICT column list")
-    val src = e.spark.sql(srcSql)
-    e.catalog.replaceWith(table) { df =>
-      val fields = df.schema.fields
-      val known = fields.map(_.name.toLowerCase)
-      def field(name: String) = fields.find(_.name.equalsIgnoreCase(name))
-        .getOrElse(unknownColumn(table, name, fields.map(_.name).toIndexedSeq))
-      colList.foreach(_.find(c => !known.contains(c.toLowerCase))
-        .foreach(unknownColumn(table, _, fields.map(_.name).toIndexedSeq)))
-      val keyNames = keys.map(field(_).name)
-      val order = colList.getOrElse(fields.map(_.name).toIndexedSeq)
-      require(src.columns.length == order.length,
-        s"INSERT expects ${order.length} columns, query produced ${src.columns.length}")
-      // every conflict key must be among the inserted columns — an
-      // unlisted key would make every source row "new" with a NULL key
-      keyNames.find(k => !order.exists(_.equalsIgnoreCase(k)))
-        .foreach(k => throw new IllegalArgumentException(
-          s"ON CONFLICT key '$k' is not among the inserted columns: $sqlText"))
-      val named = src.toDF(order: _*)
-      val srcAligned = named.select(fields.map { f =>
-        if (order.exists(_.equalsIgnoreCase(f.name)))
-          col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
-      setPart match {
-        case None =>
-          val fresh = srcAligned.dropDuplicates(keyNames)
-            .join(df.select(keyNames.map(col): _*), keyNames, "left_anti")
-          df.unionByName(fresh)
-        case Some(sp) =>
-          val assigns = parseAssignments(sp, sqlText)
-          assigns.map(_._1).find(!known.contains(_))
-            .foreach(unknownColumn(table, _, fields.map(_.name).toIndexedSeq))
-          // two source rows hitting one target row is a DuckDB error,
-          // not a nondeterministic last-writer-wins
-          if (srcAligned.groupBy(keyNames.map(col): _*).count()
-              .filter(col("count") > 1).limit(1).count() > 0)
-            throw new IllegalArgumentException(
-              s"ON CONFLICT DO UPDATE source contains duplicate conflict-key rows " +
-                s"(DuckDB: can not update the same row twice): $sqlText")
-          // incoming row exposed as __excluded_<col>; SET text rewrites
-          // `excluded.<col>` to that name (quote-aware, case-insensitive)
-          val exc = srcAligned
-            .select(fields.map(f => col(f.name).as(s"__excluded_${f.name}")).toIndexedSeq: _*)
-            .withColumn("__graft_matched", lit(true))
-          val cond = keyNames.map(k => col(k) === col(s"__excluded_$k")).reduce(_ && _)
-          val matched = coalesce(col("__graft_matched"), lit(false))
-          val proj = fields.map { f =>
-            assigns.collectFirst { case (c, text) if c == f.name.toLowerCase =>
-              val rewritten = fields.foldLeft(text)((t, g) =>
-                replaceIdent(t, s"excluded.${g.name}", s"__excluded_${g.name}"))
-              when(matched, expr(rewritten)).otherwise(col(f.name))
-                .cast(f.dataType).as(f.name)
-            }.getOrElse(col(f.name))
-          }
-          val updated = df.join(exc, cond, "left").select(proj.toIndexedSeq: _*)
-          val newRows = srcAligned
-            .join(df.select(keyNames.map(col): _*), keyNames, "left_anti")
-          updated.unionByName(newRows)
-      }
-    }
-    Some(())
-  }
-
-  // ---- MERGE INTO t USING src ON cond WHEN [NOT] MATCHED … --------------
-
-  /** Index of the `(`-matching `)` in `s` starting at `open`, quote-
-    * aware (both literal styles + backslash escapes), or -1.
-    */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0; var quote: Char = 0; var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && i + 1 < s.length) i += 1
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** All top-level positions of `kw` in `s`. */
-  private def keywordPositions(s: String, kw: String): Seq[Int] = {
-    val b = Seq.newBuilder[Int]
-    var i = findKeyword(s, kw)
-    while (i >= 0) { b += i; i = findKeyword(s, kw, i + kw.length) }
-    b.result()
-  }
-
-  /** First top-level `kw` at/after `from` that is NOT inside a
-    * CASE … END expression — a MERGE clause's WHEN/THEN must not be
-    * confused with a CASE's own WHEN/THEN in a predicate or SET
-    * expression (valid ANSI: `… THEN UPDATE SET v = CASE WHEN … THEN
-    * 1 ELSE 0 END`).
-    */
-  private def findKeywordOutsideCase(s: String, kw: String, from: Int = 0): Int = {
-    val evs = (keywordPositions(s, "CASE").map((_, 0)) ++
-      keywordPositions(s, "END").map((_, 1)) ++
-      keywordPositions(s, kw).map((_, 2))).sortBy(_._1)
-    var depth = 0
-    evs.foreach { case (p, t) =>
-      t match {
-        case 0 => depth += 1
-        case 1 => if (depth > 0) depth -= 1
-        case _ => if (depth == 0 && p >= from) return p
-      }
-    }
-    -1
-  }
-
-  private sealed trait MergeAct
-  private case class MergeUpd(pred: Option[String], assigns: Seq[(String, String)]) extends MergeAct
-  private case class MergeDel(pred: Option[String]) extends MergeAct
-  private case class MergeIns(pred: Option[String], cols: Option[Seq[String]],
-      vals: Seq[String]) extends MergeAct
-
-  /** `MERGE INTO` — the general WHEN MATCHED / WHEN NOT MATCHED form
-    * the `ON CONFLICT` upsert cannot express (conditional updates,
-    * matched DELETE, a source relation with its own column names).
-    * Rewritten functionally like every other verb: one catalog swap
-    * under the mutator lock whose DataFrame encodes the statement's
-    * semantics.
-    *
-    * ANSI semantics preserved deliberately:
-    *  - clauses apply FIRST-MATCH-WINS in statement order, per row;
-    *  - a source that matches one target row more than once errors
-    *    (the standard's cardinality violation; DuckDB: "can not
-    *    update the same row twice") instead of non-deterministic
-    *    last-writer-wins;
-    *  - UPDATE SET expressions see the PRE-merge target row
-    *    (unqualified / target-alias) and the source row
-    *    (source-alias-qualified) simultaneously;
-    *  - WHEN NOT MATCHED INSERT aligns an explicit column list (or
-    *    the full target schema, positionally) and casts to declared
-    *    types; unlisted columns become NULL.
-    *
-    * Claimed subset: catalog-table target, aliased source (subquery
-    * or table), and an ON condition that is a top-level conjunction
-    * of `target.col = source.col` equalities — the match-key form
-    * every production MERGE uses, and the one a functional rewrite
-    * can verify the cardinality rule against. A non-equi ON errors
-    * loudly (a silent fall-through to spark.sql would produce a
-    * confusing parser error for a statement this layer DID
-    * recognize as MERGE).
-    *
-    * At 100 TB the shape is one shuffled equi-join on the merge key
-    * plus one anti-join — exactly the MERGE plan Delta/Iceberg
-    * execute — with the first-match-wins projection a per-row
-    * CASE chain, never a second pass.
-    */
-  private def merge(e: Engine, sqlText: String): Option[Unit] = {
-    val MergeHead = "(?is)^MERGE\\s+INTO\\s+([A-Za-z_][A-Za-z0-9_]*)(\\s.*)$".r
-    sqlText.trim match {
-      case MergeHead(table, rest0) if e.catalog.contains(table) =>
-        var rest = rest0
-        val usingPos = findKeyword(rest, "USING")
-        if (usingPos < 0) fail(sqlText, "USING clause")
-        val tAlias = rest.substring(0, usingPos).trim
-          .replaceAll("(?i)^AS\\s+", "").trim
-        if (tAlias.nonEmpty && !tAlias.matches("[A-Za-z_][A-Za-z0-9_]*"))
-          fail(sqlText, "target alias")
-        rest = rest.substring(usingPos + 5).trim
-        val (srcSql, afterSrc) =
-          if (rest.startsWith("(")) {
-            val close = matchParen(rest, 0)
-            if (close < 0) fail(sqlText, "USING subquery")
-            (rest.substring(1, close), rest.substring(close + 1))
-          } else {
-            val id = rest.takeWhile(isIdentChar)
-            if (id.isEmpty) fail(sqlText, "USING source")
-            (s"SELECT * FROM $id", rest.substring(id.length))
-          }
-        var tail = afterSrc.trim.replaceAll("(?i)^AS\\s+", "")
-        val sAlias = tail.takeWhile(isIdentChar)
-        if (sAlias.isEmpty || sAlias.equalsIgnoreCase("ON"))
-          fail(sqlText, "source alias (required)")
-        tail = tail.substring(sAlias.length).trim
-        if (!(tail.length > 2 && tail.regionMatches(true, 0, "ON", 0, 2) &&
-          !isIdentChar(tail.charAt(2)))) fail(sqlText, "ON clause")
-        tail = tail.substring(2).trim
-        val firstWhen = findKeywordOutsideCase(tail, "WHEN")
-        if (firstWhen < 0) fail(sqlText, "WHEN clause")
-        val cond = tail.substring(0, firstWhen).trim
-        // split the WHEN clauses on top-level, non-CASE WHEN keywords
-        val whenStarts = Iterator.iterate(firstWhen)(i =>
-          findKeywordOutsideCase(tail, "WHEN", i + 4)).takeWhile(_ >= 0).toSeq
-        val clauses = whenStarts.zipAll(whenStarts.drop(1), 0, tail.length)
-          .map { case (a, b) => tail.substring(a, b).trim }
-        val acts: Seq[MergeAct] = clauses.map(parseMergeClause(sqlText, _))
-        // ON: top-level conjunction of equalities
-        val conjuncts = {
-          val parts = Seq.newBuilder[String]
-          var start = 0
-          var i = findKeyword(cond, "AND")
-          while (i >= 0) {
-            parts += cond.substring(start, i); start = i + 3
-            i = findKeyword(cond, "AND", start)
-          }
-          parts += cond.substring(start)
-          parts.result().map(_.trim).filter(_.nonEmpty)
-        }
-        val src = e.spark.sql(srcSql)
-        val sCols = src.columns.toSeq
-        e.catalog.replaceWith(table) { df =>
-          val fields = df.schema.fields.toSeq
-          def tField(n: String) = fields.find(_.name.equalsIgnoreCase(n))
-            .getOrElse(unknownColumn(table, n, fields.map(_.name)))
-          def sCol(n: String) = sCols.find(_.equalsIgnoreCase(n))
-            .getOrElse(throw new IllegalArgumentException(
-              s"MERGE source has no column '$n': $sqlText"))
-          def qual(x: String): (Option[String], String) = {
-            val p = x.trim.split("\\.", 2)
-            if (p.length == 2) (Some(p(0).trim), p(1).trim) else (None, x.trim)
-          }
-          val keys: Seq[(String, String)] = conjuncts.map { cj =>
-            val tl = topLevel(cj)
-            val eq = (0 until cj.length)
-              .find(i => tl(i) && cj.charAt(i) == '=')
-              .getOrElse(fail(sqlText, "equi-join ON condition"))
-            val sides = Seq(cj.substring(0, eq), cj.substring(eq + 1)).map(qual)
-            def isTgt(s0: (Option[String], String)) = s0._1 match {
-              case Some(a) => a.equalsIgnoreCase(tAlias) || a.equalsIgnoreCase(table)
-              case None    => fields.exists(_.name.equalsIgnoreCase(s0._2))
-            }
-            def isSrc(s0: (Option[String], String)) = s0._1 match {
-              case Some(a) => a.equalsIgnoreCase(sAlias)
-              case None    => sCols.exists(_.equalsIgnoreCase(s0._2))
-            }
-            (sides(0), sides(1)) match {
-              case (a, b) if isTgt(a) && isSrc(b) => (tField(a._2).name, sCol(b._2))
-              case (a, b) if isSrc(a) && isTgt(b) => (tField(b._2).name, sCol(a._2))
-              case _ => fail(sqlText, "target.col = source.col ON conjunct")
-            }
-          }
-          // ANSI cardinality rule: a TARGET row touched by two source
-          // rows errors. Checked on exactly that set — source rows
-          // that match at least one target row (the semi join) — so
-          // duplicate NOT-MATCHED keys insert freely and NULL keys
-          // (which an equi-join can never match) pass through, both
-          // per the standard. SKIPPED for insert-only statements (no
-          // WHEN MATCHED clause): the violation exists only when a
-          // target row would be updated or deleted more than once —
-          // an insert-only MERGE touches no matched row, and
-          // ANSI/DuckDB raise nothing there (r15 advice).
-          val hasMatchedClause = acts.exists {
-            case _: MergeUpd | _: MergeDel => true
-            case _                         => false
-          }
-          if (hasMatchedClause) {
-            val tgtKeys = df.select(keys.map { case (t, s0) =>
-              col(t).as(s0) }.toIndexedSeq: _*).dropDuplicates()
-            val matchingSrc = src.select(keys.map(k => col(k._2)).toIndexedSeq: _*)
-              .join(tgtKeys, keys.map(_._2), "left_semi")
-            if (matchingSrc.groupBy(keys.map(k => col(k._2)): _*).count()
-                .filter(col("count") > 1).limit(1).count() > 0)
-              throw new IllegalArgumentException(
-                s"MERGE source matches a target row more than once " +
-                  s"(DuckDB: can not update the same row twice): $sqlText")
-          }
-          val srcR = src
-            .select(sCols.map(c0 => col(c0).as(s"__src_$c0")).toIndexedSeq: _*)
-            .withColumn("__graft_matched", lit(true))
-          // expression rewrite: source-alias and target-alias
-          // qualifications → resolvable names (quote-aware)
-          def rw(text: String): String = {
-            val a = sCols.foldLeft(text)((t0, c0) =>
-              replaceIdent(t0, s"$sAlias.$c0", s"__src_$c0"))
-            val b = fields.foldLeft(a)((t0, f) =>
-              replaceIdent(t0, s"$table.${f.name}", f.name))
-            if (tAlias.isEmpty) b
-            else fields.foldLeft(b)((t0, f) =>
-              replaceIdent(t0, s"$tAlias.${f.name}", f.name))
-          }
-          // SET targets: allow target-alias/table qualification, and
-          // ERROR on an unknown column — silently dropping an
-          // assignment would be corruption (the UPDATE verb's rule)
-          def normLhs(c0: String): String = {
-            val p = c0.split("\\.", 2)
-            if (p.length == 2 && (p(0).equalsIgnoreCase(table) ||
-                (tAlias.nonEmpty && p(0).equalsIgnoreCase(tAlias)))) p(1) else c0
-          }
-          val normActs: Seq[MergeAct] = acts.map {
-            case MergeUpd(p, as) =>
-              val n2 = as.map { case (c0, t0) => (normLhs(c0), t0) }
-              n2.map(_._1).find(c0 => !fields.exists(_.name.equalsIgnoreCase(c0)))
-                .foreach(unknownColumn(table, _, fields.map(_.name)))
-              MergeUpd(p, n2)
-            case other => other
-          }
-          val joinCond = keys.map { case (t, s0) => col(t) === col(s"__src_$s0") }
-            .reduce(_ && _)
-          val matchedC = coalesce(col("__graft_matched"), lit(false))
-          // insert-only statements NEVER build the matched-side join:
-          // beyond being wasted analysis, the left join would FAN OUT
-          // a target row matched by several source rows — a state the
-          // (skipped-here) cardinality check otherwise forbids — and
-          // duplicate it in the output. Matched rows are kept as-is.
-          val updated = if (!hasMatchedClause) df else {
-            val joined = df.join(srcR, joinCond, "left")
-            // matched clauses: effective condition = matched AND pred
-            // AND no earlier matched clause fired (first-match-wins)
-            var priorM: Column = lit(false)
-            val matchedActs = normActs.collect {
-              case u: MergeUpd => u.asInstanceOf[MergeAct]
-              case d0: MergeDel => d0.asInstanceOf[MergeAct]
-            }.map { act =>
-              val pred = (act match {
-                case MergeUpd(p, _) => p
-                case MergeDel(p)    => p
-                case _              => None
-              }).map(t => coalesce(expr(rw(t)), lit(false))).getOrElse(lit(true))
-              val eff = matchedC && pred && !priorM
-              priorM = priorM || (matchedC && pred)
-              (act, eff)
-            }
-            val delCond = matchedActs.collect { case (_: MergeDel, eff) => eff }
-              .reduceOption(_ || _).getOrElse(lit(false))
-            val kept = joined.filter(!delCond)
-            val proj = fields.map { f =>
-              val assignedChain = matchedActs.collect {
-                case (MergeUpd(_, assigns), eff)
-                    if assigns.exists(_._1 == f.name.toLowerCase) =>
-                  (eff, assigns.find(_._1 == f.name.toLowerCase).get._2)
-              }
-              assignedChain.foldRight(col(f.name): Column) { case ((eff, text), acc) =>
-                when(eff, expr(rw(text)).cast(f.dataType)).otherwise(acc)
-              }.as(f.name)
-            }
-            kept.select(proj.toIndexedSeq: _*)
-          }
-          // NOT MATCHED inserts: source rows with no target match,
-          // first-match-wins across the insert clauses
-          val srcUn = srcR.join(
-            df.select(keys.map(k => col(k._1)).toIndexedSeq: _*).dropDuplicates(),
-            joinCond, "left_anti")
-          var priorI: Column = lit(false)
-          val inserted = acts.collect { case i0: MergeIns => i0 }.map { ins =>
-            val pred = ins.pred.map(t => coalesce(expr(rw(t)), lit(false)))
-              .getOrElse(lit(true))
-            val eff = pred && !priorI
-            priorI = priorI || pred
-            val order = ins.cols.getOrElse(fields.map(_.name))
-            order.find(c0 => !fields.exists(_.name.equalsIgnoreCase(c0)))
-              .foreach(unknownColumn(table, _, fields.map(_.name)))
-            require(ins.vals.length == order.length,
-              s"INSERT expects ${order.length} values, got ${ins.vals.length}: $sqlText")
-            val byName = order.map(_.toLowerCase).zip(ins.vals).toMap
-            srcUn.filter(eff).select(fields.map { f =>
-              byName.get(f.name.toLowerCase)
-                .map(v => expr(rw(v)).cast(f.dataType).as(f.name))
-                .getOrElse(lit(null).cast(f.dataType).as(f.name))
-            }.toIndexedSeq: _*)
-          }
-          inserted.foldLeft(updated)(_ unionByName _)
-        }
-        Some(())
-      case _ => None // absent/unmanaged target → spark.sql (parse error)
-    }
-  }
-
-  /** One `WHEN …` clause → its action. */
-  private def parseMergeClause(sqlText: String, clause: String): MergeAct = {
-    val WhenRe = "(?is)^WHEN\\s+(NOT\\s+)?MATCHED(\\s.*)$".r
-    clause match {
-      case WhenRe(notM, rest0) =>
-        var rest = rest0.trim
-        // BY TARGET is the SQL:2023 synonym for NOT MATCHED — valid
-        // ONLY after NOT MATCHED (SQL:2023 allows no BY modifier on
-        // plain WHEN MATCHED), so the strip consults the NOT capture
-        // (r16 advice: an unconditional strip silently accepted the
-        // invalid 'WHEN MATCHED BY TARGET' as plain WHEN MATCHED).
-        // BY SOURCE is genuinely unsupported and must be rejected
-        // NAMING the construct, before the generic predicate parse
-        // would blame "WHEN clause predicate". All checks tolerate
-        // arbitrary whitespace between the keywords.
-        if (rest.matches("(?is)^BY\\s+TARGET\\b.*")) {
-          if (notM == null || notM.trim.isEmpty)
-            throw new IllegalArgumentException(
-              "MERGE: BY TARGET is only valid after WHEN NOT MATCHED " +
-                s"(SQL:2023) — 'WHEN MATCHED BY TARGET' is not a clause: $sqlText")
-          rest = rest.replaceFirst("(?is)^BY\\s+TARGET", "").trim
-        }
-        if (rest.matches("(?is)^BY\\s+SOURCE\\b.*"))
-          throw new IllegalArgumentException(
-            "MERGE: WHEN [NOT] MATCHED BY SOURCE is not supported " +
-              s"(matched/not-matched-by-target clauses only): $sqlText")
-        val thenPos = findKeywordOutsideCase(rest, "THEN")
-        if (thenPos < 0) fail(sqlText, "THEN in WHEN clause")
-        val predPart = rest.substring(0, thenPos).trim
-        val pred: Option[String] =
-          if (predPart.isEmpty) None
-          else if (predPart.toUpperCase.startsWith("AND"))
-            Some(predPart.substring(3).trim)
-          else fail(sqlText, "WHEN clause predicate")
-        rest = rest.substring(thenPos + 4).trim
-        val isNot = notM != null && notM.trim.nonEmpty
-        val up = rest.toUpperCase
-        if (!isNot && up.startsWith("UPDATE")) {
-          val setPos = findKeyword(rest, "SET")
-          if (setPos < 0) fail(sqlText, "UPDATE SET")
-          MergeUpd(pred, parseAssignments(rest.substring(setPos + 3), sqlText))
-        } else if (!isNot && up.startsWith("DELETE")) MergeDel(pred)
-        else if (isNot && up.startsWith("INSERT")) {
-          var r = rest.substring(6).trim
-          val cols: Option[Seq[String]] =
-            if (r.startsWith("(")) {
-              val close = matchParen(r, 0)
-              if (close < 0) fail(sqlText, "INSERT column list")
-              val names = r.substring(1, close).split(',').map(_.trim).toSeq
-              // duplicate columns would be silent last-writer-wins via
-              // the byName map — error loudly, matching the duplicate-
-              // assignment guard parseAssignments applies to UPDATE SET
-              val dup = names.groupBy(_.toLowerCase).collectFirst {
-                case (_, vs) if vs.size > 1 => vs.head
-              }
-              dup.foreach(d0 => throw new IllegalArgumentException(
-                s"MERGE INSERT lists column '$d0' more than once: $sqlText"))
-              r = r.substring(close + 1).trim
-              Some(names)
-            } else None
-          if (!r.toUpperCase.startsWith("VALUES")) fail(sqlText, "INSERT VALUES")
-          r = r.substring(6).trim
-          if (!r.startsWith("(")) fail(sqlText, "VALUES list")
-          val close = matchParen(r, 0)
-          if (close < 0 || r.substring(close + 1).trim.nonEmpty)
-            fail(sqlText, "VALUES list")
-          MergeIns(pred, cols, splitTopLevel(r.substring(1, close), ',').map(_.trim))
-        } else fail(sqlText, "WHEN clause action")
-      case _ => fail(sqlText, "WHEN clause")
-    }
-  }
-
-  // ---- ALTER TABLE t ADD|DROP|RENAME COLUMN … / RENAME TO … -------------
-
-  private val AlterRe =
-    "(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+(.*)$".r
-  private val AddColRe =
-    "(?is)^ADD\\s+(?:COLUMN\\s+)?(IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s+(.+)$".r
-  private val DropColRe =
-    "(?is)^DROP\\s+(?:COLUMN\\s+)?(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-  private val RenameColRe =
-    "(?is)^RENAME\\s+(?:COLUMN\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s+TO\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-  private val RenameTableRe =
-    "(?is)^RENAME\\s+TO\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-
-  /** Schema evolution as a projection rewrite — the Mallard router
-    * accepts ALTER by prefix and DuckDB executes it
-    * (`flight_server.py:354-355`, `:324-331`). Spark cannot ALTER a
-    * temp view, so for catalog tables the statement becomes a catalog
-    * swap under the mutator lock:
-    *  - `ADD COLUMN c t`   → project existing columns + NULL::t AS c
-    *    (DuckDB's added column is NULL-filled);
-    *  - `DROP COLUMN c`    → project all but c;
-    *  - `RENAME COLUMN a TO b` → same projection, one alias;
-    *  - `RENAME TO t2`     → registry move (see `Catalog.rename`).
-    * Unknown/duplicate columns error (DuckDB binder parity). Anything
-    * else — not a catalog table, IF EXISTS, multi-action — returns
-    * None and falls through to `spark.sql`.
-    */
-  private def alter(e: Engine, sqlText: String): Option[Unit] = sqlText match {
-    case AlterRe(table, action) if e.catalog.contains(table) =>
-      action.trim match {
-        // "ADD COLUMNS (a INT, b INT)" is Spark's multi-column form —
-        // the regex would read colName="COLUMNS"; not the simple form,
-        // fall through rather than mis-parse
-        case AddColRe(ifNotExists, colName, typeDdl)
-            if !colName.equalsIgnoreCase("COLUMNS") =>
-          val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl.trim)
-          e.catalog.replaceWith(table) { df =>
-            if (df.columns.exists(_.equalsIgnoreCase(colName))) {
-              if (ifNotExists != null) df // IF NOT EXISTS: no-op, DuckDB parity
-              else throw new IllegalArgumentException(
-                s"Column '$colName' already exists in table '$table'")
-            } else df.withColumn(colName, lit(null).cast(dt))
-          }
-          Some(())
-        case DropColRe(ifExists, colName) =>
-          e.catalog.replaceWith(table) { df =>
-            if (!df.columns.exists(_.equalsIgnoreCase(colName))) {
-              if (ifExists != null) df // IF EXISTS: no-op, DuckDB parity
-              else unknownColumn(table, colName, df.columns.toIndexedSeq)
-            } else df.select(df.columns.filterNot(_.equalsIgnoreCase(colName))
-              .map(col).toIndexedSeq: _*)
-          }
-          Some(())
-        case RenameColRe(from, to) =>
-          e.catalog.replaceWith(table) { df =>
-            if (!df.columns.exists(_.equalsIgnoreCase(from)))
-              unknownColumn(table, from, df.columns.toIndexedSeq)
-            if (df.columns.exists(_.equalsIgnoreCase(to)))
-              throw new IllegalArgumentException(
-                s"Column '$to' already exists in table '$table'")
-            df.withColumnRenamed(from, to)
-          }
-          Some(())
-        case RenameTableRe(to) =>
-          e.catalog.rename(table, to)
-          Some(())
-        case _ => None // multi-action / constraint forms → spark.sql
-      }
-    case _ => None // not a catalog table → spark.sql (e.g. real tables)
-  }
 }

@@ -115,9 +115,9 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   //  - keys include [[Engine.mutationStamp]], so ANY mutation through
   //    the engine API (PUT/DROP/RENAME/DML verbs, raw DDL, exchanger
   //    registration) makes every cached entry unreachable;
-  //  - only statements whose leading keyword is SELECT/WITH/VALUES/
-  //    TABLE are cacheable — verbs with side effects (COPY, INSERT,
-  //    REGISTER, DDL…) always execute;
+  //  - only statements that parse to a plain query plan are cacheable
+  //    — verbs with side effects (COPY, INSERT, REGISTER, DDL…) always
+  //    execute (see [[cacheable]]);
   //  - results whose analyzed plan contains a non-deterministic or
   //    current-time expression (rand(), uuid(), now(), …) are streamed
   //    but never installed — see [[cacheSafe]];
@@ -296,13 +296,14 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   private def cacheable(stmt: String): Boolean = engine.isCacheableQuery(stmt)
 
   /** Canonical per-TABLE cache key for bare full-table scans of catalog
-    * tables (`SELECT * FROM t` / `TABLE t`, any spelling, any case).
-    * Every spelling of the scan shares ONE cache entry, so the entry
-    * behaves like the table's pre-encoded columnar serving form, not a
-    * statement-text replay. The reference server re-executes every GET,
-    * but against DuckDB's COLUMNAR memory — its fresh `SELECT * FROM t`
-    * is a near-memcpy export. Spark stores rows, so the honest
-    * equivalent of "my table is already columnar" is keeping each
+    * tables (`SELECT * FROM t` / `TABLE t`, any spelling, case, comment
+    * or quoting — read off the parsed plan, memoized with the statement's
+    * classification). Every spelling of the scan shares ONE cache entry,
+    * so the entry behaves like the table's pre-encoded columnar serving
+    * form, not a statement-text replay. The reference server re-executes
+    * every GET, but against DuckDB's COLUMNAR memory — its fresh
+    * `SELECT * FROM t` is a near-memcpy export. Spark stores rows, so the
+    * honest equivalent of "my table is already columnar" is keeping each
     * catalog table's Arrow-encoded chunks keyed on
     * [[Engine.mutationStamp]]: a default-path GET still parses,
     * classifies and stamps, but ships pre-encoded bytes. Any mutation
@@ -310,18 +311,14 @@ final class TcpGate(val engine: Engine, port: Int = 0,
     * out-of-band spark mutations require `##nocache` (per-request) or
     * `##flushcache` (connection-wide) to force freshness.
     */
-  private val TableScanRe =
-    "(?is)^\\s*(?:TABLE\\s+|SELECT\\s+\\*\\s+FROM\\s+)([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$".r
-
-  private def tableScanKey(stmt: String): Option[String] = stmt match {
-    case TableScanRe(name) =>
-      // Spark resolves identifiers case-insensitively — canonicalize to
-      // the catalog's spelling so `SELECT * FROM NATION` and
-      // `TABLE nation` share ONE entry (ADVICE r11: a case-variant
-      // spelling must not install a duplicate copy of the table bytes)
-      engine.catalog.list.find(_.equalsIgnoreCase(name)).map(c => s"##table:$c")
-    case _ => None
-  }
+  private def tableScanKey(stmt: String): Option[String] =
+    // Spark resolves identifiers case-insensitively — canonicalize to
+    // the catalog's spelling so `SELECT * FROM NATION` and
+    // `TABLE nation` share ONE entry (ADVICE r11: a case-variant
+    // spelling must not install a duplicate copy of the table bytes)
+    engine.scannedTable(stmt)
+      .flatMap(name => engine.catalog.list.find(_.equalsIgnoreCase(name)))
+      .map(c => s"##table:$c")
 
   /** Current-time expressions are MARKED deterministic in Catalyst
     * (they fold to a literal at each query start), but two GETs at

@@ -13,9 +13,14 @@ package org.apache.spark.sql
   */
 object GraftBridge {
   def rebind(target: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(
-      target.asInstanceOf[classic.SparkSession],
-      df.queryExecution.analyzed)
+    ofRows(target, df.queryExecution.analyzed)
+
+  /** A DataFrame over `plan` (parsed or analyzed), analyzed in `spark`
+    * — how the SQL verbs turn a parsed INSERT/MERGE source into a frame
+    * without printing it back to SQL text.
+    */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Column ⇄ catalyst Expression, for custom expressions like
     * graft.functions.DotProduct (`ExpressionUtils` is private[sql]).

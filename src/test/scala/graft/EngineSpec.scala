@@ -86,6 +86,10 @@ class EngineSpec extends SparkSpec {
     assert(st.collect().map(_.getString(0)).toSeq == Seq("OK"))
     assert(e.query("SELECT x FROM graft_spec_ddl").collect()(0).getInt(0) == 1)
     e.query("DROP VIEW graft_spec_ddl")
+    // a SQL script is a statement too: it runs and answers the status row
+    val sc = e.query("BEGIN CREATE TEMPORARY VIEW graft_spec_script AS SELECT 2 AS x; END")
+    assert(sc.collect().map(_.getString(0)).toSeq == Seq("OK"))
+    assert(e.query("SELECT x FROM graft_spec_script").collect()(0).getInt(0) == 2)
   }
 
   test("drop reports prior existence; dropped table is gone") {
@@ -412,6 +416,13 @@ class EngineSpec extends SparkSpec {
     val r = e.exchange("probe", e.get("src")).head()
     assert(r.getString(0) == "__input__") // literal survived
     assert(r.getLong(1) == 3)             // subquery reference rewrote
+    // a qualified column and a backticked relation bind to the same input
+    e.registerSqlExchanger("qualified", "SELECT max(__input__.x) AS m FROM `__input__`")
+    assert(e.exchange("qualified", e.get("src")).head().getInt(0) == 3)
+    // so does a reference inside a CTE body
+    e.registerSqlExchanger("cte",
+      "WITH w AS (SELECT x FROM __input__ WHERE x > 1) SELECT count(*) AS n FROM w")
+    assert(e.exchange("cte", e.get("src")).head().getLong(0) == 2)
   }
 
   test("INSERT into a nonexistent table errors instead of creating it") {

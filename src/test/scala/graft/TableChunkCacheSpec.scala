@@ -34,6 +34,10 @@ class TableChunkCacheSpec extends SparkSpec {
         assert(c.sqlArrowRowCount("select * from nation;") == 25)
         assert(c.sqlArrowRowCount("SELECT * FROM NATION") == 25)
         assert(c.sqlArrowRowCount("table Nation") == 25)
+        // the key is read off the parsed plan: quoting, comments and a
+        // trailing semicolon do not change it
+        assert(c.sqlArrowRowCount("SELECT * FROM `nation` /* c */") == 25)
+        assert(c.sqlArrowRowCount("select * from NATION;") == 25)
         assert(gate.cacheStats._1 == 1,
           s"scan spellings must canonicalize to one entry, got ${gate.cacheStats}")
         // non-bare statements cache under their statement text
