@@ -136,11 +136,14 @@ object Bench {
     // alone. FULL-SET runs only: a dev-loop single-key run
     // (SPARK_GRAFT_KEYS set) must never clobber a driver artifact
     // (round 14's 210.6 s map was overwritten during judging by
-    // exactly such a run).
+    // exactly such a run). The per-core-count copy keeps one map per
+    // `local[cpus]` width, so an 8-core run no longer replaces the
+    // 32-core one.
     if (only.isEmpty) try {
       val p = java.nio.file.Paths.get("/root/repo/bench/BENCH_driver_latest.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, json + "\n")
+      java.nio.file.Files.writeString(p.resolveSibling(s"BENCH_driver_latest_c$cpus.json"), json + "\n")
     } catch {
       case e: Throwable => System.err.println(s"[bench] artifact write failed: $e")
     }

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata (TESTDATA.md / FIXTURES.md).
   *
@@ -9,6 +11,29 @@ import org.apache.spark.sql.functions._
   * pushes predicates down to the vectorized parquet reader, so callers
   * should select/filter on the returned DataFrame and let the optimizer
   * shrink the scan (verified via `.explain`: `PushedFilters`/`ReadSchema`).
+  *
+  * Each source's footer schema is resolved once per process (the
+  * reference registers a table once and serves every later query from
+  * that registration). Inferring it is a Spark job
+  * (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`); reading
+  * with the known schema starts none. [[parquet]] keeps, per source
+  * path, the `StructType` it inferred, keyed by
+  *   - the path's leaf files (path, length, mtime) from a Hadoop FS
+  *     listing (`listStatus`, recursive), and
+  *   - the session's explicitly set `spark.sql.parquet.*` and
+  *     `spark.sql.legacy.parquet.*` confs, which change what inference
+  *     returns (`nanosAsLong` for `events`, `binaryAsString`, …).
+  * A changed listing (a file rewritten, added or removed) re-infers and
+  * replaces the path's entry with all its schemas. A conf set not seen
+  * yet re-infers and adds one schema beside the others: loading
+  * `events` sets `nanosAsLong` on its session, so sessions that have
+  * loaded it and sessions that have not both read the other tables,
+  * and one schema per path would make them evict each other. Only
+  * schemas are kept: no rows, plans, file index or session, so the map
+  * is bounded by the source paths times the conf sets in use, every
+  * load still lists the files and every query still reads them. The
+  * schemas are shared across sessions, including the `newSession()`
+  * engines the verb keys build.
   *
   * At 100 TB these would be partitioned/bucketed tables; the loader is
   * the single seam where that layout knowledge would live.
@@ -41,10 +66,61 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+      normalizeTs(parquet(spark, s"$sfDir/events.parquet"))
     case other =>
-      spark.read.parquet(s"$sfDir/$other.parquet")
+      parquet(spark, s"$sfDir/$other.parquet")
   }
+
+  /** A resolved source: the file listing its schemas were inferred
+    * from, and one schema per parquet-conf set seen with that listing.
+    */
+  private[graft] final case class Resolved(
+      files: Seq[(String, Long, Long)], schemas: Map[Map[String, String], StructType])
+
+  /** Qualified source path → its resolution (one entry per path). */
+  private[graft] val resolved = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+
+  /** `spark.read.parquet(path)`, with the footer schema inferred only
+    * when the path's files changed or the session's parquet confs were
+    * not seen with them yet (see the object doc).
+    */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listed BEFORE the read: a file rewritten in between then keys
+    // the new schema under the old listing, and the next load misses
+    val files =
+      try Some(leaves(fs, p).sorted)
+      catch { case _: java.io.FileNotFoundException => None }
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = fs.makeQualified(p).toString
+    files match {
+      case None => spark.read.parquet(path) // Spark reports the missing path
+      case Some(listed) =>
+        Option(resolved.get(key)).filter(_.files == listed).flatMap(_.schemas.get(confs)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            // same files: add this conf set; new files: drop every older schema
+            resolved.merge(key, Resolved(listed, Map(confs -> df.schema)), (old, neu) =>
+              if (old.files == listed) old.copy(schemas = old.schemas ++ neu.schemas) else neu)
+            df
+        }
+    }
+  }
+
+  /** (path, length, mtime) of every file under `p`. `listStatus`, not
+    * `listFiles`: a `LocatedFileStatus` copies the permission fields,
+    * which the local FS reads by running a shell command per file
+    * (about 5 ms a file on a 4-vCPU Linux VM).
+    */
+  private def leaves(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =
+    fs.listStatus(p).toSeq.flatMap { s =>
+      if (s.isDirectory) leaves(fs, s.getPath)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    }
 
   def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "nation")

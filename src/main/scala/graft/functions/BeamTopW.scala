@@ -26,6 +26,15 @@ import org.apache.spark.sql.expressions.Aggregator
   * (micro-unit squared-L2 sums, exact in the Double cast); ties
   * break strictly lexicographically by (d2, id), bit-identical to
   * the oracle's `row_number() OVER (ORDER BY d2, c_id) <= w`.
+  *
+  * The cut is also exact for arbitrary FINITE Double keys whenever ids
+  * are unique within a group: dedup-on-insert is then a no-op, and
+  * `lt` is a strict total order on finite (key, id) pairs. That is the
+  * `knnEdgesOver` call site, which cuts (-cos, b_id) per a_id with
+  * each b_id scored once. Non-finite keys are outside the contract: a
+  * zero-norm embedding gives a NaN cosine, which `<` cannot order, so
+  * a full buffer drops it and `sortWith` over a NaN-bearing buffer
+  * breaks its comparator's contract. Callers must keep such keys out.
   */
 final case class BeamTopW(w: Int)
     extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {

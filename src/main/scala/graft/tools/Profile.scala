@@ -84,6 +84,9 @@ object Profile {
       val c0 = System.nanoTime()
       fn(spark, sfDir).count()
       val cold = (System.nanoTime() - c0) / 1e9
+      // cleared after each timed run: later driver work (cache drops,
+      // the next key's staging) must not land in this key's group
+      spark.sparkContext.clearJobGroup()
       try spark.catalog.clearCache() catch { case _: Throwable => () }
       // run 2 (warm) — profiled
       Thread.sleep(1000) // drain events from the cold run
@@ -93,11 +96,17 @@ object Profile {
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val warm = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.clearJobGroup()
       Thread.sleep(1000) // let the listener bus drain
       try spark.catalog.clearCache() catch { case _: Throwable => () }
       val snap = jobs.synchronized(jobs.values.toSeq)
       val done = snap.filter(_.end > 0)
-      val busy = done.map(j => j.end - j.start).sum / 1e3
+      // union of job intervals, not a sum: concurrent jobs (parallel
+      // half-writes, broadcast builds) would otherwise count twice
+      val busy = done.map(j => (j.start, j.end)).sortBy(_._1)
+        .foldLeft((0L, Long.MinValue)) { case ((acc, reach), (s, e)) =>
+          (acc + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+        }._1 / 1e3
       println(f"\n=== $key cold=$cold%.2fs warm=$warm%.2fs jobs=${snap.size} jobTime=$busy%.2fs ===")
       println(f"  stages=${agg.get(0)} tasks=${agg.get(1)} shufW=${agg.get(2) / 1024}%dK shufR=${agg.get(3) / 1024}%dK cpu=${agg.get(4) / 1000.0}%.2fs run=${agg.get(5) / 1000.0}%.2fs input=${agg.get(6) / 1024}%dK")
       val bySite = done.groupBy(_.site).map { case (s, js) =>

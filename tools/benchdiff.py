@@ -1,6 +1,9 @@
 #!/usr/bin/env python3
 """Compare two Bench JSON lines (e.g. BENCH_r02.json vs a fresh run):
-per-key ratios, new/removed keys, and the worst regressions.
+per-key ratios, new/removed keys, and the worst regressions. Either
+side may be a driver artifact: bench/BENCH_driver_latest.json (the last
+full run) or bench/BENCH_driver_latest_c<cpus>.json (the last full run
+at that core count).
 Usage: benchdiff.py <old.json> <new.json> [threshold=1.5]
 Exit 1 if any shared key regressed by more than the threshold.
 """

@@ -9,6 +9,11 @@ task/shuffle totals — the measurement evidence for OPTIMIZATION_r22.md.
 Jobs from non-main threads (streaming micro-batches, parallel writes)
 carry no group; they are attributed to the enclosing key by timestamp
 order in the per-key summary.
+
+The per-job lines give each job's own duration. The per-group totals
+are the union of that group's job intervals (elapsed time with at least
+one of its jobs running), so concurrent jobs in one group are not
+counted twice and a total never exceeds the group's wall time.
 """
 import json, sys, collections
 
@@ -56,14 +61,24 @@ with open(path) as f:
                 "name": si.get("Stage Name", ""),
             }
 
-bygroup = collections.defaultdict(float)
+
+def union_secs(intervals):
+    """Seconds covered by at least one (start_ms, end_ms) interval."""
+    total, reach = 0, float("-inf")
+    for s, e in sorted(intervals):
+        total += max(0, e - max(s, reach))
+        reach = max(reach, e)
+    return total / 1e3
+
+
+bygroup = collections.defaultdict(list)
 print(f"{'secs':>8}  {'group':<34} {'callsite':<40} stages")
 for jid in order:
     j = jobs[jid]
     if j["end"] is None:
         continue
     secs = (j["end"] - j["start"]) / 1e3
-    bygroup[j["group"]] += secs
+    bygroup[j["group"]].append((j["start"], j["end"]))
     if secs >= minsecs:
         ntasks = sum(stages.get(s, {}).get("tasks", 0) for s in j["stages"])
         desc = execs.get(j["exec"], "")
@@ -74,6 +89,7 @@ for jid in order:
         print(f"{secs:8.2f}  {j['group'][:30]:<30} "
               f"n_stages={len(j['stages'])} tasks={ntasks} job={jid} {desc[:70]}")
 
-print("\n-- per-group job-time totals --")
-for g, t in sorted(bygroup.items(), key=lambda kv: -kv[1]):
+totals = {g: union_secs(iv) for g, iv in bygroup.items()}
+print("\n-- per-group job-time totals (union of job intervals) --")
+for g, t in sorted(totals.items(), key=lambda kv: -kv[1]):
     print(f"{t:8.2f}  {g or '(no group)'}")
