@@ -3,9 +3,11 @@ package graft.engine
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement,
-  Project, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedGenerator,
+  UnresolvedInlineTable, UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Command, LocalRelation, LogicalPlan,
+  OneRowRelation, ParsedStatement, Project, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 
 /** Spark-native re-expression of Mallard's Flight-server capability
@@ -71,17 +73,63 @@ final class Engine(val spark: SparkSession) {
 
   /** Mutations NOT visible to the catalog counter: raw DDL routed to
     * `spark.sql` and exchanger (re-)registration. Together with
-    * `catalog.version` this forms [[mutationStamp]].
+    * `catalog.version` this forms [[mutationStamp]]; it leads every
+    * [[readStamp]]. Bumped after the mutation ran, like the catalog's
+    * stamps.
     */
   private val epoch = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Catalog tables whose temp view raw DDL replaced or dropped, as of
+    * the last raw statement ([[Catalog.displaced]]). SQL naming one may
+    * read other tables, so [[readStamp]] falls back for it. Written
+    * before the epoch bump that publishes it.
+    */
+  @volatile private var displaced = Set.empty[String]
+
   /** Changes whenever anything that could affect a query result through
     * this engine's API has mutated: catalog tables (PUT/DROP/RENAME/DML
-    * verbs), raw DDL, exchanger registry. TcpGate keys its Arrow result
-    * cache on this — coarse (any write invalidates everything) but
-    * sound, and hot-table serving is read-heavy by construction.
+    * verbs), raw DDL, exchanger registry. Engine-wide: a write to any
+    * table moves it. TcpGate keys its cache on the finer [[readStamp]].
     */
   def mutationStamp: (Long, Long) = (catalog.version.get, epoch.get)
+
+  /** The stamp TcpGate keys a cached reply of `sql` on: it moves when
+    * anything the statement's result depends on may have changed.
+    *
+    *  - `epoch +: stamps`, one per catalog table the statement reads,
+    *    when every input is nameable: each leaf of the parsed plan is a
+    *    catalog table, one of the statement's own CTEs, `OneRowRelation`
+    *    or an inline table, and every function called is Spark's
+    *    built-in (a SQL or temporary function can read tables in its
+    *    body). A write to another table leaves it unchanged.
+    *  - `(epoch, -1, catalog.version)` otherwise, the whole-catalog
+    *    stamp: a raw-DDL view, a Spark table, a qualified name, a path, a
+    *    table function, an unknown name, a displaced catalog view, or
+    *    text that does not parse. Any write moves it.
+    *
+    * A wrong hit would be a wrong answer and a miss only costs time, so
+    * everything not shown nameable falls back. Stamps are bumped after
+    * a write is visible, so a reader holding a new stamp analyzes the
+    * new state. Mutations made out of band on `spark` are not seen.
+    */
+  def readStamp(sql: String): Seq[Long] = stampOf(readSet(sql))
+
+  /** The parsed read set of `sql` (memoized), for [[stampOf]]. */
+  private[engine] def readSet(sql: String): Option[Engine.ReadSet] = classify(sql).reads
+
+  /** [[readStamp]] of a read set already in hand: restamping a cached
+    * entry needs no parse.
+    */
+  private[engine] def stampOf(reads: Option[Engine.ReadSet]): Seq[Long] = {
+    val e = epoch.get
+    val shadowed = displaced
+    reads
+      .filter(_.functions.forall(GraftBridge.isBuiltinFunction(spark, _)))
+      .flatMap(_.tables.foldLeft(Option(Vector(e))) { (acc, t) =>
+        acc.flatMap(s => (if (shadowed(t)) None else catalog.stamp(t)).map(s :+ _))
+      })
+      .getOrElse(Vector(e, -1L, catalog.version.get))
+  }
 
   // ---- A1/A2: GET — SQL routed by Spark's parsed plan ------------------
 
@@ -115,15 +163,69 @@ final class Engine(val spark: SparkSession) {
     *  - scan: the table a bare full-table scan reads (`TABLE t`,
     *    `SELECT * FROM t`, any spelling, comments or backticks), as
     *    written — TcpGate's per-table cache key.
+    *  - reads: for a plain query, the tables and functions it names
+    *    ([[readSetOf]]), the input of [[readStamp]].
     *
     * Unparseable text (wire verbs, DuckDB-dialect COPY) is neither pure
     * nor plain — erring non-pure is always sound: the cost is a cold
     * cache, never a wrong result.
     */
-  private case class Shape(pure: Boolean, plainQuery: Boolean, scan: Option[String])
+  private case class Shape(pure: Boolean, plainQuery: Boolean, scan: Option[String],
+    reads: Option[Engine.ReadSet])
+
+  private def lower(name: String): String = name.toLowerCase(java.util.Locale.ROOT)
+
+  /** The names a parsed query reads, or None when some input cannot be
+    * named: a leaf other than a single-part relation, an inline table or
+    * `OneRowRelation` (a path, a table function, `IDENTIFIER(…)`), a
+    * qualified relation or function name, or a node holding plans
+    * outside its children. Subquery expressions are walked too.
+    * Relation names resolve against the statement's own CTEs by Spark's
+    * scoping: a WITH's names are visible in its main query and in later
+    * definitions (and in their own body when RECURSIVE), and a CTE
+    * shadows any table of its name. Every other relation name, lower-
+    * cased, is a table read.
+    */
+  private def readSetOf(plan: LogicalPlan): Option[Engine.ReadSet] = {
+    val tables = collection.mutable.LinkedHashSet.empty[String]
+    val functions = collection.mutable.LinkedHashSet.empty[String]
+    def named(f: Seq[String]): Boolean = f match {
+      case Seq(n) => functions += lower(n); true
+      case _      => false
+    }
+    def walk(p: LogicalPlan, ctes: Set[String]): Boolean = p match {
+      case w: UnresolvedWith =>
+        var scope = ctes
+        w.cteRelations.forall { case (n, body, _) =>
+          val inBody = if (w.allowRecursion) scope + lower(n) else scope
+          scope += lower(n)
+          walk(body, inBody)
+        } && walk(w.child, scope)
+      case UnresolvedRelation(Seq(n), _, false) =>
+        if (!ctes(lower(n))) tables += lower(n)
+        true
+      case _: UnresolvedRelation => false
+      case _ if p.innerChildren.nonEmpty => false
+      case _ if p.children.isEmpty && !nameableLeaf(p) => false
+      case _ =>
+        p.expressions.forall(_.collect {
+          case s: PlanExpression[_] => s.plan match {
+            case q: LogicalPlan => walk(q, ctes)
+            case _              => false
+          }
+          case f: UnresolvedFunction  => named(f.nameParts)
+          case g: UnresolvedGenerator => named(g.name.nameParts)
+        }.forall(identity)) && p.children.forall(walk(_, ctes))
+    }
+    def nameableLeaf(p: LogicalPlan): Boolean = p match {
+      case _: OneRowRelation | _: UnresolvedInlineTable | _: LocalRelation => true
+      case _ => false
+    }
+    if (walk(plan, Set.empty)) Some(Engine.ReadSet(tables.toSeq, functions.toSeq)) else None
+  }
 
   private def shape(parsed: Either[Throwable, LogicalPlan]): Shape = parsed match {
-    case Left(_) => Shape(pure = false, plainQuery = false, scan = None)
+    case Left(_) => Shape(pure = false, plainQuery = false, scan = None, reads = None)
     case Right(plan) =>
       val hasCommand = plan.exists {
         case _: Command | _: ParsedStatement => true
@@ -139,7 +241,7 @@ final class Engine(val spark: SparkSession) {
         case Project(Seq(UnresolvedStar(None)), UnresolvedRelation(Seq(t), _, false)) => Some(t)
         case _ => None
       }
-      Shape(!mutating, !hasCommand, scan)
+      Shape(!mutating, !hasCommand, scan, if (hasCommand) None else readSetOf(plan))
   }
 
   /** [[shape]] per statement text, memoized because the gate asks for
@@ -197,12 +299,12 @@ final class Engine(val spark: SparkSession) {
       if (shape(parsed).pure) run()
       else {
         // any non-pure statement invalidates cached results, even
-        // though the catalog counter can't see it. Commands execute
-        // eagerly when their frame is built; the routing contract
-        // returns the status row.
-        epoch.incrementAndGet()
-        run()
-        statusOk
+        // though the catalog counter can't see it: the epoch moves
+        // after it ran (or failed), with the catalog views it may have
+        // replaced recorded first. Commands execute eagerly when their
+        // frame is built; the routing contract returns the status row.
+        try { run(); statusOk }
+        finally { displaced = catalog.displaced; epoch.incrementAndGet() }
       }
     }
   }
@@ -234,10 +336,8 @@ final class Engine(val spark: SparkSession) {
     * Re-registering overwrites, matching the demo's override of the
     * default exchanger (`demo.py:500-506`).
     */
-  def registerExchanger(command: String)(f: DataFrame => DataFrame): Unit = {
-    epoch.incrementAndGet()
-    exchangers.update(command, f)
-  }
+  def registerExchanger(command: String)(f: DataFrame => DataFrame): Unit =
+    try exchangers.update(command, f) finally epoch.incrementAndGet()
 
   /** Register a transform DEFINED IN SQL — the remote-registration
     * path (TcpGate `REGISTER <name> AS <sql>`). The reference ships
@@ -321,6 +421,12 @@ final class Engine(val spark: SparkSession) {
 }
 
 object Engine {
+  /** The catalog-facing inputs of a plain query: lower-cased names of
+    * the relations it reads outside its own CTEs, and of the functions
+    * it calls. See [[Engine.readStamp]].
+    */
+  private[engine] final case class ReadSet(tables: Seq[String], functions: Seq[String])
+
   /** Two-server topology: independent session catalogs, one cluster. */
   def pair(spark: SparkSession): (Engine, Engine) =
     (new Engine(spark.newSession()), new Engine(spark.newSession()))

@@ -112,9 +112,16 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   // IPC-encoded result bytes of pure queries and stream them directly
   // on repeat — the first GET pays the encode, every subsequent GET is
   // a socket write. Soundness:
-  //  - keys include [[Engine.mutationStamp]], so ANY mutation through
-  //    the engine API (PUT/DROP/RENAME/DML verbs, raw DDL, exchanger
-  //    registration) makes every cached entry unreachable;
+  //  - keys include [[Engine.readStamp]] of the statement: the stamps of
+  //    the catalog tables it reads behind the engine epoch, so a write to
+  //    a table makes the entries that read it unreachable and leaves the
+  //    rest live, and raw DDL or exchanger registration retires every
+  //    entry. A statement whose inputs the engine cannot name (raw-DDL
+  //    view, Spark table, path, table function, SQL or temporary
+  //    function…) keys on the whole-catalog stamp, which any write moves;
+  //  - stamps move only after a write is visible, so a GET that reads a
+  //    stamp analyzes state at least that new: an install never puts
+  //    pre-write bytes under a post-write stamp;
   //  - only statements that parse to a plain query plan are cacheable
   //    — verbs with side effects (COPY, INSERT, REGISTER, DDL…) always
   //    execute (see [[cacheable]]);
@@ -125,17 +132,30 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   //    cache read, no install) — the per-request freshness escape
   //    hatch; `##flushcache` drops every entry (for mutations made
   //    out-of-band on engine.spark, which the stamp cannot see);
+  //  - `##stats` replies one JSON line: hits, misses and installs since
+  //    the gate started, entries and bytes now (see [[statsJson]]);
   //  - bare catalog-table scans on the DEFAULT path share one
   //    canonical per-table pre-encoded entry, the engine's columnar
   //    serving form (see [[tableScanKey]]);
   //  - total cached bytes are bounded (`spark.graft.gate.arrowCacheBytes`,
   //    default 2 GiB, 0 disables); results that exceed the bound are
   //    streamed but not retained; eviction is LRU.
-  // Stale-stamp entries (unreachable — both stamp counters are
-  // monotonic) are purged on every insert.
+  // Entries whose own stamp has moved (unreachable — every stamp is
+  // monotonic) are purged on every insert; the others stay, whatever
+  // else was written.
 
   private case class CachedResult(
     schemaJson: String, frames: Vector[Array[Byte]], bytes: Long)
+
+  import TcpGate.Key
+
+  /** False once anything the keyed statement reads has changed. */
+  private def live(key: Key): Boolean = engine.stampOf(key.reads) == key.stamp
+
+  private def keyOf(stmt: String): Key = {
+    val reads = engine.readSet(stmt)
+    Key(tableScanKey(stmt).getOrElse(stmt), engine.stampOf(reads), reads)
+  }
 
   private val cacheMaxBytes: Long = engine.spark.conf
     .getOption("spark.graft.gate.arrowCacheBytes")
@@ -181,16 +201,29 @@ final class TcpGate(val engine: Engine, port: Int = 0,
     */
   def codecName: String = cacheCodec
 
-  private val arrowCache =
-    new java.util.LinkedHashMap[(String, (Long, Long)), CachedResult](16, 0.75f, true)
+  private val arrowCache = new java.util.LinkedHashMap[Key, CachedResult](16, 0.75f, true)
   private var cachedBytes = 0L // guarded by arrowCache's monitor
 
-  private def cacheGet(key: (String, (Long, Long))): Option[CachedResult] =
+  /** Default-path lookups that served cached bytes / found none, and
+    * entries installed (inline or by [[recompress]]).
+    */
+  private val hits, misses, installs = new java.util.concurrent.atomic.AtomicLong()
+
+  private def cacheGet(key: Key): Option[CachedResult] =
     arrowCache.synchronized(Option(arrowCache.get(key)))
 
   /** (entries, total cached bytes) — diagnostics. */
   def cacheStats: (Int, Long) =
     arrowCache.synchronized((arrowCache.size, cachedBytes))
+
+  /** The `##stats` reply: one JSON object of the cache counters since
+    * the gate started, and the entries and bytes held now.
+    */
+  def statsJson: String = {
+    val (entries, bytes) = cacheStats
+    s"""{"hits":${hits.get},"misses":${misses.get},"installs":${installs.get},""" +
+      s""""entries":$entries,"bytes":$bytes}"""
+  }
 
   /** Drop every cached reply (the `##flushcache` verb): required after
     * mutations the engine's stamp cannot see (a host app writing
@@ -206,10 +239,11 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   // installs the entry — the first GET pays only the ##nocache fresh
   // path (measured ~3 s vs ~6.5 s inline-zstd, with none of the
   // multi-GB raw-retention GC stalls), and later hits serve the small
-  // compressed bytes. Guards: the install is skipped if the mutation
-  // stamp moved (the re-executed plan could see newer data than the
-  // stamp promises), and only cacheSafe (deterministic) results reach
-  // here, so the re-execution is value-identical to what was served.
+  // compressed bytes. Guards: the install is skipped if the entry's
+  // own stamp moved (the re-executed plan could see newer data than
+  // the stamp promises), and only cacheSafe (deterministic) results
+  // reach here, so the re-execution is value-identical to what was
+  // served.
   private val recompressPool = java.util.concurrent.Executors.newSingleThreadExecutor(
     (r: Runnable) => { val t = new Thread(r, "graft-gate-recompress"); t.setDaemon(true); t })
 
@@ -218,18 +252,16 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   // re-execution per request (review finding — previously an
   // over-bound table triggered a full re-execute + encode on EVERY
   // GET forever). Pruned of dead stamps whenever a new key is added.
-  private val recompressSkip =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, (Long, Long))]()
+  private val recompressSkip = java.util.concurrent.ConcurrentHashMap.newKeySet[Key]()
 
   /** Abort signal for an encode that crossed cacheMaxBytes mid-pass. */
   private final class RecompressOverBound extends RuntimeException
 
-  private def recompress(key: (String, (Long, Long)), df: DataFrame,
-      schemaJson: String): Unit = {
+  private def recompress(key: Key, df: DataFrame, schemaJson: String): Unit = {
     if (recompressSkip.contains(key)) return
     recompressPool.submit(new Runnable {
       def run(): Unit = try {
-        if (engine.mutationStamp != key._2) return // stale before we started
+        if (!live(key)) return // stale before we started
         if (cacheGet(key).isDefined) return // an earlier pass already installed it
         val spark = engine.serveSession
         val frames = Vector.newBuilder[Array[Byte]]
@@ -249,11 +281,11 @@ final class TcpGate(val engine: Engine, port: Int = 0,
         add(GraftBridge.arrowStreamFooter(spark, df.schema))
         // swap only if still current — a mutation mid-encode means the
         // re-executed bytes may not match what stamp-keyed readers saw
-        if (engine.mutationStamp == key._2 && bytes <= cacheMaxBytes)
+        if (live(key) && bytes <= cacheMaxBytes)
           cachePut(key, CachedResult(schemaJson, frames.result(), bytes))
       } catch {
         case _: RecompressOverBound =>
-          recompressSkip.removeIf(_._2 != key._2) // drop dead-stamp keys
+          recompressSkip.removeIf(!live(_)) // drop dead-stamp keys
           recompressSkip.add(key)
           ()
         case _: Exception => () // best-effort: raw serving stays valid
@@ -269,17 +301,18 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   def awaitRecompress(): Unit =
     recompressPool.submit(new Runnable { def run(): Unit = () }).get()
 
-  private def cachePut(key: (String, (Long, Long)), value: CachedResult): Unit =
+  private def cachePut(key: Key, value: CachedResult): Unit =
     arrowCache.synchronized {
       if (value.bytes <= cacheMaxBytes) {
         Option(arrowCache.put(key, value)).foreach(p => cachedBytes -= p.bytes)
         cachedBytes += value.bytes
+        installs.incrementAndGet()
         val it = arrowCache.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
-          // purge unreachable stamps eagerly; evict LRU past the bound
-          if (e.getKey != key &&
-              (e.getKey._2 != key._2 || cachedBytes > cacheMaxBytes)) {
+          // evict LRU past the bound; purge entries whose own stamp
+          // moved (unreachable), keep live ones of other tables
+          if (e.getKey != key && (cachedBytes > cacheMaxBytes || !live(e.getKey))) {
             cachedBytes -= e.getValue.bytes
             it.remove()
           }
@@ -304,11 +337,12 @@ final class TcpGate(val engine: Engine, port: Int = 0,
     * every GET, but against DuckDB's COLUMNAR memory — its fresh
     * `SELECT * FROM t` is a near-memcpy export. Spark stores rows, so the
     * honest equivalent of "my table is already columnar" is keeping each
-    * catalog table's Arrow-encoded chunks keyed on
-    * [[Engine.mutationStamp]]: a default-path GET still parses,
-    * classifies and stamps, but ships pre-encoded bytes. Any mutation
-    * through the engine moves the stamp and the next GET re-encodes;
-    * out-of-band spark mutations require `##nocache` (per-request) or
+    * catalog table's Arrow-encoded chunks keyed on the table's stamp
+    * ([[Engine.readStamp]]): a default-path GET still parses, classifies
+    * and stamps, but ships pre-encoded bytes. A mutation of that table
+    * through the engine (or raw DDL) moves the stamp and the next GET
+    * re-encodes; writes to other tables leave the entry live.
+    * Out-of-band spark mutations require `##nocache` (per-request) or
     * `##flushcache` (connection-wide) to force freshness.
     */
   private def tableScanKey(stmt: String): Option[String] =
@@ -412,7 +446,7 @@ final class TcpGate(val engine: Engine, port: Int = 0,
       bin.flush()
     }
 
-    def sendArrow(df0: DataFrame, key: Option[(String, (Long, Long))]): Unit = {
+    def sendArrow(df0: DataFrame, key: Option[Key]): Unit = {
       // encode under the engine's serve session: it carries the tuned
       // arrow.maxRecordsPerBatch without mutating the caller's session
       val spark = engine.serveSession
@@ -498,6 +532,8 @@ final class TcpGate(val engine: Engine, port: Int = 0,
                 // engine.spark must flush before clients GET again
                 flushCache()
                 out.println("##ok flushed")
+              case "##stats" =>
+                out.println(statsJson)
               case stmt =>
                 try {
                   // `##nocache <sql>` is an UNCONDITIONAL bypass: fresh
@@ -510,10 +546,13 @@ final class TcpGate(val engine: Engine, port: Int = 0,
                   val bypass = stmt.toLowerCase.startsWith("##nocache ")
                   val body = if (bypass) stmt.drop("##nocache ".length).trim else stmt
                   if (arrowMode && !bypass && cacheable(body)) {
-                    val key = (tableScanKey(body).getOrElse(body), engine.mutationStamp)
+                    // stamp read BEFORE the statement is analyzed: what
+                    // runs below is at least as new as the key says
+                    val key = keyOf(body)
                     cacheGet(key) match {
-                      case Some(c) => sendCached(c)
+                      case Some(c) => hits.incrementAndGet(); sendCached(c)
                       case None    =>
+                        misses.incrementAndGet()
                         val df = runLine(body)
                         // non-deterministic / current-time results are
                         // streamed but never installed
@@ -563,6 +602,14 @@ final class TcpGate(val engine: Engine, port: Int = 0,
     clients.forEach(s => try s.close() catch { case _: Exception => () })
     ()
   }
+}
+
+object TcpGate {
+  /** A cached reply's key: the statement text (or `##table:<t>`) and
+    * the [[Engine.readStamp]] it was looked up at, with the read set
+    * that restamps it (a function of the text, so not extra identity).
+    */
+  private final case class Key(text: String, stamp: Seq[Long], reads: Option[Engine.ReadSet])
 }
 
 /** Client half of the gate protocol — the analog of the reference's

@@ -42,6 +42,27 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.catalog.dropTempView(name)
 
+  /** The session's registered temp view object for `name`: a new
+    * object each time the view is (re)created, so identity tells
+    * whether the view is still the one a caller registered.
+    */
+  def rawTempView(spark: SparkSession, name: String): Option[AnyRef] =
+    spark.asInstanceOf[classic.SparkSession]
+      .sessionState.catalog.getRawTempView(name)
+
+  /** True iff `name` resolves in `spark` to Spark's own built-in
+    * function: the session registry still holds the built-in entry, not
+    * a temporary or SQL function registered over it. Session registries
+    * start as a clone of the built-in one, so the entries are shared.
+    */
+  def isBuiltinFunction(spark: SparkSession, name: String): Boolean = {
+    val id = catalyst.FunctionIdentifier(name)
+    catalyst.analysis.FunctionRegistry.builtin.lookupFunction(id).exists { info =>
+      spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+        .lookupFunction(id).exists(_ eq info)
+    }
+  }
+
   /** Block until every queued listener event is delivered — lets a
     * measurement (ScaleProbe's shuffle-bytes listener) read totals
     * without racing the async bus. `listenerBus` is private[spark],

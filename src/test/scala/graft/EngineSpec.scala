@@ -391,10 +391,11 @@ class EngineSpec extends SparkSpec {
     val reader = new Thread(() => {
       while (!stop) {
         // a reader must find the table under ONE of the two names at
-        // any instant — the swap is old-visible-until-new-registered
-        val a = try { e.catalog.get("flip"); true } catch { case _: Exception => false }
-        val b = try { e.catalog.get("flop"); true } catch { case _: Exception => false }
-        if (!a && !b) neitherName += 1
+        // any instant — the swap is old-visible-until-new-registered.
+        // Both names are read off one snapshot: two separate lookups
+        // are not one instant (a full rename pair can run between them)
+        val s = e.catalog.snapshot
+        if (!s.contains("flip") && !s.contains("flop")) neitherName += 1
       }
     })
     reader.start()
