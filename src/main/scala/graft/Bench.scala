@@ -1,6 +1,48 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Per-key timings of every `SparkEntry` key, printed as one
+  * `{"metric":"total",…}` JSON line.
+  *
+  * Each run of a key is its own Spark job group, `<key>#<run>`. To
+  * attribute the jobs, stages and bytes of a run to its key, turn on
+  * Spark's event log with stock confs and read it with
+  * `tools/evprof.py`:
+  * {{{
+  * mkdir -p /tmp/sparklogs
+  * SPARK_GRAFT_KEYS=join_skewed sbt 'set javaOptions ++= Seq("-Dspark.eventLog.enabled=true","-Dspark.eventLog.dir=/tmp/sparklogs")' "runMain graft.Bench"
+  * python3 tools/evprof.py /tmp/sparklogs/eventlog_v2_<app-id>
+  * }}}
+  */
 object Bench {
+  /** One timed run of key `name`: build its DataFrame, `count()` it,
+    * then drop the session's cached frames. Returns (succeeded,
+    * seconds); failures must NOT feed the min — a run that throws
+    * after 0.05s would otherwise beat the honest 3s run and be
+    * published as an excellent timing with no error signal.
+    *
+    * Every job the run starts is in job group `<name>#<run>`. The
+    * group is cleared in a `finally`, so a key that throws cannot
+    * leak its group into the next key's jobs.
+    */
+  private[graft] def once(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame, run: Int): (Boolean, Double) = {
+    val t0 = System.nanoTime()
+    val ok =
+      try {
+        spark.sparkContext.setJobGroup(s"$name#$run", s"$name run $run")
+        fn(spark, sfDir).count(); true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+      } finally spark.sparkContext.clearJobGroup()
+    val secs = (System.nanoTime() - t0) / 1e9
+    // each query's own cache fills inside its timing; dropping them
+    // between queries keeps 100+ successive runs from evicting each
+    // other (a long-lived server would scope caches the same way)
+    try spark.catalog.clearCache() catch { case _: Throwable => () }
+    (ok, secs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -21,23 +63,11 @@ object Bench {
       spark.sql("SELECT 1").count()
       SparkEntry.queries("count_star")(spark, sfDir).count()
     } catch { case _: Throwable => () }
-    // (succeeded, seconds): failures must NOT feed the min — a run that
-    // throws after 0.05s would otherwise beat the honest 3s run and be
-    // published as an excellent timing with no error signal
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Boolean, Double) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      val secs = (System.nanoTime() - t0) / 1e9
-      // each query's own cache fills inside its timing; dropping them
-      // between queries keeps 100+ successive runs from evicting each
-      // other (a long-lived server would scope caches the same way)
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      (ok, secs)
+    // run number per key, so every run lands in its own job group
+    val runsOf = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    def timed(name: String, fn: (SparkSession, String) => DataFrame): (Boolean, Double) = {
+      runsOf(name) += 1
+      once(spark, sfDir, name, fn, runsOf(name))
     }
     // DERANGED (seeded-hash) key order, not alphabetical: round 14's
     // driver pass hit one ~30 s contention window that tainted BOTH
@@ -85,8 +115,8 @@ object Bench {
         // alone. The minimum over SUCCESSFUL runs is the number that
         // reflects the code; all-failed keys report the max elapsed
         // (pessimistic, and the stderr line names the error).
-        val two = Seq(once(name, fn), once(name, fn))
-        val runs = if (two.exists(r => r._1 && r._2 < 1.0)) two :+ once(name, fn) else two
+        val two = Seq(timed(name, fn), timed(name, fn))
+        val runs = if (two.exists(r => r._1 && r._2 < 1.0)) two :+ timed(name, fn) else two
         val good = runs.filter(_._1).map(_._2)
         name -> (good.nonEmpty, if (good.nonEmpty) good.min else runs.map(_._2).max)
       }
@@ -113,7 +143,7 @@ object Bench {
       val retry = ok && anchor.get(name).exists(a => secs > 4 * a)
       if (!retry) name -> secs
       else {
-        val (rOk, rSecs) = once(name, byName(name))
+        val (rOk, rSecs) = timed(name, byName(name))
         System.err.println(f"[bench] outlier re-run $name: $secs%.2fs -> $rSecs%.2fs")
         name -> (if (rOk) math.min(secs, rSecs) else secs)
       }

@@ -133,15 +133,9 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 
-  /** Register every testdata table as a temp view in `spark`'s
+  /** Register the named testdata tables as temp views in `spark`'s
     * session-local catalog, so `spark.sql` (CTEs, multi-table SQL) can
     * name them exactly as the DuckDB oracle does.
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    register(spark, sfDir, names: _*)
-
-  /** Register only the named tables (cheaper for queries that touch
-    * one or two — no point planning scans of ten).
     */
   def register(spark: SparkSession, sfDir: String, which: String*): Unit =
     which.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))

@@ -39,10 +39,10 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
   *    schema header, one chunk per record batch, end-of-stream marker;
   *  - a zero-length chunk terminator, then the usual `##end` line.
   * Rows are encoded to record batches ON THE EXECUTORS
-  * (`GraftBridge.arrowBatches` runs Spark's own `toArrowBatchRdd`);
-  * the driver never materializes rows, it pumps one partition of
-  * opaque byte payloads at a time. Errors before any binary byte are
-  * plain `##error` lines; a failure mid-stream terminates the chunk
+  * (`GraftBridge.arrowBatchesPipelined` runs Spark's own
+  * `toArrowBatchRdd` in one job); the driver never materializes rows,
+  * it pumps opaque byte payloads in partition order. Errors before
+  * any binary byte are plain `##error` lines; a failure mid-stream terminates the chunk
   * sequence (zero-length chunk) and then reports `##error` — the
   * client drops the partial stream. [[GateClient]] implements the
   * client half.
@@ -139,7 +139,9 @@ final class TcpGate(val engine: Engine, port: Int = 0,
   //    serving form (see [[tableScanKey]]);
   //  - total cached bytes are bounded (`spark.graft.gate.arrowCacheBytes`,
   //    default 2 GiB, 0 disables); results that exceed the bound are
-  //    streamed but not retained; eviction is LRU.
+  //    streamed but not retained; entries are bounded by
+  //    [[TcpGate.MaxCacheEntries]], so replies to one-off statements
+  //    cannot pile up until the byte bound; eviction is LRU.
   // Entries whose own stamp has moved (unreachable — every stamp is
   // monotonic) are purged on every insert; the others stay, whatever
   // else was written.
@@ -310,9 +312,10 @@ final class TcpGate(val engine: Engine, port: Int = 0,
         val it = arrowCache.entrySet().iterator()
         while (it.hasNext) {
           val e = it.next()
-          // evict LRU past the bound; purge entries whose own stamp
+          // evict LRU past either bound; purge entries whose own stamp
           // moved (unreachable), keep live ones of other tables
-          if (e.getKey != key && (cachedBytes > cacheMaxBytes || !live(e.getKey))) {
+          if (e.getKey != key && (cachedBytes > cacheMaxBytes ||
+              arrowCache.size > TcpGate.MaxCacheEntries || !live(e.getKey))) {
             cachedBytes -= e.getValue.bytes
             it.remove()
           }
@@ -610,6 +613,11 @@ object TcpGate {
     * that restamps it (a function of the text, so not extra identity).
     */
   private final case class Key(text: String, stamp: Seq[Long], reads: Option[Engine.ReadSet])
+
+  /** Most replies the result cache holds. Each install walks every
+    * entry under the cache lock, so the count bounds that walk too.
+    */
+  private[graft] val MaxCacheEntries = 64
 }
 
 /** Client half of the gate protocol — the analog of the reference's

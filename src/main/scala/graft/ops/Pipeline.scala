@@ -71,8 +71,7 @@ object Pipeline {
   }
 
   /** The quality_buckets pipeline over an arbitrary (doc_id, text)
-    * corpus — factored so ScaleProbe's `buckets` mode drives the
-    * operator's REAL code path at corpus octaves (the probe-drift rule).
+    * corpus.
     */
   private[graft] def qualityBuckets(corpus: DataFrame): DataFrame = {
     val c = maybePlanCache(corpus
@@ -112,8 +111,8 @@ object Pipeline {
 
   /** Duplicate-cluster labels by large-star/small-star contraction
     * over LSH-banded near-dup edges (Jaccard ≥ 0.8) plus exact-text
-    * star edges — the core of `dedup_components`, factored out so
-    * ScaleProbe can measure the loop's convergence at corpus octaves.
+    * star edges — the core of `dedup_components`, factored out so the
+    * indexed, streaming and pipeline keys and the specs share it.
     *
     * Returns (labels `(id, lbl)`, symmetrized edge list `(src, dst)`,
     * contraction phase pairs). The corpus-sized `hs` is NOT cached
@@ -413,7 +412,7 @@ object Pipeline {
   /** The per-old-corpus artifacts the delta path stores alongside the
     * MinHash index halves: verified old×old near edges, old exact-dup
     * star edges, and the digest → min-old-id map. Exposed so
-    * ScaleProbe can build probe indexes with the identical recipe.
+    * ClusterStream seeds its index with the identical recipe.
     */
   private[graft] val ccIndexExtras: Map[String, (DataFrame, DataFrame, DataFrame) => DataFrame] = Map(
     "near" -> { (_: DataFrame, hs: DataFrame, bands: DataFrame) =>
@@ -437,8 +436,7 @@ object Pipeline {
   }
 
   /** The per-batch half of [[componentLabelsDelta]], parametrized on
-    * the stored index dir + corpora so ScaleProbe can drive it at
-    * octaves (fixed batch, growing old corpus).
+    * the stored index dir + corpora.
     */
   private[graft] def deltaFromIndex(s: SparkSession, idx: String,
       newCorpus: DataFrame): (DataFrame, DataFrame, Int) = {

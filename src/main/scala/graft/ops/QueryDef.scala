@@ -9,6 +9,4 @@ final case class QueryDef(name: String, fn: Q, oracle: Option[String])
 object QueryDef {
   def sql(name: String, oracle: String)(fn: Q): QueryDef =
     QueryDef(name, fn, Some(oracle))
-  def rowsOnly(name: String)(fn: Q): QueryDef =
-    QueryDef(name, fn, None)
 }

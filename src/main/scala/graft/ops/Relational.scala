@@ -97,10 +97,7 @@ object Relational {
       |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS ps_availqty
       |  FROM lineitem GROUP BY l_partkey, l_suppkey)""".stripMargin
 
-  /** The rfm_segments pipeline over an arbitrary events frame —
-    * factored so ScaleProbe's `buckets` mode drives the operator's
-    * REAL code path at user-population octaves (the probe-drift rule).
-    */
+  /** The rfm_segments pipeline over an arbitrary events frame. */
   private[graft] def rfmSegments(events: DataFrame): DataFrame = {
     val ev = events.filter(col("event_type") === "purchase")
     // recency anchors at the corpus-wide latest event (the analysis

@@ -123,10 +123,10 @@ object Text {
 
   /** (doc_id, hs): distinct md5-based 3-shingle hashes of a
     * (doc_id, text) frame — the input to every MinHash consumer. ONE
-    * canonical implementation (dedup_near, dedup_incremental, and both
-    * ScaleProbe probes share it): a band-count or shingle-width change
-    * cannot silently diverge between the oracled keys and the probe
-    * that claims to measure them.
+    * canonical implementation (dedup_near, dedup_incremental, the
+    * decontamination keys and the streaming indexes share it): a
+    * band-count or shingle-width change cannot silently diverge
+    * between them.
     */
   private[graft] def shingleHashes(df: DataFrame): DataFrame =
     df.select(col("doc_id"), hsCol(col("text")).as("hs"))
@@ -1870,8 +1870,8 @@ object Text {
 
   /** One training round's kernel: the frequency-weighted adjacent-pair
     * count over a (token, freq, rep) vocab and its global argmax (ties
-    * lexicographic). Vocab-sized work regardless of corpus size — the
-    * claim ScaleProbe's `bpe` octave measures.
+    * lexicographic). Vocab-sized work regardless of corpus size
+    * (SCALE.md's `bpe` octave). TextOpsSpec drives it directly.
     */
   private[graft] def bpeTopPair(reps: DataFrame): Option[(String, String, Long)] =
     bpeTopPairs(reps, 1)._1.headOption
@@ -1956,11 +1956,9 @@ object Text {
   /** Banded MinHash candidates between a train corpus and a
     * (broadcast-small) eval corpus with the exact micro-unit Jaccard
     * attached: (tid, eid, jac_micro), unfiltered. ONE copy of the
-    * fuzzy-decontamination pipeline, shared by `decontaminate_fuzzy`
-    * and ScaleProbe's decontam octave — the probe measures the
-    * operator's actual code path, and a banding/Jaccard change cannot
-    * desynchronize them. Callers cache ths/ehs (both are read twice:
-    * band candidates + verify join).
+    * fuzzy-decontamination pipeline, behind `decontaminate_fuzzy`.
+    * Callers cache ths/ehs (both are read twice: band candidates +
+    * verify join).
     */
   private[graft] def fuzzyPairs(ths: DataFrame, ehs: DataFrame): DataFrame = {
     val eb = minhashBands(ehs).select(col("doc_id").as("eid"), col("b"), col("bkey"))
@@ -1975,7 +1973,7 @@ object Text {
   }
 
   /** Char-split starting vocab for BPE over an arbitrary corpus
-    * (shared with ScaleProbe). */
+    * (shared with TextOpsSpec). */
   private[graft] def bpeStartVocab(corpus: DataFrame): DataFrame =
     corpus.select(explode(graft.ops.toks(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))

@@ -294,8 +294,8 @@ object Vectors {
     * subspace, code) distances feeding BOTH the one-pass encoder
     * (argmin code) and the broadcast query distance tables → ADC
     * aggregate. Returns (e0 = micro-unit vectors, adist = (q_id, c_id,
-    * ad)). Factored so both keys (and any probe) time the identical
-    * code path instead of drifting copies.
+    * ad)). Factored so both keys run the identical code path instead
+    * of drifting copies.
     */
   private[graft] def pqAdcChain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (e0, enc, qd) = pqParts(s, d)
@@ -578,14 +578,12 @@ object Vectors {
     (e0, enc, qd)
   }
 
-  /** multimodal_phash's bucketing stage (also timed by ScaleProbe's
-    * phash mode, so probe and operator cannot drift): corpus +
-    * re-encoded plants → PRODUCTION-WIDTH 64-bit perceptual hash held
-    * as its four pigeonhole 16-bit blocks `b0..b3` (the pHash/PDQ
-    * deployment shape — 65,536 buckets per block index instead of the
-    * former 16-bit/8-bit-block toy, whose n²/256 candidate space
-    * ScaleProbe measured saturating at ~1e5 rows). Block k's 16 bits
-    * are the high bits of md5("k:" || text)'s 16 bytes (a
+  /** multimodal_phash's bucketing stage: corpus + re-encoded plants →
+    * PRODUCTION-WIDTH 64-bit perceptual hash held as its four
+    * pigeonhole 16-bit blocks `b0..b3` (the pHash/PDQ deployment
+    * shape — 65,536 buckets per block index instead of the former
+    * 16-bit/8-bit-block toy, whose n²/256 candidate space saturated at
+    * ~1e5 rows, SCALE.md). Block k's 16 bits are the high bits of md5("k:" || text)'s 16 bytes (a
     * deterministic stand-in for DCT-sign bits — the container has no
     * codecs; the SEARCH machinery is the point). The hash never
     * materializes as one 64-bit value: hamming distances sum the four
@@ -619,10 +617,8 @@ object Vectors {
   }
 
   /** dedup_media's fingerprint + keeper aggregation over an arbitrary
-    * (doc_id, payload) frame — the operator feeds its fixture-derived
-    * payloads, ScaleProbe's media mode feeds KB-sized ones to prove
-    * the payload bytes never reach the shuffle (only the 32-char fp,
-    * ids, and lengths do).
+    * (doc_id, payload) frame. Payload bytes never reach the shuffle:
+    * only the 32-char fp, ids, and lengths do.
     */
   private[graft] def mediaDedup(media: DataFrame): DataFrame =
     media
@@ -648,15 +644,14 @@ object Vectors {
   /** knn edges with the cell count SCALED TO THE CORPUS — the
     * production dial the fixed-8-seed key lacks (SemDeDup/IVF: cells
     * grow ∝ n so per-cell size — and with it per-row candidate work —
-    * stays FLAT as the corpus grows; ScaleProbe's knn mode proved the
-    * law on a probe-only path in round 13, this puts it in the
-    * operator). cells = max(8, ⌈n/perCell⌉), centroid seeds picked by
-    * the deterministic stride rule (every ⌊n/cells⌋-th vec_id — the
+    * stays FLAT as the corpus grows; SCALE.md's round-13 knn table
+    * measured the law). cells = max(8, ⌈n/perCell⌉), centroid seeds
+    * picked by the deterministic stride rule (every ⌊n/cells⌋-th vec_id — the
     * reproducible stand-in for a sampled/k-means seeding, exactly as
     * the fixed id list was; the oracle replicates the same integer
     * formula). `perCell` is the per-cell size target (the oracled key
-    * always serves the default 125; probes/specs pass other targets
-    * explicitly).
+    * always serves the default 125; VectorOpsSpec passes other
+    * targets explicitly).
     */
   private[graft] def knnEdgesScaled(s: SparkSession, d: String,
       perCell: Long = 125L, degree: Int = 3): DataFrame = {
@@ -666,8 +661,8 @@ object Vectors {
   }
 
   /** The corpus-sized centroid rule of [[knnEdgesScaled]] — exposed so
-    * ScaleProbe's histogram prediction reads the OPERATOR's centroid
-    * set, not a probe-side copy that could drift.
+    * VectorOpsSpec and the staged knn graph read the OPERATOR's
+    * centroid set, not a copy that could drift.
     */
   /** THE stride-seed rule (one definition for the knn-graph and the
     * IVF×PQ quantizer geometries — the two must never fork): cells =
@@ -793,9 +788,7 @@ object Vectors {
     * cells + rounds·beamW·3, every join broadcasts the candidate
     * side into the corpus vector fetch, and the only corpus-scaled
     * work is the knn edge build — a stored artifact in production.
-    * Returns (per-round candidate frames, final beam) so ScaleProbe
-    * can count the scored candidates through the operator's own
-    * chain for the equal-budget comparison against the IVF dial.
+    * [[beamParts]] is the serve.
     */
   /** Per-bucket row target of the POINT-FETCH bucket layout (r19):
     * bMod = max(16, ⌈n/125⌉) buckets of ~125 rows each — the same
@@ -941,9 +934,10 @@ object Vectors {
     }
   }
 
-  /** One graph-beam serve. `reads`, when supplied, collects each
-    * round's (pruned edge read, pruned vector read) so ScaleProbe and
-    * the specs can count the rows/files a round actually touches.
+  /** One graph-beam serve, returning the final beam. `reads`, when
+    * supplied, collects each round's (pruned edge read, pruned vector
+    * read) so VectorOpsSpec can count the rows/files a round actually
+    * touches.
     *
     * PRODUCTION DIALS (r20, VERDICT r19 #1 — the IVF route served
     * attribute filters and tombstone deletes; the graph route had
@@ -985,8 +979,7 @@ object Vectors {
       perCell: Long = ivfPerCell,
       reads: Option[scala.collection.mutable.Buffer[(DataFrame, DataFrame)]] = None,
       labelMod: Option[Int] = None, tomb: Boolean = false,
-      qFrame: Option[DataFrame] = None)
-      : (Seq[DataFrame], DataFrame) = {
+      qFrame: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
     val e0 = microVecs(s, d)
     // serve from the PERSISTED graph (built once, stamped) — the
@@ -1095,12 +1088,11 @@ object Vectors {
       org.apache.spark.rdd.RDD[(Long, Long, Long)])] =
       labelMod.map(m => leaf3(topB(matching(ent, m))))
     var sharedLeaves: List[org.apache.spark.rdd.RDD[_]] = Nil
-    val cands = scala.collection.mutable.Buffer[DataFrame](ent)
     // rounds retired two materializations back: their blocks are no
     // longer inputs to anything unmaterialized, so unpersist them —
-    // a later read (ScaleProbe's candidate counts) just recomputes
-    // from lineage. Live state is ≤ 3 query-sized frames per serve
-    // (the r18 leak: localCheckpointed rounds accumulated forever).
+    // a later read just recomputes from lineage. Live state is ≤ 3
+    // query-sized frames per serve (the r18 leak: localCheckpointed
+    // rounds accumulated forever).
     var retire: List[org.apache.spark.rdd.RDD[_]] = Nil
     for (_ <- 1 to rounds) {
       // the frontier's bucket residues (collect materializes the
@@ -1118,9 +1110,7 @@ object Vectors {
       // NO distinct on the served path (r18): duplicate (q_id, c_id)
       // rows — beam members sharing a neighbor, ≤ beamW·degree per
       // query either way — collapse in the BeamTopW cut with
-      // identical d2. The probe's candidate-count frames keep a LAZY
-      // dedup so SCALE.md's candidates/query column stays comparable
-      // across rounds — only ScaleProbe evaluates it.
+      // identical d2.
       val (nbrsLeaf, nbrsRdd) = leaf2(dropTombs(
         beamLeaf.join(edgesR, beamLeaf("c_id") === edgesR("a_id"))
           .select(beamLeaf("q_id"), col("b_id").as("c_id"))))
@@ -1128,7 +1118,6 @@ object Vectors {
       val vecsR = readBucketed(s, s"$vdir/vectors", bucketVecSchema, nb)
         .select(col("vec_id").as("c_id"), col("qe").as("ce"))
       reads.foreach(_ += ((edgesR, vecsR)))
-      cands += nbrsLeaf.distinct()
       // candidate (q_id, c_id) frames are query-plan-sized →
       // broadcast them into the pruned vector fetch; floats never
       // shuffle. No groupBy(q,c).min pre-pass: duplicate (q, c) rows
@@ -1170,7 +1159,7 @@ object Vectors {
     // bounded set plus the one returned accumulator
     accState.foreach { case (_, aR) => aR.count(); () }
     sharedLeaves.foreach(_.unpersist(false))
-    (cands.toSeq, accState.map(_._1).getOrElse(beamLeaf))
+    accState.map(_._1).getOrElse(beamLeaf)
   }
 
   /** DuckDB twin of [[beamParts]] + top-3, parameterized on the
@@ -1323,9 +1312,7 @@ object Vectors {
 
   /** Acyclic orientation of the undirected (u, v) edge set —
     * (src, dst, dkey) with dkey the (degree, id) struct wedge pairs
-    * compare on. Exposed separately so ScaleProbe's `triangles` mode
-    * can count each orientation's Σ C(out-deg, 2) wedge candidates
-    * without re-deriving the key (the probe-drift rule).
+    * compare on.
     */
   private[graft] def orientEdges(und: DataFrame, byDegree: Boolean): DataFrame =
     if (!byDegree)
@@ -1519,10 +1506,8 @@ object Vectors {
     ivfPqTop3(ivfPqAdist(lists, qd, probes))
 
   /** The probe-filtered ADC aggregate alone — (q_id, c_id, ad) over
-    * exactly the probed cells' candidates. Factored out of
-    * [[ivfPqServe]] so ScaleProbe's `pqres` leg can count candidate
-    * rows (the equal-scan half of the flat-vs-residual comparison)
-    * through the operator's own join.
+    * exactly the probed cells' candidates. Shared by [[ivfPqServe]]
+    * and [[ivfPqFlatParts]], so both probe through the same join.
     */
   private[graft] def ivfPqAdist(lists: DataFrame, qd: DataFrame, probes: DataFrame): DataFrame = {
     val qside = qd.withColumnRenamed("q_id", "pq_id")
@@ -1559,7 +1544,7 @@ object Vectors {
     * a broadcast expand collapsed by a partially-aggregated
     * min(struct), the M-step one map-side-combinable aggregate over
     * cells×64 doubles — and per-query serve work is nprobe·perCell
-    * codes FLAT in n (ScaleProbe's ivfidx octave), where the old
+    * codes FLAT in n (SCALE.md's ivfidx octave), where the old
     * fixed-8-seed quantizer scanned nprobe·n/8.
     */
   /** The HIERARCHICAL (two-level) coarse-assignment layer over any
@@ -1848,8 +1833,8 @@ object Vectors {
   /** sim_ivf_pq's full chain up to the ADC aggregate (flat encoding,
     * by_residual=false): pqParts codes + coarse cell assignment +
     * nprobe=2 probes → [[ivfPqAdist]]. The key wraps it in
-    * [[ivfPqTop3]]; ScaleProbe's `pqres` leg reads the aggregate
-    * directly for the equal-scan candidate count.
+    * [[ivfPqTop3]]; VectorOpsSpec reads the aggregate directly for
+    * the equal-scan candidate count.
     */
   private[graft] def ivfPqFlatAdist(s: SparkSession, d: String): DataFrame =
     ivfPqFlatParts(s, d)._2
@@ -1879,8 +1864,8 @@ object Vectors {
     * its OWN coarse cell centroid, queries building PER-CELL distance
     * tables from THEIR residual against each probed cell. The probed
     * candidate set is identical to [[ivfPqFlatAdist]]'s by
-    * construction (same centroids, same nprobe — ScaleProbe's `pqres`
-    * leg asserts the counts equal); only the ranking changes.
+    * construction (same centroids, same nprobe — VectorOpsSpec
+    * asserts the counts equal); only the ranking changes.
     */
   private[graft] def ivfPqResidualAdist(s: SparkSession, d: String): DataFrame = {
     val e0 = microVecs(s, d)
@@ -2160,9 +2145,8 @@ object Vectors {
 
   /** The three serve-side frames of `sim_ivf_pq_indexed` — (lists =
     * partition-PRUNED inverted-list scan, qd = query distance tables
-    * from the stored codebook, probes = per-query cell plan) — split
-    * out so ScaleProbe's `ivfidx` mode can count the files the pruned
-    * scan actually touches at each nprobe. `qBound` bounds the query
+    * from the stored codebook, probes = per-query cell plan) — the
+    * body of [[ivfPqIndexedServe]]. `qBound` bounds the query
     * batch (vec_id < qBound); `nprobe` is the cells-per-query dial
     * (the oracled key serves the canonical 2).
     */
@@ -2196,9 +2180,8 @@ object Vectors {
 
   /** Serve a query batch (vec_id < `qBound`) from the persisted
     * IVF×PQ index — the body of `sim_ivf_pq_indexed`, parameterized
-    * over the batch bound so VectorOpsSpec and ScaleProbe can serve a
-    * SINGLE query and measure that files-read tracks nprobe, not
-    * corpus size.
+    * over the batch bound so VectorOpsSpec can serve a SINGLE query
+    * and measure that files-read tracks nprobe, not corpus size.
     */
   private[graft] def ivfPqIndexedServe(s: SparkSession, d: String,
       qBound: Long = 20L, nprobe: Int = 2): DataFrame = {
@@ -2343,7 +2326,7 @@ object Vectors {
         val qF = qdf.select(col("vec_id").as("q_id"),
           transform(col("embedding"),
             x => floor(x.cast("double") * lit(1000000d) + lit(0.5d))).as("qq"))
-        val (_, beamDf) = beamParts(s, d, beamW = beamW, rounds = rounds,
+        val beamDf = beamParts(s, d, beamW = beamW, rounds = rounds,
           labelMod = labelMod, tomb = tomb, qFrame = Some(qF))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
@@ -2564,7 +2547,7 @@ object Vectors {
     // exactly what a FAISS worker holds in RAM — NOT as literal
     // expressions: a literal-tree encode is O(cells·dim) PLAN SIZE and
     // was measured to stop compiling usefully near ~1,000 cells
-    // (ScaleProbe ivfstream factor 64), while the broadcast keeps the
+    // (SCALE.md, ivfstream factor 64), while the broadcast keeps the
     // plan O(1) at any cell count. Element type matches the stored
     // schema (floor() is LongType → array<bigint>), and the encode is
     // pure Long arithmetic: every distance is an exact integer
@@ -2597,8 +2580,8 @@ object Vectors {
     // positions into the cid-sorted centroid array. Per-row routing is
     // now O(sups + cells/sups) = O(√cells) — the flat form scanned all
     // cells per arriving row, i.e. total ingest O(n²/perCell) once
-    // cells ∝ n (the r15 scale-blocker; ScaleProbe's ivfstream octave
-    // measures the per-row cost flat through ≥4,096 cells).
+    // cells ∝ n (the r15 scale-blocker; SCALE.md's ivfstream octave
+    // measured the per-row cost flat through ≥4,096 cells).
     val supers: Array[(Long, Array[Long])] = s.read.parquet(s"$quantDir/supers")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1)
@@ -2912,7 +2895,7 @@ object Vectors {
     * (cell, wanted-label = (query label + 1) mod `labelMod`) with the
     * predicate inside the join, per-query top-3 by exact d2. `nprobe`
     * and `labelMod` (filter selectivity ≈ 1/labelMod) are the dials
-    * ScaleProbe's `ivffilter` leg turns: a filter of selectivity s
+    * the filtered keys and VectorOpsSpec turn: a filter of selectivity s
     * thins each probed cell to s·|cell|, so keeping k matches needs
     * nprobe ∝ 1/s — measured in SCALE.md.
     */
@@ -2998,7 +2981,6 @@ object Vectors {
       perCell: Long, cent: DataFrame, lay: (DataFrame, DataFrame),
       wantedOf: Column => Column, k: Int = 3,
       qBound: Long = filteredQBound,
-      trace: Option[scala.collection.mutable.Map[String, DataFrame]] = None,
       qPred: Option[Column] = None)
       : DataFrame = {
     def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
@@ -3036,13 +3018,6 @@ object Vectors {
           && col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("w"), col("c_id"), col("c_label"),
         sqd(col("qq"), col("ce2")).as("d2"))
-    // ScaleProbe's perq octave counts these frames (wMax routing /
-    // trimmed plan / pre-top-k candidates) through the operator's
-    // real chain
-    trace.foreach { t =>
-      t += "probeR" -> probeR; t += "probes" -> probes
-      t += "ivfCand" -> ivfCand; ()
-    }
     val ivfOut = topK(ivfCand).withColumn("route", lit("ivf"))
     // EXACT side: the sparse sliver — wanted labels of the exact
     // queries (≤ |Q| ints, the pushable predicate), exact top-k
@@ -3123,15 +3098,12 @@ object Vectors {
        |          WHEN $l < 25 THEN 5 + (($l - 4) % 20)
        |          ELSE 25 + (($l - 24) % 499) END AS INT)""".stripMargin
 
-  /** The `sim_ivf_filtered_perq` chain (key lambda extracted r19 so
-    * ScaleProbe's perq octave drives the operator's REAL code): the
-    * √n/4 per-cell geometry, the staged quantizer, the tier label
-    * universe, and [[filteredPerQueryW]] — with the optional trace
-    * exposing the wMax routing / trimmed-plan / pre-top-k candidate
-    * frames for the probe's scanned-row counts.
+  /** The `sim_ivf_filtered_perq` chain (the key's lambda, extracted
+    * so VectorOpsSpec's batch-dependence spec serves the key's REAL
+    * code): the √n/4 per-cell geometry, the staged quantizer, the tier
+    * label universe, and [[filteredPerQueryW]].
     */
   private[graft] def perQueryWServe(s: SparkSession, d: String,
-      trace: Option[scala.collection.mutable.Map[String, DataFrame]] = None,
       qPred: Option[Column] = None)
       : DataFrame = {
     val e0 = maybeCache(microVecs(s, d))
@@ -3143,7 +3115,7 @@ object Vectors {
       tierLabelCol("vec_id").as("label"), col("qe"))
     filteredPerQueryW(e0L, n, perCell,
       s.read.parquet(s"$centDir/centroids"), dirLayer(s, centDir),
-      tierWantedCol, trace = trace, qPred = qPred)
+      tierWantedCol, qPred = qPred)
   }
 
   /** sim_mmr's greedy chain over any micro-unit (vec_id, qe) frame —
@@ -3873,7 +3845,7 @@ object Vectors {
     // serve, exact integer top-3. At sf0.1 (2,000 vectors) that is
     // 182 cells / 14 supers — the router working at a super layer
     // 3.5× the n/125 keys' (16 cells / 4 supers), hash-verified
-    // instead of recall-probed; ScaleProbe's `sqrtn` leg shows the
+    // instead of recall-probed; SCALE.md's `sqrtn` leg shows the
     // SAME integer formula reproducing the geom table's 4√n row at
     // the 64× octave (1,439 cells, 178 cand/query, 0.043 recall).
     sql("sim_ivf_sqrtn", {
@@ -4262,12 +4234,12 @@ object Vectors {
     // centroid (x − c(cell)), and a query builds PER-CELL distance
     // tables from ITS residual against each probed cell (q − c(cell)).
     // Scan cost is IDENTICAL to sim_ivf_pq by construction (same
-    // centroids, same nprobe → same candidate set; ScaleProbe's pqres
-    // leg asserts the counts equal). The recall effect is
+    // centroids, same nprobe → same candidate set; VectorOpsSpec
+    // asserts the counts equal). The recall effect is
     // STRUCTURE-DEPENDENT and measured honestly in SCALE.md: on the
     // synthetic fixture — 0.5% between-label variance, i.e. no coarse
     // structure for the centroids to remove — residual ≈ flat within
-    // noise (residuals ARE the vectors there); on the probe's planted
+    // noise (residuals ARE the vectors there); on SCALE.md's planted
     // clustered corpus the residual codes win decisively, because the
     // codebook spends its 2 bits/subspace on the within-cell noise
     // instead of re-describing cluster centers. All arithmetic stays
@@ -4898,8 +4870,8 @@ object Vectors {
 
     // ---- k-NN graph with corpus-scaled cell count ----------------------
     // The production dial in the operator itself (round 14 — SemDeDup
-    // §"k grows with the corpus", ScaleProbe's knn table proved the
-    // law probe-side in r13): cells = max(8, ⌈n/125⌉) so per-cell size
+    // §"k grows with the corpus", SCALE.md's knn table measured the
+    // law in r13): cells = max(8, ⌈n/125⌉) so per-cell size
     // — and per-row candidate work — stays ≈ 125 FLAT as the corpus
     // grows, instead of the fixed-8-cell key's n²/8 candidate space.
     // At sf0.1 (2000 vectors) this is 16 cells — a genuinely
@@ -4916,8 +4888,8 @@ object Vectors {
       // perCell stays the oracled constant 125: oracleSql is a static
       // string, so a session knob here could silently diverge from the
       // oracle's hardcoded sizing — non-default geometries go through
-      // knnEdgesScaled(perCell) directly (ScaleProbe's knn octave,
-      // VectorOpsSpec), where the caller owns the expected counts
+      // knnEdgesScaled(perCell) directly (VectorOpsSpec), where the
+      // caller owns the expected counts
       val t = knnEdgesScaled(s, d)
       val rev = t.select(col("a_id").as("r_a"), col("b_id").as("r_b"))
       t.join(rev, col("r_a") === col("b_id") && col("r_b") === col("a_id"), "left")
@@ -4944,7 +4916,7 @@ object Vectors {
     // descent every frame is query-sized and broadcast; the edge list
     // is the persisted artifact production would mmap.
     sql("sim_graph_beam", beamOracleSql(8, 3)) { (s, d) =>
-      val (_, beamDf) = beamParts(s, d)
+      val beamDf = beamParts(s, d)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
       beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -4964,7 +4936,7 @@ object Vectors {
     // rounds at the wide literals (one shared builder: the two dials
     // CANNOT fork).
     sql("sim_graph_beam_wide", beamOracleSql(16, 5)) { (s, d) =>
-      val (_, beamDf) = beamParts(s, d, beamW = 16, rounds = 5)
+      val beamDf = beamParts(s, d, beamW = 16, rounds = 5)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
       beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -4980,7 +4952,7 @@ object Vectors {
     // same shared (beamW, rounds)-parameterized oracle builder as the
     // other two dials, so the three budgets cannot fork.
     sql("sim_graph_beam_32x5", beamOracleSql(32, 5)) { (s, d) =>
-      val (_, beamDf) = beamParts(s, d, beamW = 32, rounds = 5)
+      val beamDf = beamParts(s, d, beamW = 32, rounds = 5)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
       beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -5008,7 +4980,7 @@ object Vectors {
     // oracle builder as the three budget dials.
     sql("sim_graph_beam_filtered",
       beamOracleSql(8, 3, labelMod = Some(10), tomb = true)) { (s, d) =>
-      val (_, acc) = beamParts(s, d, labelMod = Some(10), tomb = true)
+      val acc = beamParts(s, d, labelMod = Some(10), tomb = true)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
       acc.withColumn("rnk", row_number().over(w).cast("bigint"))
@@ -5171,7 +5143,7 @@ object Vectors {
     // block-keyed self-joins (65,536 buckets each, bucket size
     // ≈ n/65536) generate every qualifying candidate, never an
     // all-pairs scan; the former 16-bit/8-bit-block shape saturated at
-    // ~1e5 rows (n²/256 candidates — ScaleProbe phash, SCALE.md).
+    // ~1e5 rows (n²/256 candidates — SCALE.md's phash table).
     // Hamming sums the four per-block XOR popcounts, so no 64-bit
     // value ever materializes (signed-safe in both engines). Each
     // planted +30000 re-encode perturbs ONE byte's high bit in block

@@ -64,9 +64,9 @@ object GraftBridge {
   }
 
   /** Block until every queued listener event is delivered — lets a
-    * measurement (ScaleProbe's shuffle-bytes listener) read totals
-    * without racing the async bus. `listenerBus` is private[spark],
-    * hence the bridge. */
+    * job-counting listener (PerTableCacheSpec, TablesSchemaCacheSpec,
+    * benchkit's tracer) read totals without racing the async bus.
+    * `listenerBus` is private[spark], hence the bridge. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(60000)
 
@@ -89,17 +89,20 @@ object GraftBridge {
       conf.arrowUseLargeVarTypes)
   }
 
-  /** Per-record-batch IPC message payloads of `df`, one partition at a
-    * time through the driver (encode distributed, pump sequential).
-    * Each element is a complete RecordBatch message; prepend the header
-    * from [[arrowStreamHeader]] and append [[arrowStreamFooter]] to
-    * form a spec-valid Arrow IPC stream.
+  /** Diagnostic: run the Arrow encode job but return only byte counts
+    * (results never shipped to the driver) — isolates encode cost from
+    * task-result fetch cost.
     */
-  def arrowBatches(df: DataFrame): Iterator[Array[Byte]] =
-    df.asInstanceOf[classic.Dataset[Row]].toArrowBatchRdd.toLocalIterator
+  def arrowEncodeOnlyBytes(df: DataFrame): Long =
+    df.asInstanceOf[classic.Dataset[Row]].toArrowBatchRdd
+      .mapPartitions(it => Iterator.single(it.map(_.length.toLong).sum))
+      .collect().sum
 
   /** Stream `df`'s Arrow record batches to `sink` in partition order,
-    * encoding ALL partitions in parallel in ONE Spark job.
+    * encoding ALL partitions in parallel in ONE Spark job. Each batch
+    * is a complete RecordBatch message; prepend the header from
+    * [[arrowStreamHeader]] and append [[arrowStreamFooter]] to form a
+    * spec-valid Arrow IPC stream.
     *
     * `toLocalIterator` would run one job per partition sequentially —
     * on a 32-partition result that serializes the encode onto one core
@@ -113,15 +116,6 @@ object GraftBridge {
     * `flight_server.py:348`); typical buffering is a small out-of-order
     * prefix.
     */
-  /** Diagnostic: run the Arrow encode job but return only byte counts
-    * (results never shipped to the driver) — isolates encode cost from
-    * task-result fetch cost.
-    */
-  def arrowEncodeOnlyBytes(df: DataFrame): Long =
-    df.asInstanceOf[classic.Dataset[Row]].toArrowBatchRdd
-      .mapPartitions(it => Iterator.single(it.map(_.length.toLong).sum))
-      .collect().sum
-
   def arrowBatchesPipelined(df: DataFrame)(sink: Array[Byte] => Unit): Unit = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     pumpInOrder(ds.sparkSession, ds.toArrowBatchRdd)(sink)

@@ -172,6 +172,26 @@ class ExactlyOnceSpec extends graft.SparkSpec {
     // and labels are still intact after the prune
     assert(ClusterStream.labels(spark, idx)._1
       .collect().map(_.toString).sorted.toSeq == labBefore)
+
+    // the continuous-dedup index consolidates the same way: seed + two
+    // admitted batches fold into one generation dir per half, and
+    // every half reads back the same rows
+    val didx = s"$root/dedup_idx"
+    DedupStream.seedIndex(spark, base.filter(col("doc_id") < 150), didx)
+    for ((lo, i) <- Seq(150L, 250L).zipWithIndex)
+      DedupStream.ingestBatch(spark,
+        base.filter(col("doc_id") >= lo && col("doc_id") < lo + 100),
+        didx, BatchLog.key(s"$root/dchk", i.toLong))
+    val dHalves = Seq("texts" -> textsSchema, "hs" -> hsSchema, "bands" -> bandSchema)
+    val dBefore = dHalves.map { case (h, sch) => h -> rowSet(didx, h, sch) }.toMap
+    assert(BatchLog.committedDirs(spark, didx, "hs").size == 3) // seed + 2 batches
+    DedupStream.consolidateIndex(spark, didx)
+    for ((half, schema) <- dHalves) {
+      assert(rowSet(didx, half, schema) == dBefore(half),
+        s"dedup consolidation changed '$half' rows")
+      val ds = BatchLog.committedDirs(spark, didx, half)
+      assert(ds.size == 1, s"dedup '$half' not consolidated: $ds")
+    }
   }
 
   test("DedupStream: kill-mid-append + retry leaves every half byte-identical to a crash-free run") {

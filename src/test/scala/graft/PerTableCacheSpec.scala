@@ -52,6 +52,12 @@ class PerTableCacheSpec extends SparkSpec {
   private def longs(c: GateClient, stmt: String): Seq[Long] =
     GraftBridge.fromArrowIPC(spark, c.sqlArrow(stmt)._2).collect().map(_.getLong(0)).toSeq.sorted
 
+  /** The gate's `##stats` counters. */
+  private def statsOf(c: GateClient): Map[String, Long] = {
+    val line = c.sql("##stats").head
+    "\"(\\w+)\":(\\d+)".r.findAllMatchIn(line).map(m => m.group(1) -> m.group(2).toLong).toMap
+  }
+
   private def isWholeCatalog(stamp: Seq[Long]): Boolean = stamp.size == 3 && stamp(1) == -1L
 
   test("after a write to A, GETs of B start no Spark job and a GET of A is fresh") {
@@ -193,22 +199,38 @@ class PerTableCacheSpec extends SparkSpec {
 
   test("##stats reports hits, misses and installs as traffic moves them") {
     withGate { (_, _, c) =>
-      def stats(): Map[String, Long] = {
-        val line = c.sql("##stats").head
-        "\"(\\w+)\":(\\d+)".r.findAllMatchIn(line).map(m => m.group(1) -> m.group(2).toLong).toMap
-      }
-      assert(stats() == Map("hits" -> 0, "misses" -> 0, "installs" -> 0, "entries" -> 0, "bytes" -> 0))
+      assert(statsOf(c) == Map("hits" -> 0, "misses" -> 0, "installs" -> 0, "entries" -> 0, "bytes" -> 0))
       c.sqlArrowRowCount("SELECT * FROM a")
-      val s1 = stats()
+      val s1 = statsOf(c)
       assert(s1("misses") == 1 && s1("installs") == 1 && s1("entries") == 1 && s1("bytes") > 0)
       c.sqlArrowRowCount("TABLE a")
       c.sqlArrowRowCount("SELECT * FROM a")
-      assert(stats()("hits") == 2)
+      assert(statsOf(c)("hits") == 2)
       c.sqlArrowRowCount("##nocache SELECT * FROM a") // bypass: counted nowhere
       c.sqlArrowRowCount("INSERT INTO a VALUES (1)")   // not cacheable
       c.sqlArrowRowCount("SELECT * FROM a")            // stale entry: miss, re-install
-      assert(stats() == Map("hits" -> 2, "misses" -> 2, "installs" -> 2, "entries" -> 1,
-        "bytes" -> stats()("bytes")))
+      assert(statsOf(c) == Map("hits" -> 2, "misses" -> 2, "installs" -> 2, "entries" -> 1,
+        "bytes" -> statsOf(c)("bytes")))
+    }
+  }
+
+  test("one-off statements cannot grow the cache past its entry bound; a hot GET still hits") {
+    withGate { (_, _, c) =>
+      val hot = "SELECT * FROM b"
+      c.sqlArrowRowCount(hot)
+      val fresh = TcpGate.MaxCacheEntries + 16
+      for (i <- 0 until fresh) {
+        assert(c.sqlArrowRowCount(s"SELECT x FROM a WHERE x >= $i") == math.max(0, 10 - i))
+        if (i % 8 == 7) c.sqlArrowRowCount(hot)
+      }
+      val s = statsOf(c)
+      assert(s("installs") >= fresh, s"only ${s("installs")} of $fresh fresh replies installed")
+      assert(s("entries") <= TcpGate.MaxCacheEntries,
+        s"${s("entries")} entries held, bound ${TcpGate.MaxCacheEntries}")
+      val (rows, jobs) = jobsOf(c.sqlArrowRowCount(hot))
+      assert(rows == 5)
+      assert(jobs == 0, s"the hot GET was evicted: it started $jobs Spark jobs")
+      assert(statsOf(c)("hits") == s("hits") + 1)
     }
   }
 }

@@ -489,7 +489,7 @@ class VectorOpsSpec extends SparkSpec {
     // b0(16) ⊇ b0(8); the pinned property is that the expansion
     // rounds preserve it on this fixture.
     val w8 = out.filter(col("rnk") === 1).select(col("q_id"), col("d2").as("d8"))
-    val (_, b16) = graft.ops.Vectors.beamParts(spark, sfDir, beamW = 16)
+    val b16 = graft.ops.Vectors.beamParts(spark, sfDir, beamW = 16)
     val w16 = b16.groupBy("q_id").agg(min(col("d2")).as("d16"))
     assert(w8.join(w16, Seq("q_id")).filter(col("d16") > col("d8")).count() == 0,
       "widening the beam made a query strictly worse (fixture-pinned check — " +
@@ -731,7 +731,7 @@ class VectorOpsSpec extends SparkSpec {
     val tmp = graft.ops.purgeOnExit(
       java.nio.file.Files.createTempDirectory("ivfgeom").toString)
     val e = Tables.embeddings(spark, sfDir)
-    // 4 rotated copies with dense re-keyed ids (the ScaleProbe octave
+    // 4 rotated copies with dense re-keyed ids (SCALE.md's octave
     // recipe): vec_id*4+r stays dense 0-based, embeddings distinct
     e.select(col("vec_id"), col("embedding"),
         explode(expr("sequence(0, 3)")).as("r"))
@@ -1370,7 +1370,7 @@ class VectorOpsSpec extends SparkSpec {
     assert(graft.ops.Vectors.vecBucketMod(spark, tmp) == 64L)
     val reads = scala.collection.mutable.Buffer[(org.apache.spark.sql.DataFrame,
       org.apache.spark.sql.DataFrame)]()
-    val (_, beamDf) = graft.ops.Vectors.beamParts(spark, tmp, qBound = 1L,
+    val beamDf = graft.ops.Vectors.beamParts(spark, tmp, qBound = 1L,
       beamW = 4, rounds = 2, reads = Some(reads))
     val out = beamDf.cache()
     assert(out.count() > 0 && out.filter(col("c_id") === col("q_id")).count() == 0)
@@ -1444,7 +1444,7 @@ class VectorOpsSpec extends SparkSpec {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
-    val (_, beamDf) = graft.ops.Vectors.beamParts(spark, sfDir,
+    val beamDf = graft.ops.Vectors.beamParts(spark, sfDir,
       qBound = 5L, beamW = 4, rounds = 4)
     assert(beamDf.count() > 0)
     val after = sc.getPersistentRDDs.keySet
@@ -1463,7 +1463,7 @@ class VectorOpsSpec extends SparkSpec {
     val sc = spark.sparkContext
     spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
-    val (_, acc) = graft.ops.Vectors.beamParts(spark, sfDir,
+    val acc = graft.ops.Vectors.beamParts(spark, sfDir,
       qBound = 5L, beamW = 4, rounds = 4, labelMod = Some(4), tomb = true)
     assert(acc.count() > 0)
     val after = sc.getPersistentRDDs.keySet
@@ -1603,7 +1603,7 @@ class VectorOpsSpec extends SparkSpec {
     // matching survivors, which is why the predicate must sit below
     // the cut (the filtered-IVF spec's argument, now on the graph
     // route)
-    val (_, nav) = graft.ops.Vectors.beamParts(spark, sfDir, tomb = true)
+    val nav = graft.ops.Vectors.beamParts(spark, sfDir, tomb = true)
     val filled = nav
       .filter(pmod(col("c_id"), lit(10L)) ===
         pmod(pmod(col("q_id"), lit(10L)) + 1, lit(10L)))
