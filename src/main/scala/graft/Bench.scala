@@ -125,9 +125,12 @@ object Bench {
     // key whose min still reads > 4× its committed idle anchor gets
     // ONE more run after the whole sweep — minutes later in wall
     // clock, outside the window that inflated it. Anchor-less keys
-    // (new this round) are left alone.
+    // (new this round) are left alone. Anchors and artifacts live in
+    // `bench/` of the working directory — the checkout the run starts
+    // from (sbt's forked run starts in the project base) — so a run
+    // from another copy never touches this one's maps.
     val anchor: Map[String, Double] = {
-      val dir = new java.io.File("/root/repo/bench")
+      val dir = new java.io.File("bench")
       val f = Option(dir.listFiles()).toSeq.flatten
         .filter(_.getName.matches("BENCH_local_r\\d+_idle\\.json"))
         .sortBy(_.getName.replaceAll("\\D", "").toInt).lastOption
@@ -170,7 +173,7 @@ object Bench {
     // `local[cpus]` width, so an 8-core run no longer replaces the
     // 32-core one.
     if (only.isEmpty) try {
-      val p = java.nio.file.Paths.get("/root/repo/bench/BENCH_driver_latest.json")
+      val p = java.nio.file.Paths.get("bench", "BENCH_driver_latest.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, json + "\n")
       java.nio.file.Files.writeString(p.resolveSibling(s"BENCH_driver_latest_c$cpus.json"), json + "\n")

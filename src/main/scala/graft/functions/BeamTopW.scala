@@ -21,27 +21,29 @@ import org.apache.spark.sql.expressions.Aggregator
   * computes the same integer-exact squared L2). Under that contract,
   * skipping a duplicate — whether it loses to the current worst or
   * matches an in-state id — never discards information, and
-  * `(a ++ b).distinct` in merge collapses duplicates as whole pairs.
+  * merge's `distinctBy` id collapses duplicates (by id, not by pair
+  * equality: a NaN key never equals itself under `==`).
   * Same INTEGER-VALUED d2 < 2⁵³ input contract as [[MinPairW]]
   * (micro-unit squared-L2 sums, exact in the Double cast); ties
   * break strictly lexicographically by (d2, id), bit-identical to
   * the oracle's `row_number() OVER (ORDER BY d2, c_id) <= w`.
   *
-  * The cut is also exact for arbitrary FINITE Double keys whenever ids
-  * are unique within a group: dedup-on-insert is then a no-op, and
-  * `lt` is a strict total order on finite (key, id) pairs. That is the
+  * The cut is also exact for arbitrary Double keys whenever ids are
+  * unique within a group: dedup-on-insert is then a no-op, and [[lt]]
+  * is a strict total order on (key, id) pairs. That is the
   * `knnEdgesOver` call site, which cuts (-cos, b_id) per a_id with
-  * each b_id scored once. Non-finite keys are outside the contract: a
-  * zero-norm embedding gives a NaN cosine, which `<` cannot order, so
-  * a full buffer drops it and `sortWith` over a NaN-bearing buffer
-  * breaks its comparator's contract. Callers must keep such keys out.
+  * each b_id scored once. Keys compare the way Spark's sort does: NaN
+  * equals NaN and sorts above every number, and -0.0 equals 0.0 — so
+  * a NaN key (the cosine of an embedding with a NaN component) ranks
+  * where a window `ORDER BY key` would put it instead of being
+  * dropped by a full buffer or breaking `sortWith`'s comparator
+  * contract.
   */
 final case class BeamTopW(w: Int)
     extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
   require(w >= 1, s"beam width must be >= 1, got $w")
 
-  private def lt(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
+  import BeamTopW.lt
 
   override def zero: Seq[(Double, Long)] = Seq.empty
 
@@ -55,7 +57,7 @@ final case class BeamTopW(w: Int)
     else ((b :+ v).sortWith(lt)).take(w)
 
   override def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    (a ++ b).distinct.sortWith(lt).take(w)
+    (a ++ b).distinctBy(_._2).sortWith(lt).take(w)
 
   /** Best-first (d2, id) pairs. */
   override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
@@ -68,6 +70,15 @@ final case class BeamTopW(w: Int)
 }
 
 object BeamTopW {
+  /** Strict (key, id) order with keys compared like Spark's sort —
+    * `SQLOrderingUtil.compareDoubles`: NaN = NaN > every number,
+    * -0.0 = 0.0. Shared with [[MinPairW]].
+    */
+  private[functions] def lt(a: (Double, Long), b: (Double, Long)): Boolean = {
+    val c = if (a._1 == b._1) 0 else java.lang.Double.compare(a._1, b._1)
+    c < 0 || (c == 0 && a._2 < b._2)
+  }
+
   /** Column form: top-`w` distinct-id (d2, id) pairs, best first —
     * an `array<struct<_1: double, _2: bigint>>`.
     */

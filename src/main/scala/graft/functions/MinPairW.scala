@@ -19,9 +19,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * expand shuffles n·√cells rows (the groupBy collapses them
   * map-side), and w chained min(struct) passes scan the expand w
   * times. Ties break exactly like `min(struct(d2, id))` — strictly
-  * lexicographic — so the streamed encoder's Long arithmetic and the
-  * oracle's `row_number() OVER (ORDER BY d2, sid) <= w` agree
-  * bit-for-bit on integer-valued distances.
+  * lexicographic, with keys compared like Spark's sort (NaN above
+  * every number, -0.0 = 0.0 — see [[BeamTopW.lt]]) — so the streamed
+  * encoder's Long arithmetic and the oracle's
+  * `row_number() OVER (ORDER BY d2, sid) <= w` agree bit-for-bit on
+  * integer-valued distances.
   *
   * Input contract: `d2` must be INTEGER-VALUED and < 2⁵³ in
   * magnitude. Callers feed micro-unit squared-L2 sums (BIGINT-exact,
@@ -34,8 +36,7 @@ final case class MinPairW(w: Int)
     extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[Long]] {
   require(w >= 1, s"routing width must be >= 1, got $w")
 
-  private def lt(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
+  import BeamTopW.lt
 
   override def zero: Seq[(Double, Long)] = Seq.empty
 

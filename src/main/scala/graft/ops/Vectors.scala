@@ -21,6 +21,13 @@ import graft.Tables
   * scale the planes are a broadcast-sized constant, the bucket id is a
   * map-side projection, and candidate generation is a bucket-keyed
   * self-join — never all-pairs.
+  *
+  * The stages every key repeats are defined once each: [[d2]] (the
+  * expanded-dot squared L2 of coarse rankings) and [[sqd]] (the exact
+  * [[sqDist]] fold as a bigint) score; [[nearest]] is the nearest-cell
+  * argmin; [[topK]] is the per-group top-k cut; [[cosineTopK]] is the
+  * cosine scorer + cut of the float-vector search keys. On the oracle
+  * side, [[topKSql]] is the twin of [[topK]] and [[dd2]] of [[d2]].
   */
 object Vectors {
 
@@ -133,14 +140,63 @@ object Vectors {
     * vectors as a sequential left-to-right double fold — integer-valued
     * and < 2⁵³, so it is EXACT, and the identical fold to the oracle's
     * `list_sum(list_transform(...))`. THE one squared-L2 fold: shared
-    * by dedup_semantic/embed_outliers and (via the local `sqd`
-    * bigint-cast aliases) sim_range_search, sim_mmr,
-    * mine_hard_negatives and sim_ivf_filtered, so the exact-fold
-    * invariant lives once.
+    * by dedup_semantic/embed_outliers, the PQ encoders and (via the
+    * bigint-cast [[sqd]]) every exact micro-unit top-k, so the
+    * exact-fold invariant lives once.
     */
   private[graft] def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0d), (acc, v) => acc + v)
+
+  /** [[sqDist]] as a bigint — the exact scores every micro-unit top-k
+    * ranks and emits.
+    */
+  private def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
+
+  /** Squared L2 in the expanded dot form a·a − 2a·b + b·b — exact on
+    * micro-unit integers (< 2⁵³), and the form every coarse ranking and
+    * its oracle twin [[dd2]] use.
+    */
+  private def d2(a: Column, b: Column): Column =
+    dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
+
+  /** THE nearest-cell step: per `keys` group, `best` = the smallest
+    * (d2, id) struct — ties to the lower id, which is exactly
+    * `row_number() OVER (ORDER BY d2, id) = 1` — as one partially
+    * aggregated min, so the candidate expand collapses map-side
+    * instead of being shuffled and sorted. `carry` columns ride along
+    * through first() (functionally dependent on the keys).
+    */
+  private def nearest(df: DataFrame, keys: Seq[Column], d2: Column, id: Column,
+      carry: String*): DataFrame =
+    df.groupBy(keys: _*)
+      .agg(min(struct(d2.as("d2"), id)).as("best"), carry.map(c => first(col(c)).as(c)): _*)
+
+  /** THE per-group top-k cut: rank each `part` group by `order` (the
+    * caller ends it with an id column so ties are total), keep
+    * rnk ≤ k; `rnk` is a bigint running 1..n. The oracle twin is
+    * [[topKSql]].
+    */
+  private[graft] def topK(df: DataFrame, part: Column, k: Int, order: Column*): DataFrame =
+    df.withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(part).orderBy(order: _*)).cast("bigint"))
+      .filter(col("rnk") <= k)
+
+  /** The cosine search shared by the float-vector keys: queries
+    * (q_id, qe, qn) join candidates (c_id, ce, cn) on `on` minus the
+    * self pair, cos = dot/(qn·cn), per-query top-k by (cos DESC, c_id),
+    * emitted as (q_id, c_id, rnk, cosine) with a 6-decimal cosine.
+    */
+  private def cosineTopK(q: DataFrame, c: DataFrame, k: Int,
+      on: Option[Column] = None): DataFrame = {
+    val notSelf = col("c_id") =!= col("q_id")
+    topK(q.join(c, on.fold(notSelf)(_ && notSelf))
+        .select(col("q_id"), col("c_id"),
+          (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos")),
+      col("q_id"), k, col("cos").desc, col("c_id"))
+      .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
+      .orderBy(col("q_id"), col("rnk"))
+  }
 
   /** LSH bucket id of an embedding column: sign bit per plane, packed.
     * private[graft] so the spec can assert bucket invariants directly.
@@ -170,6 +226,18 @@ object Vectors {
     val key = src.replaceAll("[^A-Za-z0-9.]", "_")
     graft.ops.stageReplayCopy(s, src,
       s"${graft.ops.scratchRoot(s)}/stream_emb_$key", "embeddings.parquet")
+  }
+
+  /** [[graft.ops.stagedArtifact]] over source `d`'s embeddings —
+    * named `<name>_<source key>` and stamped with the source stamp,
+    * [[ivfIndexFormat]] and `extra`: the freshness key every staged
+    * vector index shares.
+    */
+  private def stagedEmb(s: SparkSession, d: String, name: String, extra: String = "")(
+      build: String => Unit): String = {
+    val src = s"$d/embeddings.parquet"
+    graft.ops.stagedArtifact(s, s"${name}_${src.replaceAll("[^A-Za-z0-9.]", "_")}",
+      s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat$extra")(build)
   }
 
   /** Stream the embeddings corpus into a bucket-partitioned parquet
@@ -217,28 +285,20 @@ object Vectors {
         col("bkt").cast("bigint").as("bkt"))
   }
 
-  /** Multi-probe top-3 search over a (streamed) bucket index for
-    * queries 0-9 — identical probe/rank semantics to
-    * `sim_ann_multiprobe`, reading the index instead of re-bucketing
-    * the corpus.
+  /** Multi-probe top-3 search over a bucket index (vec_id, embedding,
+    * nrm, bkt) for queries below `qBound` — `sim_ann_multiprobe` over
+    * the freshly bucketed corpus and `stream_embed_index` (queries 0-9)
+    * over the streamed index run this one body.
     */
-  private[graft] def searchStreamedIndex(b0: DataFrame): DataFrame = {
+  private[graft] def searchStreamedIndex(b0: DataFrame, qBound: Int = 10): DataFrame = {
     val b = maybeCache(b0) // feeds probe explode + candidate side
     val probeArr = array(probeMasks.map(m => col("bkt").bitwiseXOR(lit(m))): _*)
-    val q = b.filter(col("vec_id") < 10)
+    val q = b.filter(col("vec_id") < qBound)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
         col("nrm").as("qn"), explode(probeArr).as("probe"))
     val c = b.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
       col("nrm").as("cn"), col("bkt").as("cbkt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    q.join(c, col("probe") === col("cbkt") && col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-      .orderBy(col("q_id"), col("rnk"))
+    cosineTopK(q, c, 3, Some(col("probe") === col("cbkt")))
   }
 
   // ---- DuckDB oracle fragments ------------------------------------------
@@ -268,19 +328,12 @@ object Vectors {
   private def lloydRefined(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import graft.functions.VectorMean
     val e = emb(s, d)
-    val quant = transform(col("embedding"),
-      x => floor(x.cast("double") * lit(1000000d) + lit(0.5d)))
     val base = e.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"), quant.as("qe"))
+      norm(col("embedding")).as("nrm"), microCol(col("embedding")).as("qe"))
     val cent0 = base.filter(col("vec_id").isin(ivfCentroidIds: _*))
       .select(col("vec_id").as("cid"), col("qe").as("ce"))
-    def d2(a: Column, b: Column): Column =
-      dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
-    val asg0 = maybeCache(base.join(broadcast(cent0))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(d2(col("qe"), col("ce")).as("d2"), col("cid"))).as("best"),
-        first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"),
-        first(col("qe")).as("qe"))
+    val asg0 = maybeCache(nearest(base.join(broadcast(cent0)), Seq(col("vec_id")),
+        d2(col("qe"), col("ce")), col("cid"), "embedding", "nrm", "qe")
       .select(col("vec_id"), col("embedding"), col("nrm"), col("qe"),
         col("best.cid").as("cell")))
     val refined = asg0.groupBy(col("cell"))
@@ -321,9 +374,7 @@ object Vectors {
     * sim_ivf_filtered).
     */
   private[graft] def microVecsL(s: SparkSession, d: String): DataFrame =
-    emb(s, d).select(col("vec_id"), col("label"),
-      transform(col("embedding"),
-        x => floor(x.cast("double") * lit(1000000d) + lit(0.5d))).as("qe"))
+    emb(s, d).select(col("vec_id"), col("label"), microCol(col("embedding")).as("qe"))
 
   /** The PQ building blocks behind [[pqAdcChain]] — (e0 = micro-unit
     * vectors via [[microVecs]], enc = (c_id, m, code) corpus codes,
@@ -364,10 +415,8 @@ object Vectors {
       .select(col("vec_id"), ms, col(vecCol))
       .select(col("vec_id"), col("m"),
         slice(col(vecCol), col("m") * 8 + 1, lit(8)).as("sv"))
-    val tasg = samp.join(broadcast(cb0), Seq("m"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(sqDist(col("sv"), col("ce0")).as("d2"), col("c"))).as("best"),
-        first(col("sv")).as("sv"))
+    val tasg = nearest(samp.join(broadcast(cb0), Seq("m")), Seq(col("vec_id"), col("m")),
+        sqDist(col("sv"), col("ce0")), col("c"), "sv")
       .select(col("m"), col("best.c").as("c"), col("sv"))
     tasg.groupBy(col("c"), col("m"))
       .agg(graft.functions.VectorMean.centroid(
@@ -429,11 +478,8 @@ object Vectors {
     * (sid, sce), `children/` = (cid, sid) — [[dirLayer]]'s contract.
     */
   private[graft] def stagedIvfCent(s: SparkSession, d: String,
-      perCell: Long): String = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stagedArtifact(s, s"ivfcent_${perCell}_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat") { stage =>
+      perCell: Long): String =
+    stagedEmb(s, d, s"ivfcent_$perCell") { stage =>
       // the Lloyd E-step routes through the SHARED staged seed layer
       // (r17) — the same artifact the knn-graph build reads, so the
       // geometries not only use one formula, they use one LAYER
@@ -448,13 +494,9 @@ object Vectors {
       chl.select(col("cid"), col("sid")).coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/children")
     }
-  }
 
-  private[graft] def stagedIvfQuant(s: SparkSession, d: String): String = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stagedArtifact(s, s"ivfquant_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat") { stage =>
+  private[graft] def stagedIvfQuant(s: SparkSession, d: String): String =
+    stagedEmb(s, d, "ivfquant") { stage =>
       val e0 = microVecs(s, d)
       // centroids + routing tables COPY from the geometry artifact
       // (one Lloyd training shared with every other consumer of the
@@ -483,7 +525,6 @@ object Vectors {
       trainedCodebook(resv, "res", pqResSeedIds, "cv").coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/cbres")
     }
-  }
 
   /** The staged two-level routing tables of a quantizer/index dir —
     * (scent = (sid, sce), chl = (cid, ce, sid) with ce re-joined from
@@ -516,11 +557,8 @@ object Vectors {
     * read (a cid IS a seed vec_id).
     */
   private[graft] def stagedSeedLayer(s: SparkSession, d: String,
-      perCell: Long): String = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stagedArtifact(s, s"seedlayer_${perCell}_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat") { stage =>
+      perCell: Long): String =
+    stagedEmb(s, d, s"seedlayer_$perCell") { stage =>
       val seeds = strideSeedRows(microVecs(s, d), perCell, "stagedSeedLayer")
         .select(col("vec_id").as("cid"), col("qe").as("ce"))
       val (scent, chl) = superLayer(seeds)
@@ -528,7 +566,6 @@ object Vectors {
       chl.select(col("cid"), col("sid")).coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/children")
     }
-  }
 
   /** Read [[stagedSeedLayer]] back as (scent, chl), the child seed
     * vectors re-joined from the corpus (micro-units — the frame the
@@ -558,20 +595,17 @@ object Vectors {
     val cb = quantCbFlat(s, d)
     val sub = e0.select(col("vec_id"), ms, col("qe"))
       .select(col("vec_id"), col("m"), slice(col("qe"), col("m") * 8 + 1, lit(8)).as("sv"))
-    def sq(a: Column, b: Column): Column = sqDist(a, b)
     val dist = sub.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("m"), col("c"), sq(col("sv"), col("ce")).as("d2"))
-    // encoder argmin as a partially-aggregated min(struct(d2, c)) —
-    // r22, guide §2.3: the window form shuffled + sorted the FULL
-    // n×8×256 (vector, subspace, codeword) expand; the hash aggregate
-    // collapses it map-side to n×8 code rows. Tie-break identical:
-    // min(struct(d2, c)) IS row_number() OVER (ORDER BY d2, c) = 1.
-    // `dist` is deliberately NOT cached any more (was maybeCache):
-    // the only other consumer is the query side, whose vec_id < 20
-    // pushdown recomputes a 20-vector sliver from the pruned scan —
-    // materializing 30M rows to save that sliver was a net loss.
-    val enc = dist.groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("d2"), col("c"))).as("best"))
+      .select(col("vec_id"), col("m"), col("c"), sqDist(col("sv"), col("ce")).as("d2"))
+    // encoder argmin through [[nearest]] — r22, guide §2.3: the window
+    // form shuffled + sorted the FULL n×8×256 (vector, subspace,
+    // codeword) expand; the hash aggregate collapses it map-side to
+    // n×8 code rows. `dist` is deliberately NOT cached any more (was
+    // maybeCache): the only other consumer is the query side, whose
+    // vec_id < 20 pushdown recomputes a 20-vector sliver from the
+    // pruned scan — materializing 30M rows to save that sliver was a
+    // net loss.
+    val enc = nearest(dist, Seq(col("vec_id"), col("m")), col("d2"), col("c"))
       .select(col("vec_id").as("c_id"), col("m"), col("best.c").as("code"))
     val qd = dist.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("m").as("qm"), col("c"), col("d2"))
@@ -636,10 +670,26 @@ object Vectors {
     */
   private def knnEdges(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val cent = e.filter(col("vec_id").isin(ivfCentroidIds: _*))
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    knnEdgesOver(e, cent)
+    knnEdgesOver(e, fixedCent(e))
   }
+
+  /** The fixed-8-seed centroid frame (cid, ce) over raw floats. */
+  private def fixedCent(e: DataFrame): DataFrame =
+    e.filter(col("vec_id").isin(ivfCentroidIds: _*))
+      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+
+  /** Flat nearest-cell assignment of the raw-float corpus `e` to `cent`
+    * through [[nearest]] (r22, guide §2.3 "aggregate before you
+    * shuffle": the window form shuffled + sorted the FULL
+    * cells-per-vector expand with the embeddings aboard; the hash
+    * aggregate collapses it map-side to n rows) — cached
+    * (vec_id, embedding, nrm, cell); both sides of a cell join read it.
+    */
+  private def flatAssign(e: DataFrame, cent: DataFrame): DataFrame =
+    maybeCache(nearest(e.join(broadcast(cent)), Seq(col("vec_id")),
+        d2(col("embedding"), col("ce")), col("cid"), "embedding")
+      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
+        col("best.cid").as("cell")))
 
   /** knn edges with the cell count SCALED TO THE CORPUS — the
     * production dial the fixed-8-seed key lacks (SemDeDup/IVF: cells
@@ -715,26 +765,11 @@ object Vectors {
     * scaledLloydCent parity rule), while the in-cell cosine stays on
     * the raw floats (elementwise per-row arithmetic, parity-safe).
     */
-  private def knnEdgesOver(e: DataFrame, cent: DataFrame,
+  private[graft] def knnEdgesOver(e: DataFrame, cent: DataFrame,
       degree: Int = 3, twoLevel: Boolean = false,
       layer: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val asg = if (!twoLevel) {
-      val d2 = dot(col("embedding"), col("embedding")) -
-        lit(2) * dot(col("embedding"), col("ce")) + dot(col("ce"), col("ce"))
-      // argmin as a partially-aggregated min(struct(d2, cid)) — the
-      // lloydRefined idiom (r22, guide §2.3 "aggregate before you
-      // shuffle"): the window form shuffled + sorted the FULL
-      // cells-per-vector expand (8n rows carrying the embedding);
-      // the hash aggregate collapses it map-side to n rows. Tie-break
-      // identical by construction: min(struct(d2, cid)) IS
-      // row_number() OVER (ORDER BY d2, cid) = 1.
-      maybeCache(e.join(broadcast(cent))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(d2.as("d2"), col("cid").as("cid"))).as("best"),
-          first(col("embedding")).as("embedding"))
-        .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-          col("best.cid").as("cell")))
-    } else {
+    val asg = if (!twoLevel) flatAssign(e, cent)
+    else {
       val (scent, chl) = layer.getOrElse(superLayer(
         cent.select(col("cid"), microCol(col("ce")).as("ce"))))
       maybeCache(twoLevelRanked(
@@ -759,19 +794,27 @@ object Vectors {
     // and double negation is an exact sign-bit flip, so the kept set,
     // the tie-break (equal cos → smaller b_id) and the emitted cos
     // values are bit-identical to the window's (cos DESC, b_id) rank;
-    // rnk = 1 + position in the best-first array. (Dedup-by-id inside
-    // BeamTopW is a no-op here: b_id is unique within an a_id's cell.)
+    // rnk = 1 + position in the best-first array. An embedding with a
+    // NaN component scores NaN cosines, which `cos DESC` ranks FIRST
+    // (NaN sorts above every number in both engines) but BeamTopW
+    // would rank last as -NaN: their key is -∞ instead (cos is
+    // otherwise finite), mapped back to NaN on the way out; a
+    // zero-norm embedding never gets here, as ANSI mode fails its 0/0
+    // cosine with DIVIDE_BY_ZERO. (Dedup-by-id inside BeamTopW is a
+    // no-op here: b_id is unique within an a_id's cell.)
+    val nanFirst = lit(Double.NegativeInfinity)
     maybeCache(
       a.join(b, col("cell") === col("bcell") && col("b_id") =!= col("a_id"))
         .select(col("a_id"), col("b_id"),
           (dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
         .groupBy(col("a_id"))
         .agg(graft.functions.BeamTopW.topPairs(degree)(
-          -col("cos"), col("b_id")).as("ps"))
+          when(isnan(col("cos")), nanFirst).otherwise(-col("cos")), col("b_id")).as("ps"))
         .select(col("a_id"), posexplode(col("ps")))
         .select(col("a_id"), col("col._2").as("b_id"),
           (col("pos") + 1).cast("bigint").as("rnk"),
-          (-col("col._1")).as("cos")))
+          when(col("col._1") === nanFirst, lit(Double.NaN))
+            .otherwise(-col("col._1")).as("cos")))
   }
 
   /** HNSW-style greedy beam search over the corpus-scaled knn graph
@@ -828,11 +871,8 @@ object Vectors {
     * vectors alongside the index for its refine stage.
     */
   private[graft] def stagedVecBuckets(s: SparkSession, d: String): (String, Long) = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
     val bMod = vecBucketMod(s, d)
-    val dir = graft.ops.stagedArtifact(s, s"vecbuckets_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat:b$bMod") { stage =>
+    val dir = stagedEmb(s, d, "vecbuckets", s":b$bMod") { stage =>
       // bucket-keyed repartition before the write: one file per
       // bucket regardless of build parallelism (the inverted-list
       // builders' move)
@@ -903,11 +943,8 @@ object Vectors {
     */
   private[graft] def stagedKnnGraph(s: SparkSession, d: String,
       degree: Int = 3, perCell: Long = ivfPerCell): String = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
     val bMod = stagedVecBuckets(s, d)._2
-    graft.ops.stagedArtifact(s, s"knngraph_${degree}_${perCell}_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat:bkt$bMod") { stage =>
+    stagedEmb(s, d, s"knngraph_${degree}_$perCell", s":bkt$bMod") { stage =>
       val e = emb(s, d)
       val cent = scaledKnnCentroids(e, perCell)
       // the genuine HNSW upper layer (replacing r15's all-cells entry
@@ -996,7 +1033,6 @@ object Vectors {
     // already id-agnostic (c_id =!= q_id simply never trips)
     val q = qFrame.getOrElse(e0.filter(col("vec_id") < qBound)
       .select(col("vec_id").as("q_id"), col("qe").as("qq")))
-    def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
     // logical deletes below the expansion: the delete-set-sized
     // broadcast anti-join the IVF route already serves
     // (sim_ivf_pq_deletes) — candidates drop BEFORE scoring and
@@ -1066,12 +1102,10 @@ object Vectors {
     // descent, entry work O(√cells) per query instead of O(cells).
     val scent = s.read.parquet(s"$g/supers")
     val chl = s.read.parquet(s"$g/children")
-    def rd2(a: Column, b: Column): Column =
-      dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
     val routed = q.join(broadcast(scent))
       .groupBy(col("q_id"))
       .agg(graft.functions.MinPairW.topW(2)(
-          rd2(col("qq"), col("sce")), col("sid")).as("sids"),
+          d2(col("qq"), col("sce")), col("sid")).as("sids"),
         first(col("qq")).as("qq"))
       .select(col("q_id"), col("qq"), explode(col("sids")).as("sid"))
     val ent = dropTombs(routed.join(chl, Seq("sid"))
@@ -1357,13 +1391,7 @@ object Vectors {
   }
 
   /** DuckDB twin of [[knnEdges]] as a CTE prefix ending in `t`. */
-  private lazy val knnEdgeCtes: String = {
-    val cids = ivfCentroidIds.mkString("(", ", ", ")")
-    knnEdgeCtesOver(
-      s"""cent AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM embeddings
-         |  WHERE vec_id IN $cids)""".stripMargin)
-  }
+  private lazy val knnEdgeCtes: String = knnEdgeCtesOver(fixedCentCte)
 
   /** DuckDB twin of [[knnEdgesScaled]]'s corpus-sized centroid rule
     * (the integer formula mirrored exactly: cells = max(8, ⌈n/125⌉),
@@ -1389,16 +1417,7 @@ object Vectors {
     */
   private def knnEdgeCtesOver(centCte: String, twoLevel: Boolean = false,
       degree: Int = 3): String = {
-    val asgCte = if (!twoLevel)
-      s"""asg AS (
-         |  SELECT vec_id, embedding, nrm, cid AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, ${D.norm("e.embedding")} AS nrm, c.cid,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${D.dot("e.embedding", "e.embedding")}
-         |                      - 2 * ${D.dot("e.embedding", "c.ce")}
-         |                      + ${D.dot("c.ce", "c.ce")}, c.cid) AS rn
-         |    FROM embeddings e, cent c) t
-         |  WHERE rn = 1)""".stripMargin
+    val asgCte = if (!twoLevel) flatAsgCte
     else
       s"""km AS (SELECT vec_id,
          |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
@@ -1432,22 +1451,7 @@ object Vectors {
     * back to).
     */
   private def ivfPqAdistCtes: String = {
-    s"""e AS (SELECT vec_id,
-       |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-       |           FROM embeddings),
-       |${trainedCbCtes(pqSeedIds, "e", "qe", "ce")},
-       |sub AS (SELECT vec_id, m.m, qe[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-       |        FROM e, range(0, 8) m(m)),
-       |dist AS (SELECT vec_id, sub.m, cb.c,
-       |                list_sum(list_transform(range(1, 9),
-       |                  j -> (sv[j] - ce[j]) * (sv[j] - ce[j]))) AS d2
-       |         FROM sub JOIN cb ON sub.m = cb.m),
-       |enc AS (SELECT vec_id, m, c AS code FROM
-       |          (SELECT vec_id, m, c,
-       |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
-       |           FROM dist) t
-       |        WHERE rn = 1),
-       |qd AS (SELECT vec_id AS q_id, m, c, d2 FROM dist WHERE vec_id < 20),
+    s"""$pqQdCtes,
        |$scaledLloydCentCtes,
        |${superLayerCtes("cl", "cent")},
        |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
@@ -1469,15 +1473,47 @@ object Vectors {
     */
   private def ivfPqOracle: String =
     s"""WITH $ivfPqAdistCtes
-       |SELECT q_id, c_id, rnk, ad AS approx_d2 FROM
-       |  (SELECT q_id, c_id, ad,
-       |          row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS rnk
-       |   FROM adist) t
-       |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+       |${topKSql("adist", 3, "ad, c_id", "ad", "ad AS approx_d2")}""".stripMargin
 
   private def ivfPqRerankOracle: String =
     s"""WITH $ivfPqAdistCtes,
-       |sl AS (SELECT q_id, c_id FROM
+       |$exactRerankSql""".stripMargin
+
+  /** The PQ encode chain every PQ oracle starts from — micro-unit `e`,
+    * the trained codebook `cb`, per-subspace distances, the `enc` codes
+    * (argmin by (d2, c)) and the `qd` tables of queries 0-19.
+    */
+  private def pqQdCtes: String =
+    s"""e AS (SELECT vec_id,
+       |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
+       |           FROM embeddings),
+       |${trainedCbCtes(pqSeedIds, "e", "qe", "ce")},
+       |sub AS (SELECT vec_id, m.m, qe[m.m * 8 + 1 : m.m * 8 + 8] AS sv
+       |        FROM e, range(0, 8) m(m)),
+       |dist AS (SELECT vec_id, sub.m, cb.c,
+       |                list_sum(list_transform(range(1, 9),
+       |                  j -> (sv[j] - ce[j]) * (sv[j] - ce[j]))) AS d2
+       |         FROM sub JOIN cb ON sub.m = cb.m),
+       |enc AS (SELECT vec_id, m, c AS code FROM
+       |          (SELECT vec_id, m, c,
+       |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
+       |           FROM dist) t
+       |        WHERE rn = 1),
+       |qd AS (SELECT vec_id AS q_id, m, c, d2 FROM dist WHERE vec_id < 20)""".stripMargin
+
+  /** `sim_pq_adc`'s flat ADC aggregate over [[pqQdCtes]] — `adist`. */
+  private def pqAdcCtes: String =
+    s"""$pqQdCtes,
+       |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, sum(qd.d2)::BIGINT AS ad
+       |          FROM enc JOIN qd ON enc.m = qd.m AND enc.code = qd.c
+       |          WHERE enc.vec_id <> qd.q_id
+       |          GROUP BY 1, 2)""".stripMargin
+
+  /** The oracle twin of [[exactRerank]] with its default dials: the
+    * top-32 `adist` shortlist, exact micro-unit L2 against `e`, top-3.
+    */
+  private def exactRerankSql: String =
+    s"""sl AS (SELECT q_id, c_id FROM
        |         (SELECT q_id, c_id,
        |                 row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS srn
        |          FROM adist) t
@@ -1487,11 +1523,7 @@ object Vectors {
        |                j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS exact_d2
        |       FROM sl JOIN e q ON q.vec_id = sl.q_id
        |               JOIN e c ON c.vec_id = sl.c_id)
-       |SELECT q_id, c_id, rnk, exact_d2 FROM
-       |  (SELECT q_id, c_id, exact_d2,
-       |          row_number() OVER (PARTITION BY q_id ORDER BY exact_d2, c_id) AS rnk
-       |   FROM ex) t
-       |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+       |${topKSql("ex", 3, "exact_d2, c_id", "exact_d2", "exact_d2")}""".stripMargin
 
   /** Shared ADC-serve tail of `sim_ivf_pq` and `sim_ivf_pq_indexed`
     * (the persisted-index key must hash-equal the in-memory
@@ -1600,12 +1632,8 @@ object Vectors {
         (row_number().over(wIdx) - 1).cast("bigint").as("idx"))
       .filter(col("idx") % sstr === 0 && col("idx") < sstr * sups)
       .select(col("cid").as("sid"), col("ce").as("sse"))
-    def d2(a: Column, b: Column): Column =
-      dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
-    val chl = maybeCache(cent.join(broadcast(sseed))
-      .groupBy(col("cid"))
-      .agg(min(struct(d2(col("ce"), col("sse")).as("d2"), col("sid"))).as("best"),
-        first(col("ce")).as("ce"))
+    val chl = maybeCache(nearest(cent.join(broadcast(sseed)), Seq(col("cid")),
+        d2(col("ce"), col("sse")), col("sid"), "ce")
       .select(col("cid"), col("ce"), col("best.sid").as("sid")))
     val scent = chl.groupBy(col("sid"))
       .agg(graft.functions.VectorMean.centroid(
@@ -1646,8 +1674,6 @@ object Vectors {
   private[graft] def twoLevelRanked(items: DataFrame, idCol: String,
       vecCol: String, scent: DataFrame, chl: DataFrame,
       w: Int = 2): DataFrame = {
-    def d2(a: Column, b: Column): Column =
-      dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
     val routed = items.join(broadcast(scent))
       .groupBy(col(idCol))
       .agg(graft.functions.MinPairW.topW(w)(
@@ -1712,6 +1738,24 @@ object Vectors {
     */
   private def dd2(a: String, b: String): String =
     s"${D.dot(a, a)} - 2 * ${D.dot(a, b)} + ${D.dot(b, b)}"
+
+  /** The oracle twin of [[topK]] as a statement tail: rank `src` rows
+    * per `part` by `order`, keep rnk ≤ k, emit (`ids`, rnk, `out`)
+    * ordered by (part, rnk); `inner` is the ranked value `out` reads.
+    */
+  private def topKSql(src: String, k: Int, order: String, inner: String,
+      out: String, ids: String = "q_id, c_id", part: String = "q_id"): String =
+    s"""SELECT $ids, rnk, $out FROM
+       |  (SELECT $ids, $inner,
+       |          row_number() OVER (PARTITION BY $part ORDER BY $order) AS rnk
+       |   FROM $src) t
+       |WHERE rnk <= $k ORDER BY $part, rnk""".stripMargin
+
+  /** The oracle twin of [[cosineTopK]]'s cut over a `p`(q_id, c_id, cos)
+    * CTE.
+    */
+  private def cosineTopKSql(k: Int): String =
+    topKSql("p", k, "cos DESC, c_id", "cos", "floor(cos * 1000000 + 0.5) / 1000000 AS cosine")
 
   /** DuckDB twin of [[superLayer]] as a CTE suffix over a centroid
     * relation `$centRel`(cid, ce) — emits `${p}scent`(sid, sce) and
@@ -1904,15 +1948,14 @@ object Vectors {
     val sub = resv.select(col("vec_id"), col("cell"), ms, col("res"))
       .select(col("vec_id"), col("cell"), col("m"),
         slice(col("res"), col("m") * 8 + 1, lit(8)).as("sv"))
-    // encoder argmin as a partially-aggregated min(struct(d2, c)) —
-    // r22, same move as pqParts: collapse the n×8×256 expand map-side
-    // instead of shuffling + sorting it. `cell` joins the grouping key
-    // (functionally dependent on vec_id) so no first() is needed.
-    val enc = sub.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("cell"), col("m"), col("c"),
-        sqDist(col("sv"), col("cv")).as("d2"))
-      .groupBy(col("vec_id"), col("cell"), col("m"))
-      .agg(min(struct(col("d2"), col("c"))).as("best"))
+    // encoder argmin through [[nearest]] — r22, same move as pqParts:
+    // collapse the n×8×256 expand map-side instead of shuffling +
+    // sorting it. `cell` joins the grouping key (functionally
+    // dependent on vec_id) so no first() is needed.
+    val enc = nearest(sub.join(broadcast(cb), Seq("m"))
+        .select(col("vec_id"), col("cell"), col("m"), col("c"),
+          sqDist(col("sv"), col("cv")).as("d2")),
+        Seq(col("vec_id"), col("cell"), col("m")), col("d2"), col("c"))
       .select(col("vec_id").as("c_id"), col("cell"), col("m"), col("best.c").as("code"))
     (cb, enc)
   }
@@ -1978,7 +2021,6 @@ object Vectors {
   private[graft] def exactRerank(s: SparkSession, d: String,
       adist: DataFrame, shortlist: Int = 32, k: Int = 3): DataFrame = {
     import s.implicits._
-    def sq(a: Column, b: Column): Column = sqDist(a, b)
     val wSl = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("ad"), col("c_id"))
     // ONE action: the ≤ shortlist·|Q|-row shortlist collects once
@@ -2004,12 +2046,8 @@ object Vectors {
       .join(broadcast(sl), Seq("q_id"))
     val ex = vecs.select(col("vec_id").as("c_id"), col("qe").as("cqe"))
       .join(broadcast(slq), Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        sq(col("qqe"), col("cqe")).cast("bigint").as("exact_d2"))
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("exact_d2"), col("c_id"))
-    ex.withColumn("rnk", row_number().over(wTop).cast("bigint"))
-      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("c_id"), sqd(col("qqe"), col("cqe")).as("exact_d2"))
+    topK(ex, col("q_id"), k, col("exact_d2"), col("c_id"))
       .select(col("q_id"), col("c_id"), col("rnk"), col("exact_d2"))
       .orderBy(col("q_id"), col("rnk"))
   }
@@ -2017,15 +2055,10 @@ object Vectors {
   /** Shared top-k tail over an ADC aggregate (default 3 — every
     * oracled key's dial).
     */
-  private[graft] def ivfPqTop3(adist: DataFrame, k: Int = 3): DataFrame = {
-    val wTop = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("ad"), col("c_id"))
-    adist
-      .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-      .filter(col("rnk") <= k)
+  private[graft] def ivfPqTop3(adist: DataFrame, k: Int = 3): DataFrame =
+    topK(adist, col("q_id"), k, col("ad"), col("c_id"))
       .select(col("q_id"), col("c_id"), col("rnk"), col("ad").as("approx_d2"))
       .orderBy(col("q_id"), col("rnk"))
-  }
 
   /** Staged, stamped on-disk IVF×PQ index over `embeddings.parquet` —
     * the stored-artifact form of sim_ivf_pq's in-memory composition
@@ -2108,11 +2141,8 @@ object Vectors {
     }
   }
 
-  private[graft] def stagedIvfPqIndex(s: SparkSession, d: String): String = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stagedArtifact(s, s"ivfpq_index_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat") { stage =>
+  private[graft] def stagedIvfPqIndex(s: SparkSession, d: String): String =
+    stagedEmb(s, d, "ivfpq_index") { stage =>
       val (e0, enc, _) = pqParts(s, d)
       val cent = quantCent(s, d)
       // cell stays BIGINT (seed vec_ids exceed Int range at target
@@ -2141,7 +2171,6 @@ object Vectors {
       s.read.parquet(s"$quant/children").coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/children")
     }
-  }
 
   /** The three serve-side frames of `sim_ivf_pq_indexed` — (lists =
     * partition-PRUNED inverted-list scan, qd = query distance tables
@@ -2171,10 +2200,9 @@ object Vectors {
     val sub = e0q.select(col("vec_id"), ms, col("qe"))
       .select(col("vec_id"), col("m"),
         slice(col("qe"), col("m") * 8 + 1, lit(8)).as("sv"))
-    def sq(a: Column, b: Column): Column = sqDist(a, b)
     val qd = sub.join(broadcast(s.read.parquet(s"$idx/codebook")), Seq("m"))
       .select(col("vec_id").as("q_id"), col("m").as("qm"), col("c"),
-        sq(col("sv"), col("ce")).as("d2"))
+        sqDist(col("sv"), col("ce")).as("d2"))
     (lists, qd, probes)
   }
 
@@ -2197,11 +2225,8 @@ object Vectors {
     * differences being the stored sub-codebook (learned from
     * residuals) and the codes it indexes.
     */
-  private[graft] def stagedIvfPqResIndex(s: SparkSession, d: String): String = {
-    val src = s"$d/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stagedArtifact(s, s"ivfpqres_index_$key",
-        s"${graft.ops.sourceStamp(s, src)}:$ivfIndexFormat") { stage =>
+  private[graft] def stagedIvfPqResIndex(s: SparkSession, d: String): String =
+    stagedEmb(s, d, "ivfpqres_index") { stage =>
       val e0 = microVecs(s, d)
       val cent = quantCent(s, d)
       val asg = coarseRanked(e0, cent, nprobe = 1,
@@ -2231,7 +2256,6 @@ object Vectors {
       s.read.parquet(s"$quant/children").coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/children")
     }
-  }
 
   /** Serve a query batch from the persisted RESIDUAL index — the
     * body of `sim_ivf_pq_residual_indexed`: plan nprobe cells from
@@ -2295,9 +2319,7 @@ object Vectors {
       val s = qdf.sparkSession
       servedRows(s) {
         val idx = stagedIvfPqResIndex(s, d)
-        val qFrame = qdf.select(col("vec_id"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * lit(1000000d) + lit(0.5d))).as("qe"))
+        val qFrame = qdf.select(col("vec_id"), microCol(col("embedding")).as("qe"))
         ivfPqTop3(
           resIndexAdistQ(s, s"$idx/lists", idx, qFrame, nprobe, tombstones), k)
       }
@@ -2323,18 +2345,18 @@ object Vectors {
     e.registerExchanger(command) { qdf =>
       val s = qdf.sparkSession
       servedRows(s) {
-        val qF = qdf.select(col("vec_id").as("q_id"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * lit(1000000d) + lit(0.5d))).as("qq"))
-        val beamDf = beamParts(s, d, beamW = beamW, rounds = rounds,
-          labelMod = labelMod, tomb = tomb, qFrame = Some(qF))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-        beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
-          .filter(col("rnk") <= k)
-          .select(col("q_id"), col("c_id"), col("rnk"), col("d2"))
+        val qF = qdf.select(col("vec_id").as("q_id"), microCol(col("embedding")).as("qq"))
+        beamTopK(beamParts(s, d, beamW = beamW, rounds = rounds,
+          labelMod = labelMod, tomb = tomb, qFrame = Some(qF)), k)
       }
     }
+
+  /** A served beam's final top-k by (d2, c_id) — (q_id, c_id, rnk, d2);
+    * the three unfiltered beam keys and the wire serve share it.
+    */
+  private def beamTopK(beam: DataFrame, k: Int = 3): DataFrame =
+    topK(beam, col("q_id"), k, col("d2"), col("c_id"))
+      .select(col("q_id"), col("c_id"), col("rnk"), col("d2"))
 
   /** The shared residual-serve tail: plan nprobe cells from the
     * stored centroids under `quantDir`, prune the `listsPath` scan to
@@ -2425,7 +2447,6 @@ object Vectors {
   private[graft] def resIndexServePerQ(s: SparkSession, d: String,
       k: Int = 3, qBound: Long = filteredQBound,
       shortlist: Int = 32): DataFrame = {
-    def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
     val idx = stagedIvfPqResIndex(s, d)
     val e0 = microVecs(s, d)
     val e0L = e0.select(col("vec_id"),
@@ -2490,8 +2511,6 @@ object Vectors {
       .select(col("q_id"), col("w"), col("c_id"), col("rnk"),
         col("exact_d2").as("d2"))
       .withColumn("route", lit("ivf"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
     // EXACT side: the sparse sliver — wanted labels of the exact
     // queries (≤ |Q| ints, the pushable predicate), tombstones
     // filtered, exact top-k
@@ -2501,14 +2520,12 @@ object Vectors {
     val scan = (if (wantedEx.isEmpty) e0L.filter(lit(false))
       else e0L.filter(col("label").isin(wantedEx.map(Integer.valueOf).toIndexedSeq: _*)))
       .filter(col("vec_id") % 17 =!= 3)
-    val exOut = scan.select(col("vec_id").as("c_id"),
+    val exOut = topK(scan.select(col("vec_id").as("c_id"),
         col("label").as("c_label"), col("qe").as("ce2"))
       .join(broadcast(qe2), col("c_label") === col("w_label")
           && col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("w"), col("c_id"),
-        sqd(col("qq"), col("ce2")).as("d2"))
-      .withColumn("rnk", row_number().over(rankW).cast("bigint"))
-      .filter(col("rnk") <= k)
+        sqd(col("qq"), col("ce2")).as("d2")), col("q_id"), k, col("d2"), col("c_id"))
       .withColumn("route", lit("exact"))
     ivfOut.unionByName(exOut)
       .select(col("route"), col("q_id"), col("w"), col("c_id"),
@@ -2616,9 +2633,7 @@ object Vectors {
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     import ss.implicits._
     val q = reader.parquet(srcDir.getOrElse(stageEmb(s, d)))
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * lit(1000000d) + lit(0.5d))).as("qe"))
+      .select(col("vec_id"), microCol(col("embedding")).as("qe"))
       .as[(Long, Seq[Long])]
       // stateless typed projection: per row, one argmin over the
       // √cells broadcast SUPER-centroids, one argmin over the routed
@@ -2844,7 +2859,6 @@ object Vectors {
     */
   private[graft] def exactFilteredTop3(e0: DataFrame, labelMod: Int,
       qBound: Long = filteredQBound): DataFrame = {
-    def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
     val q = e0.filter(col("vec_id") < qBound)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("qe").as("qq"))
@@ -2855,18 +2869,19 @@ object Vectors {
     val cand = e0.filter(col("label").isin(wanted.map(Integer.valueOf): _*))
       .select(col("vec_id").as("c_id"), col("label").as("c_label"),
         col("qe").as("ce2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-    cand.join(broadcast(q),
+    labeledTop3(cand.join(broadcast(q),
         col("c_label") === pmod(col("q_label") + 1, lit(labelMod))
-          && col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"), col("c_label"),
-        sqd(col("qq"), col("ce2")).as("d2"))
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter(col("rnk") <= 3)
+          && col("c_id") =!= col("q_id")))
+  }
+
+  /** The shared tail of both filtered routes: exact d2 of the
+    * (qq, ce2) pairs, per-query top-3, (q_id, c_id, c_label, rnk, d2).
+    */
+  private def labeledTop3(pairs: DataFrame): DataFrame =
+    topK(pairs.select(col("q_id"), col("c_id"), col("c_label"),
+        sqd(col("qq"), col("ce2")).as("d2")), col("q_id"), 3, col("d2"), col("c_id"))
       .select(col("q_id"), col("c_id"), col("c_label"), col("rnk"), col("d2"))
       .orderBy(col("q_id"), col("rnk"))
-  }
 
   /** The ACORN-style selectivity switch over a labeled micro-unit
     * frame: from the label histogram (one metadata-sized aggregate),
@@ -2903,7 +2918,6 @@ object Vectors {
       labelMod: Int = 10, qBound: Long = filteredQBound,
       cent: Option[DataFrame] = None,
       layer: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
     // oracled keys pass the staged trained quantizer + routing layer;
     // probe callers over synthetic corpora (no staged artifact) train
     // and derive on the fly — ONCE, shared by both routing calls below
@@ -2935,18 +2949,10 @@ object Vectors {
         .select(col("vec_id"), col("cid").as("pcell")), Seq("vec_id"))
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("qe").as("qq"), col("pcell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-    cand.join(broadcast(probes),
+    labeledTop3(cand.join(broadcast(probes),
         col("cell") === col("pcell")
           && col("c_label") === (col("q_label") + 1) % labelMod
-          && col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"), col("c_label"),
-        sqd(col("qq"), col("ce2")).as("d2"))
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("c_id"), col("c_label"), col("rnk"), col("d2"))
-      .orderBy(col("q_id"), col("rnk"))
+          && col("c_id") =!= col("q_id")))
   }
 
   /** PER-QUERY probe width from the serving rule (r18, VERDICT r17
@@ -2983,7 +2989,6 @@ object Vectors {
       qBound: Long = filteredQBound,
       qPred: Option[Column] = None)
       : DataFrame = {
-    def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
     val cells = cent.count()
     // qPred (r20): an explicit query-set predicate — the
     // batch-dependence spec serves SOLO queries through the same
@@ -2996,11 +3001,7 @@ object Vectors {
     // cell plans)
     val wMax = qw.filter(col("route") === "ivf")
       .agg(coalesce(max(col("w")), lit(2L))).collect()(0).getLong(0).toInt
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-    def topK(df: DataFrame): DataFrame = df
-      .withColumn("rnk", row_number().over(rankW).cast("bigint"))
-      .filter(col("rnk") <= k)
+    def cut(df: DataFrame): DataFrame = topK(df, col("q_id"), k, col("d2"), col("c_id"))
     // IVF side: route the query frame once at wMax, trim per query
     val probeR = coarseRanked(e0L.filter(qp), cent,
       nprobe = wMax, layer = Some(lay))
@@ -3018,7 +3019,7 @@ object Vectors {
           && col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("w"), col("c_id"), col("c_label"),
         sqd(col("qq"), col("ce2")).as("d2"))
-    val ivfOut = topK(ivfCand).withColumn("route", lit("ivf"))
+    val ivfOut = cut(ivfCand).withColumn("route", lit("ivf"))
     // EXACT side: the sparse sliver — wanted labels of the exact
     // queries (≤ |Q| ints, the pushable predicate), exact top-k
     val qe2 = qw.filter(col("route") === "exact")
@@ -3026,7 +3027,7 @@ object Vectors {
       .collect().map(_.getInt(0)).sorted
     val scan = if (wantedEx.isEmpty) e0L.filter(lit(false))
       else e0L.filter(col("label").isin(wantedEx.map(Integer.valueOf).toIndexedSeq: _*))
-    val exOut = topK(scan.select(col("vec_id").as("c_id"),
+    val exOut = cut(scan.select(col("vec_id").as("c_id"),
         col("label").as("c_label"), col("qe").as("ce2"))
       .join(broadcast(qe2), col("c_label") === col("w_label")
           && col("c_id") =!= col("q_id"))
@@ -3126,7 +3127,6 @@ object Vectors {
     * the operator's real code and watch diversity beat plain NN order.
     */
   private[graft] def mmrPicks(e0: DataFrame, qBound: Long = 20L): DataFrame = {
-    def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
     val q = e0.filter(col("vec_id") < qBound)
       .select(col("vec_id").as("q_id"), col("qe").as("qq"))
     val wCand = org.apache.spark.sql.expressions.Window
@@ -3269,24 +3269,7 @@ object Vectors {
        |${superLayerCtes("cl", "cent")},
        |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
        |$residualEncCtes,
-       |cellsq AS (SELECT greatest(1, count(*) // 4) AS cq FROM cent),
-       |hist AS (SELECT label, count(*) AS cnt FROM e GROUP BY label),
-       |qr AS (SELECT q_id, q_label, qq, w_label, cnt, w,
-       |              CASE WHEN cnt > 0 AND cnt * w * pc >= 3 * n
-       |                   THEN 'ivf' ELSE 'exact' END AS route
-       |       FROM (SELECT q0.q_id, q0.q_label, q0.qq, q0.w_label,
-       |                    coalesce(h.cnt, 0) AS cnt,
-       |                    CASE WHEN coalesce(h.cnt, 0) > 0 THEN
-       |                      least(greatest((9 * n + coalesce(h.cnt, 0) * pc - 1)
-       |                        // nullif(coalesce(h.cnt, 0) * pc, 0), 2), cq)
-       |                    END AS w, n, pc
-       |             FROM (SELECT vec_id AS q_id, label AS q_label, qe AS qq,
-       |                          ${tierWantedDuck("label")} AS w_label
-       |                   FROM e WHERE vec_id < 20) q0
-       |             LEFT JOIN hist h ON h.label = q0.w_label, nn, pcx, cellsq) z),
-       |wmx AS (SELECT coalesce(max(w), 2) AS wmax FROM qr WHERE route = 'ivf'),
-       |qf AS (SELECT q_id AS vec_id, qq AS qe FROM qr WHERE route = 'ivf'),
-       |${twoLevelRankCtesW("cl", "qf", "vec_id", "qe", "dq", "(SELECT wmax FROM wmx)")},
+       |$widthRouteCtes,
        |probes AS (SELECT q.q_id, dq.cid AS pcell, q.w, q.w_label
        |           FROM qr q JOIN dq ON dq.vec_id = q.q_id AND dq.rn <= q.w
        |           WHERE q.route = 'ivf'),
@@ -3315,37 +3298,141 @@ object Vectors {
        |       FROM qr q JOIN e c ON c.label = q.w_label AND c.vec_id <> q.q_id
        |                         AND c.vec_id % 17 <> 3
        |       WHERE q.route = 'exact')
-       |SELECT route, q_id, w, c_id, rnk, d2 FROM (
-       |  SELECT 'ivf' AS route, q_id, w, c_id, d2,
+       |${routeUnionSql("q_id, w, c_id")}""".stripMargin
+
+  /** Oracle twin of [[widthRouteTable]] plus the batch-max-width
+    * routing of the ivf queries — `qr`(q_id, q_label, qq, w_label, cnt,
+    * w, route) and the rank CTE `dq`; needs `e`(vec_id, label, qe),
+    * `cent`, `nn`, `pcx` and the `cl` super layer in scope.
+    */
+  private def widthRouteCtes: String =
+    s"""cellsq AS (SELECT greatest(1, count(*) // 4) AS cq FROM cent),
+       |hist AS (SELECT label, count(*) AS cnt FROM e GROUP BY label),
+       |qr AS (SELECT q_id, q_label, qq, w_label, cnt, w,
+       |              CASE WHEN cnt > 0 AND cnt * w * pc >= 3 * n
+       |                   THEN 'ivf' ELSE 'exact' END AS route
+       |       FROM (SELECT q0.q_id, q0.q_label, q0.qq, q0.w_label,
+       |                    coalesce(h.cnt, 0) AS cnt,
+       |                    CASE WHEN coalesce(h.cnt, 0) > 0 THEN
+       |                      least(greatest((9 * n + coalesce(h.cnt, 0) * pc - 1)
+       |                        // nullif(coalesce(h.cnt, 0) * pc, 0), 2), cq)
+       |                    END AS w, n, pc
+       |             FROM (SELECT vec_id AS q_id, label AS q_label, qe AS qq,
+       |                          ${tierWantedDuck("label")} AS w_label
+       |                   FROM e WHERE vec_id < 20) q0
+       |             LEFT JOIN hist h ON h.label = q0.w_label, nn, pcx, cellsq) z),
+       |wmx AS (SELECT coalesce(max(w), 2) AS wmax FROM qr WHERE route = 'ivf'),
+       |qf AS (SELECT q_id AS vec_id, qq AS qe FROM qr WHERE route = 'ivf'),
+       |${twoLevelRankCtesW("cl", "qf", "vec_id", "qe", "dq", "(SELECT wmax FROM wmx)")}""".stripMargin
+
+  /** Both per-query-width oracles' tail: each route's top-3 by
+    * (d2, c_id) over `pi` (ivf) and `pe` (exact), emitted as
+    * (route, `cols`, rnk, d2).
+    */
+  private def routeUnionSql(cols: String): String =
+    s"""SELECT route, $cols, rnk, d2 FROM (
+       |  SELECT 'ivf' AS route, $cols, d2,
        |         row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk FROM pi
        |  UNION ALL
-       |  SELECT 'exact', q_id, w, c_id, d2,
+       |  SELECT 'exact', $cols, d2,
        |         row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk FROM pe) u
        |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
 
   private def residualTail(rerank: Boolean): String =
-    if (!rerank)
-      """SELECT q_id, c_id, rnk, ad AS approx_d2 FROM
-        |  (SELECT q_id, c_id, ad,
-        |          row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS rnk
-        |   FROM adist) t
-        |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
-    else
-      """, sl AS (SELECT q_id, c_id FROM
-        |         (SELECT q_id, c_id,
-        |                 row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS srn
-        |          FROM adist) t
-        |       WHERE srn <= 32),
-        |ex AS (SELECT sl.q_id, sl.c_id,
-        |              CAST(list_sum(list_transform(range(1, 65),
-        |                j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS exact_d2
-        |       FROM sl JOIN e q ON q.vec_id = sl.q_id
-        |               JOIN e c ON c.vec_id = sl.c_id)
-        |SELECT q_id, c_id, rnk, exact_d2 FROM
-        |  (SELECT q_id, c_id, exact_d2,
-        |          row_number() OVER (PARTITION BY q_id ORDER BY exact_d2, c_id) AS rnk
-        |   FROM ex) t
-        |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+    if (!rerank) topKSql("adist", 3, "ad, c_id", "ad", "ad AS approx_d2")
+    else s", $exactRerankSql"
+
+  /** The LSH bucket CTEs the bucket-keyed oracles start from —
+    * `b`(vec_id, embedding, nrm, bkt) over the raw table.
+    */
+  private def bucketCtes: String =
+    s"""pl AS (SELECT ${D.planesSql} AS planes),
+       |b AS (SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
+       |             ${D.bucket("embedding")} AS bkt
+       |      FROM embeddings, pl)""".stripMargin
+
+  /** Oracle twin of [[searchStreamedIndex]]: multi-probe cosine top-3
+    * for queries below `qBound`.
+    */
+  private def multiprobeSql(qBound: Int): String =
+    s"""WITH $bucketCtes,
+       |pr AS (SELECT q.vec_id AS q_id, q.embedding AS qe, q.nrm AS qn,
+       |              xor(q.bkt, m::BIGINT) AS probe
+       |       FROM b q, (SELECT unnest([${probeMasks.mkString(", ")}]) AS m)
+       |       WHERE q.vec_id < $qBound),
+       |p AS (SELECT pr.q_id, c.vec_id AS c_id,
+       |             ${D.dot("pr.qe", "c.embedding")} / (pr.qn * c.nrm) AS cos
+       |      FROM pr JOIN b c ON pr.probe = c.bkt AND c.vec_id <> pr.q_id)
+       |${cosineTopKSql(3)}""".stripMargin
+
+  /** The fixed-8-seed centroid CTE `cent`(cid, ce) over raw floats. */
+  private def fixedCentCte: String =
+    s"""cent AS (
+       |  SELECT vec_id AS cid, embedding AS ce FROM embeddings
+       |  WHERE vec_id IN ${ivfCentroidIds.mkString("(", ", ", ")")})""".stripMargin
+
+  /** Oracle twin of the flat [[nearest]] assignment to `cent`:
+    * `asg`(vec_id, embedding, nrm, cell).
+    */
+  private def flatAsgCte: String =
+    s"""asg AS (
+       |  SELECT vec_id, embedding, nrm, cid AS cell FROM (
+       |    SELECT e.vec_id, e.embedding, ${D.norm("e.embedding")} AS nrm, c.cid,
+       |           row_number() OVER (PARTITION BY e.vec_id
+       |             ORDER BY ${dd2("e.embedding", "c.ce")}, c.cid) AS rn
+       |    FROM embeddings e, cent c) t
+       |  WHERE rn = 1)""".stripMargin
+
+  /** Oracle twin of [[lloydRefined]]: micro-unit seeds `cent`, the
+    * quantized corpus `b`, the seed assignment `asg0` and the refined
+    * centroids `rc`(cell, rce).
+    */
+  private def lloydRefinedCtes: String = {
+    val q = "list_transform(%s, x -> floor(x::DOUBLE * 1000000 + 0.5))"
+    s"""cent AS (
+       |  SELECT vec_id AS cid, ${q.format("embedding")} AS ce FROM embeddings
+       |  WHERE vec_id IN ${ivfCentroidIds.mkString("(", ", ", ")")}),
+       |b AS (
+       |  SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
+       |         ${q.format("embedding")} AS qe
+       |  FROM embeddings),
+       |asg0 AS (
+       |  SELECT vec_id, embedding, nrm, qe, cid AS cell FROM (
+       |    SELECT b.vec_id, b.embedding, b.nrm, b.qe, c.cid,
+       |           row_number() OVER (PARTITION BY b.vec_id
+       |             ORDER BY ${dd2("b.qe", "c.ce")}, c.cid) AS rn
+       |    FROM b, cent c) t
+       |  WHERE rn = 1),
+       |m AS (SELECT cell, i, avg(qe[i]) AS mv
+       |      FROM asg0, range(1, 65) t(i) GROUP BY cell, i),
+       |rc AS (SELECT cell, list(mv ORDER BY i) AS rce FROM m GROUP BY cell)""".stripMargin
+  }
+
+  /** In-cell cosine top-3 of queries 0-19 over an assignment
+    * `rel`(vec_id, embedding, nrm, cell) — the fixed-seed IVF tail.
+    */
+  private def cellCosineSql(rel: String): String =
+    s"""p AS (
+       |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+       |         ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
+       |  FROM $rel q JOIN $rel c ON q.cell = c.cell
+       |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
+       |${cosineTopKSql(3)}""".stripMargin
+
+  /** The nprobe = 2 twin of [[cellCosineSql]] over a rank CTE `d`:
+    * candidates live in their rn = 1 cell (`asgCell` projects it as
+    * `cell`), queries 0-19 probe their rn ≤ 2 cells (`probeCol`).
+    */
+  private def probe2CosineSql(asgCell: String, probeCol: String): String =
+    s"""asg AS (SELECT vec_id, embedding, nrm, $asgCell FROM d WHERE rn = 1),
+       |qp AS (SELECT vec_id, embedding, nrm, $probeCol AS probe FROM d
+       |       WHERE rn <= 2 AND vec_id < 20),
+       |p AS (
+       |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+       |         ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
+       |  FROM qp q JOIN asg c ON q.probe = c.cell
+       |  WHERE c.vec_id <> q.vec_id)
+       |${cosineTopKSql(3)}""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -3359,24 +3446,13 @@ object Vectors {
          |p AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id,
          |             ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
          |      FROM n q JOIN n c ON q.vec_id < 8 AND c.vec_id <> q.vec_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin) { (s, d) =>
+         |${cosineTopKSql(5)}""".stripMargin) { (s, d) =>
       val n = emb(s, d)
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       val q = n.filter(col("vec_id") < 8)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("nrm").as("qn"))
       val c = n.select(col("vec_id").as("c_id"), col("embedding").as("ce"), col("nrm").as("cn"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      broadcast(q).join(c, col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"), (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+      cosineTopK(broadcast(q), c, 5)
     },
 
     // ---- radius (range) search ----------------------------------------
@@ -3405,7 +3481,6 @@ object Vectors {
         |SELECT p.q_id, p.c_id, p.d2 FROM p JOIN r ON r.q_id = p.q_id
         |WHERE p.d2 <= r.r2 ORDER BY p.q_id, p.d2, p.c_id""".stripMargin) { (s, d) =>
       val e0 = microVecs(s, d)
-      def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
       val q = e0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("qe").as("qq"))
       val dist = maybeCache(e0.select(col("vec_id").as("c_id"), col("qe").as("ce"))
@@ -3424,18 +3499,11 @@ object Vectors {
     // keyed on bucket — the global top-k cross join disappears. Recall
     // is traded for the bounded bucket size, standard SimHash-ANN.
     sql("sim_ann_lsh",
-      s"""WITH pl AS (SELECT ${D.planesSql} AS planes),
-         |b AS (SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-         |             ${D.bucket("embedding")} AS bkt
-         |      FROM embeddings, pl),
+      s"""WITH $bucketCtes,
          |p AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id,
          |             ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
          |      FROM b q JOIN b c ON q.bkt = c.bkt AND q.vec_id < 20 AND c.vec_id <> q.vec_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin) { (s, d) =>
+         |${cosineTopKSql(3)}""".stripMargin) { (s, d) =>
       val b = maybeCache(emb(s, d)
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
           bucket(col("embedding")).as("bkt")))
@@ -3444,14 +3512,7 @@ object Vectors {
           col("nrm").as("qn"), col("bkt"))
       val c = b.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
         col("nrm").as("cn"), col("bkt").as("cbkt"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      q.join(c, col("bkt") === col("cbkt") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"), (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+      cosineTopK(q, c, 3, Some(col("bkt") === col("cbkt")))
     },
 
     // ---- multi-probe LSH: probe every bucket within hamming ----------
@@ -3465,39 +3526,10 @@ object Vectors {
     // candidates per query for a large recall multiple, still
     // O(probes × bucket) not O(corpus) per query.
     sql("sim_ann_multiprobe",
-      s"""WITH pl AS (SELECT ${D.planesSql} AS planes),
-         |b AS (SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-         |             ${D.bucket("embedding")} AS bkt
-         |      FROM embeddings, pl),
-         |pr AS (SELECT q.vec_id AS q_id, q.embedding AS qe, q.nrm AS qn,
-         |              xor(q.bkt, m::BIGINT) AS probe
-         |       FROM b q, (SELECT unnest([${probeMasks.mkString(", ")}]) AS m)
-         |       WHERE q.vec_id < 20),
-         |p AS (SELECT pr.q_id, c.vec_id AS c_id,
-         |             ${D.dot("pr.qe", "c.embedding")} / (pr.qn * c.nrm) AS cos
-         |      FROM pr JOIN b c ON pr.probe = c.bkt AND c.vec_id <> pr.q_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin) { (s, d) =>
-      val b = maybeCache(emb(s, d)
+      multiprobeSql(20)) { (s, d) =>
+      searchStreamedIndex(emb(s, d)
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-          bucket(col("embedding")).as("bkt")))
-      val probeArr = array(probeMasks.map(m => col("bkt").bitwiseXOR(lit(m))): _*)
-      val q = b.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), explode(probeArr).as("probe"))
-      val c = b.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-        col("nrm").as("cn"), col("bkt").as("cbkt"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      q.join(c, col("probe") === col("cbkt") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"), (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+          bucket(col("embedding")).as("bkt")), qBound = 20)
     },
 
     // ---- streaming ANN ingest: embeddings stream into the LSH index ----
@@ -3514,22 +3546,7 @@ object Vectors {
     // the oracle computes it from the raw table, so the key proves the
     // stream wrote a complete, correct index.
     sql("stream_embed_index",
-      s"""WITH pl AS (SELECT ${D.planesSql} AS planes),
-         |b AS (SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-         |             ${D.bucket("embedding")} AS bkt
-         |      FROM embeddings, pl),
-         |pr AS (SELECT q.vec_id AS q_id, q.embedding AS qe, q.nrm AS qn,
-         |              xor(q.bkt, m::BIGINT) AS probe
-         |       FROM b q, (SELECT unnest([${probeMasks.mkString(", ")}]) AS m)
-         |       WHERE q.vec_id < 10),
-         |p AS (SELECT pr.q_id, c.vec_id AS c_id,
-         |             ${D.dot("pr.qe", "c.embedding")} / (pr.qn * c.nrm) AS cos
-         |      FROM pr JOIN b c ON pr.probe = c.bkt AND c.vec_id <> pr.q_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin) { (s, d) =>
+      multiprobeSql(10)) { (s, d) =>
       searchStreamedIndex(buildStreamedIndex(s, d))
     },
 
@@ -3543,59 +3560,18 @@ object Vectors {
     // keyed on cell — the standard IVF trade of recall for bounded
     // candidate lists, complementing the LSH variant above.
     sql("sim_ivf", {
-      val cids = ivfCentroidIds.mkString("(", ", ", ")")
-      s"""WITH cent AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM embeddings
-         |  WHERE vec_id IN $cids),
-         |asg AS (
-         |  SELECT vec_id, embedding, nrm, cid AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, ${D.norm("e.embedding")} AS nrm, c.cid,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${D.dot("e.embedding", "e.embedding")}
-         |                      - 2 * ${D.dot("e.embedding", "c.ce")}
-         |                      + ${D.dot("c.ce", "c.ce")}, c.cid) AS rn
-         |    FROM embeddings e, cent c) t
-         |  WHERE rn = 1),
-         |p AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |         ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |  FROM asg q JOIN asg c ON q.cell = c.cell
-         |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+      s"""WITH $fixedCentCte,
+         |$flatAsgCte,
+         |${cellCosineSql("asg")}""".stripMargin
     }) { (s, d) =>
       val e = emb(s, d)
-      val cent = e.filter(col("vec_id").isin(ivfCentroidIds: _*))
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val d2 = dot(col("embedding"), col("embedding")) -
-        lit(2) * dot(col("embedding"), col("ce")) + dot(col("ce"), col("ce"))
-      // argmin cell as a partially-aggregated min(struct(d2, cid)) —
-      // r22, the lloydRefined idiom: collapses the 8n broadcast expand
-      // map-side instead of shuffling + sorting it with the embeddings
-      // aboard; tie-break (d2, cid) identical to the window's rn = 1.
-      val asg = maybeCache(e.join(broadcast(cent))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(d2.as("d2"), col("cid").as("cid"))).as("best"),
-          first(col("embedding")).as("embedding"))
-        .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-          col("best.cid").as("cell")))
-      // ^ both sides of the cell join read the assignment
+      val asg = flatAssign(e, fixedCent(e))
       val q = asg.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("cell"))
-      val c = asg.select(col("vec_id").as("c_id"), col("embedding").as("ce2"),
+      val c = asg.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
         col("nrm").as("cn"), col("cell").as("ccell"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      q.join(c, col("cell") === col("ccell") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"), (dot(col("qe"), col("ce2")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+      cosineTopK(q, c, 3, Some(col("cell") === col("ccell")))
     },
 
     // ---- IVF refined by one Lloyd iteration ----------------------------
@@ -3616,72 +3592,28 @@ object Vectors {
     // partially-aggregated min(struct(d2, cid)) — no window sort, no
     // all-pairs; the search touches only the query's refined cell.
     sql("sim_ivf_refined", {
-      val cids = ivfCentroidIds.mkString("(", ", ", ")")
-      val q = "list_transform(%s, x -> floor(x::DOUBLE * 1000000 + 0.5))"
-      s"""WITH cent AS (
-         |  SELECT vec_id AS cid, ${q.format("embedding")} AS ce FROM embeddings
-         |  WHERE vec_id IN $cids),
-         |b AS (
-         |  SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-         |         ${q.format("embedding")} AS qe
-         |  FROM embeddings),
-         |asg0 AS (
-         |  SELECT vec_id, embedding, nrm, qe, cid AS cell FROM (
-         |    SELECT b.vec_id, b.embedding, b.nrm, b.qe, c.cid,
-         |           row_number() OVER (PARTITION BY b.vec_id
-         |             ORDER BY ${D.dot("b.qe", "b.qe")}
-         |                      - 2 * ${D.dot("b.qe", "c.ce")}
-         |                      + ${D.dot("c.ce", "c.ce")}, c.cid) AS rn
-         |    FROM b, cent c) t
-         |  WHERE rn = 1),
-         |m AS (SELECT cell, i, avg(qe[i]) AS mv
-         |      FROM asg0, range(1, 65) t(i) GROUP BY cell, i),
-         |rc AS (SELECT cell, list(mv ORDER BY i) AS rce FROM m GROUP BY cell),
+      s"""WITH $lloydRefinedCtes,
          |asg1 AS (
          |  SELECT vec_id, embedding, nrm, cell FROM (
          |    SELECT a.vec_id, a.embedding, a.nrm, r.cell,
          |           row_number() OVER (PARTITION BY a.vec_id
-         |             ORDER BY ${D.dot("a.qe", "a.qe")}
-         |                      - 2 * ${D.dot("a.qe", "r.rce")}
-         |                      + ${D.dot("r.rce", "r.rce")}, r.cell) AS rn
+         |             ORDER BY ${dd2("a.qe", "r.rce")}, r.cell) AS rn
          |    FROM asg0 a, rc r) t
          |  WHERE rn = 1),
-         |p AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |         ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |  FROM asg1 q JOIN asg1 c ON q.cell = c.cell
-         |  WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${cellCosineSql("asg1")}""".stripMargin
     }) { (s, d) =>
       val (asg0, refined) = lloydRefined(s, d)
-      def d2(a: Column, b: Column): Column =
-        dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
       // E-step vs refined centroids, then cell-local cosine top-3
-      val asg1 = maybeCache(asg0.join(broadcast(refined))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(d2(col("qe"), col("rce")).as("d2"),
-          col("rcell").as("cid"))).as("best"),
-          first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"))
+      val asg1 = maybeCache(nearest(asg0.join(broadcast(refined)), Seq(col("vec_id")),
+          d2(col("qe"), col("rce")), col("rcell").as("cid"), "embedding", "nrm")
         .select(col("vec_id"), col("embedding"), col("nrm"),
           col("best.cid").as("cell")))
       val qs = asg1.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qemb"),
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("cell"))
-      val cs = asg1.select(col("vec_id").as("c_id"), col("embedding").as("cemb"),
+      val cs = asg1.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
         col("nrm").as("cn"), col("cell").as("ccell"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      qs.join(cs, col("cell") === col("ccell") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"),
-          (dot(col("qemb"), col("cemb")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+      cosineTopK(qs, cs, 3, Some(col("cell") === col("ccell")))
     },
 
     // ---- IVF with nprobe=2 ---------------------------------------------
@@ -3693,57 +3625,30 @@ object Vectors {
     // candidate list for a measured recall lift (SCALE.md). Same seed
     // centroids and exact-arithmetic assignment as sim_ivf.
     sql("sim_ivf_probe2", {
-      val cids = ivfCentroidIds.mkString("(", ", ", ")")
-      s"""WITH cent AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM embeddings
-         |  WHERE vec_id IN $cids),
+      s"""WITH $fixedCentCte,
          |d AS (
          |  SELECT e.vec_id, e.embedding, ${D.norm("e.embedding")} AS nrm, c.cid,
          |         row_number() OVER (PARTITION BY e.vec_id
-         |           ORDER BY ${D.dot("e.embedding", "e.embedding")}
-         |                    - 2 * ${D.dot("e.embedding", "c.ce")}
-         |                    + ${D.dot("c.ce", "c.ce")}, c.cid) AS rn
+         |           ORDER BY ${dd2("e.embedding", "c.ce")}, c.cid) AS rn
          |  FROM embeddings e, cent c),
-         |asg AS (SELECT vec_id, embedding, nrm, cid AS cell FROM d WHERE rn = 1),
-         |qp AS (SELECT vec_id, embedding, nrm, cid AS probe FROM d
-         |       WHERE rn <= 2 AND vec_id < 20),
-         |p AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |         ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |  FROM qp q JOIN asg c ON q.probe = c.cell
-         |  WHERE c.vec_id <> q.vec_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${probe2CosineSql("cid AS cell", "cid")}""".stripMargin
     }) { (s, d) =>
       val e = emb(s, d)
-      val cent = e.filter(col("vec_id").isin(ivfCentroidIds: _*))
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val d2 = dot(col("embedding"), col("embedding")) -
-        lit(2) * dot(col("embedding"), col("ce")) + dot(col("ce"), col("ce"))
+      val cent = fixedCent(e)
       val wAsg = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
       val ranked = maybeCache(e.join(broadcast(cent))
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-          col("cid"), d2.as("d2"))
+          col("cid"), d2(col("embedding"), col("ce")).as("d2"))
         .withColumn("rn", row_number().over(wAsg))
         .filter(col("rn") <= 2))
       val asg = ranked.filter(col("rn") === 1)
-        .select(col("vec_id").as("c_id"), col("embedding").as("ce2"),
+        .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
           col("nrm").as("cn"), col("cid").as("cell"))
       val qp = ranked.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("cid").as("probe"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      qp.join(asg, col("probe") === col("cell") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"), (dot(col("qe"), col("ce2")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+      cosineTopK(qp, asg, 3, Some(col("probe") === col("cell")))
     },
 
     // ---- IVF, refined centroids × nprobe=2 (the composed production dial)
@@ -3760,51 +3665,15 @@ object Vectors {
     // broadcast (8 rows) in both passes, rank-2 assignment is a window
     // over 8 candidate rows per vector (bounded, never corpus-wide).
     sql("sim_ivf_refined_probe2", {
-      val cids = ivfCentroidIds.mkString("(", ", ", ")")
-      val q = "list_transform(%s, x -> floor(x::DOUBLE * 1000000 + 0.5))"
-      s"""WITH cent AS (
-         |  SELECT vec_id AS cid, ${q.format("embedding")} AS ce FROM embeddings
-         |  WHERE vec_id IN $cids),
-         |b AS (
-         |  SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-         |         ${q.format("embedding")} AS qe
-         |  FROM embeddings),
-         |asg0 AS (
-         |  SELECT vec_id, embedding, nrm, qe, cid AS cell FROM (
-         |    SELECT b.vec_id, b.embedding, b.nrm, b.qe, c.cid,
-         |           row_number() OVER (PARTITION BY b.vec_id
-         |             ORDER BY ${D.dot("b.qe", "b.qe")}
-         |                      - 2 * ${D.dot("b.qe", "c.ce")}
-         |                      + ${D.dot("c.ce", "c.ce")}, c.cid) AS rn
-         |    FROM b, cent c) t
-         |  WHERE rn = 1),
-         |m AS (SELECT cell, i, avg(qe[i]) AS mv
-         |      FROM asg0, range(1, 65) t(i) GROUP BY cell, i),
-         |rc AS (SELECT cell, list(mv ORDER BY i) AS rce FROM m GROUP BY cell),
+      s"""WITH $lloydRefinedCtes,
          |d AS (
          |  SELECT a.vec_id, a.embedding, a.nrm, r.cell,
          |         row_number() OVER (PARTITION BY a.vec_id
-         |           ORDER BY ${D.dot("a.qe", "a.qe")}
-         |                    - 2 * ${D.dot("a.qe", "r.rce")}
-         |                    + ${D.dot("r.rce", "r.rce")}, r.cell) AS rn
+         |           ORDER BY ${dd2("a.qe", "r.rce")}, r.cell) AS rn
          |  FROM asg0 a, rc r),
-         |asg AS (SELECT vec_id, embedding, nrm, cell FROM d WHERE rn = 1),
-         |qp AS (SELECT vec_id, embedding, nrm, cell AS probe FROM d
-         |       WHERE rn <= 2 AND vec_id < 20),
-         |p AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |         ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
-         |  FROM qp q JOIN asg c ON q.probe = c.cell
-         |  WHERE c.vec_id <> q.vec_id)
-         |SELECT q_id, c_id, rnk, floor(cos * 1000000 + 0.5) / 1000000 AS cosine
-         |FROM (SELECT q_id, c_id, cos,
-         |             row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rnk
-         |      FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${probe2CosineSql("cell", "cell")}""".stripMargin
     }) { (s, d) =>
       val (asg0, refined) = lloydRefined(s, d)
-      def d2(a: Column, b: Column): Column =
-        dot(a, a) - lit(2) * dot(a, b) + dot(b, b)
       // rank-2 re-assignment vs the refined centroids: window over the
       // 8 candidate rows per vector (probe2's shape), both the corpus
       // side (rn=1) and the query probes (rn≤2) read it
@@ -3816,20 +3685,12 @@ object Vectors {
         .withColumn("rn", row_number().over(wAsg))
         .filter(col("rn") <= 2))
       val asg = ranked.filter(col("rn") === 1)
-        .select(col("vec_id").as("c_id"), col("embedding").as("ce2"),
+        .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
           col("nrm").as("cn"), col("rcell").as("cell"))
       val qp = ranked.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qemb"),
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("rcell").as("probe"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-      qp.join(asg, col("probe") === col("cell") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"),
-          (dot(col("qemb"), col("ce2")) / (col("qn") * col("cn"))).as("cos"))
-        .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
-        .orderBy(col("q_id"), col("rnk"))
+      cosineTopK(qp, asg, 3, Some(col("probe") === col("cell")))
     },
 
     // ---- IVF serve at the √n PRODUCTION geometry --------------------
@@ -3865,11 +3726,7 @@ object Vectors {
          |               j -> (q.qq[j] - c.ce2[j]) * (q.qq[j] - c.ce2[j]))) AS BIGINT) AS d2
          |      FROM probes q JOIN cand c
          |        ON c.cell = q.pcell AND c.c_id <> q.q_id)
-         |SELECT q_id, c_id, rnk, d2 FROM
-         |  (SELECT q_id, c_id, d2,
-         |          row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk
-         |   FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${topKSql("p", 3, "d2, c_id", "d2", "d2")}""".stripMargin
     }) { (s, d) =>
       val e0 = maybeCache(microVecs(s, d))
       val n = e0.count()
@@ -3884,7 +3741,6 @@ object Vectors {
       val ranked = maybeCache(coarseRanked(e0,
         s.read.parquet(s"$centDir/centroids"),
         layer = Some(dirLayer(s, centDir))))
-      def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
       val cand = e0.join(ranked.filter(col("rn") === 1)
           .select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
         .select(col("vec_id").as("c_id"), col("qe").as("ce2"), col("cell"))
@@ -3892,13 +3748,10 @@ object Vectors {
         .join(ranked.filter(col("vec_id") < 20)
           .select(col("vec_id"), col("cid").as("pcell")), Seq("vec_id"))
         .select(col("vec_id").as("q_id"), col("qe").as("qq"), col("pcell"))
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-      cand.join(broadcast(probes),
+      topK(cand.join(broadcast(probes),
           col("cell") === col("pcell") && col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"), sqd(col("qq"), col("ce2")).as("d2"))
-        .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-        .filter(col("rnk") <= 3)
+        .select(col("q_id"), col("c_id"), sqd(col("qq"), col("ce2")).as("d2")),
+        col("q_id"), 3, col("d2"), col("c_id"))
         .select(col("q_id"), col("c_id"), col("rnk"), col("d2"))
         .orderBy(col("q_id"), col("rnk"))
     },
@@ -3989,16 +3842,12 @@ object Vectors {
       val e = emb(s, d)
       val corpus = e.select(col("vec_id"), col("embedding"))
         .unionByName(e.select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
-      val quant = transform(col("embedding"),
-        x => floor(x.cast("double") * lit(1000000d) + lit(0.5d)))
       val base = corpus.select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nrm"), quant.as("qe"))
+        norm(col("embedding")).as("nrm"), microCol(col("embedding")).as("qe"))
       val cent = base.filter(col("vec_id").isin(ivfCentroidIds: _*))
         .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      val asg = maybeCache(base.join(broadcast(cent))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(sqDist(col("qe"), col("ce")).as("d2"), col("cid"))).as("best"),
-          first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"))
+      val asg = maybeCache(nearest(base.join(broadcast(cent)), Seq(col("vec_id")),
+          sqDist(col("qe"), col("ce")), col("cid"), "embedding", "nrm")
         .select(col("vec_id"), col("embedding"), col("nrm"),
           col("best.cid").as("cell"), col("best.d2").as("d2c")))
       val b = asg.select(col("vec_id").as("vid2"), col("embedding").as("e2"),
@@ -4059,14 +3908,11 @@ object Vectors {
          |FROM asg a JOIN st USING (cell)
          |ORDER BY a.vec_id""".stripMargin
     }) { (s, d) =>
-      val quant = transform(col("embedding"),
-        x => floor(x.cast("double") * lit(1000000d) + lit(0.5d)))
-      val base = emb(s, d).select(col("vec_id"), quant.as("qe"))
+      val base = emb(s, d).select(col("vec_id"), microCol(col("embedding")).as("qe"))
       val cent = base.filter(col("vec_id").isin(ivfCentroidIds: _*))
         .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      val asg = maybeCache(base.join(broadcast(cent))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(sqDist(col("qe"), col("ce")).as("d2"), col("cid"))).as("best"))
+      val asg = maybeCache(nearest(base.join(broadcast(cent)), Seq(col("vec_id")),
+          sqDist(col("qe"), col("ce")), col("cid"))
         .select(col("vec_id"), col("best.cid").as("cell"),
           col("best.d2").cast("bigint").as("d2c")))
       val st = asg.groupBy(col("cell"))
@@ -4096,41 +3942,10 @@ object Vectors {
     // (identical floor(x·1e6+0.5) doubles both engines), so every
     // subspace distance is an integer and the ADC sum (≤ ~2.6e14)
     // hash-matches exactly — no rounding frontier anywhere.
-    sql("sim_pq_adc", {
-      s"""WITH e AS (SELECT vec_id,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |           FROM embeddings),
-         |${trainedCbCtes(pqSeedIds, "e", "qe", "ce")},
-         |sub AS (SELECT vec_id, m.m, qe[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-         |        FROM e, range(0, 8) m(m)),
-         |dist AS (SELECT vec_id, sub.m, cb.c,
-         |                list_sum(list_transform(range(1, 9),
-         |                  j -> (sv[j] - ce[j]) * (sv[j] - ce[j]))) AS d2
-         |         FROM sub JOIN cb ON sub.m = cb.m),
-         |enc AS (SELECT vec_id, m, c AS code FROM
-         |          (SELECT vec_id, m, c,
-         |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
-         |           FROM dist) t
-         |        WHERE rn = 1),
-         |qd AS (SELECT vec_id AS q_id, m, c, d2 FROM dist WHERE vec_id < 20),
-         |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, sum(qd.d2)::BIGINT AS ad
-         |          FROM enc JOIN qd ON enc.m = qd.m AND enc.code = qd.c
-         |          WHERE enc.vec_id <> qd.q_id
-         |          GROUP BY 1, 2)
-         |SELECT q_id, c_id, rnk, ad AS approx_d2 FROM
-         |  (SELECT q_id, c_id, ad,
-         |          row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS rnk
-         |   FROM adist) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
-    }) { (s, d) =>
-      val (_, adist) = pqAdcChain(s, d)
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("ad"), col("c_id"))
-      adist
-        .withColumn("rnk", row_number().over(wTop).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), col("ad").as("approx_d2"))
-        .orderBy(col("q_id"), col("rnk"))
+    sql("sim_pq_adc",
+      s"""WITH $pqAdcCtes
+         |${topKSql("adist", 3, "ad, c_id", "ad", "ad AS approx_d2")}""".stripMargin) { (s, d) =>
+      ivfPqTop3(pqAdcChain(s, d)._2)
     },
 
     // ---- PQ search with exact re-ranking -------------------------------
@@ -4146,43 +3961,9 @@ object Vectors {
     // (micro-unit components, sums < 2^53), so the hash matches with
     // no rounding frontier; recall vs the ADC-only top-3 is measured
     // in SCALE.md.
-    sql("sim_pq_rerank", {
-      s"""WITH e AS (SELECT vec_id,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |           FROM embeddings),
-         |${trainedCbCtes(pqSeedIds, "e", "qe", "ce")},
-         |sub AS (SELECT vec_id, m.m, qe[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-         |        FROM e, range(0, 8) m(m)),
-         |dist AS (SELECT vec_id, sub.m, cb.c,
-         |                list_sum(list_transform(range(1, 9),
-         |                  j -> (sv[j] - ce[j]) * (sv[j] - ce[j]))) AS d2
-         |         FROM sub JOIN cb ON sub.m = cb.m),
-         |enc AS (SELECT vec_id, m, c AS code FROM
-         |          (SELECT vec_id, m, c,
-         |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
-         |           FROM dist) t
-         |        WHERE rn = 1),
-         |qd AS (SELECT vec_id AS q_id, m, c, d2 FROM dist WHERE vec_id < 20),
-         |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, sum(qd.d2)::BIGINT AS ad
-         |          FROM enc JOIN qd ON enc.m = qd.m AND enc.code = qd.c
-         |          WHERE enc.vec_id <> qd.q_id
-         |          GROUP BY 1, 2),
-         |sl AS (SELECT q_id, c_id FROM
-         |         (SELECT q_id, c_id,
-         |                 row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS srn
-         |          FROM adist) t
-         |       WHERE srn <= 32),
-         |ex AS (SELECT sl.q_id, sl.c_id,
-         |              CAST(list_sum(list_transform(range(1, 65),
-         |                j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS exact_d2
-         |       FROM sl JOIN e q ON q.vec_id = sl.q_id
-         |               JOIN e c ON c.vec_id = sl.c_id)
-         |SELECT q_id, c_id, rnk, exact_d2 FROM
-         |  (SELECT q_id, c_id, exact_d2,
-         |          row_number() OVER (PARTITION BY q_id ORDER BY exact_d2, c_id) AS rnk
-         |   FROM ex) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
-    }) { (s, d) =>
+    sql("sim_pq_rerank",
+      s"""WITH $pqAdcCtes,
+         |$exactRerankSql""".stripMargin) { (s, d) =>
       val adist = pqAdcChain(s, d)._2
       exactRerank(s, d, adist)
     },
@@ -4430,7 +4211,7 @@ object Vectors {
     // sim_topk scan shape. At 100 TB the candidate stage rides the
     // IVF route (probe cells, then the label filter) unchanged.
     sql("mine_hard_negatives",
-      """WITH e AS (SELECT vec_id, label,
+      s"""WITH e AS (SELECT vec_id, label,
         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
         |           FROM embeddings),
         |p AS (SELECT a.vec_id AS a_id, a.label AS a_label,
@@ -4438,25 +4219,17 @@ object Vectors {
         |             CAST(list_sum(list_transform(range(1, 65),
         |               j -> (a.qe[j] - c.qe[j]) * (a.qe[j] - c.qe[j]))) AS BIGINT) AS d2
         |      FROM e a JOIN e c ON a.vec_id < 20 AND c.label <> a.label)
-        |SELECT a_id, a_label, neg_id, neg_label, rnk, d2 FROM
-        |  (SELECT a_id, a_label, neg_id, neg_label, d2,
-        |          row_number() OVER (PARTITION BY a_id ORDER BY d2, neg_id) AS rnk
-        |   FROM p) t
-        |WHERE rnk <= 3 ORDER BY a_id, rnk""".stripMargin) { (s, d) =>
+        |${topKSql("p", 3, "d2, neg_id", "d2", "d2",
+            ids = "a_id, a_label, neg_id, neg_label", part = "a_id")}""".stripMargin) { (s, d) =>
       val e0 = microVecsL(s, d)
-      def sqd(a: Column, b: Column): Column = sqDist(a, b).cast("bigint")
       val anchors = e0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("a_id"), col("label").as("a_label"),
           col("qe").as("aq"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("a_id")).orderBy(col("d2"), col("neg_id"))
-      e0.select(col("vec_id").as("neg_id"), col("label").as("neg_label"),
+      topK(e0.select(col("vec_id").as("neg_id"), col("label").as("neg_label"),
           col("qe").as("cq"))
         .join(broadcast(anchors), col("neg_label") =!= col("a_label"))
         .select(col("a_id"), col("a_label"), col("neg_id"), col("neg_label"),
-          sqd(col("aq"), col("cq")).as("d2"))
-        .withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
+          sqd(col("aq"), col("cq")).as("d2")), col("a_id"), 3, col("d2"), col("neg_id"))
         .select(col("a_id"), col("a_label"), col("neg_id"), col("neg_label"),
           col("rnk"), col("d2"))
         .orderBy(col("a_id"), col("rnk"))
@@ -4480,11 +4253,7 @@ object Vectors {
     // matches (we use the established nprobe=2).
     sql("sim_ivf_filtered", {
       s"""WITH ${filteredIvfCtes("label", 10)}
-         |SELECT q_id, c_id, c_label, rnk, d2 FROM
-         |  (SELECT q_id, c_id, c_label, d2,
-         |          row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk
-         |   FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${topKSql("p", 3, "d2, c_id", "d2", "d2", ids = "q_id, c_id, c_label")}""".stripMargin
     }) { (s, d) =>
       filteredTop3(microVecsL(s, d), cent = Some(quantCent(s, d)),
         layer = Some(quantLayer(s, d)))
@@ -4505,11 +4274,7 @@ object Vectors {
     // structurally identical on any corpus, not just this fixture.
     sql("sim_ivf_filtered_probe8", {
       s"""WITH ${filteredIvfCtesW("label", 10, 8)}
-         |SELECT q_id, c_id, c_label, rnk, d2 FROM
-         |  (SELECT q_id, c_id, c_label, d2,
-         |          row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk
-         |   FROM p) t
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${topKSql("p", 3, "d2, c_id", "d2", "d2", ids = "q_id, c_id, c_label")}""".stripMargin
     }) { (s, d) =>
       filteredTop3(microVecsL(s, d), nprobe = 8,
         cent = Some(quantCent(s, d)), layer = Some(quantLayer(s, d)))
@@ -4600,24 +4365,7 @@ object Vectors {
          |${scaledLloydCentCtesAt("n // (4 * CAST(ceil(sqrt(n)) AS BIGINT))")},
          |${superLayerCtes("cl", "cent")},
          |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
-         |cellsq AS (SELECT greatest(1, count(*) // 4) AS cq FROM cent),
-         |hist AS (SELECT label, count(*) AS cnt FROM e GROUP BY label),
-         |qr AS (SELECT q_id, q_label, qq, w_label, cnt, w,
-         |              CASE WHEN cnt > 0 AND cnt * w * pc >= 3 * n
-         |                   THEN 'ivf' ELSE 'exact' END AS route
-         |       FROM (SELECT q0.q_id, q0.q_label, q0.qq, q0.w_label,
-         |                    coalesce(h.cnt, 0) AS cnt,
-         |                    CASE WHEN coalesce(h.cnt, 0) > 0 THEN
-         |                      least(greatest((9 * n + coalesce(h.cnt, 0) * pc - 1)
-         |                        // nullif(coalesce(h.cnt, 0) * pc, 0), 2), cq)
-         |                    END AS w, n, pc
-         |             FROM (SELECT vec_id AS q_id, label AS q_label, qe AS qq,
-         |                          ${tierWantedDuck("label")} AS w_label
-         |                   FROM e WHERE vec_id < 20) q0
-         |             LEFT JOIN hist h ON h.label = q0.w_label, nn, pcx, cellsq) z),
-         |wmx AS (SELECT coalesce(max(w), 2) AS wmax FROM qr WHERE route = 'ivf'),
-         |qf AS (SELECT q_id AS vec_id, qq AS qe FROM qr WHERE route = 'ivf'),
-         |${twoLevelRankCtesW("cl", "qf", "vec_id", "qe", "dq", "(SELECT wmax FROM wmx)")},
+         |$widthRouteCtes,
          |cand AS (SELECT e.vec_id AS c_id, e.label AS c_label, e.qe AS ce2, dd.cid AS cell
          |         FROM e JOIN dd ON dd.vec_id = e.vec_id AND dd.rn = 1),
          |pi AS (SELECT q.q_id, q.w, c.c_id, c.c_label,
@@ -4632,13 +4380,7 @@ object Vectors {
          |                j -> (q.qq[j] - c.qe[j]) * (q.qq[j] - c.qe[j]))) AS BIGINT) AS d2
          |       FROM qr q JOIN e c ON c.label = q.w_label AND c.vec_id <> q.q_id
          |       WHERE q.route = 'exact')
-         |SELECT route, q_id, w, c_id, c_label, rnk, d2 FROM (
-         |  SELECT 'ivf' AS route, q_id, w, c_id, c_label, d2,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk FROM pi
-         |  UNION ALL
-         |  SELECT 'exact', q_id, w, c_id, c_label, d2,
-         |         row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk FROM pe) u
-         |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
+         |${routeUnionSql("q_id, w, c_id, c_label")}""".stripMargin
     }) { (s, d) => perQueryWServe(s, d) },
 
     // ---- semantic decontamination (embedding-space eval leakage) -------
@@ -4916,13 +4658,7 @@ object Vectors {
     // descent every frame is query-sized and broadcast; the edge list
     // is the persisted artifact production would mmap.
     sql("sim_graph_beam", beamOracleSql(8, 3)) { (s, d) =>
-      val beamDf = beamParts(s, d)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-      beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), col("d2"))
-        .orderBy(col("q_id"), col("rnk"))
+      beamTopK(beamParts(s, d)).orderBy(col("q_id"), col("rnk"))
     },
 
     // ---- beam serve at the WIDE budget dial, hash-verified (r18) -------
@@ -4936,13 +4672,7 @@ object Vectors {
     // rounds at the wide literals (one shared builder: the two dials
     // CANNOT fork).
     sql("sim_graph_beam_wide", beamOracleSql(16, 5)) { (s, d) =>
-      val beamDf = beamParts(s, d, beamW = 16, rounds = 5)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-      beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), col("d2"))
-        .orderBy(col("q_id"), col("rnk"))
+      beamTopK(beamParts(s, d, beamW = 16, rounds = 5)).orderBy(col("q_id"), col("rnk"))
     },
 
     // ---- beam serve at the TOP budget dial (r19, VERDICT r18 #6) -------
@@ -4952,13 +4682,7 @@ object Vectors {
     // same shared (beamW, rounds)-parameterized oracle builder as the
     // other two dials, so the three budgets cannot fork.
     sql("sim_graph_beam_32x5", beamOracleSql(32, 5)) { (s, d) =>
-      val beamDf = beamParts(s, d, beamW = 32, rounds = 5)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-      beamDf.withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id"), col("c_id"), col("rnk"), col("d2"))
-        .orderBy(col("q_id"), col("rnk"))
+      beamTopK(beamParts(s, d, beamW = 32, rounds = 5)).orderBy(col("q_id"), col("rnk"))
     },
 
     // ---- FILTERED + TOMBSTONED beam search (r20, VERDICT r19 #1) -------
@@ -4980,11 +4704,8 @@ object Vectors {
     // oracle builder as the three budget dials.
     sql("sim_graph_beam_filtered",
       beamOracleSql(8, 3, labelMod = Some(10), tomb = true)) { (s, d) =>
-      val acc = beamParts(s, d, labelMod = Some(10), tomb = true)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("d2"), col("c_id"))
-      acc.withColumn("rnk", row_number().over(w).cast("bigint"))
-        .filter(col("rnk") <= 3)
+      topK(beamParts(s, d, labelMod = Some(10), tomb = true),
+          col("q_id"), 3, col("d2"), col("c_id"))
         .select(col("q_id"), col("c_id"),
           pmod(col("c_id"), lit(10L)).cast("int").as("c_label"),
           col("rnk"), col("d2"))

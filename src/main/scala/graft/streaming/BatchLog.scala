@@ -116,14 +116,20 @@ object BatchLog {
     (s"w-${r.getString(0)}", r.getLong(1))
   }
 
-  /** The ingest key for one micro-batch: content-addressed by default,
-    * checkpoint-scoped when the deliberate-reprocess flag is set.
+  /** The ingest key for one micro-batch and its row count — the one
+    * decision both index streams make: content-addressed by default
+    * (key and count from ONE [[contentKeyAndCount]] job),
+    * checkpoint-scoped when the deliberate-reprocess flag is set (the
+    * count then runs only if the caller asks for it).
     */
-  def ingestKey(spark: SparkSession, batch: DataFrame, checkpoint: String,
-      batchId: Long): String =
+  def ingestKeyAndCount(spark: SparkSession, batch: DataFrame, checkpoint: String,
+      batchId: Long): (String, () => Long) =
     if (spark.conf.get("spark.graft.ingest.reprocess", "false").toBoolean)
-      key(checkpoint, batchId)
-    else contentKey(batch)
+      (key(checkpoint, batchId), () => batch.count())
+    else {
+      val (k, n) = contentKeyAndCount(batch)
+      (k, () => n)
+    }
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())

@@ -133,8 +133,8 @@ object ClusterStream {
 
   /** [[ingestBatch]] past the key/count/skip preamble: `newDocs` is
     * the [[prepared]] (checkpointed) window and `n` its row count —
-    * the streaming path computes both in ONE aggregate
-    * ([[BatchLog.contentKeyAndCount]]); the spec-facing
+    * the streaming path takes both from [[BatchLog.ingestKeyAndCount]]
+    * (ONE aggregate on the content-keyed path); the spec-facing
     * [[ingestBatch]] wrapper derives them classically.
     */
   private def ingestPrepared(spark: SparkSession, newDocs: DataFrame,
@@ -223,15 +223,9 @@ object ClusterStream {
         // over the same sorted (doc_id, md5(text)) set regardless of
         // partitioning, so the exactly-once skip contract holds).
         val docsB = prepared(batch)
-        if (spark.conf.get("spark.graft.ingest.reprocess", "false").toBoolean) {
-          val key = BatchLog.key(checkpoint, batchId)
-          if (!BatchLog.isCommitted(spark, idxDir, key))
-            seen.addAndGet(ingestPrepared(spark, docsB, docsB.count(), idxDir, key))
-        } else {
-          val (key, n) = BatchLog.contentKeyAndCount(docsB)
-          if (!BatchLog.isCommitted(spark, idxDir, key))
-            seen.addAndGet(ingestPrepared(spark, docsB, n, idxDir, key))
-        }
+        val (key, rows) = BatchLog.ingestKeyAndCount(spark, docsB, checkpoint, batchId)
+        if (!BatchLog.isCommitted(spark, idxDir, key))
+          seen.addAndGet(ingestPrepared(spark, docsB, rows(), idxDir, key))
         ()
       }
       .option("checkpointLocation", checkpoint)

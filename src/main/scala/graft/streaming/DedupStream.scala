@@ -119,8 +119,8 @@ object DedupStream {
     val q = spark.readStream.schema(docSchema).parquet(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitted.addAndGet(ingestBatch(spark, batch, idxDir,
-          BatchLog.ingestKey(spark, batch, checkpoint, batchId)))
+        val (key, _) = BatchLog.ingestKeyAndCount(spark, batch, checkpoint, batchId)
+        admitted.addAndGet(ingestBatch(spark, batch, idxDir, key))
         ()
       }
       .option("checkpointLocation", checkpoint)

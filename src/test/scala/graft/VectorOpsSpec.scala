@@ -611,22 +611,34 @@ class VectorOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(w4(1L) == Seq(10L, 20L, 30L, 1L), s"w=4 order wrong: ${w4(1L)}")
     assert(w4(2L) == Seq(9L), s"w=4 short group wrong: ${w4(2L)}")
+    val nanOrder = Seq((7L, Double.NaN, 5L), (7L, Double.NaN, 3L), (7L, 1.0, 9L),
+        (7L, -0.0, 4L), (7L, 0.0, 2L)).toDF("g", "d2", "id")
+      .groupBy("g").agg(graft.functions.MinPairW.topW(5)(col("d2"), col("id")).as("ids"))
+      .collect()(0).getSeq[Long](1)
+    assert(nanOrder == Seq(2L, 4L, 9L, 3L, 5L), s"NaN/signed-zero order wrong: $nanOrder")
     // every w agrees with the window form (row_number ORDER BY d2, id
     // <= w) — the oracle-mirror contract — and repartition-invariance
     // proves merge correctness (map-side combine merges partial
     // buffers in arbitrary order)
     val big = spark.range(0, 1000).selectExpr("id % 7 AS g",
       "CAST(xxhash64(id) % 1000 AS DOUBLE) AS d2", "id")
-    for (w <- Seq(2, 4, 8)) {
+    // keys compare like Spark's sort — NaN = NaN above every number,
+    // -0.0 = 0.0 — so NaN and signed-zero keys, and a small group
+    // whose top-w reaches its NaNs, still agree with the window form
+    val nanKeys = big.selectExpr("g", "CASE WHEN id % 5 = 0 THEN CAST('NaN' AS DOUBLE) " +
+        "WHEN id % 5 = 1 THEN -0.0D WHEN id % 5 = 2 THEN 0.0D ELSE d2 END AS d2", "id")
+      .unionByName(Seq((7L, Double.NaN, 5L), (7L, Double.NaN, 3L), (7L, 1.0, 9L),
+        (7L, -0.0, 4L), (7L, 0.0, 2L)).toDF("g", "d2", "id"))
+    for (keys <- Seq(big, nanKeys); w <- Seq(2, 4, 8)) {
       val wind = org.apache.spark.sql.expressions.Window
         .partitionBy(col("g")).orderBy(col("d2"), col("id"))
-      val expect = big.withColumn("rn", row_number().over(wind))
+      val expect = keys.withColumn("rn", row_number().over(wind))
         .filter(col("rn") <= w).groupBy("g")
         .agg(sort_array(collect_list(struct(col("rn"), col("id")))).as("s"))
         .selectExpr("g", "transform(s, x -> x.id) AS ids")
-      val a = big.repartition(1).groupBy("g")
+      val a = keys.repartition(1).groupBy("g")
         .agg(graft.functions.MinPairW.topW(w)(col("d2"), col("id")).as("ids"))
-      val b = big.repartition(32).groupBy("g")
+      val b = keys.repartition(32).groupBy("g")
         .agg(graft.functions.MinPairW.topW(w)(col("d2"), col("id")).as("ids"))
       assert(a.exceptAll(expect).count() == 0 && expect.exceptAll(a).count() == 0,
         s"MinPairW($w) disagrees with the window form")
@@ -668,6 +680,83 @@ class VectorOpsSpec extends SparkSpec {
       .selectExpr("transform(ps, p -> p._2) AS ids")
       .collect()(0).getSeq[Long](0)
     assert(got == Seq(10L, 20L), s"duplicate occupied a beam slot: $got")
+    // NaN and signed-zero keys compare like Spark's sort (NaN = NaN
+    // above every number, -0.0 = 0.0): the cut equals the window form
+    // at every width, including widths that reach a group's NaN keys,
+    // and NaN pairs sit last in the best-first array
+    val nanRows = for (g <- 0 to 3; i <- 0 to 30) yield {
+      val id = (i % 12).toLong
+      val d2 = id % 4 match {
+        case 0 => Double.NaN
+        case 1 => -0.0
+        case 2 => 0.0
+        case _ => ((id * 7 + g) % 5).toDouble
+      }
+      (g.toLong, id, d2)
+    }
+    val nanDf = nanRows.toDF("g", "id", "d2")
+    for (w <- Seq(2, 8, 16); parts <- Seq(1, 7)) {
+      val a = nanDf.repartition(parts).groupBy("g")
+        .agg(graft.functions.BeamTopW.topPairs(w)(col("d2"), col("id")).as("ps"))
+        .select(col("g"), explode(col("ps")).as("p"))
+        .select(col("g"), col("p._2").as("id"), col("p._1").as("d2"))
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("g")).orderBy(col("d2"), col("id"))
+      val b = nanDf.distinct()
+        .withColumn("rn", row_number().over(win)).filter(col("rn") <= w)
+        .select("g", "id", "d2")
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+        s"BeamTopW($w) at $parts partitions disagrees with the window form on NaN keys")
+    }
+    val nanTail = nanDf.filter(col("g") === 0).groupBy("g")
+      .agg(graft.functions.BeamTopW.topPairs(16)(col("d2"), col("id")).as("ps"))
+      .selectExpr("transform(ps, p -> p._2) AS ids")
+      .collect()(0).getSeq[Long](0)
+    assert(nanTail.takeRight(3) == Seq(0L, 4L, 8L), s"NaN keys not last: $nanTail")
+  }
+
+  test("knnEdgesOver: a NaN embedding's NaN cosines rank where the window form puts them") {
+    // vec 5 carries a NaN component: every cosine against it is NaN,
+    // which `cos DESC` ranks FIRST (NaN sorts above every number) —
+    // the oracle's order. (A zero-norm vector cannot stand in: ANSI
+    // mode fails its 0/0 cosine with DIVIDE_BY_ZERO.) One centroid
+    // puts every vector in one cell, so the window form is the plain
+    // all-pairs rank.
+    val e = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 60)
+      .select(col("vec_id"), when(col("vec_id") === 5L,
+          transform(col("embedding"), (x, i) => when(i === 0, lit(Float.NaN)).otherwise(x)))
+        .otherwise(col("embedding")).as("embedding"))
+    val cent = e.filter(col("vec_id") === 0L)
+      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val got = graft.ops.Vectors.knnEdgesOver(e, cent)
+    val dot = graft.functions.DotProduct.dotp _
+    val n = e.select(col("vec_id"), col("embedding"),
+      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+    val win = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
+    val want = n.select(col("vec_id").as("a_id"), col("embedding").as("ae"), col("nrm").as("an"))
+      .join(n.select(col("vec_id").as("b_id"), col("embedding").as("be"), col("nrm").as("bn")),
+        col("b_id") =!= col("a_id"))
+      .select(col("a_id"), col("b_id"),
+        (dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
+      .withColumn("rnk", row_number().over(win).cast("bigint"))
+      .filter(col("rnk") <= 3)
+      .select("a_id", "b_id", "rnk", "cos")
+    assert(got.filter(col("b_id") === 5L && col("rnk") === 1L).count() == 59,
+      "the NaN-cosine neighbor must rank first for every other vector")
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+      "knnEdgesOver disagrees with the window form on a zero-norm embedding")
+  }
+
+  test("topK: ties break on the id column, short groups keep every row, rnk is a bigint 1..n") {
+    import spark.implicits._
+    val df = Seq((1L, 10L, 5.0), (1L, 30L, 5.0), (1L, 20L, 5.0), (1L, 40L, 1.0),
+      (2L, 7L, 3.0), (2L, 6L, 9.0)).toDF("q_id", "c_id", "d2")
+    val out = graft.ops.Vectors.topK(df, col("q_id"), 3, col("d2"), col("c_id"))
+    assert(out.schema("rnk").dataType == org.apache.spark.sql.types.LongType)
+    val rows = out.select("q_id", "c_id", "rnk").as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(rows == Seq((1L, 10L, 2L), (1L, 20L, 3L), (1L, 40L, 1L), (2L, 6L, 2L), (2L, 7L, 1L)),
+      s"top-3 cut wrong: $rows")
   }
 
   test("top-w routing provisions nprobe: >= min(nprobe, cells) candidate cells, even on skinny supers") {
