@@ -64,11 +64,18 @@ object Tables {
 
   /** Read one testdata table (see [[normalizeTs]] for `events`). */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
-    case "events" =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(parquet(spark, s"$sfDir/events.parquet"))
-    case other =>
-      parquet(spark, s"$sfDir/$other.parquet")
+    case "events" => normalizeTs(rawEvents(spark, sfDir))
+    case other => parquet(spark, s"$sfDir/$other.parquet")
+  }
+
+  /** `events` as stored, before [[normalizeTs]]: an INT64 nanos `ts`
+    * reads as raw nanos under the legacy conf this sets on `spark`.
+    * The batch loader and the event stream's source schema both come
+    * from here, so the footer is resolved once per process for both.
+    */
+  private[graft] def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    parquet(spark, s"$sfDir/events.parquet")
   }
 
   /** A resolved source: the file listing its schemas were inferred

@@ -93,6 +93,14 @@ final class Catalog(val spark: SparkSession) {
   private def merged(parts: Vector[DataFrame]): DataFrame =
     parts.reduce(_.unionByName(_))
 
+  /** Serializes map update AND view registration: with only the atomic
+    * map update, two concurrent PUTs could register their temp views
+    * out of order and leave the SQL-visible view permanently one part
+    * behind the map. Mallard serializes INSERTs through one connection;
+    * one lock per catalog is the faithful (and simplest) equivalent.
+    */
+  private val putLock = new Object
+
   /** First put creates (schema-on-write); later puts append by name.
     *
     * The incoming DataFrame may originate in a *different* session (a
@@ -102,14 +110,6 @@ final class Catalog(val spark: SparkSession) {
     * concurrent appends from dropping each other (Mallard serializes
     * INSERTs through one connection, `flight_server.py:244-245`).
     */
-  /** Serializes map update AND view registration: with only the atomic
-    * map update, two concurrent PUTs could register their temp views
-    * out of order and leave the SQL-visible view permanently one part
-    * behind the map. Mallard serializes INSERTs through one connection;
-    * one lock per catalog is the faithful (and simplest) equivalent.
-    */
-  private val putLock = new Object
-
   def put(name: String, df: DataFrame): Unit = putLock.synchronized {
     try {
       val local = org.apache.spark.sql.GraftBridge.rebind(spark, df)

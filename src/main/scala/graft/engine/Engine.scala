@@ -393,8 +393,8 @@ final class Engine(val spark: SparkSession) {
     * "stream pump" loop is subsumed by lazy plan handoff — both engines
     * share one SparkContext, so no data moves until `dest` runs an
     * action, and then it moves executor-side, never through the driver.
-    */
-  /** `verify = true` re-counts the destination after the PUT (the
+    *
+    * `verify = true` re-counts the destination after the PUT (the
     * reference's behavior, `demo.py:318-322`); pass false to keep the
     * transfer fully lazy — at scale the count is a full extra scan of
     * the destination table, so it should be a choice, not a tax.

@@ -961,9 +961,7 @@ object Pipeline {
     sql("stream_components", componentsOracle) { (s, d) =>
       import graft.streaming.ClusterStream
       val corpus = componentCorpus(docs(s, d))
-      val root = purgeOnExit(
-        s"${scratchRoot(s)}/stream_cc_${ProcessHandle.current().pid()}") +
-        s"/${java.util.UUID.randomUUID.toString.replace("-", "")}"
+      val root = scratchRunDir(s, "stream_cc")
       val (idx, inDir, chk) = (s"$root/idx", s"$root/in", s"$root/chk")
       hfsMkdirs(s, inDir)
       ClusterStream.seedIndex(s, corpus.limit(0), idx)

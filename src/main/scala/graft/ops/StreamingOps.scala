@@ -32,9 +32,7 @@ object StreamingOps {
     sql("stream_sink_parquet",
       """SELECT event_id, user_id, value FROM events
         |WHERE event_type = 'error' ORDER BY event_id""".stripMargin) { (s, d) =>
-      val out = graft.ops.purgeOnExit(
-        s"${graft.ops.scratchRoot(s)}/stream_sink_${ProcessHandle.current().pid()}") +
-        s"/${java.util.UUID.randomUUID.toString.replace("-", "")}"
+      val out = scratchRunDir(s, "stream_sink")
       EventStream.runFileSink(s, d, out)
       import org.apache.spark.sql.functions.col
       s.read.parquet(out)

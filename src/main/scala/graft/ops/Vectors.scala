@@ -217,15 +217,15 @@ object Vectors {
 
   // ---- streaming index build + search (stream_embed_index) --------------
 
-  /** Replay directory for the embeddings file stream (the file source
-    * lists a directory; testdata is a single file — same staging move
-    * as EventStream).
+  /** The stored schema of `embeddings.parquet`: the explicit schema
+    * both embedding streams read the staged replay with.
     */
-  private def stageEmb(s: SparkSession, sfDir: String): String = {
-    val src = s"$sfDir/embeddings.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stageReplayCopy(s, src,
-      s"${graft.ops.scratchRoot(s)}/stream_emb_$key", "embeddings.parquet")
+  private val embSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("label", IntegerType)))
   }
 
   /** [[graft.ops.stagedArtifact]] over source `d`'s embeddings —
@@ -251,33 +251,15 @@ object Vectors {
     */
   private[graft] def buildStreamedIndex(s: SparkSession, d: String,
       fixedPath: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val ss = s.newSession()
     // tiny per-batch data: the sink itself is stateless, but the read-
-    // back search below shuffles; 8 partitions is plenty (see
-    // EventStream.streamSession for the rationale)
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    val idx = fixedPath.getOrElse(
-      graft.ops.purgeOnExit(
-        s"${graft.ops.scratchRoot(s)}/emb_index_${ProcessHandle.current().pid()}") +
-        s"/${java.util.UUID.randomUUID.toString.replace("-", "")}")
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val q = ss.readStream.schema(schema).parquet(stageEmb(s, d))
+    // back search below shuffles; 8 partitions is plenty
+    val ss = graft.streaming.Streams.session(s)
+    val idx = fixedPath.getOrElse(graft.ops.scratchRunDir(s, "emb_index"))
+    val src = graft.streaming.Streams.replayDir(s, d, "embeddings", "stream_emb")
+    graft.streaming.Streams.toParquet(ss.readStream.schema(embSchema).parquet(src)
       .select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nrm"), bucket(col("embedding")).as("bkt"))
-      .writeStream
-      .format("parquet")
-      .option("path", idx)
-      .option("checkpointLocation", s"$idx-chk")
-      .partitionBy("bkt")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+        norm(col("embedding")).as("nrm"), bucket(col("embedding")).as("bkt")),
+      idx, "bkt")
     // partition-column type is inferred from directory names (int);
     // restore the bigint the probes XOR against
     ss.read.parquet(idx)
@@ -2558,7 +2540,6 @@ object Vectors {
   private[graft] def streamIvfPqIngest(s: SparkSession, d: String,
       srcDir: Option[String] = None, fixedPath: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): String = {
-    import org.apache.spark.sql.types._
     val quantDir = stagedIvfPqResIndex(s, d)
     // the frozen quantizers ship to executors as BROADCAST arrays —
     // exactly what a FAISS worker holds in RAM — NOT as literal
@@ -2619,20 +2600,13 @@ object Vectors {
     val bcSup = s.sparkContext.broadcast(supers)
     val bcChl = s.sparkContext.broadcast(childIdx)
     val bcCbk = s.sparkContext.broadcast(cbk)
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    val idx = fixedPath.getOrElse(
-      graft.ops.purgeOnExit(
-        s"${graft.ops.scratchRoot(s)}/ivfpq_stream_${ProcessHandle.current().pid()}") +
-        s"/${java.util.UUID.randomUUID.toString.replace("-", "")}")
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val reader = ss.readStream.schema(schema)
+    val ss = graft.streaming.Streams.session(s)
+    val idx = fixedPath.getOrElse(graft.ops.scratchRunDir(s, "ivfpq_stream"))
+    val reader = ss.readStream.schema(embSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     import ss.implicits._
-    val q = reader.parquet(srcDir.getOrElse(stageEmb(s, d)))
+    val codes = reader.parquet(srcDir.getOrElse(
+        graft.streaming.Streams.replayDir(s, d, "embeddings", "stream_emb")))
       .select(col("vec_id"), microCol(col("embedding")).as("qe"))
       .as[(Long, Seq[Long])]
       // stateless typed projection: per row, one argmin over the
@@ -2714,16 +2688,7 @@ object Vectors {
         }
       }
       .toDF("c_id", "cell", "m", "code")
-      .writeStream
-      .format("parquet")
-      .option("path", idx)
-      .option("checkpointLocation", s"$idx-chk")
-      .partitionBy("cell")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+    graft.streaming.Streams.toParquet(codes, idx, "cell")
     idx
   }
 

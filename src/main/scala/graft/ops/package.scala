@@ -104,18 +104,6 @@ package object ops {
     */
   def toks(c: Column): Column = split(c, " ")
 
-  /** Spread a small-file scan across the cluster before heavy per-row
-    * compute. A sub-split-size parquet file arrives as ONE partition,
-    * which would serialize hashing/shingling on one core; the shuffle
-    * moves only the raw rows (cheap) and parallelizes everything
-    * downstream.
-    *
-    * Guarded: a pre-split input (a 100 TB corpus already arrives in
-    * thousands of partitions) passes through untouched — an
-    * unconditional `repartition` there would move the entire corpus
-    * once before any work. Only a scan narrower than half the cluster
-    * gets the rebalancing shuffle.
-    */
   /** Session-derived scratch root for staged indexes, replay
     * directories and stream sinks: `spark.graft.scratchDir` when set,
     * else `<spark.sql.warehouse.dir>/_graft_scratch`. Never a
@@ -226,8 +214,8 @@ package object ops {
     * size or mtime drifts from the staged copy's (two sfDirs never
     * share a replay dir — callers key `dir` on the full source path).
     * The file-stream sources list a DIRECTORY; testdata tables are
-    * single files — this is the shared staging move of EventStream /
-    * the embeddings stream.
+    * single files — this is the staging move of
+    * [[graft.streaming.Streams.replayDir]].
     */
   private[graft] def stageReplayCopy(spark: SparkSession, src: String,
       dir: String, name: String): String = {
@@ -354,13 +342,13 @@ package object ops {
     s"${st.getLen}:${st.getModificationTime}"
   }
 
+  private val purgeRegistered =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Register `path` for recursive deletion at JVM exit and return it
     * — for pid-scoped staging directories that would otherwise
     * accumulate one copy per run.
     */
-  private val purgeRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def purgeOnExit(path: String): String = {
     // one hook per path: repeated calls from per-run operators (the
     // streaming index builds register their pid-scoped root on every
@@ -382,6 +370,27 @@ package object ops {
     path
   }
 
+  /** A fresh directory for one run of a staging or streaming operator:
+    * `<scratchRoot>/<name>_<pid>/<uuid>`. The pid-scoped parent is
+    * purged at JVM exit, and the uuid keeps concurrent and repeated
+    * runs in one JVM apart.
+    */
+  def scratchRunDir(spark: SparkSession, name: String): String =
+    purgeOnExit(s"${scratchRoot(spark)}/${name}_${ProcessHandle.current().pid()}") +
+      s"/${java.util.UUID.randomUUID.toString.replace("-", "")}"
+
+  /** Spread a small-file scan across the cluster before heavy per-row
+    * compute. A sub-split-size parquet file arrives as ONE partition,
+    * which would serialize hashing/shingling on one core; the shuffle
+    * moves only the raw rows (cheap) and parallelizes everything
+    * downstream.
+    *
+    * Guarded: a pre-split input (a 100 TB corpus already arrives in
+    * thousands of partitions) passes through untouched — an
+    * unconditional `repartition` there would move the entire corpus
+    * once before any work. Only a scan narrower than half the cluster
+    * gets the rebalancing shuffle.
+    */
   def spread(df: DataFrame): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     // max(2, …): at parallelism 2-3 the halved threshold would round

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Exactly-once appends for the streaming index directories
   * (VERDICT r10 task #7 / r11 task #4): the same bookkeeping Spark's
@@ -36,14 +37,8 @@ import org.apache.spark.sql.types.StructType
   * CONTENT — md5 over its (doc_id, md5(text)) set ([[contentKey]]) —
   * so the skip is lineage-independent: a replay through a fresh
   * checkpoint over the same staged windows finds every key committed
-  * and appends nothing
-  * (byte-identical index, ExactlyOnceSpec pins it). Deliberate
-  * duplicate-append reprocessing remains available behind
-  * `spark.graft.ingest.reprocess=true`, which reverts to
-  * checkpoint-scoped `<checkpoint-hash>-<batchId>` keys ([[key]]);
-  * that path appends duplicate rows — the documented at-least-once
-  * fallback the index consumers tolerate by construction (distinct-ing
-  * unions, anti-join guards).
+  * and appends nothing (byte-identical index, ExactlyOnceSpec pins
+  * it). Both index streams run the one ingest loop, [[ingest]].
   *
   * At 100 TB: one subdirectory and one marker per ingest window keeps
   * listing cost proportional to window count, and [[ClusterStream]]
@@ -54,22 +49,21 @@ import org.apache.spark.sql.types.StructType
   */
 object BatchLog {
 
-  /** Marker namespace for one (checkpoint, epoch): stable across
-    * crash-retries of the same lineage, distinct across checkpoints.
-    * This is the REPROCESS namespace — a replay through a fresh
-    * checkpoint gets new keys and appends again. The default ingest
-    * path uses [[contentKey]] instead (round 13): keys derived from
-    * the window's input-file set are stable across checkpoint
-    * lineages, so a fresh-checkpoint replay of already-ingested
-    * windows skips them; deliberate duplicate-append reprocessing
-    * stays available behind `spark.graft.ingest.reprocess=true`.
-    */
-  def key(checkpoint: String, batchId: Long): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8"))
-      .take(4).map(b => f"$b%02x").mkString
-    s"$h-$batchId"
-  }
+  /** (doc_id, text): the arrival-file schema of both index streams. */
+  private[streaming] val docSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType)))
+
+  // Index halves are read with EXPLICIT schemas: the empty-seed
+  // bootstrap writes zero part files (AQE coalesces an empty frame to
+  // zero partitions), so schema inference on a fresh index would fail.
+  private[streaming] val hsSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("hs", ArrayType(LongType))))
+  private[streaming] val bandSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("bkey", StringType),
+    StructField("b", IntegerType)))
 
   /** Content-addressed window key: md5 over the window's sorted
     * (doc_id, md5(text)) pairs — ids AND payloads, so a re-staged
@@ -100,7 +94,6 @@ object BatchLog {
     * cannot drift.
     */
   def contentKeyAndCount(batch: DataFrame): (String, Long) = {
-    import org.apache.spark.sql.functions._
     // per-row term null-guarded (ADVICE r13): a NULL doc_id or text
     // would null the whole concat, and collect_list DROPS nulls — two
     // windows differing only in NULL-bearing rows would then share a
@@ -116,20 +109,52 @@ object BatchLog {
     (s"w-${r.getString(0)}", r.getLong(1))
   }
 
-  /** The ingest key for one micro-batch and its row count — the one
-    * decision both index streams make: content-addressed by default
-    * (key and count from ONE [[contentKeyAndCount]] job),
-    * checkpoint-scoped when the deliberate-reprocess flag is set (the
-    * count then runs only if the caller asks for it).
+  /** The arriving window, spread across the cluster and lazily
+    * checkpointed — a staged window is ONE parquet part file = one
+    * scan partition, which serialized the whole batch's md5/shingling
+    * on a single core (r22 profile: two ~2 s single-task jobs per
+    * micro-batch at sf0.1). Hash repartition on doc_id is
+    * deterministic under retry; the first action over the frame
+    * (the fused key+count aggregate, or a spec path's count)
+    * materializes the checkpoint blocks in the same pass.
     */
-  def ingestKeyAndCount(spark: SparkSession, batch: DataFrame, checkpoint: String,
-      batchId: Long): (String, () => Long) =
-    if (spark.conf.get("spark.graft.ingest.reprocess", "false").toBoolean)
-      (key(checkpoint, batchId), () => batch.count())
-    else {
-      val (k, n) = contentKeyAndCount(batch)
-      (k, () => n)
-    }
+  private[streaming] def spreadWindow(batch: DataFrame): DataFrame = {
+    val par = batch.sparkSession.sparkContext.defaultParallelism
+    batch.select(col("doc_id"), col("text"))
+      .repartition(par, col("doc_id"))
+      .localCheckpoint(false)
+  }
+
+  /** The one ingest loop of the index streams: drain every file under
+    * `inDir` ([[Streams.drain]]) through the index at `idxDir`, on a
+    * [[Streams.session]] of `partitions`, and return the sum of what
+    * `step` returned. Per micro-batch: spread the window
+    * ([[spreadWindow]]); take its key and row count in ONE aggregate
+    * that also materializes the checkpoint (the key is partitioning-
+    * independent); skip the window if the key is committed; else run
+    * `step(session, window, rows, key)`, the stream's own append,
+    * which commits the key last. `maxFilesPerTrigger` sets the window
+    * boundaries (unset: every available file is one window).
+    */
+  private[streaming] def ingest(parent: SparkSession, inDir: String, idxDir: String,
+      checkpoint: String, partitions: Int, maxFilesPerTrigger: Option[Int])(
+      step: (SparkSession, DataFrame, Long, String) => Long): Long = {
+    val spark = Streams.session(parent, partitions)
+    val total = new java.util.concurrent.atomic.AtomicLong(0)
+    val reader = spark.readStream.schema(docSchema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toLong))
+    Streams.drain(reader.parquet(inDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val docs = spreadWindow(batch)
+        val (key, rows) = contentKeyAndCount(docs)
+        if (!isCommitted(spark, idxDir, key))
+          total.addAndGet(step(spark, docs, rows, key))
+        ()
+      }
+      .option("checkpointLocation", checkpoint))
+    total.get()
+  }
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
@@ -243,8 +268,8 @@ object BatchLog {
     * operation's PARTIAL hs directory visible as committed data.
     * Distinct prefixes make an uncommitted generation reachable only by
     * a retry of the SAME operation, which overwrites it. Ingest window
-    * keys (`<8 hex>-<n>`) always contain '-', so they can never collide
-    * with either prefix.
+    * keys (`w-<32 hex>`, [[contentKey]]) always contain '-', so they
+    * can never collide with either prefix.
     */
   def nextGenKey(spark: SparkSession, idxDir: String, prefix: String = "g"): String = {
     val n = committed(spark, idxDir)

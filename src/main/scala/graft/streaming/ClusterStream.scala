@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.{Pipeline, Text}
+import BatchLog.{bandSchema, hsSchema}
 
 /** Continuous duplicate-CLUSTER maintenance: the streaming twin of
   * `dedup_components_delta`. Each micro-batch of arriving documents
@@ -39,27 +39,16 @@ import graft.ops.{Pipeline, Text}
   * committed subdirectory, reads prune uncommitted partials, and a
   * crash-retry overwrites its own partial files — byte-identical to a
   * crash-free run (spec-pinned). Consumers additionally tolerate the
-  * one remaining replay path (a deliberate re-ingest through a FRESH
-  * checkpoint): edges/bands feed distinct-ing set-union consumers,
+  * one remaining duplicate-append path (a re-staged window that
+  * overlaps an ingested one, which has a new content key):
+  * edges/bands feed distinct-ing set-union consumers,
   * digests append behind a left_anti guard, and [[labels]] distincts
   * the hs doc_ids.
   */
 object ClusterStream {
 
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
-
-  // Index halves are read with EXPLICIT schemas: the empty-seed
-  // bootstrap writes zero part files (AQE coalesces an empty frame to
-  // zero partitions), so schema inference on a fresh index would fail.
-  private val hsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("hs", ArrayType(LongType))))
-  private val bandSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("bkey", StringType),
-    StructField("b", IntegerType)))
+  // explicit schemas, like BatchLog's hs/bands (an empty seed writes
+  // no part files to infer from)
   private val edgeSchema = StructType(Seq(
     StructField("x", LongType), StructField("y", LongType)))
   private val digestSchema = StructType(Seq(
@@ -111,31 +100,14 @@ object ClusterStream {
   private[graft] def ingestBatch(spark: SparkSession, batch: DataFrame,
       idxDir: String, key: String): Long = {
     if (BatchLog.isCommitted(spark, idxDir, key)) return 0L
-    val newDocs = prepared(batch)
+    val newDocs = BatchLog.spreadWindow(batch)
     ingestPrepared(spark, newDocs, newDocs.count(), idxDir, key)
   }
 
-  /** The arriving window, spread across the cluster and lazily
-    * checkpointed — a staged window is ONE parquet part file = one
-    * scan partition, which serialized the whole batch's md5/shingling
-    * on a single core (r22 profile: two ~2 s single-task jobs per
-    * micro-batch at sf0.1). Hash repartition on doc_id is
-    * deterministic under retry; the first action over the frame
-    * (the fused key+count aggregate, or the spec path's count)
-    * materializes the checkpoint blocks in the same pass.
-    */
-  private def prepared(batch: DataFrame): DataFrame = {
-    val par = batch.sparkSession.sparkContext.defaultParallelism
-    batch.select(col("doc_id"), col("text"))
-      .repartition(par, col("doc_id"))
-      .localCheckpoint(false)
-  }
-
   /** [[ingestBatch]] past the key/count/skip preamble: `newDocs` is
-    * the [[prepared]] (checkpointed) window and `n` its row count —
-    * the streaming path takes both from [[BatchLog.ingestKeyAndCount]]
-    * (ONE aggregate on the content-keyed path); the spec-facing
-    * [[ingestBatch]] wrapper derives them classically.
+    * the spread (checkpointed) window and `n` its row count — the
+    * streaming path takes both from [[BatchLog.ingest]]'s one
+    * aggregate; the spec-facing [[ingestBatch]] wrapper counts.
     */
   private def ingestPrepared(spark: SparkSession, newDocs: DataFrame,
       n: Long, idxDir: String, key: String): Long = {
@@ -192,49 +164,21 @@ object ClusterStream {
     n
   }
 
-  /** Drain every file currently under `inDir` (AvailableNow, one file
-    * per micro-batch) through the index at `idxDir`. Returns the number
-    * of documents processed by this run; re-running with the same
-    * checkpoint processes only newly arrived files.
+  /** Drain every file currently under `inDir` (one file per
+    * micro-batch) through the index at `idxDir` via [[BatchLog.ingest]].
+    * Returns the number of documents processed by this run; re-running
+    * with the same checkpoint processes only newly arrived files.
+    * Inherits the parent's shuffle width: unlike DedupStream's always-
+    * small batches, a clustering window can be corpus-scale (the bench
+    * replays 150k-doc windows) and 8 partitions underuses the
+    * 32-thread box.
     */
   def runIngest(parent: SparkSession, inDir: String, idxDir: String,
-      checkpoint: String): Long = {
-    val spark = parent.newSession()
-    // inherit the parent's shuffle width: unlike DedupStream's always-
-    // small batches, a clustering window can be corpus-scale (the
-    // bench replays 150k-doc windows) and 8 partitions underuses the
-    // 32-thread box
-    spark.conf.set("spark.sql.shuffle.partitions",
-      parent.conf.get("spark.sql.shuffle.partitions"))
-    // runtime confs don't cross newSession(): carry the reprocess flag
-    spark.conf.set("spark.graft.ingest.reprocess",
-      parent.conf.get("spark.graft.ingest.reprocess", "false"))
-    val seen = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ONE aggregate over the prepared (spread + checkpointed)
-        // window computes the content key AND the count, materializing
-        // the checkpoint blocks in the same pass — the old path paid a
-        // single-task key job over the raw one-partition window plus a
-        // separate count job (r22; key value unchanged — the md5 is
-        // over the same sorted (doc_id, md5(text)) set regardless of
-        // partitioning, so the exactly-once skip contract holds).
-        val docsB = prepared(batch)
-        val (key, rows) = BatchLog.ingestKeyAndCount(spark, docsB, checkpoint, batchId)
-        if (!BatchLog.isCommitted(spark, idxDir, key))
-          seen.addAndGet(ingestPrepared(spark, docsB, rows(), idxDir, key))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    seen.get()
-  }
+      checkpoint: String): Long =
+    BatchLog.ingest(parent, inDir, idxDir, checkpoint,
+        parent.conf.get("spark.sql.shuffle.partitions").toInt, Some(1)) {
+      (spark, docs, rows, key) => ingestPrepared(spark, docs, rows, idxDir, key)
+    }
 
   /** Stage a (doc_id, text) frame as ONE flat parquet file at `dest` —
     * the file-source arrival unit (the source lists top-level files;
@@ -271,12 +215,6 @@ object ClusterStream {
       }
   }
 
-  /** Component labels of everything ingested so far: star contraction
-    * over the ACCUMULATED edge list, joined to a doc_id-only corpus
-    * projection (from the index's own hs — the stream never stores
-    * texts). Edge-sized work; same (id, lbl) contract as
-    * [[Pipeline.componentLabels]].
-    */
   /** Compact the accumulated edge list to its contracted member→root
     * star set, and return the (labels, stored-edge-row-count) pair.
     *
@@ -333,12 +271,18 @@ object ClusterStream {
     BatchLog.consolidate(spark, idxDir, Seq(
       "hs" -> hsSchema, "bands" -> bandSchema, "digests" -> digestSchema))
 
+  /** Component labels of everything ingested so far: star contraction
+    * over the ACCUMULATED edge list, joined to a doc_id-only corpus
+    * projection (from the index's own hs — the stream never stores
+    * texts). Edge-sized work; same (id, lbl) contract as
+    * [[Pipeline.componentLabels]].
+    */
   def labels(spark: SparkSession, idxDir: String): (DataFrame, DataFrame, Int) = {
-    // distinct: a deliberate full-replay through a FRESH checkpoint
-    // appends a batch's hs rows twice (crash-retries within one
-    // checkpoint are exactly-once via BatchLog, but a new checkpoint is
-    // a new key namespace by design); duplicate ids would otherwise
-    // duplicate label rows and inflate comp_size downstream.
+    // distinct: a re-staged window that overlaps an ingested one has a
+    // new content key, so it appends the shared docs' hs rows again
+    // (replays of the SAME window skip via BatchLog); duplicate ids
+    // would otherwise duplicate label rows and inflate comp_size
+    // downstream.
     // Edges/bands tolerate replay by construction (set-union into
     // distinct-ing consumers), digests via the left_anti guard — hs
     // needs this distinct.

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.Trigger
+import BatchLog.{bandSchema, docSchema, hsSchema}
 
 /** Continuous-ingest dedup: a micro-batch stream of new documents is
   * deduplicated against the STORED MinHash band index, and survivors
@@ -41,24 +40,11 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object DedupStream {
 
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
-
-  private val textsSchema = docSchema
-  private val hsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("hs", ArrayType(LongType))))
-  private val bandSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("bkey", StringType),
-    StructField("b", IntegerType)))
-
   /** The indexed corpus (committed rows only) — the accessor specs and
     * tools should use instead of raw paths.
     */
   def indexedTexts(spark: SparkSession, idxDir: String): DataFrame =
-    BatchLog.read(spark, idxDir, "texts", textsSchema)
+    BatchLog.read(spark, idxDir, "texts", docSchema)
 
   /** Initialize an index directory from a seed corpus (texts + hs +
     * bands) — the batch bootstrap a deployment runs once.
@@ -103,33 +89,19 @@ object DedupStream {
   }
 
   /** Run the continuous dedup over every file currently in `inDir`
-    * (AvailableNow), appending admitted docs to the index. Returns the
-    * number of docs admitted by this run. Re-running with the same
-    * checkpoint processes only files that arrived since the last run —
-    * the restart-safe ingest loop.
+    * through [[BatchLog.ingest]], appending admitted docs to the index.
+    * Returns the number of docs admitted by this run. Re-running with
+    * the same checkpoint processes only files that arrived since the
+    * last run — the restart-safe ingest loop. Windows are small, so the
+    * stream runs 8 shuffle partitions, and every file available at
+    * start forms one window: the window boundaries decide which
+    * in-window near-duplicates wait for the next run.
     */
   def runIngest(parent: SparkSession, inDir: String, idxDir: String,
-      checkpoint: String): Long = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // runtime confs don't cross newSession(): carry the reprocess flag
-    spark.conf.set("spark.graft.ingest.reprocess",
-      parent.conf.get("spark.graft.ingest.reprocess", "false"))
-    val admitted = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream.schema(docSchema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (key, _) = BatchLog.ingestKeyAndCount(spark, batch, checkpoint, batchId)
-        admitted.addAndGet(ingestBatch(spark, batch, idxDir, key))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    admitted.get()
-  }
+      checkpoint: String): Long =
+    BatchLog.ingest(parent, inDir, idxDir, checkpoint, 8, None) { (spark, docs, _, key) =>
+      admit(spark, docs, idxDir, key)
+    }
 
   /** Consolidate the index halves into one generation directory each —
     * the many-small-files defense for a long-running ingest; see
@@ -137,7 +109,7 @@ object DedupStream {
     */
   def consolidateIndex(spark: SparkSession, idxDir: String): Unit =
     BatchLog.consolidate(spark, idxDir, Seq(
-      "texts" -> textsSchema, "hs" -> hsSchema, "bands" -> bandSchema))
+      "texts" -> docSchema, "hs" -> hsSchema, "bands" -> bandSchema))
 
   /** One micro-batch's dedup-and-admit; package-private so the
     * crash-retry path can be spec-driven without a stream. Exactly-once
@@ -145,8 +117,15 @@ object DedupStream {
     * against committed state only and overwrite their own partials.
     */
   private[graft] def ingestBatch(spark: SparkSession, batch: DataFrame,
-      idxDir: String, key: String): Long = {
-    if (BatchLog.isCommitted(spark, idxDir, key)) return 0L
+      idxDir: String, key: String): Long =
+    if (BatchLog.isCommitted(spark, idxDir, key)) 0L
+    else admit(spark, batch, idxDir, key)
+
+  /** [[ingestBatch]] past the skip: admit `batch`'s survivors under
+    * `key` and commit it.
+    */
+  private def admit(spark: SparkSession, batch: DataFrame, idxDir: String,
+      key: String): Long = {
     // checkpoint once: the three writes below must see the SAME
     // survivor set even though each triggers its own job. LAZY + count
     // (r21): the count materializes the blocks in one pass — the eager

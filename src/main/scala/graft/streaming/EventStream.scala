@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Structured Streaming over the `events` table replayed as a file
   * stream (SURVEY §2.9).
@@ -21,66 +20,25 @@ import org.apache.spark.sql.types._
   * (window, event_type) with partial aggregation before the shuffle;
   * the watermark bounds state. Nothing here is driver-resident.
   *
-  * NOTE on the `memory` sink: the run* verification harnesses land
-  * their (small, aggregated) results in a driver-memory sink table so
-  * the oracle can read them back deterministically. Do NOT copy that
-  * pattern into a pipeline — the production egress path is the
-  * checkpointed file sink (`runFileSink`), which writes executor-side
-  * and survives restarts exactly-once.
+  * Every run* drains through [[Streams]] on a [[Streams.session]]; the
+  * verification harnesses land their (small, aggregated) results in
+  * [[Streams.toMemory]], and `runFileSink` is the production egress
+  * path ([[Streams.toParquet]]).
   */
 object EventStream {
 
-  /** Parquet schema of events.parquet, parameterized on the physical
-    * `ts` type — raw nanos (INT64, legacy nanosAsLong conf) or a native
-    * timestamp, depending on the testdata generation; see
-    * [[graft.Tables.normalizeTs]].
-    */
-  private def rawSchema(tsType: org.apache.spark.sql.types.DataType) = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Streaming-scoped session: each stateful operator keeps ONE state
-    * store per shuffle partition, checkpointed every micro-batch — so
-    * with the batch default (32) a tiny stream pays 32 store commits
-    * per batch for kilobytes of data. The stream keys run on a cloned
-    * session pinned to 8 partitions instead; correctness is
-    * partition-count independent (the spec parity checks still pass),
-    * and a production job would size this to its real per-batch volume
-    * the same way. The parent session's conf is untouched.
-    */
-  private def streamSession(parent: SparkSession): SparkSession = {
-    val ss = parent.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    ss
-  }
-
   /** The streaming source: events replayed from parquet, ts normalized
     * to a session-tz timestamp exactly as the batch loader does. The
-    * file stream needs an explicit schema, so the physical `ts` type is
-    * sniffed once from the source file's footer (a metadata-only batch
-    * read) and the same [[graft.Tables.normalizeTs]] restore applied.
+    * file stream needs an explicit schema: it is the raw events schema
+    * [[graft.Tables.rawEvents]] resolves once per process, so the
+    * physical `ts` type (see [[graft.Tables.normalizeTs]]) comes from
+    * the same footer read the batch loader uses.
     */
-  // the sniff result per source file: one metadata-only batch read per
-  // sfDir per JVM, not one per run* call (ADVICE r11 — several harness
-  // calls per run were each re-planning a batch scan just for the
-  // footer). Keyed on the file path; the testdata does not mutate
-  // mid-JVM, and a regenerated file arrives with a fresh JVM.
-  private val tsTypes =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-
-  def source(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = tsTypes.computeIfAbsent(s"$sfDir/events.parquet",
-      p => spark.read.parquet(p).schema("ts").dataType)
+  def source(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.normalizeTs(
       spark.readStream
-        .schema(rawSchema(tsType))
-        .parquet(stageDir(spark, sfDir)))
-  }
+        .schema(graft.Tables.rawEvents(spark, sfDir).schema)
+        .parquet(Streams.replayDir(spark, sfDir, "events", "stream_events")))
 
   /** Streaming gap-based sessions: the same session_window aggregation
     * the batch key `sessionize` uses, executed as a watermarked stream
@@ -89,23 +47,14 @@ object EventStream {
     * asserts it).
     */
   def runSessions(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_sessions_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = source(spark, sfDir)
+    val spark = Streams.session(parent)
+    val sessions = source(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"),
         date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("first_seen"),
         date_format(max(col("ts")), "yyyy-MM-dd HH:mm:ss").as("last_seen"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink)
+    Streams.toMemory(sessions, "complete")
       .select(col("user_id"), col("n_events"), col("first_seen"), col("last_seen"))
       .orderBy(col("user_id"), col("first_seen"))
   }
@@ -127,21 +76,13 @@ object EventStream {
     * exact-`dropDuplicates` semantics are the point.
     */
   def runDedup(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_dedup_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = source(spark, sfDir)
+    val spark = Streams.session(parent)
+    val firsts = source(spark, sfDir)
       .withWatermark("ts", "30 days")
       .select(col("user_id"), col("ts"))
       .dropDuplicates("user_id")
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink).select(col("user_id")).distinct().orderBy(col("user_id"))
+    Streams.toMemory(firsts, "append")
+      .select(col("user_id")).distinct().orderBy(col("user_id"))
   }
 
   /** Stream–stream inner join with watermarks: signup events joined to
@@ -155,8 +96,7 @@ object EventStream {
     * state instead of a full-history rescan.
     */
   def runPairJoin(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_join_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    val spark = Streams.session(parent)
     val signups = source(spark, sfDir)
       .filter(col("event_type") === "signup")
       .select(col("user_id").as("s_user"),
@@ -167,20 +107,13 @@ object EventStream {
       .select(col("user_id").as("p_user"),
         col("event_id").as("purchase_event"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "30 days")
-    val q = signups.join(purchases,
+    val pairs = signups.join(purchases,
         col("s_user") === col("p_user") &&
           col("p_ts") >= col("s_ts") &&
           col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"))
       .select(col("signup_event"), col("purchase_event"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink).orderBy(col("signup_event"), col("purchase_event"))
+    Streams.toMemory(pairs, "append")
+      .orderBy(col("signup_event"), col("purchase_event"))
   }
 
   /** Watermarked LEFT OUTER interval join — the DROP-OFF side of the
@@ -201,18 +134,9 @@ object EventStream {
     * non-converter appears only after its interval expires).
     */
   def runFunnelDropoff(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_dropoff_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = dropoffJoin(source(spark, sfDir))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink).orderBy(col("signup_event"))
+    val spark = Streams.session(parent)
+    Streams.toMemory(dropoffJoin(source(spark, sfDir)), "append")
+      .orderBy(col("signup_event"))
   }
 
   /** The drop-off join itself over any (event_id, user_id, event_type,
@@ -253,8 +177,7 @@ object EventStream {
     * hash-match IS the stream/batch parity claim.
     */
   def runFunnel(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_funnel_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    val spark = Streams.session(parent)
     def leg(tpe: String, pfx: String): DataFrame = source(spark, sfDir)
       .filter(col("event_type") === tpe)
       .select(col("user_id").as(s"${pfx}_user"),
@@ -264,46 +187,28 @@ object EventStream {
       col("s_user") === col("v_user") &&
         col("v_ts") > col("s_ts") &&
         col("v_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"))
-    val q = sv.join(leg("purchase", "p"),
+    val svp = sv.join(leg("purchase", "p"),
         col("v_user") === col("p_user") &&
           col("p_ts") > col("v_ts") &&
           col("p_ts") <= col("v_ts") + expr("INTERVAL 7 DAYS"))
       .select(col("s_event"), col("v_event"), col("p_event"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink)
+    Streams.toMemory(svp, "append")
       .orderBy(col("s_event"), col("v_event"), col("p_event"))
   }
 
   /** Checkpointed file sink — the production egress path (the memory
     * sink the other keys use is a test harness; real pipelines land
     * parquet). The checkpoint makes delivery exactly-once ACROSS
-    * RESTARTS: a second start() against the same checkpoint replays
-    * nothing (the spec asserts it), which is the property that lets a
-    * 100 TB/day ingest job crash and resume without dedup passes.
-    * Returns the sink directory; caller reads it back with a batch
-    * scan.
+    * RESTARTS: a second run against the same `outDir` replays nothing
+    * (the spec asserts it), which is the property that lets a
+    * 100 TB/day ingest job crash and resume without dedup passes. The
+    * caller reads `outDir` back with a batch scan.
     */
   def runFileSink(parent: SparkSession, sfDir: String, outDir: String): Unit = {
-    val spark = streamSession(parent)
-    val q = source(spark, sfDir)
+    val spark = Streams.session(parent)
+    Streams.toParquet(source(spark, sfDir)
       .filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("value"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$outDir-chk")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+      .select(col("event_id"), col("user_id"), col("value")), outDir)
   }
 
   /** Event types → billing category: the static dimension for the
@@ -322,24 +227,15 @@ object EventStream {
     * stays broadcast-sized, which dims do.
     */
   def runEnrich(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
+    val spark = Streams.session(parent)
     import spark.implicits._
-    val sink = s"graft_stream_enrich_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     val dim = typeCategories.toDF("event_type", "category")
-    val q = source(spark, sfDir)
+    val totals = source(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .join(broadcast(dim), Seq("event_type"))
       .groupBy(col("category"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_raw"))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink)
+    Streams.toMemory(totals, "complete")
       .select(col("category"), col("n"), round(col("total_raw"), 2).as("total"))
       .orderBy(col("category"))
   }
@@ -352,26 +248,17 @@ object EventStream {
     * `stream_state_counts` oracle checks.
     */
   def runStateCounts(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
+    val spark = Streams.session(parent)
     import spark.implicits._
-    val sink = s"graft_stream_state_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = source(spark, sfDir)
+    val counts = source(spark, sfDir)
       .select(col("user_id"))
       .as[Long]
       .groupByKey(identity)
       .flatMapGroupsWithState[Long, (Long, Long)](
         OutputMode.Update, GroupStateTimeout.NoTimeout)(StateCounts.update _)
       .toDF("user_id", "n")
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
     // the running count is monotone, so max = final
-    spark.table(sink)
+    Streams.toMemory(counts, "update")
       .groupBy(col("user_id"))
       .agg(max(col("n")).as("n"))
       .orderBy(col("user_id"))
@@ -389,22 +276,6 @@ object EventStream {
     }
   }
 
-  /** The file-stream source lists a *directory*; the testdata table is
-    * a single parquet file. Stage it (once per sfDir) into a replay
-    * directory under target/ — the shape a production stream would
-    * have anyway (a directory new files land in).
-    */
-  private def stageDir(spark: SparkSession, sfDir: String): String = {
-    // key on the full sanitized path (not a 32-bit hashCode — two
-    // sfDirs must never collide into one replay directory); the shared
-    // helper re-copies on size/mtime drift and stamps the copy with
-    // the source mtime so the comparison stays valid across copies
-    val src = s"$sfDir/events.parquet"
-    val key = src.replaceAll("[^A-Za-z0-9.]", "_")
-    graft.ops.stageReplayCopy(spark, src,
-      s"${graft.ops.scratchRoot(spark)}/stream_events_$key", "events.parquet")
-  }
-
   /** Watermarked hourly tumbling-window aggregation (the streaming
     * twin of `Relational` key `stream_window_hourly`).
     */
@@ -420,18 +291,8 @@ object EventStream {
     * `stream_hourly_live` query key and the parity spec.
     */
   def runHourly(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_hourly_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = hourlyAgg(source(spark, sfDir))
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink)
+    val spark = Streams.session(parent)
+    Streams.toMemory(hourlyAgg(source(spark, sfDir)), "complete")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"),
@@ -447,22 +308,13 @@ object EventStream {
     * user_id so the contract is deterministic.
     */
   def runTopK(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = streamSession(parent)
-    val sink = s"graft_stream_topk_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = source(spark, sfDir)
+    val spark = Streams.session(parent)
+    val top = source(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("user_id"))
       .limit(10)
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink).select(col("user_id"), col("n"))
+    Streams.toMemory(top, "complete").select(col("user_id"), col("n"))
       .orderBy(col("n").desc, col("user_id"))
   }
 }

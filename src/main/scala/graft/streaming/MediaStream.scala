@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming media-ingest dedup — the state-BOUNDED variant.
   *
@@ -37,25 +36,14 @@ object MediaStream {
   }
 
   def runDedup(parent: SparkSession, sfDir: String): DataFrame = {
-    val spark = parent.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val dir = graft.ops.purgeOnExit(
-      s"${graft.ops.scratchRoot(spark)}/media_stream_${ProcessHandle.current().pid()}") +
-      s"/${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    val spark = Streams.session(parent)
+    val dir = graft.ops.scratchRunDir(spark, "media_stream")
     val staged = mediaFrame(spark, sfDir)
     staged.write.mode("overwrite").parquet(dir)
-    val sink = s"graft_media_dedup_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    val q = spark.readStream.schema(staged.schema).parquet(dir)
+    val firsts = spark.readStream.schema(staged.schema).parquet(dir)
       .withWatermark("ts", "2 hours") // all synthetic ts fall inside one delay
       .dropDuplicatesWithinWatermark("media_fp")
-      .writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    spark.table(sink).select(col("media_fp")).distinct().orderBy(col("media_fp"))
+    Streams.toMemory(firsts, "append")
+      .select(col("media_fp")).distinct().orderBy(col("media_fp"))
   }
 }

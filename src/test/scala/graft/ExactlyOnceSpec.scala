@@ -39,7 +39,7 @@ class ExactlyOnceSpec extends graft.SparkSpec {
     val base = graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val seed = base.filter(col("doc_id") < 200)
     val batch = base.filter(col("doc_id") >= 200 && col("doc_id") < 300)
-    val key = BatchLog.key(s"$root/chk", 0L)
+    val key = BatchLog.contentKey(batch)
 
     // reference: crash-free ingest
     val clean = s"$root/clean"
@@ -92,12 +92,10 @@ class ExactlyOnceSpec extends graft.SparkSpec {
     val idx = s"$root/idx"
     val base = graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     ClusterStream.seedIndex(spark, base.filter(col("doc_id") < 150), idx)
-    ClusterStream.ingestBatch(spark,
-      base.filter(col("doc_id") >= 150 && col("doc_id") < 250),
-      idx, BatchLog.key(s"$root/chk", 0L))
-    ClusterStream.ingestBatch(spark,
-      base.filter(col("doc_id") >= 250 && col("doc_id") < 350),
-      idx, BatchLog.key(s"$root/chk", 1L))
+    val (b0, b1) = (base.filter(col("doc_id") >= 150 && col("doc_id") < 250),
+      base.filter(col("doc_id") >= 250 && col("doc_id") < 350))
+    ClusterStream.ingestBatch(spark, b0, idx, BatchLog.contentKey(b0))
+    ClusterStream.ingestBatch(spark, b1, idx, BatchLog.contentKey(b1))
     def dirs(half: String): Seq[String] =
       BatchLog.committedDirs(spark, idx, half)
     def rows(half: String, schema: org.apache.spark.sql.types.StructType) =
@@ -178,10 +176,10 @@ class ExactlyOnceSpec extends graft.SparkSpec {
     // every half reads back the same rows
     val didx = s"$root/dedup_idx"
     DedupStream.seedIndex(spark, base.filter(col("doc_id") < 150), didx)
-    for ((lo, i) <- Seq(150L, 250L).zipWithIndex)
-      DedupStream.ingestBatch(spark,
-        base.filter(col("doc_id") >= lo && col("doc_id") < lo + 100),
-        didx, BatchLog.key(s"$root/dchk", i.toLong))
+    for (lo <- Seq(150L, 250L)) {
+      val b = base.filter(col("doc_id") >= lo && col("doc_id") < lo + 100)
+      DedupStream.ingestBatch(spark, b, didx, BatchLog.contentKey(b))
+    }
     val dHalves = Seq("texts" -> textsSchema, "hs" -> hsSchema, "bands" -> bandSchema)
     val dBefore = dHalves.map { case (h, sch) => h -> rowSet(didx, h, sch) }.toMap
     assert(BatchLog.committedDirs(spark, didx, "hs").size == 3) // seed + 2 batches
@@ -204,7 +202,7 @@ class ExactlyOnceSpec extends graft.SparkSpec {
     val batch = base.filter(col("doc_id") >= 200 && col("doc_id") < 280)
       .unionByName(base.filter(col("doc_id") === 7)
         .select((col("doc_id") + 90000).as("doc_id"), col("text")))
-    val key = BatchLog.key(s"$root/chk", 0L)
+    val key = BatchLog.contentKey(batch)
 
     val clean = s"$root/clean"
     DedupStream.seedIndex(spark, seed, clean)
@@ -229,7 +227,7 @@ class ExactlyOnceSpec extends graft.SparkSpec {
       rowSet(clean, "texts", textsSchema))
   }
 
-  test("fresh-checkpoint replay of ingested windows is a byte-identical no-op; reprocess flag re-appends") {
+  test("fresh-checkpoint replay is a byte-identical no-op; an overlapping window re-appends") {
     import java.nio.file.{Files, Paths}
     val root = graft.ops.purgeOnExit(
       s"${graft.ops.scratchRoot(spark)}/spec_ck_${ProcessHandle.current().pid()}") +
@@ -265,17 +263,17 @@ class ExactlyOnceSpec extends graft.SparkSpec {
       "fresh-checkpoint replay must skip every ingested window")
     assert(snapshot() == before,
       "fresh-checkpoint replay must leave the index byte-identical")
-    // the deliberate-reprocess path: checkpoint-scoped keys re-append
-    // (the documented at-least-once fallback the consumers tolerate)
-    spark.conf.set("spark.graft.ingest.reprocess", "true")
-    try {
-      assert(ClusterStream.runIngest(spark, inDir, idx, s"$root/chk_c") > 0,
-        "reprocess flag must re-append")
-      val labels = ClusterStream.labels(spark, idx)._1
-        .collect().map(_.getLong(0)).toSeq
-      assert(labels.length == labels.distinct.length,
-        "duplicated appends must not duplicate label rows")
-    } finally spark.conf.unset("spark.graft.ingest.reprocess")
+    // a re-staged window overlapping both ingested ones has a new
+    // content key: it re-appends the shared docs' hs rows (the
+    // duplicate appends the consumers tolerate by construction)
+    ClusterStream.stageFile(base.filter(col("doc_id") < 50),
+      s"$root/stage_overlap", s"$inDir/overlap.parquet")
+    assert(ClusterStream.runIngest(spark, inDir, idx, s"$root/chk_b") > 0,
+      "an overlapping re-staged window must re-append")
+    val labels = ClusterStream.labels(spark, idx)._1
+      .collect().map(_.getLong(0)).toSeq
+    assert(labels.length == labels.distinct.length,
+      "duplicated appends must not duplicate label rows")
   }
 
   test("contentKey: sensitive to text changes and id changes, stable across staging paths") {

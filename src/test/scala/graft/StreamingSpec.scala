@@ -390,7 +390,7 @@ class StreamingSpec extends SparkSpec {
     // phase 3: replay tolerance — a FRESH checkpoint replays every
     // file, and the content-addressed window keys (round 13) make the
     // ingest skip each one: the index must be unchanged. (The
-    // byte-identical + reprocess-flag legs live in ExactlyOnceSpec.)
+    // byte-identical + overlapping-window legs live in ExactlyOnceSpec.)
     ClusterStream.runIngest(spark, inDir, idx, s"$root/chk_replay")
     val replayed = ClusterStream.labels(spark, idx)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1))
@@ -439,6 +439,28 @@ class StreamingSpec extends SparkSpec {
     val fin = ClusterStream.labels(spark, idxC)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fin == batch, "final compacted labels must equal the batch clustering")
+  }
+
+  test("drain: a failed first micro-batch rethrows, leaves no active query, and the session runs on") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.streaming.Streams
+    val dir = graft.ops.scratchRunDir(spark, "spec_drain_fail")
+    spark.range(5).toDF("id").write.parquet(dir)
+    val ss = Streams.session(spark)
+    def rows = ss.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    val fail: (DataFrame, Long) => Unit =
+      (_, batchId) => throw new IllegalStateException(s"step failed in batch $batchId")
+    val e = intercept[StreamingQueryException] {
+      Streams.drain(rows.writeStream.foreachBatch(fail)
+        .option("checkpointLocation", s"$dir-chk"))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("step failed in batch 0"))),
+      e.getMessage)
+    assert(ss.streams.active.isEmpty, "a failed drain left its query running")
+    assert(spark.streams.active.isEmpty)
+    assert(Streams.toMemory(rows, "append").count() == 5)
   }
 
   test("stageReplayCopy: build-once staleness survives stores that drop mtimes (marker fallback)") {
