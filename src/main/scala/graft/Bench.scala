@@ -13,17 +13,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SPARK_GRAFT_KEYS=join_skewed sbt 'set javaOptions ++= Seq("-Dspark.eventLog.enabled=true","-Dspark.eventLog.dir=/tmp/sparklogs")' "runMain graft.Bench"
   * python3 tools/evprof.py /tmp/sparklogs/eventlog_v2_<app-id>
   * }}}
+  * A streaming key's micro-batch jobs run under the query's own job
+  * group; they carry the run in local property [[RunProperty]]
+  * instead, which evprof groups by when it is present.
   */
 object Bench {
+  /** Local property naming the key run (`<key>#<run>`) a job belongs
+    * to. Spark clones local properties into the threads a run starts,
+    * so it also reaches the micro-batch jobs of a streaming key, whose
+    * job group Spark sets to the query's runId.
+    */
+  val RunProperty = "graft.bench.run"
+
   /** One timed run of key `name`: build its DataFrame, `count()` it,
     * then drop the session's cached frames. Returns (succeeded,
     * seconds); failures must NOT feed the min — a run that throws
     * after 0.05s would otherwise beat the honest 3s run and be
     * published as an excellent timing with no error signal.
     *
-    * Every job the run starts is in job group `<name>#<run>`. The
-    * group is cleared in a `finally`, so a key that throws cannot
-    * leak its group into the next key's jobs.
+    * Every job the run starts is in job group `<name>#<run>` and
+    * carries it in [[RunProperty]]. Both are cleared in a `finally`, so
+    * a key that throws cannot leak them into the next key's jobs.
     */
   private[graft] def once(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => DataFrame, run: Int): (Boolean, Double) = {
@@ -31,10 +41,14 @@ object Bench {
     val ok =
       try {
         spark.sparkContext.setJobGroup(s"$name#$run", s"$name run $run")
+        spark.sparkContext.setLocalProperty(RunProperty, s"$name#$run")
         fn(spark, sfDir).count(); true
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      } finally spark.sparkContext.clearJobGroup()
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.setLocalProperty(RunProperty, null)
+      }
     val secs = (System.nanoTime() - t0) / 1e9
     // each query's own cache fills inside its timing; dropping them
     // between queries keeps 100+ successive runs from evicting each

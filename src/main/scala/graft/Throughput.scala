@@ -78,9 +78,7 @@ object Throughput {
   }
 
   def main(args: Array[String]): Unit = {
-    // first NUMERIC arg is the row count; word args ("profile") are modes
-    val rows = args.find(a => a.nonEmpty && a.forall(_.isDigit))
-      .map(_.toLong).getOrElse(24000000L)
+    val rows = args.headOption.map(_.toLong).getOrElse(24000000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -139,22 +137,6 @@ object Throughput {
     // Bigger record batches cut per-batch framing/flush overhead on
     // the single-socket funnel.
     a.spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-    if (args.contains("profile")) {
-      import org.apache.spark.sql.GraftBridge
-      for (_ <- 1 to 3) {
-        // encode tasks only: results never leave the executors
-        val t0 = System.nanoTime()
-        val n = GraftBridge.arrowEncodeOnlyBytes(a.query("SELECT * FROM flights"))
-        println(f"encode-in-task: ${(System.nanoTime() - t0) / 1e9}%.3f s, $n bytes")
-        // encode + fetch to driver, no socket
-        var bytes = 0L; var batches = 0
-        val t1 = System.nanoTime()
-        GraftBridge.arrowBatchesPipelined(a.query("SELECT * FROM flights")) { b =>
-          bytes += b.length; batches += 1
-        }
-        println(f"encode+fetch: ${(System.nanoTime() - t1) / 1e9}%.3f s, $bytes bytes, $batches batches")
-      }
-    }
     val gate = new graft.engine.TcpGate(a)
     try {
       val client = new graft.engine.GateClient("127.0.0.1", gate.boundPort)

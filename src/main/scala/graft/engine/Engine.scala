@@ -39,9 +39,8 @@ final class Engine(val spark: SparkSession) {
     * leak the override to every other Arrow consumer sharing it
     * (toPandas, collectAsArrow …) — VERDICT r9 #3. So the tuned value
     * lives on an engine-owned `newSession()` that TcpGate rebinds
-    * results into just for encode. Precedence: explicit
-    * `spark.graft.arrow.maxRecordsPerBatch` > a non-default value the
-    * caller already set session-wide > the tuned 131072.
+    * results into just for encode. A non-default value the caller
+    * already set session-wide wins over the tuned 131072.
     *
     * `newSession()` starts from builder-time conf, not the parent's
     * RUNTIME conf, so result-affecting runtime settings (timezone,
@@ -53,10 +52,8 @@ final class Engine(val spark: SparkSession) {
       "spark.sql.ansi.enabled").foreach { k =>
       spark.conf.getOption(k).foreach(s.conf.set(k, _))
     }
-    val rows = spark.conf.getOption("spark.graft.arrow.maxRecordsPerBatch")
-      .orElse(spark.conf.getOption("spark.sql.execution.arrow.maxRecordsPerBatch")
-        .filter(_ != "10000"))
-      .getOrElse("131072")
+    val rows = spark.conf.getOption("spark.sql.execution.arrow.maxRecordsPerBatch")
+      .filter(_ != "10000").getOrElse("131072")
     s.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", rows)
     s
   }

@@ -163,45 +163,22 @@ final class TcpGate(val engine: Engine, port: Int = 0,
     .getOption("spark.graft.gate.arrowCacheBytes")
     .map(_.toLong).getOrElse(2L << 30)
 
-  /** Codec the CACHE retains entries in ("zstd[:level]" | "lz4" |
-    * "none", default zstd). Since r12 the first GET no longer pays
-    * this inline: the reply ships (and installs) at [[wireCodec]]
-    * speed, and [[recompress]] swaps the entry to this codec in the
-    * background — compression cost is amortized over every later hit
-    * and bounds cache memory (24M-row flights: 1.73 GB raw → 552 MB),
-    * without sitting on the first GET's latency. The compressed stream
-    * stays spec-valid self-describing Arrow IPC: pyarrow/Arrow-Java
-    * clients decompress transparently; the opaque client never needs
-    * to (RecordBatch row counts live in the uncompressed flatbuffer
+  /** The codec large cache entries are retained in — exposed so
+    * benchmarks can report which codec their numbers were measured
+    * under. Fresh replies always ship raw: on the loopback/LAN sockets
+    * the gate serves, raw batches are measured ~35% faster than paying
+    * executor-side zstd inline (24M-row fresh GET: 1.62 s vs 2.47 s on
+    * the r9 box). A cacheable reply up to [[TcpGate.InlineMaxBytes]]
+    * installs the raw frames it shipped; a larger one is rebuilt in
+    * zstd by [[recompress]] off the serving path — compression cost is
+    * amortized over every later hit and bounds cache memory (24M-row
+    * flights: 1.73 GB raw → 552 MB). The compressed stream stays
+    * spec-valid self-describing Arrow IPC: pyarrow/Arrow-Java clients
+    * decompress transparently; the opaque client never needs to
+    * (RecordBatch row counts live in the uncompressed flatbuffer
     * metadata); `GraftBridge.fromArrowIPC` normalizes automatically.
     */
-  private val cacheCodec: String = engine.spark.conf
-    .getOption("spark.graft.gate.arrowCodec").getOrElse("zstd").toLowerCase
-
-  /** Codec every FRESH reply ships with (`##nocache`, cold GETs,
-    * non-deterministic results; text-mode sessions have no Arrow at
-    * all). Default "none": on the loopback/LAN sockets the gate
-    * serves, shipping raw batches is measured ~35% faster than paying
-    * executor-side zstd inline (24M-row fresh GET: 1.62 s vs 2.47 s on
-    * the r9 box). Set `spark.graft.gate.wireCodec=zstd` when clients
-    * sit behind a thin pipe and per-reply bandwidth dominates — cache
-    * installs then skip the background recompression (already at
-    * [[cacheCodec]] when the codecs coincide).
-    */
-  private val wireCodec: String = engine.spark.conf
-    .getOption("spark.graft.gate.wireCodec").getOrElse("none").toLowerCase
-
-  /** Entries below this size skip background recompression (the extra
-    * query execution costs more than the cache memory it reclaims).
-    */
-  private val recompressMinBytes: Long = engine.spark.conf
-    .getOption("spark.graft.gate.recompressMinBytes")
-    .map(_.toLong).getOrElse(8L << 20)
-
-  /** The configured cache codec — exposed so benchmarks can report
-    * which codec their numbers were measured under.
-    */
-  def codecName: String = cacheCodec
+  def codecName: String = "zstd"
 
   private val arrowCache = new java.util.LinkedHashMap[Key, CachedResult](16, 0.75f, true)
   private var cachedBytes = 0L // guarded by arrowCache's monitor
@@ -235,13 +212,12 @@ final class TcpGate(val engine: Engine, port: Int = 0,
     arrowCache.synchronized { arrowCache.clear(); cachedBytes = 0L }
 
   // Background cache-entry builder (r12, VERDICT r11 stretch #8): the
-  // serving path ships large fresh results at wire-codec (raw) speed
-  // and retains nothing; this single-thread pass then re-executes the
-  // plan, encodes with [[cacheCodec]] (executor-parallel zstd) and
-  // installs the entry — the first GET pays only the ##nocache fresh
-  // path (measured ~3 s vs ~6.5 s inline-zstd, with none of the
-  // multi-GB raw-retention GC stalls), and later hits serve the small
-  // compressed bytes. Guards: the install is skipped if the entry's
+  // serving path ships large fresh results raw and retains nothing;
+  // this single-thread pass then re-executes the plan, encodes with
+  // executor-parallel zstd and installs the entry — the first GET pays
+  // only the ##nocache fresh path (measured ~3 s vs ~6.5 s inline-zstd,
+  // with none of the multi-GB raw-retention GC stalls), and later hits
+  // serve the small compressed bytes. Guards: the install is skipped if the entry's
   // own stamp moved (the re-executed plan could see newer data than
   // the stamp promises), and only cacheSafe (deterministic) results
   // reach here, so the re-execution is value-identical to what was
@@ -276,10 +252,7 @@ final class TcpGate(val engine: Engine, port: Int = 0,
           if (bytes > cacheMaxBytes) throw new RecompressOverBound
         }
         add(GraftBridge.arrowStreamHeader(spark, df.schema))
-        if (cacheCodec != "none")
-          GraftBridge.arrowBatchesPipelinedCompressed(df, cacheCodec)(add)
-        else
-          GraftBridge.arrowBatchesPipelined(df)(add)
+        GraftBridge.arrowBatchesPipelinedCompressed(df)(add)
         add(GraftBridge.arrowStreamFooter(spark, df.schema))
         // swap only if still current — a mutation mid-encode means the
         // re-executed bytes may not match what stamp-keyed readers saw
@@ -451,7 +424,7 @@ final class TcpGate(val engine: Engine, port: Int = 0,
 
     def sendArrow(df0: DataFrame, key: Option[Key]): Unit = {
       // encode under the engine's serve session: it carries the tuned
-      // arrow.maxRecordsPerBatch without mutating the caller's session
+      // batch size without mutating the caller's session
       val spark = engine.serveSession
       val df = GraftBridge.rebind(spark, df0)
       val schema = df.schema
@@ -470,9 +443,7 @@ final class TcpGate(val engine: Engine, port: Int = 0,
       // serving path — the first GET runs at pure ##nocache speed and
       // the entry appears moments later.
       val cacheable = key.isDefined && cacheMaxBytes > 0
-      val inlineLimit =
-        if (cacheCodec != wireCodec) math.min(recompressMinBytes, cacheMaxBytes)
-        else cacheMaxBytes
+      val inlineLimit = math.min(TcpGate.InlineMaxBytes, cacheMaxBytes)
       var keep = cacheable
       var kept = Vector.newBuilder[Array[Byte]]
       var keptBytes = 0L
@@ -487,16 +458,11 @@ final class TcpGate(val engine: Engine, port: Int = 0,
       try {
         teed(GraftBridge.arrowStreamHeader(spark, schema))
         // one parallel encode job; batches stream through in partition
-        // order as tasks finish — ALWAYS at wire-codec speed (r12: the
-        // first GET of a table version used to pay executor-side zstd
-        // inline, making COLD ~2.3× the raw encode; now the reply
-        // ships raw and the cache entry is recompressed by a
-        // background pass, so first-GET latency equals the ##nocache
-        // fresh path). See [[recompress]].
-        if (wireCodec != "none")
-          GraftBridge.arrowBatchesPipelinedCompressed(df, wireCodec)(teed)
-        else
-          GraftBridge.arrowBatchesPipelined(df)(teed)
+        // order as tasks finish — always raw: zstd inline made the first
+        // GET of a table version ~2.3× the raw encode (r12), so a large
+        // entry is compressed by the background [[recompress]] pass and
+        // first-GET latency equals the ##nocache fresh path.
+        GraftBridge.arrowBatchesPipelined(df)(teed)
         teed(GraftBridge.arrowStreamFooter(spark, schema))
         bin.writeInt(0)
         bin.flush()
@@ -505,7 +471,7 @@ final class TcpGate(val engine: Engine, port: Int = 0,
           // re-executing the query for a few KB of cache memory would
           // cost more than it saves
           cachePut(key.get, CachedResult(schema.json, kept.result(), keptBytes))
-        else if (cacheable && cacheCodec != wireCodec)
+        else if (cacheable)
           // over-threshold: build the compressed entry off the serving
           // path (the pass checks the cache bound on its own bytes)
           recompress(key.get, df, schema.json)
@@ -618,6 +584,11 @@ object TcpGate {
     * entry under the cache lock, so the count bounds that walk too.
     */
   private[graft] val MaxCacheEntries = 64
+
+  /** Largest reply that installs the raw frames it shipped; a larger
+    * cacheable reply gets its zstd entry from the background pass.
+    */
+  private[graft] val InlineMaxBytes = 8L << 20
 }
 
 /** Client half of the gate protocol — the analog of the reference's
@@ -709,55 +680,51 @@ final class GateClient(host: String, port: Int) extends AutoCloseable {
   /** Switch the connection's result format (`arrow` | `text`). */
   def format(mode: String): Unit = { send(s"##format $mode"); linesUntilEnd(); () }
 
-  /** Read the length-prefixed chunk sequence of one Arrow reply into
-    * `sink`; stops after the zero-length terminator.
+  /** The one Arrow reply reader: send `stmt`, check the `##schema`
+    * line, read each length-prefixed chunk into `buffer(len)` and hand
+    * it to `frame(buf, len)` up to the zero-length terminator, then read
+    * the tail to `##end`. Returns the schema json; throws on a server
+    * `##error`, before or mid-stream.
     */
-  private def readChunks(sink: Array[Byte] => Unit): Unit = {
+  private def arrowReply(stmt: String, buffer: Int => Array[Byte])(
+      frame: (Array[Byte], Int) => Unit): String = {
+    send(stmt)
+    val first = readLine()
+    if (first == null || !first.startsWith("##schema "))
+      { linesUntilEnd(); throw new RuntimeException(s"gate error: $first") }
     var len = in.readInt()
     while (len > 0) {
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      sink(b)
+      val b = buffer(len)
+      in.readFully(b, 0, len)
+      frame(b, len)
       len = in.readInt()
     }
+    linesUntilEnd().find(_.startsWith("##error"))
+      .foreach(e => throw new RuntimeException(s"gate error mid-stream: $e"))
+    first.stripPrefix("##schema ")
   }
+
+  /** `scratch`, grown to hold `len` bytes. */
+  private def scratchOf(len: Int): Array[Byte] = {
+    if (scratch.length < len) scratch = new Array[Byte](len)
+    scratch
+  }
+
+  /** Row count of one IPC message frame, parsed from its flatbuffer
+    * metadata alone. The body is never decoded: this is the JVM twin of
+    * pyarrow's zero-copy receive, where buffers stay opaque until a
+    * consumer asks for values.
+    */
+  private def frameRows(frame: Array[Byte], len: Int): Long =
+    GraftBridge.ipcFrames(frame, len).next().batch.fold(0L)(_.length())
 
   /** Arrow-mode statement: (schema json, complete Arrow IPC stream).
     * Throws on a server-side error (before or mid-stream).
     */
   def sqlArrow(stmt: String): (String, Array[Byte]) = {
-    send(stmt)
-    val first = readLine()
-    if (first == null || !first.startsWith("##schema "))
-      { linesUntilEnd(); throw new RuntimeException(s"gate error: $first") }
     val ipc = new ByteArrayOutputStream(1 << 16)
-    readChunks(b => ipc.write(b, 0, b.length))
-    val tail = linesUntilEnd()
-    tail.find(_.startsWith("##error"))
-      .foreach(e => throw new RuntimeException(s"gate error mid-stream: $e"))
-    (first.stripPrefix("##schema "), ipc.toByteArray)
-  }
-
-  /** Row count of one IPC message frame, parsed from its flatbuffer
-    * metadata alone — `frame` is a complete encapsulated message
-    * (continuation marker, little-endian metadata length, metadata,
-    * body). The body is never decoded: this is the JVM twin of
-    * pyarrow's zero-copy receive, where buffers stay opaque until a
-    * consumer asks for values.
-    */
-  private def frameRows(frame: Array[Byte], len: Int = -1): Long = {
-    val bb = java.nio.ByteBuffer
-      .wrap(frame, 0, if (len < 0) frame.length else len)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val first = bb.getInt()
-    val metaLen = if (first == -1) bb.getInt() else first
-    if (metaLen <= 0) return 0L
-    val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(bb.slice().limit(metaLen)
-      .asInstanceOf[java.nio.ByteBuffer].order(java.nio.ByteOrder.LITTLE_ENDIAN))
-    if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.RecordBatch)
-      msg.header(new org.apache.arrow.flatbuf.RecordBatch())
-        .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch].length()
-    else 0L
+    val schema = arrowReply(stmt, scratchOf)(ipc.write(_, 0, _))
+    (schema, ipc.toByteArray)
   }
 
   /** Arrow-mode statement, batches kept OPAQUE: each returned frame is
@@ -769,17 +736,12 @@ final class GateClient(host: String, port: Int) extends AutoCloseable {
     * rows are actually consumed.
     */
   def sqlArrowOpaque(stmt: String): (String, Vector[Array[Byte]], Long) = {
-    send(stmt)
-    val first = readLine()
-    if (first == null || !first.startsWith("##schema "))
-      { linesUntilEnd(); throw new RuntimeException(s"gate error: $first") }
     val frames = Vector.newBuilder[Array[Byte]]
     var rows = 0L
-    readChunks { b => frames += b; rows += frameRows(b) }
-    val tail = linesUntilEnd()
-    tail.find(_.startsWith("##error"))
-      .foreach(e => throw new RuntimeException(s"gate error mid-stream: $e"))
-    (first.stripPrefix("##schema "), frames.result(), rows)
+    val schema = arrowReply(stmt, new Array[Byte](_)) { (b, len) =>
+      frames += b; rows += frameRows(b, len)
+    }
+    (schema, frames.result(), rows)
   }
 
   /** Arrow-mode statement, streaming metadata decode: reads every
@@ -788,25 +750,13 @@ final class GateClient(host: String, port: Int) extends AutoCloseable {
     * client hands them to its consumer incrementally) — the client
     * side of a bulk GET (`demo.py:112-114` `read_all()` equivalent;
     * pyarrow likewise never copies received buffers into row values).
+    * Every frame lands in one reused scratch buffer: the hot GET path
+    * must not allocate the whole result as garbage (1.7 GB of dead
+    * arrays at 24M rows).
     */
   def sqlArrowRowCount(stmt: String): Long = {
-    send(stmt)
-    val first = readLine()
-    if (first == null || !first.startsWith("##schema "))
-      { linesUntilEnd(); throw new RuntimeException(s"gate error: $first") }
     var rows = 0L
-    // one reusable scratch buffer: the hot GET path must not allocate
-    // the whole result as garbage (1.7 GB of dead arrays at 24M rows)
-    var len = in.readInt()
-    while (len > 0) {
-      if (scratch.length < len) scratch = new Array[Byte](len)
-      in.readFully(scratch, 0, len)
-      rows += frameRows(scratch, len)
-      len = in.readInt()
-    }
-    val tail = linesUntilEnd()
-    tail.find(_.startsWith("##error"))
-      .foreach(e => throw new RuntimeException(s"gate error mid-stream: $e"))
+    arrowReply(stmt, scratchOf)((b, len) => rows += frameRows(b, len))
     rows
   }
 

@@ -89,15 +89,6 @@ object GraftBridge {
       conf.arrowUseLargeVarTypes)
   }
 
-  /** Diagnostic: run the Arrow encode job but return only byte counts
-    * (results never shipped to the driver) — isolates encode cost from
-    * task-result fetch cost.
-    */
-  def arrowEncodeOnlyBytes(df: DataFrame): Long =
-    df.asInstanceOf[classic.Dataset[Row]].toArrowBatchRdd
-      .mapPartitions(it => Iterator.single(it.map(_.length.toLong).sum))
-      .collect().sum
-
   /** Stream `df`'s Arrow record batches to `sink` in partition order,
     * encoding ALL partitions in parallel in ONE Spark job. Each batch
     * is a complete RecordBatch message; prepend the header from
@@ -122,21 +113,18 @@ object GraftBridge {
   }
 
   /** Like [[arrowBatchesPipelined]], but each partition re-encodes its
-    * record batches with Arrow IPC buffer compression ON THE EXECUTORS
-    * (zstd/lz4 run in parallel across partitions, not as a driver-side
-    * afterthought). The driver pump, the socket write, and any cache
-    * install all see the compressed frames — for the 24M-row flights
-    * GET that is ~550 MB moving through the single-socket funnel
-    * instead of ~1.7 GB, and the one-time background recompression
-    * pass the cache previously needed disappears. Emitted frames are
+    * record batches with zstd Arrow IPC buffer compression ON THE
+    * EXECUTORS (in parallel across partitions, not as a driver-side
+    * afterthought). TcpGate's background `recompress` pass builds a
+    * large result's cache entry with it: for the 24M-row flights GET
+    * that is ~550 MB retained instead of ~1.7 GB. Emitted frames are
     * RecordBatch messages only (no header/footer): prepend
     * [[arrowStreamHeader]] / append [[arrowStreamFooter]] exactly as
     * with the uncompressed variant — compression is declared per batch
     * in the flatbuffer metadata, so the stream stays spec-valid and
     * self-describing regardless of which header precedes it.
     */
-  def arrowBatchesPipelinedCompressed(df: DataFrame, codec: String)(
-      sink: Array[Byte] => Unit): Unit = {
+  def arrowBatchesPipelinedCompressed(df: DataFrame)(sink: Array[Byte] => Unit): Unit = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
     val header = arrowStreamHeader(spark, ds.schema)
@@ -154,7 +142,7 @@ object GraftBridge {
           def nextElement(): java.io.InputStream =
             new java.io.ByteArrayInputStream(parts.next())
         }
-        val packed = recompressIPC(new java.io.SequenceInputStream(en), codec)
+        val packed = recompressIPC(new java.io.SequenceInputStream(en), "zstd")
         val frames = splitIPCMessages(packed)
         frames.slice(1, frames.length - 1).iterator
       }
@@ -165,7 +153,10 @@ object GraftBridge {
   /** Stream `rdd`'s byte payloads to `sink` in partition order while
     * computing ALL partitions in one parallel Spark job (the
     * out-of-order-arrival / in-order-emit pump described on
-    * [[arrowBatchesPipelined]]).
+    * [[arrowBatchesPipelined]]). When `sink` throws (a client that went
+    * away, a byte bound crossed) the job is cancelled on the way out:
+    * left running, it would keep encoding and park every remaining
+    * partition in `slots` on the driver.
     */
   private def pumpInOrder(spark: classic.SparkSession,
       rdd: org.apache.spark.rdd.RDD[Array[Byte]])(sink: Array[Byte] => Unit): Unit = {
@@ -179,17 +170,19 @@ object GraftBridge {
       (pid, data) => { slots.put(pid, data); ready.release() },
       ())
     var next = 0
-    while (next < n) {
-      // poll instead of a blind block: a failed job never delivers the
-      // missing partition, and the failure must propagate, not deadlock
-      if (!ready.tryAcquire(100, java.util.concurrent.TimeUnit.MILLISECONDS)) {
-        fut.value.foreach(_.fold(e => throw e, identity))
+    try {
+      while (next < n) {
+        // poll instead of a blind block: a failed job never delivers the
+        // missing partition, and the failure must propagate, not deadlock
+        if (!ready.tryAcquire(100, java.util.concurrent.TimeUnit.MILLISECONDS)) {
+          fut.value.foreach(_.fold(e => throw e, identity))
+        }
+        while (next < n && slots.containsKey(next)) {
+          slots.remove(next).foreach(sink)
+          next += 1
+        }
       }
-      while (next < n && slots.containsKey(next)) {
-        slots.remove(next).foreach(sink)
-        next += 1
-      }
-    }
+    } finally if (next < n && !fut.isCompleted) fut.cancel()
   }
 
   /** Stream `df`'s rows as newline-terminated JSON (the canonical
@@ -228,53 +221,37 @@ object GraftBridge {
     out.toByteArray
   }
 
-  /** Re-encode a complete Arrow IPC stream with a different BUFFER
-    * compression codec (`"zstd"` | `"lz4"` | `"none"`). The result is
+  /** Re-encode a complete Arrow IPC stream with zstd (level 1) BUFFER
+    * compression (`codec = "zstd"`) or none (`"none"`). The result is
     * still a spec-valid, self-describing IPC stream — the codec is
     * recorded in each RecordBatch message, and any conforming reader
     * (pyarrow, Arrow Java with a codec factory) decompresses
-    * transparently. TcpGate's result cache uses this once per cached
-    * entry, so repeat GETs of a hot table ship the compressed bytes.
-    * Streams one batch at a time — peak memory is one decompressed
-    * batch plus the output buffer, not 2× the stream.
+    * transparently. Streams one batch at a time — peak memory is one
+    * decompressed batch plus the output buffer, not 2× the stream.
     */
   def recompressIPC(ipc: Array[Byte], codec: String): Array[Byte] =
     recompressIPC(new java.io.ByteArrayInputStream(ipc), codec)
 
   /** Streaming overload: reads the IPC stream incrementally, so the
-    * caller never needs the input flattened into one array (peak memory
-    * = one decompressed batch + the output buffer). `codec` may carry a
-    * level suffix, e.g. "zstd:9".
+    * caller never needs the input flattened into one array.
     */
   def recompressIPC(ipc: java.io.InputStream, codec: String): Array[Byte] = {
-    import org.apache.arrow.vector.compression.CompressionUtil
+    import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
     import org.apache.arrow.compression.CommonsCompressionFactory
-    val (name, level) = codec.toLowerCase.split(":", 2) match {
-      case Array(n, l) => (n, l.toInt)
-      case Array(n)    => (n, 1)
-    }
-    val codecType = name match {
-      case "zstd" => Some(CompressionUtil.CodecType.ZSTD)
-      case "lz4"  => Some(CompressionUtil.CodecType.LZ4_FRAME)
-      case _      => None // the commons factory refuses NO_COMPRESSION
-    }
     val alloc = new org.apache.arrow.memory.RootAllocator()
-    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
-      ipc, alloc, CommonsCompressionFactory.INSTANCE)
+    val reader = new ArrowStreamReader(ipc, alloc, CommonsCompressionFactory.INSTANCE)
     try {
       val out = new java.io.ByteArrayOutputStream(1 << 20)
       val ch = java.nio.channels.Channels.newChannel(out)
-      val writer = codecType match {
-        case Some(ct) => new org.apache.arrow.vector.ipc.ArrowStreamWriter(
-          reader.getVectorSchemaRoot, null, ch,
+      val root = reader.getVectorSchemaRoot
+      val writer = codec match {
+        case "zstd" => new ArrowStreamWriter(root, null, ch,
           org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT,
-          CommonsCompressionFactory.INSTANCE, ct,
-          // level is the build-latency vs wire-bytes dial: the cache
-          // build is a one-time cost on the first GET of a hot table,
-          // every later GET pays the wire size
-          java.util.Optional.of(Integer.valueOf(level)))
-        case None => new org.apache.arrow.vector.ipc.ArrowStreamWriter(
-          reader.getVectorSchemaRoot, null, ch)
+          CommonsCompressionFactory.INSTANCE,
+          org.apache.arrow.vector.compression.CompressionUtil.CodecType.ZSTD,
+          java.util.Optional.of(Integer.valueOf(1)))
+        // the commons factory refuses NO_COMPRESSION: plain writer
+        case "none" => new ArrowStreamWriter(root, null, ch)
       }
       writer.start()
       while (reader.loadNextBatch()) writer.writeBatch()
@@ -283,57 +260,60 @@ object GraftBridge {
     } finally { reader.close(); alloc.close() }
   }
 
+  /** One encapsulated IPC message of a buffer: where it starts, its
+    * full length (prefix, metadata and body) and its flatbuffer
+    * `Message` header, null for the end-of-stream marker.
+    */
+  final case class IPCFrame(offset: Int, length: Int, message: org.apache.arrow.flatbuf.Message) {
+    /** The RecordBatch header, when the frame is a record batch. */
+    def batch: Option[org.apache.arrow.flatbuf.RecordBatch] =
+      Option(message)
+        .filter(_.headerType() == org.apache.arrow.flatbuf.MessageHeader.RecordBatch)
+        .map(_.header(new org.apache.arrow.flatbuf.RecordBatch())
+          .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch])
+  }
+
+  /** The messages of `ipc[0, len)` in order, read off the IPC framing
+    * alone — continuation marker, metadata length, flatbuffer
+    * `Message`, body length — with the bodies never touched. The one
+    * reader of the framing: splitting a stream, spotting compression
+    * and the client's row counts all walk it.
+    */
+  def ipcFrames(ipc: Array[Byte], len: Int): Iterator[IPCFrame] = new Iterator[IPCFrame] {
+    private val bb = java.nio.ByteBuffer.wrap(ipc, 0, len).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    private var pos = 0
+    def hasNext: Boolean = pos < len
+    def next(): IPCFrame = {
+      val first = bb.getInt(pos)
+      // 0xFFFFFFFF continuation marker, then the length (the pre-1.0
+      // format starts with the bare length)
+      val (metaLen, hdr) = if (first == -1) (bb.getInt(pos + 4), 8) else (first, 4)
+      val msg =
+        if (metaLen <= 0) null // end-of-stream marker
+        else org.apache.arrow.flatbuf.Message.getRootAsMessage(
+          java.nio.ByteBuffer.wrap(ipc, pos + hdr, metaLen).slice()
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN))
+      val f = IPCFrame(pos, if (msg == null) hdr else hdr + metaLen + msg.bodyLength().toInt, msg)
+      pos += f.length
+      f
+    }
+  }
+
   /** Split a complete IPC stream into its encapsulated messages
     * (schema, record batches, end-of-stream marker), without decoding
     * bodies — each element is one wire frame for TcpGate's chunked
     * protocol.
     */
-  def splitIPCMessages(ipc: Array[Byte]): Vector[Array[Byte]] = {
-    val bb = java.nio.ByteBuffer.wrap(ipc).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val frames = Vector.newBuilder[Array[Byte]]
-    var pos = 0
-    while (pos < ipc.length) {
-      val first = bb.getInt(pos)
-      val (metaLen, hdr) =
-        if (first == -1) (bb.getInt(pos + 4), 8) else (first, 4)
-      val total =
-        if (metaLen == 0) hdr // end-of-stream marker
-        else {
-          val meta = java.nio.ByteBuffer.wrap(ipc, pos + hdr, metaLen)
-            .slice().order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(meta)
-          hdr + metaLen + msg.bodyLength().toInt
-        }
-      frames += java.util.Arrays.copyOfRange(ipc, pos, pos + total)
-      pos += total
-    }
-    frames.result()
-  }
+  def splitIPCMessages(ipc: Array[Byte]): Vector[Array[Byte]] =
+    ipcFrames(ipc, ipc.length)
+      .map(f => java.util.Arrays.copyOfRange(ipc, f.offset, f.offset + f.length)).toVector
 
-  /** True iff any RecordBatch message in the IPC stream declares a
-    * body-compression codec in its flatbuffer metadata — metadata-only
-    * walk, bodies never touched.
+  /** True iff any RecordBatch message before the end-of-stream marker
+    * declares a body-compression codec in its flatbuffer metadata.
     */
-  def ipcIsCompressed(ipc: Array[Byte]): Boolean = {
-    val bb = java.nio.ByteBuffer.wrap(ipc).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var pos = 0
-    while (pos < ipc.length) {
-      val first = bb.getInt(pos)
-      val (metaLen, hdr) =
-        if (first == -1) (bb.getInt(pos + 4), 8) else (first, 4)
-      if (metaLen == 0) return false // end-of-stream marker
-      val meta = java.nio.ByteBuffer.wrap(ipc, pos + hdr, metaLen)
-        .slice().order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(meta)
-      if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.RecordBatch) {
-        val rb = msg.header(new org.apache.arrow.flatbuf.RecordBatch())
-          .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch]
-        if (rb.compression() != null) return true
-      }
-      pos += hdr + metaLen + msg.bodyLength().toInt
-    }
-    false
-  }
+  def ipcIsCompressed(ipc: Array[Byte]): Boolean =
+    ipcFrames(ipc, ipc.length).takeWhile(_.message != null)
+      .exists(_.batch.exists(_.compression() != null))
 
   /** Decode a complete Arrow IPC stream (header + batches + footer)
     * back into a local DataFrame — the client half of the gate's wire

@@ -9,15 +9,26 @@ import scala.sys.process._
   * `pyarrow.ipc.open_stream`. This proves the "spec-valid,
   * self-describing IPC stream; pyarrow decompresses transparently"
   * claim instead of asserting it: run 1 decodes the fresh
-  * executor-side encode, run 2 decodes the cache hit's retained
-  * compressed frames — both must agree with each other and with the
-  * JVM GateClient on the same query.
+  * executor-side encode, run 2 decodes the cache hit's raw inline
+  * entry (below 8 MiB) — both must agree with each other and with the
+  * JVM GateClient on the same query. A reply above the inline bound is
+  * served, once its background pass ran, as zstd-compressed frames;
+  * pyarrow decodes those to the values of a fresh raw reply.
   */
 class ArrowWireSpec extends SparkSpec {
 
   private def pyarrowAvailable: Boolean =
     try Seq("python3", "-c", "import pyarrow.ipc").! == 0
     catch { case _: Exception => false }
+
+  private val wireCheck = new java.io.File("tools/arrow_wire_check.py").getAbsolutePath
+
+  // minimal JSON field extraction (no JSON lib on the test path)
+  private def field(json: String, key: String): String = {
+    val m = s""""$key":\\s*("[^"]*"|\\[[^\\]]*\\]|\\d+)""".r
+      .findFirstMatchIn(json)
+    m.getOrElse(fail(s"no $key in $json")).group(1)
+  }
 
   test("pyarrow decodes the gate's Arrow wire: fresh encode AND cache hit") {
     assume(pyarrowAvailable, "python3 + pyarrow not installed")
@@ -26,22 +37,16 @@ class ArrowWireSpec extends SparkSpec {
     val gate = new graft.engine.TcpGate(e)
     try {
       val stmt = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
-      val out = Seq("python3", "/root/repo/tools/arrow_wire_check.py",
+      val out = Seq("python3", wireCheck,
         "127.0.0.1", gate.boundPort.toString, stmt, "--repeat=2").!!
       val lines = out.trim.split("\n").toSeq
       info(s"fresh:  ${lines.head}")
       info(s"cached: ${lines.last}")
       assert(lines.size == 2, s"expected 2 result lines, got:\n$out")
 
-      // minimal JSON field extraction (no JSON lib on the test path)
-      def field(json: String, key: String): String = {
-        val m = s""""$key":\\s*("[^"]*"|\\[[^\\]]*\\]|\\d+)""".r
-          .findFirstMatchIn(json)
-        m.getOrElse(fail(s"no $key in $json")).group(1)
-      }
       // run 1 = fresh executor-side encode; run 2 = cache hit serving
-      // retained compressed frames. Identical decoded content proves
-      // the cached bytes are the same pyarrow-valid stream.
+      // the retained raw frames. Identical decoded content proves the
+      // cached bytes are the same pyarrow-valid stream.
       // cols arrive as a JSON array; normalize to a plain name list
       def cols(json: String): Seq[String] =
         field(json, "cols").stripPrefix("[").stripSuffix("]")
@@ -67,6 +72,37 @@ class ArrowWireSpec extends SparkSpec {
     } finally gate.close()
   }
 
+  test("pyarrow decodes a zstd cache entry above the inline bound") {
+    assume(pyarrowAvailable, "python3 + pyarrow not installed")
+    val e = new graft.engine.Engine(spark.newSession())
+    // 2M sequential longs: ~16 MB raw Arrow, above the 8 MiB inline bound
+    e.put("big", e.spark.range(2000000).toDF("x"))
+    val gate = new graft.engine.TcpGate(e)
+    try {
+      val stmt = "SELECT * FROM big"
+      val c = new graft.engine.GateClient("127.0.0.1", gate.boundPort)
+      try {
+        c.format("arrow")
+        // the first GET ships raw and queues the background zstd pass
+        assert(c.sqlArrowRowCount(stmt) == 2000000)
+        gate.awaitRecompress()
+        val (_, ipc) = c.sqlArrow(stmt)
+        assert(org.apache.spark.sql.GraftBridge.ipcIsCompressed(ipc),
+          "the cache entry above the inline bound must declare compression")
+      } finally c.close()
+      val Seq(hit, fresh) = Seq(stmt, s"##nocache $stmt").map { q =>
+        Seq("python3", wireCheck, "127.0.0.1", gate.boundPort.toString, q).!!.trim
+      }
+      info(s"cached: $hit")
+      info(s"fresh:  $fresh")
+      assert(field(hit, "rows") == "2000000" && field(fresh, "rows") == "2000000")
+      assert(field(hit, "checksum") == field(fresh, "checksum"),
+        "the zstd entry decoded to other values than a fresh raw reply")
+      assert(field(hit, "ipc_bytes").toLong < field(fresh, "ipc_bytes").toLong / 2,
+        s"cache hit not served compressed:\n$hit\n$fresh")
+    } finally gate.close()
+  }
+
   test("pyarrow decodes an authenticated gate's wire through the handshake") {
     assume(pyarrowAvailable, "python3 + pyarrow not installed")
     val e = new graft.engine.Engine(spark.newSession())
@@ -74,7 +110,7 @@ class ArrowWireSpec extends SparkSpec {
     e.put("region", Tables.region(e.spark, sfDir))
     val gate = new graft.engine.TcpGate(e, auth = Some(auth))
     try {
-      val out = Seq("python3", "/root/repo/tools/arrow_wire_check.py",
+      val out = Seq("python3", wireCheck,
         "127.0.0.1", gate.boundPort.toString,
         "SELECT count(*) AS c FROM region", "--auth=duck:quack").!!
       assert(out.contains(""""rows": 1""") || out.contains(""""rows":1"""),

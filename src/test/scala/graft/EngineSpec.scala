@@ -794,17 +794,17 @@ class EngineSpec extends SparkSpec {
       // RecordBatch flatbuffer metadata alone
       val (sj1, frames1, rows1) = c.sqlArrowOpaque(stmt)
       assert(rows1 == 25)
-      // second call is a cache hit: the served stream is the cached
-      // zstd-compressed twin — smaller on the wire, same schema, and
-      // the flatbuffer row-count metadata still reads without decode
+      // second call is a cache hit: the served stream is the raw
+      // inline entry (below 8 MiB) — no more bytes than the fresh
+      // encode, same schema, and the flatbuffer row-count metadata
+      // still reads without decode
       val (sj2, ipc2) = c.sqlArrow(stmt)
       assert(sj1 == sj2)
       assert(ipc2.length <= frames1.map(_.length).sum,
         "cache hit must not ship more bytes than the fresh encode")
       assert(c.sqlArrowRowCount(stmt) == 25) // metadata-only count on a hit
       // decoded cache-hit stream carries the exact same VALUES as the
-      // in-process query (normalize compression first: Spark's IPC
-      // reader does not decompress)
+      // in-process query (normalizing through the recompression path)
       val decoded = GraftBridge.fromArrowIPC(
         e.spark, GraftBridge.recompressIPC(ipc2, "none"))
       assert(decoded.collect().map(_.toSeq).toSeq ==
@@ -830,7 +830,7 @@ class EngineSpec extends SparkSpec {
         val (_, frames2, rows2) = c.sqlArrowOpaque(stmt2) // miss: fresh encode
         assert(rows2 == 25)
         assert(frames2.length > 4, s"expected many small frames, got ${frames2.length}")
-        assert(c.sqlArrowRowCount(stmt2) == 25) // hit: compressed cache
+        assert(c.sqlArrowRowCount(stmt2) == 25) // hit: raw inline entry
       } finally e.serveSession.conf.set(
         "spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
       c.close()
@@ -846,9 +846,9 @@ class EngineSpec extends SparkSpec {
       .get("spark.sql.execution.arrow.maxRecordsPerBatch") == "131072")
     assert(s2.conf.getOption("spark.sql.execution.arrow.maxRecordsPerBatch") == before,
       "VERDICT r10 #8: the tuned batch size must not leak into the caller's session")
-    // an explicit graft-scoped override wins on a fresh engine
+    // a non-default batch size the caller set session-wide wins
     val s3 = spark.newSession()
-    s3.conf.set("spark.graft.arrow.maxRecordsPerBatch", "4096")
+    s3.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
     assert(new Engine(s3).serveSession.conf
       .get("spark.sql.execution.arrow.maxRecordsPerBatch") == "4096")
   }

@@ -80,10 +80,9 @@ class TableChunkCacheSpec extends SparkSpec {
   }
 
   test("cold GET ships raw and the entry recompresses in the background (r12 COLD floor)") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.gate.recompressMinBytes", "1048576")
-    val e = new Engine(s2)
-    // 2M sequential longs: ~16 MB raw Arrow, compresses hard under zstd
+    val e = new Engine(spark.newSession())
+    // 2M sequential longs: ~16 MB raw Arrow, above the 8 MiB inline
+    // bound, and compresses hard under zstd
     e.put("big", e.spark.range(2000000).toDF("x"))
     val gate = new TcpGate(e)
     try {
@@ -99,7 +98,7 @@ class TableChunkCacheSpec extends SparkSpec {
         val (n2, b2) = gate.cacheStats
         assert(n2 == 1, s"background pass must install the entry: $n2 entries")
         // 2M sequential longs are ~16 MB raw; the zstd entry must be
-        // far below the 1 MB threshold this spec set
+        // a fraction of that
         assert(b2 < (4L << 20), s"entry not compressed: $b2 B")
         // the swapped entry still decodes to the same values
         val (_, ipc) = c.sqlArrow("SELECT * FROM big")

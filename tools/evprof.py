@@ -8,8 +8,11 @@ Usage: evprof.py <eventlog> [minsecs]
 zstd, Spark's default event-log codec, are read through the `zstd`
 command; for other codecs set `-Dspark.eventLog.compress=false`.
 
-`graft.Bench` runs every key under its own job group, `<key>#<run>`.
-Turn on Spark's event log with stock confs to get one, e.g.
+`graft.Bench` runs every key under its own job group, `<key>#<run>`,
+and also sets it as local property `graft.bench.run`. A streaming key's
+micro-batch jobs run under the query's own job group (its runId) but
+inherit the property, so jobs are grouped by the property when it is
+present and by their job group otherwise. Turn on Spark's event log with stock confs to get one, e.g.
 
     mkdir -p /tmp/sparklogs
     SPARK_GRAFT_KEYS=join_skewed sbt 'set javaOptions ++= Seq("-Dspark.eventLog.enabled=true","-Dspark.eventLog.dir=/tmp/sparklogs")' "runMain graft.Bench"
@@ -83,7 +86,7 @@ for line in log_lines(path):
         props = e.get("Properties") or {}
         jobs[jid] = {
             "start": e["Submission Time"],
-            "group": props.get("spark.jobGroup.id", ""),
+            "group": props.get("graft.bench.run") or props.get("spark.jobGroup.id", ""),
             "site": props.get("callSite.short", ""),
             "exec": props.get("spark.sql.execution.root.id",
                               props.get("spark.sql.execution.id", "")),
