@@ -417,7 +417,8 @@ object EngineOps {
     },
 
     // A14: synthetic flights generator (reference `demo.py:193-211`) —
-    // spark.range + modular arithmetic, no driver-side loops.
+    // the Throughput suite's own generator, spark.range + modular
+    // arithmetic, no driver-side loops.
     sql("gen_flights",
       """SELECT i AS flight_id,
         | 'Flight-' || CAST(i AS VARCHAR) AS flight_number,
@@ -427,20 +428,8 @@ object EngineOps {
         |   lpad(CAST((i % 28) + 1 AS VARCHAR), 2, '0') || ' ' ||
         |   lpad(CAST(i % 24 AS VARCHAR), 2, '0') || ':00:00' AS departure_time,
         | 50 + i % 200 AS passengers
-        |FROM range(1, 1001) t(i) ORDER BY flight_id""".stripMargin) { (s, d) =>
-      val origins = array(Seq("JFK", "LAX", "ORD", "DFW", "SFO").map(lit): _*)
-      val dests   = array(Seq("SFO", "JFK", "LAX", "ORD", "DFW").map(lit): _*)
-      s.range(1, 1001).toDF("i")
-        .select(col("i").as("flight_id"),
-          concat(lit("Flight-"), col("i").cast("string")).as("flight_number"),
-          element_at(origins, (pmod(col("i") - 1, lit(5)) + 1).cast("int")).as("origin"),
-          element_at(dests, (pmod(col("i") - 1, lit(5)) + 1).cast("int")).as("destination"),
-          concat(lit("2023-"),
-            lpad((pmod(col("i"), lit(12)) + 1).cast("string"), 2, "0"), lit("-"),
-            lpad((pmod(col("i"), lit(28)) + 1).cast("string"), 2, "0"), lit(" "),
-            lpad(pmod(col("i"), lit(24)).cast("string"), 2, "0"), lit(":00:00")).as("departure_time"),
-          (lit(50) + pmod(col("i"), lit(200))).as("passengers"))
-        .orderBy(col("flight_id"))
+        |FROM range(1, 1001) t(i) ORDER BY flight_id""".stripMargin) { (s, _) =>
+      graft.Throughput.flights(s, 1000).orderBy(col("flight_id"))
     }
   )
 

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** Training-data pipeline operators beyond the per-document dedup /
   * scoring family in [[Text]]: the corpus-level preparation steps a
@@ -55,28 +54,15 @@ import graft.Tables
 object Pipeline {
 
   import QueryDef.sql
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    graft.ops.spread(Tables.documents(s, d))
-
-  private def tokens: Column = split(col("text"), " ")
-
-  // DuckDB fragments shared with Text's oracles.
-  private object D {
-    def h32(x: String): String =
-      s"('0x' || substr(md5($x), 1, 8))::BIGINT"
-    def h32s(seed: String, x: String): String =
-      s"('0x' || substr(md5($seed || ':' || $x), 1, 8))::BIGINT"
-    val toks = "string_split(text, ' ')"
-  }
+  import Text.{D, GopherAlphaMicro, GopherMeanLenMicro, GopherMinStop, GopherWords}
 
   /** The quality_buckets pipeline over an arbitrary (doc_id, text)
     * corpus.
     */
   private[graft] def qualityBuckets(corpus: DataFrame): DataFrame = {
-    val c = maybePlanCache(corpus
+    val c = corpus
       .select(col("doc_id"), graft.ops.Text.qualityMicroCol.as("q_micro"))
-      .withColumn("qc", expr("q_micro div 10000")))
+      .withColumn("qc", expr("q_micro div 10000")).cache()
     val th = graft.ops.tercileCuts(c.select(col("qc")), "qc", "t1", "t2")
     c.crossJoin(broadcast(th)) // 1-row thresholds — the scalar topology
       .select(when(col("qc") <= col("t1"), lit("tail"))
@@ -102,12 +88,11 @@ object Pipeline {
     * relations; PipelineSpec computes that ground truth from the
     * fixture.
     */
-  private[graft] def componentCorpus(base: DataFrame): DataFrame = {
-    val b = base.select(col("doc_id"), col("text"))
-    b.unionByName(b.select((col("doc_id") + 10000).as("doc_id"), col("text")))
-      .unionByName(base.select((col("doc_id") + 20000).as("doc_id"),
-        array_join(slice(tokens, lit(1), size(tokens) - 1), " ").as("text")))
-  }
+  private[graft] def componentCorpus(base: DataFrame): DataFrame =
+    Text.withCopies(base, ComponentPlants)
+
+  /** The component corpus' plants: exact copy +10000, truncation +20000. */
+  private val ComponentPlants = Seq(10000 -> false, 20000 -> true)
 
   /** Duplicate-cluster labels by large-star/small-star contraction
     * over LSH-banded near-dup edges (Jaccard ≥ 0.8) plus exact-text
@@ -155,8 +140,7 @@ object Pipeline {
   private[graft] def verifiedNearEdges(hs: DataFrame, bands: DataFrame,
       probe: Option[DataFrame] = None,
       probeHs: Option[DataFrame] = None): DataFrame = {
-    val jac = size(array_intersect(col("ha.hs"), col("hb.hs"))).cast("double") /
-      size(array_union(col("ha.hs"), col("hb.hs")))
+    val jac = Text.jaccard(col("ha.hs"), col("hb.hs"))
     probe match {
       case None =>
         val nearPairs = bands.as("a")
@@ -498,29 +482,19 @@ object Pipeline {
   }
 
   /** Shared DuckDB closure for the duplicate-cluster keys
-    * (`dedup_components`, `dedup_apply`, `dedup_soft`, `mix_weighted`):
-    * corpus → MinHash/banded + exact edges → recursive reach → per-doc
-    * component (min root) + per-component size. Parameterized by the
-    * corpus SQL so every consumer shares ONE copy of the closure
-    * (shingle width, band count, 0.8 Jaccard bar, signature mixes) —
-    * a threshold change cannot pass one key's parity gate while
-    * silently diverging another's.
+    * (`dedup_components`, `dedup_apply`, `dedup_soft`, `mix_weighted`,
+    * `pipeline_e2e`): corpus → MinHash/banded + exact edges → recursive
+    * reach → per-doc component (min root) + per-component size.
+    * `ctes` are the CTEs that build the (doc_id, text) relation `rel`,
+    * so every consumer shares ONE copy of the closure (shingle width,
+    * band count, 0.8 Jaccard bar, signature mixes) — a threshold change
+    * cannot pass one key's parity gate while silently diverging
+    * another's.
     */
-  private def componentsClosure(corpusSql: String): String = {
-    val mixes = Text.minhashMix.map { case (a, b) =>
-      s"list_min(list_transform(hs, h -> (h * $a + $b) % ${Text.minhashP}))"
-    }.mkString("[", ",\n   ", "]")
-    val shingles =
-      s"list_distinct(list_transform(range(1, len(${D.toks}) - 1), " +
-        s"i -> array_to_string((${D.toks})[i:i+2], ' ')))"
-    val hsExpr = s"list_distinct(list_transform($shingles, x -> ${D.h32("x")}))"
-    s"""WITH RECURSIVE corpus AS (
-       |  $corpusSql),
-       |hs AS (SELECT doc_id, $hsExpr AS hs FROM corpus),
-       |bands AS (
-       |  SELECT s.doc_id, b,
-       |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-       |  FROM (SELECT doc_id, $mixes AS sig FROM hs) s, range(0, 4) t(b)),
+  private def componentsClosure(ctes: String, rel: String): String =
+    s"""WITH RECURSIVE $ctes,
+       |hs AS (SELECT doc_id, ${D.hs} AS hs FROM $rel),
+       |bands AS (${D.bands("hs")}),
        |near_pairs AS (
        |  SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
        |  FROM bands a JOIN bands b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -528,12 +502,11 @@ object Pipeline {
        |  SELECT x, y FROM near_pairs p
        |  JOIN hs ha ON ha.doc_id = p.x
        |  JOIN hs hb ON hb.doc_id = p.y
-       |  WHERE len(list_intersect(ha.hs, hb.hs))::DOUBLE
-       |        / len(list_distinct(list_concat(ha.hs, hb.hs))) >= 0.8),
+       |  WHERE ${D.jaccard("ha.hs", "hb.hs")} >= 0.8),
        |exact_edges AS (
        |  SELECT c.doc_id AS x, r.rep AS y
-       |  FROM corpus c
-       |  JOIN (SELECT text, min(doc_id) AS rep FROM corpus GROUP BY text) r
+       |  FROM $rel c
+       |  JOIN (SELECT text, min(doc_id) AS rep FROM $rel GROUP BY text) r
        |    ON c.text = r.text
        |  WHERE c.doc_id <> r.rep),
        |edges AS (
@@ -542,26 +515,35 @@ object Pipeline {
        |  UNION SELECT x, y FROM exact_edges
        |  UNION SELECT y, x FROM exact_edges),
        |reach AS (
-       |  SELECT doc_id AS id, doc_id AS r FROM corpus
+       |  SELECT doc_id AS id, doc_id AS r FROM $rel
        |  UNION
        |  SELECT e.dst, r.r FROM reach r JOIN edges e ON e.src = r.id),
        |comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id),
        |sizes AS (SELECT comp, count(*) AS comp_size FROM comp GROUP BY comp)""".stripMargin
-  }
 
   /** The planted-triple corpus variant consumed by the dedup_* keys. */
   private val componentsClosureCtes: String = componentsClosure(
-    s"""SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id + 10000, text FROM documents
-       |  UNION ALL SELECT doc_id + 20000,
-       |         array_to_string((${D.toks})[1:len(${D.toks})-1], ' ')
-       |  FROM documents""".stripMargin)
+    s"corpus AS (\n  ${D.withCopies("documents", ComponentPlants)})", "corpus")
 
   private val componentsOracle: String =
     s"""$componentsClosureCtes
        |SELECT c.id AS doc_id, c.comp, n.comp_size
        |FROM comp c JOIN sizes n ON c.comp = n.comp
        |ORDER BY c.id""".stripMargin
+
+  /** Per-component sizes `(lbl, comp_size)` of component labels
+    * `(id, lbl)` — Spark twin of the closure's `sizes` CTE.
+    */
+  private[graft] def componentSizes(labels: DataFrame): DataFrame =
+    labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
+
+  /** `(doc_id, comp, comp_size)` per doc, in doc order — the output of
+    * `dedup_components` and its delta and streaming twins.
+    */
+  private def componentRows(labels: DataFrame): DataFrame =
+    labels.join(componentSizes(labels), Seq("lbl"))
+      .select(col("id").as("doc_id"), col("lbl").as("comp"), col("comp_size"))
+      .orderBy(col("doc_id"))
 
   /** Consume component labels `(id, lbl)`: one canonical (min-id =
     * label) survivor per cluster with its cluster size, removed count
@@ -573,7 +555,7 @@ object Pipeline {
     * corpus with no broadcast hint (AQE decides by size).
     */
   private[graft] def applySurvivors(corpus: DataFrame, labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
+    val sizes = componentSizes(labels)
     sizes.join(corpus, sizes("lbl") === corpus("doc_id"))
       .select(col("doc_id"), h32(col("text")).as("text_hash"),
         col("comp_size"), (col("comp_size") - 1).as("n_removed"))
@@ -588,101 +570,154 @@ object Pipeline {
        |ORDER BY doc_id""".stripMargin
 
   /** The four-stage pipeline (gopher → dedup-apply → mix → pack) as one
-    * DuckDB CTE chain — the oracle for `pipeline_e2e`. Every fragment
-    * is the per-stage oracle's own SQL, re-scoped to the previous
-    * stage's CTE instead of `documents`.
+    * DuckDB CTE chain — the oracle for `pipeline_e2e`. Every stage is
+    * the per-stage oracle's own fragment (the component closure, the
+    * temperature-rate CTEs, the packing window), re-scoped to the
+    * previous stage's CTE instead of `documents`.
     */
   private lazy val pipelineE2eOracle: String = {
-    val mixes = Text.minhashMix.map { case (a, b) =>
-      s"list_min(list_transform(hs, h -> (h * $a + $b) % ${Text.minhashP}))"
-    }.mkString("[", ",\n   ", "]")
-    val shingles =
-      s"list_distinct(list_transform(range(1, len(${D.toks}) - 1), " +
-        s"i -> array_to_string((${D.toks})[i:i+2], ' ')))"
-    val hsExpr = s"list_distinct(list_transform($shingles, x -> ${D.h32("x")}))"
-    val sw = Text.enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH RECURSIVE corpus AS (
-       |  SELECT doc_id, source, text FROM documents
-       |  UNION ALL SELECT doc_id + 10000, source, text FROM documents
-       |  UNION ALL SELECT doc_id + 20000, source,
-       |         array_to_string((${D.toks})[1:len(${D.toks})-1], ' ')
-       |  FROM documents),
-       |g AS (
-       |  SELECT doc_id, source, text,
-       |    len(${D.toks})::BIGINT AS n_tokens,
-       |    list_sum(list_transform(${D.toks}, w -> len(w)))::BIGINT AS sum_len,
-       |    len(list_filter(${D.toks}, w -> regexp_matches(w, '[a-z]')))::BIGINT AS n_alpha,
-       |    len(list_filter(${D.toks}, w -> list_contains($sw, w)))::BIGINT AS n_stop
-       |  FROM corpus),
-       |keepers AS (
-       |  SELECT doc_id, source, text, n_tokens FROM g
-       |  WHERE n_tokens BETWEEN 30 AND 100000
-       |    AND (1000000 * sum_len) // n_tokens BETWEEN 3000000 AND 10000000
-       |    AND (1000000 * n_alpha) // n_tokens >= 800000
-       |    AND n_stop >= 2),
-       |hs AS (SELECT doc_id, $hsExpr AS hs FROM keepers),
-       |bands AS (
-       |  SELECT s.doc_id, b,
-       |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-       |  FROM (SELECT doc_id, $mixes AS sig FROM hs) s, range(0, 4) t(b)),
-       |near_pairs AS (
-       |  SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
-       |  FROM bands a JOIN bands b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |near_edges AS (
-       |  SELECT x, y FROM near_pairs p
-       |  JOIN hs ha ON ha.doc_id = p.x
-       |  JOIN hs hb ON hb.doc_id = p.y
-       |  WHERE len(list_intersect(ha.hs, hb.hs))::DOUBLE
-       |        / len(list_distinct(list_concat(ha.hs, hb.hs))) >= 0.8),
-       |exact_edges AS (
-       |  SELECT k.doc_id AS x, r.rep AS y
-       |  FROM keepers k
-       |  JOIN (SELECT text, min(doc_id) AS rep FROM keepers GROUP BY text) r
-       |    ON k.text = r.text
-       |  WHERE k.doc_id <> r.rep),
-       |edges AS (
-       |  SELECT x AS src, y AS dst FROM near_edges
-       |  UNION SELECT y, x FROM near_edges
-       |  UNION SELECT x, y FROM exact_edges
-       |  UNION SELECT y, x FROM exact_edges),
-       |reach AS (
-       |  SELECT doc_id AS id, doc_id AS r FROM keepers
-       |  UNION
-       |  SELECT e.dst, r.r FROM reach r JOIN edges e ON e.src = r.id),
-       |comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id),
+    val keepers =
+      s"""corpus AS (
+         |  ${D.withCopies("documents", ComponentPlants, carry = "source, ")}),
+         |g AS (
+         |  SELECT doc_id, source, text,
+         |    ${D.gopherMetrics(D.toks)}
+         |  FROM corpus),
+         |keepers AS (
+         |  SELECT doc_id, source, text, n_tokens FROM g
+         |  WHERE n_tokens BETWEEN ${GopherWords._1} AND ${GopherWords._2}
+         |    AND (1000000 * sum_len) // n_tokens BETWEEN ${GopherMeanLenMicro._1} AND ${GopherMeanLenMicro._2}
+         |    AND (1000000 * n_alpha) // n_tokens >= $GopherAlphaMicro
+         |    AND n_stop >= $GopherMinStop)""".stripMargin
+    s"""${componentsClosure(keepers, "keepers")},
        |survivors AS (
        |  SELECT k.doc_id, k.source, k.n_tokens
        |  FROM keepers k JOIN comp c ON c.id = k.doc_id AND c.comp = k.doc_id),
        |per_src AS (
        |  SELECT source, count(*) AS n_docs,
        |         CAST(sum(n_tokens) AS BIGINT) AS src_tokens,
-       |         CAST(floor(sqrt(CAST(sum(n_tokens) AS BIGINT)) * 1000 + 0.5) AS BIGINT) AS w_milli
+       |         ${wMilliSql("sum(n_tokens)")} AS w_milli
        |  FROM survivors GROUP BY source),
-       |pd AS (
-       |  SELECT source, n_docs, src_tokens,
-       |         CAST(floor(1000000.0 * w_milli / src_tokens + 0.5) AS BIGINT) AS pd_micro
-       |  FROM per_src),
-       |tot AS (SELECT CAST(sum(n_docs * pd_micro) AS BIGINT) AS w_total FROM pd),
-       |rates AS (
-       |  SELECT source,
-       |         CAST(least(1000000,
-       |           (1000000 * $MixTarget * pd_micro + w_total // 2) // w_total) AS BIGINT) AS rate_micro
-       |  FROM pd, tot),
+       |${mixRatesSql("per_src", "src_tokens", "source, n_docs, src_tokens", "source")},
        |sampled AS (
        |  SELECT s.source, s.doc_id, s.n_tokens
        |  FROM survivors s JOIN rates r ON s.source = r.source
        |  WHERE ${D.h32s("'mix'", "CAST(s.doc_id AS VARCHAR)")} % 1000000 < r.rate_micro),
-       |packed AS (
+       |${packSql("sampled")}""".stripMargin
+  }
+
+  // ---- temperature mixing (corpus_mix, mix_weighted, pipeline_e2e) -------
+
+  /** Temperature-½ source weight in milli-units, round(√tokens · 1000):
+    * sqrt is IEEE-correctly-rounded in both engines and quantized to
+    * integer units at once. DuckDB twin: [[wMilliSql]].
+    */
+  private def wMilli(tokens: Column): Column = floor(sqrt(tokens) * 1000 + 0.5).cast("bigint")
+  private def wMilliSql(tokens: String): String =
+    s"CAST(floor(sqrt(CAST($tokens AS BIGINT)) * 1000 + 0.5) AS BIGINT)"
+
+  /** (source, n_docs, src_tokens) of a doc frame, `tokens` per doc. */
+  private def perSource(df: DataFrame, tokens: Column): DataFrame =
+    df.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(tokens).cast("bigint").as("src_tokens"))
+
+  /** Per-doc weight of each source in micro-units, pd_micro = w_milli /
+    * tokens ∝ tokens^(-1/2), added (with w_milli) to a per-source frame
+    * holding the `tokens` column.
+    */
+  private def withPdMicro(perSrc: DataFrame, tokens: String): DataFrame =
+    perSrc.withColumn("w_milli", wMilli(col(tokens)))
+      .withColumn("pd_micro",
+        floor(lit(1000000.0) * col("w_milli") / col(tokens) + 0.5).cast("bigint"))
+
+  /** Per-source keep rates over a [[withPdMicro]] frame: rate_micro =
+    * round(1e6 · MixTarget · pd_micro / Σ n_docs·pd_micro), capped at
+    * 1e6, all BIGINT (max ~2e8 · pd_micro ≪ 2^63), so the expected
+    * sample is MixTarget docs. DuckDB twin: [[mixRatesSql]].
+    */
+  private def mixRates(pd: DataFrame): DataFrame = {
+    val tot = pd.agg(sum(col("n_docs") * col("pd_micro")).as("w_total"))
+    pd.crossJoin(broadcast(tot))
+      .withColumn("rate_micro",
+        least(lit(1000000L),
+          expr(s"(1000000L * $MixTarget * pd_micro + w_total div 2) div w_total")))
+  }
+
+  /** The pd, tot and rates CTEs over per-source relation `from` (n_docs,
+    * w_milli and the `tokens` column); `pdCols` and `rateCols` are the
+    * columns pd and rates carry through.
+    */
+  private def mixRatesSql(from: String, tokens: String, pdCols: String,
+      rateCols: String): String =
+    s"""pd AS (
+       |  SELECT $pdCols,
+       |         CAST(floor(1000000.0 * w_milli / $tokens + 0.5) AS BIGINT) AS pd_micro
+       |  FROM $from),
+       |tot AS (SELECT CAST(sum(n_docs * pd_micro) AS BIGINT) AS w_total FROM pd),
+       |rates AS (
+       |  SELECT $rateCols,
+       |         CAST(least(1000000,
+       |           (1000000 * $MixTarget * pd_micro + w_total // 2) // w_total) AS BIGINT) AS rate_micro
+       |  FROM pd, tot)""".stripMargin
+
+  /** Docs of `df` kept by the seeded-hash Bernoulli at their source's
+    * rate — the selection sample_stratified already proves.
+    */
+  private def sampleAtRate(df: DataFrame, rates: DataFrame, seed: String): DataFrame =
+    df.join(broadcast(rates.select(col("source"), col("rate_micro"))), Seq("source"))
+      .filter(h32Seeded(lit(seed), col("doc_id")) % 1000000 < col("rate_micro"))
+
+  /** `rates` plus n_sampled, the docs [[sampleAtRate]] keeps per source,
+    * in source order. DuckDB twin: [[sampledCountsSql]].
+    */
+  private def sampledCounts(docsDf: DataFrame, rates: DataFrame, seed: String): DataFrame = {
+    val picked = sampleAtRate(docsDf, rates, seed)
+      .groupBy(col("source")).agg(count(lit(1)).as("n_sampled"))
+    rates.join(picked, Seq("source"), "left")
+      .select(rates.columns.map(col) :+ coalesce(col("n_sampled"), lit(0L)).as("n_sampled"): _*)
+      .orderBy(col("source"))
+  }
+
+  private def sampledCountsSql(seed: String, cols: String): String =
+    s"""picked AS (
+       |  SELECT d.source, count(*) AS n_sampled
+       |  FROM documents d JOIN rates r ON d.source = r.source
+       |  WHERE ${D.h32s(s"'$seed'", "CAST(d.doc_id AS VARCHAR)")} % 1000000 < r.rate_micro
+       |  GROUP BY d.source)
+       |SELECT $cols,
+       |       coalesce(p.n_sampled, 0) AS n_sampled
+       |FROM rates r LEFT JOIN picked p ON r.source = p.source
+       |ORDER BY r.source""".stripMargin
+
+  // ---- sequence packing (pack_sequences, pipeline_e2e) -------------------
+
+  /** Next-fit packing of (source, doc_id, n_tokens) rows: a doc's pack is
+    * its starting token offset within its source ÷ 256, one window per
+    * source. DuckDB twin: [[packSql]].
+    */
+  private def packSequences(sized: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    sized
+      .withColumn("pack_id",
+        floor((sum(col("n_tokens")).over(w) - col("n_tokens")) / 256.0).cast("bigint"))
+      .groupBy(col("source"), col("pack_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"),
+        min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
+      .orderBy(col("source"), col("pack_id"))
+  }
+
+  private def packSql(from: String): String =
+    s"""packed AS (
        |  SELECT source, doc_id, n_tokens,
        |         CAST(floor((sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
        |               - n_tokens) / 256.0) AS BIGINT) AS pack_id
-       |  FROM sampled)
+       |  FROM $from)
        |SELECT source, pack_id, count(*) AS n_docs,
        |       CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
        |FROM packed GROUP BY source, pack_id ORDER BY source, pack_id""".stripMargin
-  }
 
   // ---- corpus_mix literals ---------------------------------------------
 
@@ -771,11 +806,7 @@ object Pipeline {
     // per-round cost two aggregates over edges ≪ corpus, corpus
     // touched once at the end.
     sql("dedup_components", componentsOracle) { (s, d) =>
-      val (labels, _, _) = componentLabelsIndexed(s, d)
-      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
-      labels.join(sizes, Seq("lbl"))
-        .select(col("id").as("doc_id"), col("lbl").as("comp"), col("comp_size"))
-        .orderBy(col("doc_id"))
+      componentRows(componentLabelsIndexed(s, d)._1)
     },
 
     // ---- cluster-dedup APPLY: the deduped corpus itself ----------------
@@ -813,8 +844,7 @@ object Pipeline {
          |FROM comp c JOIN sizes n ON c.comp = n.comp
          |ORDER BY c.id""".stripMargin) { (s, d) =>
       val (labels, _, _) = componentLabelsIndexed(s, d)
-      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
-      labels.join(sizes, Seq("lbl"))
+      labels.join(componentSizes(labels), Seq("lbl"))
         .select(col("id").as("doc_id"), col("lbl").as("comp"), col("comp_size"),
           expr("1000000 div comp_size").as("weight_micro"))
         .orderBy(col("doc_id"))
@@ -866,8 +896,8 @@ object Pipeline {
     // Shapes: clustering as in dedup_components; the weight join is
     // the one corpus-sized extra join; everything after is the
     // broadcast-scalar corpus_mix topology unchanged.
-    sql("mix_weighted", {
-      s"""${componentsClosure("SELECT doc_id, text FROM documents")},
+    sql("mix_weighted",
+      s"""${componentsClosure("corpus AS (\n  SELECT doc_id, text FROM documents)", "corpus")},
          |wts AS (
          |  SELECT c.id AS doc_id, (1000000 // n.comp_size)::BIGINT AS weight_micro
          |  FROM comp c JOIN sizes n ON c.comp = n.comp),
@@ -878,61 +908,29 @@ object Pipeline {
          |  FROM documents d JOIN wts w ON d.doc_id = w.doc_id GROUP BY d.source),
          |eff AS (
          |  SELECT source, n_docs, src_tokens, eff_micro // 1000000 AS eff_tokens,
-         |         CAST(floor(sqrt(CAST(eff_micro // 1000000 AS BIGINT)) * 1000 + 0.5) AS BIGINT) AS w_milli
+         |         ${wMilliSql("eff_micro // 1000000")} AS w_milli
          |  FROM per_src),
-         |pd AS (
-         |  SELECT source, n_docs, src_tokens, eff_tokens,
-         |         CAST(floor(1000000.0 * w_milli / eff_tokens + 0.5) AS BIGINT) AS pd_micro
-         |  FROM eff),
-         |tot AS (SELECT CAST(sum(n_docs * pd_micro) AS BIGINT) AS w_total FROM pd),
-         |rates AS (
-         |  SELECT source, n_docs, src_tokens, eff_tokens,
-         |         CAST(least(1000000,
-         |           (1000000 * $MixTarget * pd_micro + w_total // 2) // w_total) AS BIGINT) AS rate_micro
-         |  FROM pd, tot),
-         |picked AS (
-         |  SELECT d.source, count(*) AS n_sampled
-         |  FROM documents d JOIN rates r ON d.source = r.source
-         |  WHERE ${D.h32s("'wmix'", "CAST(d.doc_id AS VARCHAR)")} % 1000000 < r.rate_micro
-         |  GROUP BY d.source)
-         |SELECT r.source, r.n_docs, r.src_tokens, r.eff_tokens, r.rate_micro,
-         |       coalesce(p.n_sampled, 0) AS n_sampled
-         |FROM rates r LEFT JOIN picked p ON r.source = p.source
-         |ORDER BY r.source""".stripMargin
-    }) { (s, d) =>
+         |${mixRatesSql("eff", "eff_tokens", "source, n_docs, src_tokens, eff_tokens",
+              "source, n_docs, src_tokens, eff_tokens")},
+         |${sampledCountsSql("wmix", "r.source, r.n_docs, r.src_tokens, r.eff_tokens, r.rate_micro")}""".stripMargin) { (s, d) =>
       val base = docs(s, d)
       val (labels, _, _) = componentLabels(base.select(col("doc_id"), col("text")))
-      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
-      val wts = labels.join(sizes, Seq("lbl"))
+      val wts = labels.join(componentSizes(labels), Seq("lbl"))
         .select(col("id").as("doc_id"), expr("1000000 div comp_size").as("weight_micro"))
       // cache the 20-row aggregate: it embeds the clustering + two
       // corpus-sized joins, and the final plan otherwise re-evaluates
       // it in the tot / rates / picked branches
-      val perSrc = base.join(wts, "doc_id")
+      val perSrc = withPdMicro(base.join(wts, "doc_id")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(tokens)).cast("bigint").as("src_tokens"),
           sum(size(tokens).cast("bigint") * col("weight_micro")).as("eff_micro"))
-        .withColumn("eff_tokens", expr("eff_micro div 1000000"))
-        .withColumn("w_milli", floor(sqrt(col("eff_tokens")) * 1000 + 0.5).cast("bigint"))
-        .withColumn("pd_micro",
-          floor(lit(1000000.0) * col("w_milli") / col("eff_tokens") + 0.5).cast("bigint"))
-        .transform(maybePlanCache)
-      val tot = perSrc.agg(sum(col("n_docs") * col("pd_micro")).as("w_total"))
-      val rates = perSrc.crossJoin(broadcast(tot))
-        .withColumn("rate_micro",
-          least(lit(1000000L),
-            expr(s"(1000000L * $MixTarget * pd_micro + w_total div 2) div w_total")))
+        .withColumn("eff_tokens", expr("eff_micro div 1000000")), "eff_tokens")
+        .cache()
+      val rates = mixRates(perSrc)
         .select(col("source"), col("n_docs"), col("src_tokens"),
           col("eff_tokens"), col("rate_micro"))
-      val picked = base
-        .join(broadcast(rates.select(col("source"), col("rate_micro"))), Seq("source"))
-        .filter(h32Seeded(lit("wmix"), col("doc_id")) % 1000000 < col("rate_micro"))
-        .groupBy(col("source")).agg(count(lit(1)).as("n_sampled"))
-      rates.join(picked, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("src_tokens"), col("eff_tokens"),
-          col("rate_micro"), coalesce(col("n_sampled"), lit(0L)).as("n_sampled"))
-        .orderBy(col("source"))
+      sampledCounts(base, rates, "wmix")
     },
 
     // ---- incremental cluster maintenance -------------------------------
@@ -944,11 +942,7 @@ object Pipeline {
     // the operator's contract — drift here silently corrupts every
     // later batch's dedup.
     sql("dedup_components_delta", componentsOracle) { (s, d) =>
-      val (labels, _, _) = componentLabelsDelta(s, d)
-      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
-      labels.join(sizes, Seq("lbl"))
-        .select(col("id").as("doc_id"), col("lbl").as("comp"), col("comp_size"))
-        .orderBy(col("doc_id"))
+      componentRows(componentLabelsDelta(s, d)._1)
     },
 
     // ---- streaming cluster maintenance ---------------------------------
@@ -975,11 +969,7 @@ object Pipeline {
       // point the plain labels() computes, plus the edge-index rewrite
       // to the member→root star set — so the oracle gate also proves
       // the post-compaction index yields the full-corpus closure
-      val (labels, _) = ClusterStream.compactIndex(s, idx)
-      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("comp_size"))
-      labels.join(sizes, Seq("lbl"))
-        .select(col("id").as("doc_id"), col("lbl").as("comp"), col("comp_size"))
-        .orderBy(col("doc_id"))
+      componentRows(ClusterStream.compactIndex(s, idx)._1)
     },
 
     // ---- end-to-end pipeline composition -------------------------------
@@ -999,26 +989,20 @@ object Pipeline {
     // aggregates, and the per-source packing window. The oracle is the
     // same four stages as one CTE chain over DuckDB.
     sql("pipeline_e2e", pipelineE2eOracle) { (s, d) =>
-      val base = docs(s, d).select(col("doc_id"), col("source"), col("text"))
       // the planted component corpus (exact copy +10000, truncated
       // near-copy +20000), with `source` carried through for the mix
-      val corpus = base
-        .unionByName(base.select((col("doc_id") + 10000).as("doc_id"),
-          col("source"), col("text")))
-        .unionByName(base.select((col("doc_id") + 20000).as("doc_id"), col("source"),
-          array_join(slice(tokens, lit(1), size(tokens) - 1), " ").as("text")))
-      // stage 1: Gopher rules (same thresholds as gopher_filter; the
-      // metrics are the shared codegen'd whole-string expressions —
-      // see Text.gopherSumLen — so every lineage re-pass over keepers
-      // pays compiled regex scans instead of interpreted HOF lambdas)
-      val ts = split(col("text"), " ")
-      val keepers = corpus.select(col("doc_id"), col("source"), col("text"),
-          size(ts).cast("bigint").as("n_tokens"),
-          Text.gopherSumLen, Text.gopherNAlpha, Text.gopherNStop)
-        .filter(col("n_tokens").between(30, 100000) &&
-          expr("(1000000 * sum_len) div n_tokens").between(3000000, 10000000) &&
-          expr("(1000000 * n_alpha) div n_tokens") >= 800000 &&
-          col("n_stop") >= 2)
+      val corpus = Text.withCopies(docs(s, d), ComponentPlants, carry = Seq("source"))
+      // stage 1: Gopher rules (gopher_filter's thresholds; the metrics
+      // are the shared codegen'd whole-string expressions — see
+      // Text.gopherSumLen — so every lineage re-pass over keepers pays
+      // compiled regex scans instead of interpreted HOF lambdas)
+      val keepers = corpus.select(Seq(col("doc_id"), col("source"), col("text")) ++
+          Text.gopherMetrics: _*)
+        .filter(col("n_tokens").between(GopherWords._1, GopherWords._2) &&
+          expr("(1000000 * sum_len) div n_tokens")
+            .between(GopherMeanLenMicro._1, GopherMeanLenMicro._2) &&
+          expr("(1000000 * n_alpha) div n_tokens") >= GopherAlphaMicro &&
+          col("n_stop") >= GopherMinStop)
         .select(col("doc_id"), col("source"), col("text"), col("n_tokens"))
       // ONE pass over the keeper texts computes EVERY downstream proxy
       // (guide §8: decide with small rows, move/scan big rows once):
@@ -1039,42 +1023,22 @@ object Pipeline {
       val exact = exactStarEdgesKeyed(meta.select(col("doc_id"), col("k")))
       val (labels, _, _) = componentLabels(meta.select(col("doc_id")),
         pre = Some((hs, Text.minhashBands(hs), exact)))
-      // cached (flag-gated): the mix stage reads survivors THREE times
-      // per action — the broadcast(tot) job, the broadcast(rates) job,
-      // and the final sampled/packed chain — and each read otherwise
-      // re-evaluates the meta-checkpoint ⋈ labels join (r22 profile:
-      // two extra ~0.6 s broadcast-subtree jobs per run at sf0.1).
-      // Small rows: (doc_id, source, n_tokens) for the survivor set.
-      val survivors = maybePlanCache(meta.join(
+      // cached: the mix stage reads survivors THREE times per action —
+      // the broadcast(tot) job, the broadcast(rates) job, and the final
+      // sampled/packed chain — and each read otherwise re-evaluates the
+      // meta-checkpoint ⋈ labels join (r22 profile: two extra ~0.6 s
+      // broadcast-subtree jobs per run at sf0.1). Small rows:
+      // (doc_id, source, n_tokens) for the survivor set.
+      val survivors = meta.join(
         labels.filter(col("id") === col("lbl")).select(col("id").as("doc_id")),
         Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("n_tokens")))
+        .select(col("doc_id"), col("source"), col("n_tokens")).cache()
       // stage 3: temperature mix over the survivor population (the
       // corpus_mix arithmetic, rates computed FROM the survivors)
-      val perSrc = survivors.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).cast("bigint").as("src_tokens"))
-        .withColumn("w_milli", floor(sqrt(col("src_tokens")) * 1000 + 0.5).cast("bigint"))
-        .withColumn("pd_micro",
-          floor(lit(1000000.0) * col("w_milli") / col("src_tokens") + 0.5).cast("bigint"))
-      val tot = perSrc.agg(sum(col("n_docs") * col("pd_micro")).as("w_total"))
-      val rates = perSrc.crossJoin(broadcast(tot))
-        .withColumn("rate_micro",
-          least(lit(1000000L),
-            expr(s"(1000000L * $MixTarget * pd_micro + w_total div 2) div w_total")))
+      val rates = mixRates(withPdMicro(perSource(survivors, col("n_tokens")), "src_tokens"))
         .select(col("source"), col("rate_micro"))
-      val sampled = survivors
-        .join(broadcast(rates), Seq("source"))
-        .filter(h32Seeded(lit("mix"), col("doc_id")) % 1000000 < col("rate_micro"))
       // stage 4: pack the sampled docs into 256-token sequences
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      sampled
-        .withColumn("pack_id",
-          floor((sum(col("n_tokens")).over(w) - col("n_tokens")) / 256.0).cast("bigint"))
-        .groupBy(col("source"), col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        .orderBy(col("source"), col("pack_id"))
+      packSequences(sampleAtRate(survivors, rates, "mix"))
     },
 
     // ---- token-budget sequence packing ---------------------------------
@@ -1085,29 +1049,12 @@ object Pipeline {
     // later pack; budget overflow is bounded by one doc (standard for
     // streaming packers). Deterministic, integer-only.
     sql("pack_sequences",
-      """WITH sized AS (
-        |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens
-        |  FROM documents),
-        |packed AS (
-        |  SELECT source, doc_id, n_tokens,
-        |         CAST(floor((sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |               - n_tokens) / 256.0) AS BIGINT) AS pack_id
-        |  FROM sized)
-        |SELECT source, pack_id, count(*) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-        |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM packed GROUP BY source, pack_id ORDER BY source, pack_id""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      docs(s, d)
-        .select(col("source"), col("doc_id"), size(tokens).cast("bigint").as("n_tokens"))
-        .withColumn("pack_id",
-          floor((sum(col("n_tokens")).over(w) - col("n_tokens")) / 256.0).cast("bigint"))
-        .groupBy(col("source"), col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        .orderBy(col("source"), col("pack_id"))
+      s"""WITH sized AS (
+         |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens
+         |  FROM documents),
+         |${packSql("sized")}""".stripMargin) { (s, d) =>
+      packSequences(docs(s, d)
+        .select(col("source"), col("doc_id"), size(tokens).cast("bigint").as("n_tokens")))
     },
 
     // ---- overlapping context-window chunking ---------------------------
@@ -1161,51 +1108,14 @@ object Pipeline {
       s"""WITH per_src AS (
          |  SELECT source, count(*) AS n_docs,
          |         CAST(sum(len(${D.toks})) AS BIGINT) AS src_tokens,
-         |         CAST(floor(sqrt(CAST(sum(len(${D.toks})) AS BIGINT)) * 1000 + 0.5) AS BIGINT) AS w_milli
+         |         ${wMilliSql(s"sum(len(${D.toks}))")} AS w_milli
          |  FROM documents GROUP BY source),
-         |pd AS (
-         |  SELECT source, n_docs, src_tokens,
-         |         CAST(floor(1000000.0 * w_milli / src_tokens + 0.5) AS BIGINT) AS pd_micro
-         |  FROM per_src),
-         |tot AS (SELECT CAST(sum(n_docs * pd_micro) AS BIGINT) AS w_total FROM pd),
-         |rates AS (
-         |  SELECT source, n_docs, src_tokens,
-         |         CAST(least(1000000,
-         |           (1000000 * $MixTarget * pd_micro + w_total // 2) // w_total) AS BIGINT) AS rate_micro
-         |  FROM pd, tot),
-         |picked AS (
-         |  SELECT d.source, count(*) AS n_sampled
-         |  FROM documents d JOIN rates r ON d.source = r.source
-         |  WHERE ${D.h32s("'mix'", "CAST(d.doc_id AS VARCHAR)")} % 1000000 < r.rate_micro
-         |  GROUP BY d.source)
-         |SELECT r.source, r.n_docs, r.src_tokens, r.rate_micro,
-         |       coalesce(p.n_sampled, 0) AS n_sampled
-         |FROM rates r LEFT JOIN picked p ON r.source = p.source
-         |ORDER BY r.source""".stripMargin) { (s, d) =>
-      val perSrc = docs(s, d)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(size(tokens)).cast("bigint").as("src_tokens"))
-        .withColumn("w_milli", floor(sqrt(col("src_tokens")) * 1000 + 0.5).cast("bigint"))
-        // per-doc weight in micro-units: w_milli / src_tokens ∝ tokens^(-1/2)
-        .withColumn("pd_micro",
-          floor(lit(1000000.0) * col("w_milli") / col("src_tokens") + 0.5).cast("bigint"))
-      val tot = perSrc.agg(sum(col("n_docs") * col("pd_micro")).as("w_total"))
-      val rates = perSrc.crossJoin(broadcast(tot))
-        // rate_micro = round(1e6 * MixTarget * pd_micro / w_total), all
-        // BIGINT (max ~2e8 * pd_micro ≪ 2^63): expected sample size is
-        // Σ n_docs·rate/1e6 = MixTarget by construction
-        .withColumn("rate_micro",
-          least(lit(1000000L),
-            expr(s"(1000000L * $MixTarget * pd_micro + w_total div 2) div w_total")))
+         |${mixRatesSql("per_src", "src_tokens", "source, n_docs, src_tokens",
+              "source, n_docs, src_tokens")},
+         |${sampledCountsSql("mix", "r.source, r.n_docs, r.src_tokens, r.rate_micro")}""".stripMargin) { (s, d) =>
+      val rates = mixRates(withPdMicro(perSource(docs(s, d), size(tokens)), "src_tokens"))
         .select(col("source"), col("n_docs"), col("src_tokens"), col("rate_micro"))
-      val picked = docs(s, d)
-        .join(broadcast(rates.select(col("source"), col("rate_micro"))), Seq("source"))
-        .filter(h32Seeded(lit("mix"), col("doc_id")) % 1000000 < col("rate_micro"))
-        .groupBy(col("source")).agg(count(lit(1)).as("n_sampled"))
-      rates.join(picked, Seq("source"), "left")
-        .select(col("source"), col("n_docs"), col("src_tokens"), col("rate_micro"),
-          coalesce(col("n_sampled"), lit(0L)).as("n_sampled"))
-        .orderBy(col("source"))
+      sampledCounts(docs(s, d), rates, "mix")
     },
 
     // ---- per-source epoch plan for a token budget ----------------------
@@ -1223,7 +1133,7 @@ object Pipeline {
       s"""WITH per_src AS (
          |  SELECT source, count(*) AS n_docs,
          |         CAST(sum(len(${D.toks})) AS BIGINT) AS src_tokens,
-         |         CAST(floor(sqrt(CAST(sum(len(${D.toks})) AS BIGINT)) * 1000 + 0.5) AS BIGINT) AS w_milli
+         |         ${wMilliSql(s"sum(len(${D.toks}))")} AS w_milli
          |  FROM documents GROUP BY source),
          |tot AS (SELECT CAST(sum(w_milli) AS BIGINT) AS w_total FROM per_src),
          |planned AS (
@@ -1236,10 +1146,8 @@ object Pipeline {
          |       (src_tokens * least($EpochCapMilli,
          |             (1000 * target_tokens + src_tokens // 2) // src_tokens) + 500) // 1000 AS planned_tokens
          |FROM planned ORDER BY source""".stripMargin) { (s, d) =>
-      val perSrc = docs(s, d)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(size(tokens)).cast("bigint").as("src_tokens"))
-        .withColumn("w_milli", floor(sqrt(col("src_tokens")) * 1000 + 0.5).cast("bigint"))
+      val perSrc = perSource(docs(s, d), size(tokens))
+        .withColumn("w_milli", wMilli(col("src_tokens")))
       val tot = perSrc.agg(sum(col("w_milli")).as("w_total"))
       perSrc.crossJoin(broadcast(tot))
         .withColumn("target_tokens",

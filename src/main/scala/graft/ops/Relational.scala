@@ -105,13 +105,13 @@ object Relational {
     // activity must age every user's recency (round-13 review: the
     // purchase-filtered anchor silently diverged from the oracle's)
     val mx = events.agg(max(col("ts")).as("m"))
-    val u = maybePlanCache(ev.groupBy(col("user_id"))
+    val u = ev.groupBy(col("user_id"))
       .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("freq"),
         sum(floor(col("value") * 100 + 0.5)).cast("bigint").as("cents"))
       .crossJoin(broadcast(mx))
       .select(col("user_id"),
         datediff(col("m"), col("last_ts")).cast("bigint").as("rec"),
-        col("freq"), col("cents"), expr("cents div 1000").as("mc")))
+        col("freq"), col("cents"), expr("cents div 1000").as("mc")).cache()
     // tercile thresholds for one metric — the shared quantize-then-rank
     // helper (graft.ops.tercileCuts, also quality_buckets' path)
     def th(vcol: String, alias: String): DataFrame =
@@ -873,11 +873,11 @@ object Relational {
       val bridge = partsuppBridge(Tables.lineitem(s, d)
         .join(parts.select(col("p_partkey")),
           col("p_partkey") === col("l_partkey"), "left_semi"))
-      val cand = maybePlanCache(bridge
+      val cand = bridge
         .join(parts, col("p_partkey") === col("ps_partkey"))
         .join(sup, col("s_suppkey") === col("ps_suppkey"))
         .select(col("p_partkey"), col("p_name"), col("s_name"), col("s_acctbal"),
-          col("n_name"), col("ps_cost_cents")))
+          col("n_name"), col("ps_cost_cents")).cache()
       val mn = cand.groupBy(col("p_partkey").as("mpk"))
         .agg(min(col("ps_cost_cents")).as("min_cents"))
       cand.join(mn,
@@ -913,8 +913,8 @@ object Relational {
         |ORDER BY 1, 2 DESC""".stripMargin) { (s, d) =>
       val bolt = Tables.part(s, d).filter(col("p_name").like("%bolt%"))
         .select(col("p_partkey"))
-      val li = maybePlanCache(Tables.lineitem(s, d)
-        .join(bolt, col("p_partkey") === col("l_partkey"), "left_semi"))
+      val li = Tables.lineitem(s, d)
+        .join(bolt, col("p_partkey") === col("l_partkey"), "left_semi").cache()
       li.join(partsuppBridge(li),
           col("ps_partkey") === col("l_partkey") &&
             col("ps_suppkey") === col("l_suppkey"))
@@ -962,10 +962,10 @@ object Relational {
         .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
           col("r_regionkey") === col("n_regionkey"))
         .select(col("s_suppkey"))
-      val pv = maybePlanCache(partsuppBridge(Tables.lineitem(s, d)
+      val pv = partsuppBridge(Tables.lineitem(s, d)
           .join(sup, col("s_suppkey") === col("l_suppkey"), "left_semi"))
         .groupBy(col("ps_partkey"))
-        .agg(sum(col("ps_cost_cents") * col("ps_availqty")).as("value_cents")))
+        .agg(sum(col("ps_cost_cents") * col("ps_availqty")).as("value_cents")).cache()
       val tot = pv.agg(sum(col("value_cents")).as("total_cents"),
         count(lit(1)).as("n_parts"))
       pv.crossJoin(broadcast(tot))
@@ -1060,8 +1060,8 @@ object Relational {
         |ORDER BY s_name""".stripMargin) { (s, d) =>
       val sm = Tables.part(s, d).filter(col("p_name").like("small %"))
         .select(col("p_partkey"))
-      val li = maybePlanCache(Tables.lineitem(s, d)
-        .join(sm, col("p_partkey") === col("l_partkey"), "left_semi"))
+      val li = Tables.lineitem(s, d)
+        .join(sm, col("p_partkey") === col("l_partkey"), "left_semi").cache()
       val q98 = li
         .filter(col("l_shipdate") >= lit("1998-01-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1999-01-01 00:00:00").cast("timestamp"))

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** LLM-training-data text operators over the `documents` table
   * (SURVEY §2.10): exact + near dedup (MinHash/LSH, SimHash, n-gram
@@ -29,32 +28,33 @@ object Text {
 
   // ---- shared building blocks -------------------------------------------
 
-  /** documents spread across the cluster (tiny single-file scan would
-    * otherwise serialize all hashing on one core — see ops.spread). */
-  private def docs(s: SparkSession, d: String): DataFrame =
-    graft.ops.spread(Tables.documents(s, d))
-
-  /** Tokens of `text` (single-space-joined corpus, FIXTURES.md). */
-  private def tokens: Column = split(col("text"), " ")
-
-  /** Documents plus exact-duplicate plants: same text, doc_id+10000.
-    * DuckDB twin: `SELECT ... UNION ALL SELECT doc_id+10000, ... `.
+  /** `df`'s rows planted again at doc_id + `offset`: an exact copy, or
+    * (`truncate`) a near-copy with the last token dropped, which shares
+    * all but two 3-shingles with its original. These are the
+    * deterministic duplicates the dedup keys must find: exact copies at
+    * +10000/+30000/+50000, truncations at +20000/+40000/+60000. `carry`
+    * columns ride between doc_id and text. DuckDB twin: [[D.copyAt]].
     */
-  private def withExactDupes(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text"))
-      .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"), col("text")))
+  private[graft] def copyAt(df: DataFrame, offset: Int, truncate: Boolean = false,
+      carry: Seq[String] = Nil): DataFrame =
+    df.select(((col("doc_id") + offset).as("doc_id") +: carry.map(col)) :+
+      (if (truncate) array_join(slice(tokens, lit(1), size(tokens) - 1), " ").as("text")
+       else col("text")): _*)
 
-  /** Documents plus near-duplicate plants: last token dropped,
-    * doc_id+20000. A (orig, truncated) pair shares all but two
-    * 3-shingles → Jaccard well above any sane near-dup threshold.
+  /** `df`'s (doc_id, carry…, text) rows plus one [[copyAt]] per
+    * (offset, truncate) plant. DuckDB twin: [[D.withCopies]].
     */
-  private def withNearDupes(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), col("text"))
-    val truncated = docs.select(
-      (col("doc_id") + 20000).as("doc_id"),
-      array_join(slice(tokens, lit(1), size(tokens) - 1), " ").as("text"))
-    base.unionByName(truncated)
-  }
+  private[graft] def withCopies(df: DataFrame, plants: Seq[(Int, Boolean)],
+      carry: Seq[String] = Nil): DataFrame =
+    plants.foldLeft(df.select((col("doc_id") +: carry.map(col)) :+ col("text"): _*)) {
+      case (acc, (offset, truncate)) => acc.unionByName(copyAt(df, offset, truncate, carry))
+    }
+
+  /** Jaccard similarity of two hash-set columns. DuckDB twin:
+    * [[D.jaccard]].
+    */
+  private[graft] def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
   /** 3-token shingles, distinct, as an array column (needs ≥3 tokens).
     * DuckDB twin: list_distinct(list_transform(range(1, len-1),
@@ -70,8 +70,11 @@ object Text {
         i => array_join(slice(toksCol, i, lit(3)), " "))))
       .otherwise(array().cast("array<string>"))
 
-  // DuckDB SQL fragments shared by several oracles.
-  private object D {
+  /** DuckDB fragments of the text and pipeline oracles: the SQL twin of
+    * each shared Spark stage, written once. A fragment that opens a CTE
+    * body starts on a new line, so `x AS (${...})` keeps `(` a token.
+    */
+  private[ops] object D {
     /** md5-derived 32-bit hash of an expression — twin of ops.h32. */
     def h32(x: String): String =
       s"('0x' || substr(md5($x), 1, 8))::BIGINT"
@@ -79,19 +82,45 @@ object Text {
     def h32s(seed: String, x: String): String =
       s"('0x' || substr(md5($seed || ':' || $x), 1, 8))::BIGINT"
     val toks = "string_split(text, ' ')"
-    /** corrupted corpora (twins of withExactDupes / withNearDupes) */
-    val exactDupes =
-      """SELECT doc_id, text FROM documents
-        |UNION ALL SELECT doc_id + 10000, text FROM documents""".stripMargin
-    val nearDupes =
-      s"""SELECT doc_id, text FROM documents
-         |UNION ALL
-         |SELECT doc_id + 20000,
-         |       array_to_string(($toks)[1:len($toks)-1], ' ')
-         |FROM documents""".stripMargin
+    val stopwords: String = enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+    /** Twin of [[Text.copyAt]]: `from`'s rows planted at doc_id + `offset`. */
+    def copyAt(offset: Int, from: String, truncate: Boolean = false,
+        carry: String = ""): String = {
+      val text = if (truncate) s"array_to_string(($toks)[1:len($toks)-1], ' ')" else "text"
+      s"SELECT doc_id + $offset, $carry$text FROM $from"
+    }
+    /** Twin of [[Text.withCopies]]; `carry` is a column prefix ("source, "). */
+    def withCopies(from: String, plants: Seq[(Int, Boolean)], carry: String = ""): String =
+      (s"SELECT doc_id, ${carry}text FROM $from" +: plants.map { case (o, t) =>
+        copyAt(o, from, t, carry) }).mkString("\n  UNION ALL ")
     val shingles =
       s"list_distinct(list_transform(range(1, len($toks) - 1), " +
         s"i -> array_to_string(($toks)[i:i+2], ' ')))"
+    /** Twin of [[Text.hsCol]]: the distinct shingle-hash set of `text`. */
+    val hs = s"list_distinct(list_transform($shingles, x -> ${h32("x")}))"
+    /** Twin of [[Text.minhashBands]]: (doc_id, b, bkey) over the `hs`
+      * column of relation `rel`.
+      */
+    def bands(rel: String): String = {
+      val mixes = minhashMix.map { case (a, b) =>
+        s"list_min(list_transform(hs, h -> (h * $a + $b) % $minhashP))"
+      }.mkString("[", ",\n   ", "]")
+      s"""
+         |  SELECT s.doc_id, b,
+         |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
+         |  FROM (SELECT doc_id, $mixes AS sig FROM $rel) s, range(0, 4) t(b)""".stripMargin
+    }
+    /** Twin of [[Text.jaccard]]. */
+    def jaccard(a: String, b: String): String =
+      s"len(list_intersect($a, $b))::DOUBLE / len(list_distinct(list_concat($a, $b)))"
+    /** Per-doc Gopher metrics over token list `ts` — twin of
+      * [[Text.gopherMetrics]] (the list_* forms, see gopherSumLen).
+      */
+    def gopherMetrics(ts: String): String =
+      s"""len($ts)::BIGINT AS n_tokens,
+         |    list_sum(list_transform($ts, w -> len(w)))::BIGINT AS sum_len,
+         |    len(list_filter($ts, w -> regexp_matches(w, '[a-z]')))::BIGINT AS n_alpha,
+         |    len(list_filter($ts, w -> list_contains($stopwords, w)))::BIGINT AS n_stop""".stripMargin
   }
 
   /** Fixed marker-token profiles for the language-ID heuristic. The
@@ -201,7 +230,7 @@ object Text {
   //    the whole-token equality hits; the lookahead consumes nothing,
   //    so consecutive stopwords each anchor on their own delimiter.
   private[graft] def gopherSumLen: org.apache.spark.sql.Column =
-    (length(col("text")) - size(split(col("text"), " ")) + 1)
+    (length(col("text")) - size(tokens) + 1)
       .cast("bigint").as("sum_len")
   private[graft] def gopherNAlpha: org.apache.spark.sql.Column =
     regexp_count(col("text"), lit("(?:^| )[^ a-z]*[a-z]"))
@@ -211,13 +240,28 @@ object Text {
         lit(enStopwords.mkString("(?:^| )(?:", "|", ")(?= |$)")))
       .cast("bigint").as("n_stop")
 
+  /** Per-doc Gopher metrics: n_tokens, sum_len, n_alpha, n_stop.
+    * DuckDB twin: [[D.gopherMetrics]].
+    */
+  private[graft] def gopherMetrics: Seq[Column] =
+    Seq(size(tokens).cast("bigint").as("n_tokens"), gopherSumLen, gopherNAlpha, gopherNStop)
+
+  /** The four Gopher rules' thresholds, shared by gopher_filter and
+    * pipeline_e2e on both engines: word count, mean word length and
+    * alphabetic-token fraction (both micro-units), stopword count.
+    */
+  private[graft] val GopherWords = (30, 100000)
+  private[graft] val GopherMeanLenMicro = (3000000, 10000000)
+  private[graft] val GopherAlphaMicro = 800000
+  private[graft] val GopherMinStop = 2
+
   /** The quality_score signal factored as one expression so
     * `quality_buckets` (Pipeline) buckets on the IDENTICAL doubles —
     * operator and bucketing key cannot drift apart. TextOpsSpec pins
     * this equal to quality_score's `quality_micro` per doc.
     */
   private[graft] def qualityMicroCol: org.apache.spark.sql.Column = {
-    val tk = split(col("text"), " ")
+    val tk = tokens
     val sw = array(enStopwords.map(lit): _*)
     val uniq = size(array_distinct(tk)).cast("double") / size(tk)
     val stop = size(filter(tk, t => array_contains(sw, t))).cast("double") / size(tk)
@@ -231,7 +275,7 @@ object Text {
     * q_micro FROM documents` usable as a CTE body.
     */
   private[graft] def qualityMicroSql: String = {
-    val sw = enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+    val sw = D.stopwords
     s"""SELECT doc_id,
        |  CAST(floor((0.5 * (len(list_distinct(string_split(text, ' ')))::DOUBLE
        |                     / len(string_split(text, ' ')))
@@ -327,35 +371,23 @@ object Text {
     * key must produce byte-identical output to the recomputing one.
     */
   private val incrementalOracle: String = {
-    val mixes = minhashMix.map { case (a, b) =>
-      s"list_min(list_transform(hs, h -> (h * $a + $b) % $minhashP))"
-    }.mkString("[", ",\n   ", "]")
-    val hsExpr = s"list_distinct(list_transform(${D.shingles}, x -> ${D.h32("x")}))"
-    s"""WITH old_docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
+    val old = "documents WHERE doc_id < 250"
+    s"""WITH old_docs AS (SELECT doc_id, text FROM $old),
        |new_batch AS (
        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-       |  UNION ALL SELECT doc_id + 30000, text FROM documents WHERE doc_id < 250
-       |  UNION ALL SELECT doc_id + 40000,
-       |         array_to_string((${D.toks})[1:len(${D.toks})-1], ' ')
-       |  FROM documents WHERE doc_id < 250),
-       |old_hs AS (SELECT doc_id, text, $hsExpr AS hs FROM old_docs),
-       |new_hs AS (SELECT doc_id, text, $hsExpr AS hs FROM new_batch),
-       |old_bands AS (
-       |  SELECT s.doc_id, b,
-       |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-       |  FROM (SELECT doc_id, $mixes AS sig FROM old_hs) s, range(0, 4) t(b)),
-       |new_bands AS (
-       |  SELECT s.doc_id, b,
-       |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-       |  FROM (SELECT doc_id, $mixes AS sig FROM new_hs) s, range(0, 4) t(b)),
+       |  UNION ALL ${D.copyAt(30000, old)}
+       |  UNION ALL ${D.copyAt(40000, old, truncate = true)}),
+       |old_hs AS (SELECT doc_id, text, ${D.hs} AS hs FROM old_docs),
+       |new_hs AS (SELECT doc_id, text, ${D.hs} AS hs FROM new_batch),
+       |old_bands AS (${D.bands("old_hs")}),
+       |new_bands AS (${D.bands("new_hs")}),
        |near_dup AS (
        |  SELECT DISTINCT n.doc_id
        |  FROM new_bands n
        |  JOIN old_bands o ON n.b = o.b AND n.bkey = o.bkey
        |  JOIN new_hs nh ON nh.doc_id = n.doc_id
        |  JOIN old_hs oh ON oh.doc_id = o.doc_id
-       |  WHERE len(list_intersect(nh.hs, oh.hs))::DOUBLE
-       |        / len(list_distinct(list_concat(nh.hs, oh.hs))) >= 0.5),
+       |  WHERE ${D.jaccard("nh.hs", "oh.hs")} >= 0.5),
        |exact_dup AS (
        |  SELECT DISTINCT n.doc_id FROM new_batch n JOIN old_docs o ON n.text = o.text),
        |batch_keep AS (SELECT min(doc_id) AS doc_id FROM new_batch GROUP BY text)
@@ -370,21 +402,22 @@ object Text {
     * old doc re-arrives as an exact copy (+30000) and a truncated
     * near-copy (+40000), plus the genuinely new half of the corpus.
     */
-  private def incrementalNewBatch(base: DataFrame, old: DataFrame): DataFrame =
+  private[graft] def incrementalNewBatch(base: DataFrame, old: DataFrame): DataFrame =
     base.filter(col("doc_id") >= 250)
-      .unionByName(old.select((col("doc_id") + 30000).as("doc_id"), col("text")))
-      .unionByName(old.select((col("doc_id") + 40000).as("doc_id"),
-        array_join(slice(tokens, lit(1), size(tokens) - 1), " ").as("text")))
+      .unionByName(copyAt(old, 30000))
+      .unionByName(copyAt(old, 40000, truncate = true))
 
-  /** Dedup `newBatch` against an old corpus given as (texts, hs,
-    * bands) — shared by the recomputing and indexed keys; only WHERE
-    * the old side comes from differs.
+  /** The (doc_id, text) rows of `newBatch` that survive dedup against an
+    * old corpus given as (texts, hs, bands): the min doc_id per text
+    * within the batch, minus exact copies of an old text, minus
+    * near-copies (a shared MinHash band, Jaccard ≥ 0.5) of an old doc.
+    * new×old only — never old×old. ONE body behind the recomputing and
+    * indexed keys and the streaming index (DedupStream); only where the
+    * old side comes from differs, and each caller decides whether to
+    * cache `newHs` (it feeds the band build and the verify join).
     */
-  private def incrementalDedup(newBatch: DataFrame, oldTexts: DataFrame,
-      oldHs: DataFrame, oldBands: DataFrame): DataFrame = {
-    val newHs = shingleHashes(newBatch).cache(); newHs.count()
-    val jac = size(array_intersect(col("nh.hs"), col("oh.hs"))).cast("double") /
-      size(array_union(col("nh.hs"), col("oh.hs")))
+  private[graft] def incrementalSurvivors(newBatch: DataFrame, newHs: DataFrame,
+      oldTexts: DataFrame, oldHs: DataFrame, oldBands: DataFrame): DataFrame = {
     val nearDup = minhashBands(newHs).as("n")
       .join(oldBands.as("o"),
         col("n.b") === col("o.b") && col("n.bkey") === col("o.bkey"))
@@ -392,7 +425,7 @@ object Text {
       .distinct()
       .join(newHs.as("nh"), col("nh.doc_id") === col("new_id"))
       .join(oldHs.as("oh"), col("oh.doc_id") === col("old_id"))
-      .filter(jac >= 0.5)
+      .filter(jaccard(col("nh.hs"), col("oh.hs")) >= 0.5)
       .select(col("new_id").as("doc_id"))
       .distinct()
     val batchKeep = newBatch.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
@@ -400,6 +433,15 @@ object Text {
       .join(batchKeep.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .join(oldTexts.select(col("text")), Seq("text"), "left_anti") // exact vs corpus
       .join(nearDup, Seq("doc_id"), "left_anti")                    // near vs corpus
+  }
+
+  /** [[incrementalSurvivors]] for the two batch keys: the new batch's
+    * hs cached, the surviving ids in order.
+    */
+  private def incrementalDedup(newBatch: DataFrame, oldTexts: DataFrame,
+      oldHs: DataFrame, oldBands: DataFrame): DataFrame = {
+    val newHs = shingleHashes(newBatch).cache(); newHs.count()
+    incrementalSurvivors(newBatch, newHs, oldTexts, oldHs, oldBands)
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
   }
@@ -445,17 +487,17 @@ object Text {
     * construction — rep rows ARE the distinct grams in ≥2 docs).
     */
   private[graft] def spanDedupCleanParts(docsDf: DataFrame): (DataFrame, DataFrame) = {
-    val ts = split(col("text"), " ")
+    val ts = tokens
     val toks = docsDf.select(col("doc_id"), ts.as("ts"), size(ts).as("n"))
     // wins feeds BOTH the rep aggregate and the drops join probe —
-    // cache (flag-gated) or the corpus-wide window explode runs twice
-    // per action (review finding)
-    val wins = maybePlanCache(toks.filter(col("n") >= 8)
+    // cached, or the corpus-wide window explode runs twice per action
+    // (review finding)
+    val wins = toks.filter(col("n") >= 8)
       .select(col("doc_id"),
         explode(transform(sequence(lit(1), col("n") - 7),
           i => struct(i.as("i"),
             array_join(slice(col("ts"), i, lit(8)), " ").as("gram")))).as("w"))
-      .select(col("doc_id"), col("w.i").as("i"), col("w.gram").as("gram")))
+      .select(col("doc_id"), col("w.i").as("i"), col("w.gram").as("gram")).cache()
     val rep = wins.groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("nd"),
         min(col("doc_id") * 1000000L + col("i")).as("canon"))
@@ -581,11 +623,11 @@ object Text {
     // and only compare texts inside a bucket; with md5-grouping the
     // direct groupBy(text) is the same shuffle with a wider key.
     sql("dedup_exact",
-      s"""WITH corpus AS (${D.exactDupes})
+      s"""WITH corpus AS (${D.withCopies("documents", Seq(10000 -> false))})
          |SELECT min(doc_id) AS doc_id, count(*) AS n_copies,
          |       len(string_split(text, ' ')) AS n_tokens
          |FROM corpus GROUP BY text ORDER BY doc_id""".stripMargin) { (s, d) =>
-      withExactDupes(docs(s, d))
+      withCopies(docs(s, d), Seq(10000 -> false))
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"),
           size(tokens).cast("bigint").as("n_tokens"))
@@ -661,7 +703,7 @@ object Text {
 
     // ---- text normalization / stopword removal -------------------------
     sql("text_clean", {
-      val sw = enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+      val sw = D.stopwords
       s"""SELECT doc_id,
          | array_to_string(list_filter(string_split(lower(text), ' '),
          |                             t -> NOT list_contains($sw, t)), ' ') AS clean,
@@ -715,7 +757,7 @@ object Text {
 
     // ---- quality scoring ------------------------------------------------
     sql("quality_score", {
-      val sw = enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+      val sw = D.stopwords
       s"""SELECT doc_id,
          | n_tokens,
          | floor(uniq_ratio * 1000000 + 0.5) / 1000000 AS uniq_ratio,
@@ -783,7 +825,7 @@ object Text {
         |  CAST((1000000 * sum(hit)) // count(*) AS BIGINT) AS span_frac_micro,
         |  (1000000 * sum(hit)) // count(*) > 500000 AS flagged
         |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val ts = split(col("text"), " ")
+      val ts = tokens
       val grams = docs(s, d)
         .filter(size(ts) >= 8)
         .select(col("doc_id"),
@@ -844,9 +886,9 @@ object Text {
          |  (SELECT sum(n_tokens - n_dropped) FROM cleaned)::BIGINT AS tokens_after
          |""".stripMargin) { (s, d) =>
       // cleaned feeds the repAfter re-window AND the totals aggregate —
-      // cache (flag-gated) so the full clean pipeline runs once
+      // cached so the full clean pipeline runs once
       val (cleanedRaw, rep) = spanDedupCleanParts(docs(s, d))
-      val cleaned = maybePlanCache(cleanedRaw)
+      val cleaned = cleanedRaw.cache()
       // n_rep_before = |rep|: the clean's OWN repeated-gram set (its
       // window explode is already cached inside spanDedupCleanParts),
       // equal by construction to spanRepGramCount over the raw corpus
@@ -870,42 +912,32 @@ object Text {
     // Pure projection per doc — no explode, no shuffle, codegen
     // end-to-end; the only exchange is the output sort.
     sql("gopher_filter", {
-      val sw = enStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+      val reason =
+        s"""CASE WHEN n_tokens NOT BETWEEN ${GopherWords._1} AND ${GopherWords._2} THEN 'word_count'
+           |       WHEN (1000000 * sum_len) // n_tokens NOT BETWEEN ${GopherMeanLenMicro._1} AND ${GopherMeanLenMicro._2}
+           |         THEN 'mean_word_len'
+           |       WHEN (1000000 * n_alpha) // n_tokens < $GopherAlphaMicro THEN 'alpha_ratio'
+           |       WHEN n_stop < $GopherMinStop THEN 'stopwords'
+           |       ELSE 'ok' END""".stripMargin
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
          |m AS (
          |  SELECT doc_id,
-         |    len(ts)::BIGINT AS n_tokens,
-         |    list_sum(list_transform(ts, w -> len(w)))::BIGINT AS sum_len,
-         |    len(list_filter(ts, w -> regexp_matches(w, '[a-z]')))::BIGINT AS n_alpha,
-         |    len(list_filter(ts, w -> list_contains($sw, w)))::BIGINT AS n_stop
+         |    ${D.gopherMetrics("ts")}
          |  FROM t)
          |SELECT doc_id, n_tokens,
          |  CAST((1000000 * sum_len) // n_tokens AS BIGINT) AS mean_len_micro,
          |  CAST((1000000 * n_alpha) // n_tokens AS BIGINT) AS alpha_frac_micro,
          |  n_stop AS n_stopwords,
-         |  CASE WHEN n_tokens NOT BETWEEN 30 AND 100000 THEN 'word_count'
-         |       WHEN (1000000 * sum_len) // n_tokens NOT BETWEEN 3000000 AND 10000000
-         |         THEN 'mean_word_len'
-         |       WHEN (1000000 * n_alpha) // n_tokens < 800000 THEN 'alpha_ratio'
-         |       WHEN n_stop < 2 THEN 'stopwords'
-         |       ELSE 'ok' END AS reason,
-         |  (CASE WHEN n_tokens NOT BETWEEN 30 AND 100000 THEN 'word_count'
-         |        WHEN (1000000 * sum_len) // n_tokens NOT BETWEEN 3000000 AND 10000000
-         |          THEN 'mean_word_len'
-         |        WHEN (1000000 * n_alpha) // n_tokens < 800000 THEN 'alpha_ratio'
-         |        WHEN n_stop < 2 THEN 'stopwords'
-         |        ELSE 'ok' END) = 'ok' AS keep
+         |  $reason AS reason,
+         |  ($reason) = 'ok' AS keep
          |FROM m ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
-      val ts = split(col("text"), " ")
-      val m = docs(s, d).select(col("doc_id"),
-        size(ts).cast("bigint").as("n_tokens"),
-        gopherSumLen, gopherNAlpha, gopherNStop)
-      val reason = when(!col("n_tokens").between(30, 100000), "word_count")
-        .when(!expr("(1000000 * sum_len) div n_tokens").between(3000000, 10000000),
-          "mean_word_len")
-        .when(expr("(1000000 * n_alpha) div n_tokens") < 800000, "alpha_ratio")
-        .when(col("n_stop") < 2, "stopwords")
+      val m = docs(s, d).select(col("doc_id") +: gopherMetrics: _*)
+      val reason = when(!col("n_tokens").between(GopherWords._1, GopherWords._2), "word_count")
+        .when(!expr("(1000000 * sum_len) div n_tokens")
+          .between(GopherMeanLenMicro._1, GopherMeanLenMicro._2), "mean_word_len")
+        .when(expr("(1000000 * n_alpha) div n_tokens") < GopherAlphaMicro, "alpha_ratio")
+        .when(col("n_stop") < GopherMinStop, "stopwords")
         .otherwise("ok")
       m.select(col("doc_id"), col("n_tokens"),
         expr("(1000000 * sum_len) div n_tokens").as("mean_len_micro"),
@@ -945,8 +977,7 @@ object Text {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
         |  CAST(sum(rn) // count(*) AS BIGINT) AS weight_nanos
         |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val tok = docs(s, d).select(col("doc_id"), col("source"),
-        explode(split(col("text"), " ")).as("w"))
+      val tok = docs(s, d).select(col("doc_id"), col("source"), explode(tokens).as("w"))
       val raw = tok.groupBy(col("w")).agg(count(lit(1)).as("cr"))
       val tgt = tok.filter(col("source") === "src0")
         .groupBy(col("w")).agg(count(lit(1)).as("ct"))
@@ -997,7 +1028,7 @@ object Text {
         |FROM bi b JOIN pair USING (w1, w2) JOIN ctx USING (w1) CROSS JOIN v
         |GROUP BY b.doc_id
         |ORDER BY b.doc_id""".stripMargin) { (s, d) =>
-      val toks = docs(s, d).select(col("doc_id"), split(col("text"), " ").as("ts"))
+      val toks = docs(s, d).select(col("doc_id"), tokens.as("ts"))
       val bi = toks.select(col("doc_id"),
         explode(zip_with(
           slice(col("ts"), lit(1), size(col("ts")) - 1),
@@ -1059,41 +1090,28 @@ object Text {
     // cached so the band self-join and the verify join read it instead
     // of recomputing the minhash pipeline per branch. Bands explode ×4,
     // the join is keyed on (band, key) — bounded buckets, skew-safe.
-    sql("dedup_near", {
-      val mixes = Text.minhashMix.map { case (a, b) =>
-        s"list_min(list_transform(hs, h -> (h * $a + $b) % ${Text.minhashP}))"
-      }.mkString("[", ",\n   ", "]")
-      s"""WITH corpus AS (${D.nearDupes}),
+    sql("dedup_near",
+      s"""WITH corpus AS (${D.withCopies("documents", Seq(20000 -> true))}),
          |hs AS (SELECT doc_id,
-         |  list_distinct(list_transform(${D.shingles}, x -> ${D.h32("x")})) AS hs
+         |  ${D.hs} AS hs
          |  FROM corpus),
-         |sig AS (SELECT doc_id, hs,
-         |  $mixes AS sig
-         |  FROM hs),
-         |bands AS (
-         |  SELECT doc_id, b,
-         |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-         |  FROM sig, range(0, 4) t(b)),
+         |bands AS (${D.bands("hs")}),
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
          |  FROM bands a JOIN bands b2 ON a.b = b2.b AND a.bkey = b2.bkey
          |  WHERE a.doc_id < b2.doc_id)
          |SELECT doc_a, doc_b,
-         |  floor(len(list_intersect(sa.hs, sb.hs))::DOUBLE
-         |        / len(list_distinct(list_concat(sa.hs, sb.hs))) * 1000000 + 0.5) / 1000000 AS jaccard
+         |  floor(${D.jaccard("sa.hs", "sb.hs")} * 1000000 + 0.5) / 1000000 AS jaccard
          |FROM cand
          |JOIN hs sa ON sa.doc_id = doc_a
          |JOIN hs sb ON sb.doc_id = doc_b
-         |WHERE len(list_intersect(sa.hs, sb.hs))::DOUBLE
-         |      / len(list_distinct(list_concat(sa.hs, sb.hs))) >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin
-    }) { (s, d) =>
+         |WHERE ${D.jaccard("sa.hs", "sb.hs")} >= 0.5
+         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
       // Jaccard is computed in hash space (distinct md5-based shingle
       // hashes): same value as string-shingle Jaccard absent 32-bit
       // collisions, identical on both engines by construction, and the
       // set ops compare longs, not ~20-char strings.
-      val corpus = withNearDupes(docs(s, d))
-      val hsDf = shingleHashes(corpus)
+      val hsDf = shingleHashes(withCopies(docs(s, d), Seq(20000 -> true)))
         .cache() // read by band self-join (×2) and verify join (×2)
       hsDf.count() // eager cache fill: both self-join branches would otherwise race and double-compute
       val bands = minhashBands(hsDf)
@@ -1102,8 +1120,7 @@ object Text {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
         .distinct()
-      val jac = size(array_intersect(col("sa.hs"), col("sb.hs"))).cast("double") /
-        size(array_union(col("sa.hs"), col("sb.hs")))
+      val jac = jaccard(col("sa.hs"), col("sb.hs"))
       cand
         .join(hsDf.as("sa"), col("sa.doc_id") === col("doc_a"))
         .join(hsDf.as("sb"), col("sb.doc_id") === col("doc_b"))
@@ -1238,29 +1255,24 @@ object Text {
     // copy always shares it with its original) keeps the self-join
     // keyed — at 100 TB the block key is the unit of shuffle and a
     // skewed block would get salted.
-    sql("dedup_ngram", {
-      s"""WITH corpus AS (${D.nearDupes}),
+    sql("dedup_ngram",
+      s"""WITH corpus AS (${D.withCopies("documents", Seq(20000 -> true))}),
          |t AS (SELECT doc_id,
-         |             list_distinct(list_transform(${D.shingles}, x -> ${D.h32("x")})) AS sh,
+         |             ${D.hs} AS sh,
          |             array_to_string((${D.toks})[1:3], ' ') AS blk
          |      FROM corpus)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  floor(len(list_intersect(a.sh, b.sh))::DOUBLE
-         |        / len(list_distinct(list_concat(a.sh, b.sh))) * 1000000 + 0.5) / 1000000 AS jaccard
+         |  floor(${D.jaccard("a.sh", "b.sh")} * 1000000 + 0.5) / 1000000 AS jaccard
          |FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-         |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6
-         |ORDER BY doc_a, doc_b""".stripMargin
-    }) { (s, d) =>
+         |WHERE ${D.jaccard("a.sh", "b.sh")} >= 0.6
+         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
       // hash-space Jaccard, same rationale as dedup_near
-      val t = withNearDupes(docs(s, d))
-        .select(col("doc_id"),
-          array_distinct(transform(shingles3(tokens), x => h32(x))).as("sh"),
+      val t = withCopies(docs(s, d), Seq(20000 -> true))
+        .select(col("doc_id"), hsCol(col("text")).as("sh"),
           array_join(slice(tokens, 1, 3), " ").as("blk"))
         .cache() // both sides of the block self-join read this
       t.count() // eager cache fill (see dedup_near)
-      val jac = size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /
-        size(array_union(col("a.sh"), col("b.sh")))
+      val jac = jaccard(col("a.sh"), col("b.sh"))
       t.as("a").join(t.as("b"),
           col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
         .filter(jac >= 0.6)
@@ -1295,7 +1307,7 @@ object Text {
          |         array_to_string((${D.toks})[1:greatest(8, len(${D.toks}) // 2)], ' ')
          |  FROM documents),
          |t AS (SELECT doc_id,
-         |        list_distinct(list_transform(${D.shingles}, x -> ${D.h32("x")})) AS sh
+         |        ${D.hs} AS sh
          |      FROM corpus WHERE len(${D.toks}) >= 3),
          |shx AS (SELECT doc_id, unnest(sh) AS s FROM t),
          |rare AS (SELECT s FROM shx GROUP BY s HAVING count(*) <= 5),
@@ -1318,10 +1330,9 @@ object Text {
           .as("text"))
       val corpus = base.unionByName(excerpt)
       // hashed shingle sets: both the posting explode and the verify
-      // join read this — cache (flag-gated)
-      val t = maybePlanCache(corpus.filter(size(tokens) >= 3)
-        .select(col("doc_id"),
-          array_distinct(transform(shingles3(tokens), x => h32(x))).as("sh")))
+      // join read this — cached
+      val t = corpus.filter(size(tokens) >= 3)
+        .select(col("doc_id"), hsCol(col("text")).as("sh")).cache()
       val shx = t.select(col("doc_id"), explode(col("sh")).as("s"))
       val rare = shx.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 5).select(col("s"))
@@ -1507,14 +1518,13 @@ object Text {
         concat(col("text"), lit(" "),
           array_join(slice(tokens, lit(1), (size(tokens) / 2).cast("int")), " ")))
         .otherwise(col("text"))
-      val toks = split(col("text"), " ")
       // guard: sequence(1, 0) counts DOWN in Spark (1-token doc would
       // index element 0 and throw); DuckDB's range(1, 1) is empty
-      val bigrams = when(size(toks) >= 2,
-        transform(sequence(lit(1), size(toks) - 1),
-          i => concat(element_at(toks, i), lit(" "), element_at(toks, i + 1))))
+      val bigrams = when(size(tokens) >= 2,
+        transform(sequence(lit(1), size(tokens) - 1),
+          i => concat(element_at(tokens, i), lit(" "), element_at(tokens, i + 1))))
         .otherwise(array().cast("array<string>"))
-      val dupTok = lit(1.0) - size(array_distinct(toks)).cast("double") / size(toks)
+      val dupTok = lit(1.0) - size(array_distinct(tokens)).cast("double") / size(tokens)
       val dupBi = lit(1.0) -
         size(array_distinct(bigrams)).cast("double") / greatest(size(bigrams), lit(1))
       docs(s, d)
@@ -1580,7 +1590,7 @@ object Text {
       s"""WITH eval_docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
          |train_docs AS (
          |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
-         |  UNION ALL SELECT doc_id + 50000, text FROM eval_docs),
+         |  UNION ALL ${D.copyAt(50000, "eval_docs")}),
          |eg AS (SELECT doc_id AS eval_id, unnest($grams5) AS gram FROM eval_docs),
          |tg AS (SELECT doc_id, unnest($grams5) AS gram FROM train_docs)
          |SELECT t.doc_id, count(DISTINCT t.gram) AS n_shared_grams,
@@ -1588,15 +1598,11 @@ object Text {
          |FROM tg t JOIN eg e ON t.gram = e.gram
          |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
     }) { (s, d) =>
-      val base = docs(s, d).select(col("doc_id"), col("text"))
-      val evalDocs = base.filter(col("doc_id") % 50 === 0)
-      val trainDocs = base.filter(col("doc_id") % 50 =!= 0)
-        .unionByName(evalDocs.select((col("doc_id") + 50000).as("doc_id"), col("text")))
+      val (evalDocs, trainDocs) = evalTrain(s, d)
       def grams(df: org.apache.spark.sql.DataFrame) = {
-        val toks = split(col("text"), " ")
-        val g = when(size(toks) >= 5,
-          array_distinct(transform(sequence(lit(1), size(toks) - 4),
-            i => array_join(slice(toks, i, lit(5)), " "))))
+        val g = when(size(tokens) >= 5,
+          array_distinct(transform(sequence(lit(1), size(tokens) - 4),
+            i => array_join(slice(tokens, i, lit(5)), " "))))
           .otherwise(array().cast("array<string>"))
         df.select(col("doc_id"), explode(g).as("gram"))
       }
@@ -1622,28 +1628,16 @@ object Text {
     // eval side is 2% of the corpus and broadcast both times (bands +
     // hs); the train side streams through one band join — never a
     // train×eval gram blow-up, O(train) work per decontamination pass.
-    sql("decontaminate_fuzzy", {
-      val mixes = minhashMix.map { case (a, b) =>
-        s"list_min(list_transform(hs, h -> (h * $a + $b) % $minhashP))"
-      }.mkString("[", ",\n   ", "]")
-      val hsExpr = s"list_distinct(list_transform(${D.shingles}, x -> ${D.h32("x")}))"
+    sql("decontaminate_fuzzy",
       s"""WITH eval_docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
          |train_docs AS (
          |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
-         |  UNION ALL SELECT doc_id + 50000, text FROM eval_docs
-         |  UNION ALL SELECT doc_id + 60000,
-         |         array_to_string((${D.toks})[1:len(${D.toks})-1], ' ')
-         |  FROM eval_docs),
-         |ehs AS (SELECT doc_id, $hsExpr AS hs FROM eval_docs),
-         |ths AS (SELECT doc_id, $hsExpr AS hs FROM train_docs),
-         |eb AS (
-         |  SELECT s.doc_id, b,
-         |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-         |  FROM (SELECT doc_id, $mixes AS sig FROM ehs) s, range(0, 4) t(b)),
-         |tb AS (
-         |  SELECT s.doc_id, b,
-         |         sig[3*b+1]::VARCHAR || ',' || sig[3*b+2]::VARCHAR || ',' || sig[3*b+3]::VARCHAR AS bkey
-         |  FROM (SELECT doc_id, $mixes AS sig FROM ths) s, range(0, 4) t(b)),
+         |  UNION ALL ${D.copyAt(50000, "eval_docs")}
+         |  UNION ALL ${D.copyAt(60000, "eval_docs", truncate = true)}),
+         |ehs AS (SELECT doc_id, ${D.hs} AS hs FROM eval_docs),
+         |ths AS (SELECT doc_id, ${D.hs} AS hs FROM train_docs),
+         |eb AS (${D.bands("ehs")}),
+         |tb AS (${D.bands("ths")}),
          |cand AS (
          |  SELECT DISTINCT t.doc_id AS tid, e.doc_id AS eid
          |  FROM tb t JOIN eb e ON t.b = e.b AND t.bkey = e.bkey),
@@ -1659,19 +1653,13 @@ object Text {
          |             row_number() OVER (PARTITION BY tid
          |               ORDER BY jac_micro DESC, eid) AS rn
          |      FROM jac WHERE jac_micro >= 500000) x
-         |WHERE rn = 1 ORDER BY doc_id""".stripMargin
-    }) { (s, d) =>
-      val base = docs(s, d).select(col("doc_id"), col("text"))
-      val evalDocs = base.filter(col("doc_id") % 50 === 0)
-      val trainDocs = base.filter(col("doc_id") % 50 =!= 0)
-        .unionByName(evalDocs.select((col("doc_id") + 50000).as("doc_id"), col("text")))
-        .unionByName(evalDocs.select((col("doc_id") + 60000).as("doc_id"),
-          array_join(slice(tokens, lit(1), size(tokens) - 1), " ").as("text")))
+         |WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, d) =>
+      val (evalDocs, trainDocs0) = evalTrain(s, d)
+      val trainDocs = trainDocs0.unionByName(copyAt(evalDocs, 60000, truncate = true))
       // both halves are read twice (band candidates + Jaccard verify):
       // cache so train-side shingling+MinHashing runs once per pass
-      // (flag-gated — see maybePlanCache for the serve-session story)
-      val ehs = maybePlanCache(shingleHashes(evalDocs))
-      val ths = maybePlanCache(shingleHashes(trainDocs))
+      val ehs = shingleHashes(evalDocs).cache()
+      val ths = shingleHashes(trainDocs).cache()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("tid")).orderBy(col("jac_micro").desc, col("eid"))
       fuzzyPairs(ths, ehs)
@@ -1951,6 +1939,16 @@ object Text {
       }
     }
     taken.result()
+  }
+
+  /** (eval, train) split of the decontamination keys: every 50th doc is
+    * eval, the rest is train, and every eval doc leaks back into train
+    * verbatim at +50000.
+    */
+  private def evalTrain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val base = docs(s, d).select(col("doc_id"), col("text"))
+    val evalDocs = base.filter(col("doc_id") % 50 === 0)
+    (evalDocs, base.filter(col("doc_id") % 50 =!= 0).unionByName(copyAt(evalDocs, 50000)))
   }
 
   /** Banded MinHash candidates between a train corpus and a

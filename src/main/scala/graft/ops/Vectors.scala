@@ -102,12 +102,10 @@ object Vectors {
 
   // ---- Spark-side building blocks ---------------------------------------
 
-  /** embeddings/documents spread across the cluster (tiny single-file
-    * scans would serialize the per-row vector math on one core). */
+  /** embeddings spread across the cluster (a tiny single-file scan
+    * would serialize the per-row vector math on one core). */
   private def emb(s: SparkSession, d: String): DataFrame =
     graft.ops.spread(Tables.embeddings(s, d))
-  private def docs(s: SparkSession, d: String): DataFrame =
-    graft.ops.spread(Tables.documents(s, d))
 
   /** Sequential-fold dot product — the codegen'd Catalyst expression
     * (graft.functions.DotProduct), bit-identical to the HOF
@@ -116,23 +114,17 @@ object Vectors {
   private def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dotp(a, b)
 
-  /** Cache a frame both sides of an ANN join read — UNLESS
-    * `spark.graft.ann.cache=false`. At local bench scale the cache
-    * stops the two join branches racing to double-compute the
-    * bucketing; at 100 TB caching the full bucketed corpus is a
-    * no-op-or-OOM choice, so the SAME plan must be correct uncached —
-    * what it then recomputes per branch is only the map-side bucket
-    * projection (8 codegen'd hyperplane dot products per row) and the
-    * norm, never a shuffle. VectorOpsSpec asserts cached and uncached
-    * runs are identical; the flag is the knob a 100 TB deployment
-    * flips.
+  /** Cache a frame both sides of an ANN join read, filled eagerly: a
+    * lazy cache would let the two join branches race to double-compute
+    * the bucketing. A deployment too large to cache the bucketed corpus
+    * recomputes only the map-side bucket projection per branch (8
+    * codegen'd hyperplane dot products per row) — never a shuffle.
     */
-  private[graft] def maybeCache(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.ann.cache", "true").toBoolean) {
-      val c = df.cache()
-      c.count() // eager fill: lazy caching would let both branches race
-      c
-    } else df
+  private[graft] def eagerCache(df: DataFrame): DataFrame = {
+    val c = df.cache()
+    c.count()
+    c
+  }
 
   private def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -273,7 +265,7 @@ object Vectors {
     * over the streamed index run this one body.
     */
   private[graft] def searchStreamedIndex(b0: DataFrame, qBound: Int = 10): DataFrame = {
-    val b = maybeCache(b0) // feeds probe explode + candidate side
+    val b = eagerCache(b0) // feeds probe explode + candidate side
     val probeArr = array(probeMasks.map(m => col("bkt").bitwiseXOR(lit(m))): _*)
     val q = b.filter(col("vec_id") < qBound)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
@@ -314,7 +306,7 @@ object Vectors {
       norm(col("embedding")).as("nrm"), microCol(col("embedding")).as("qe"))
     val cent0 = base.filter(col("vec_id").isin(ivfCentroidIds: _*))
       .select(col("vec_id").as("cid"), col("qe").as("ce"))
-    val asg0 = maybeCache(nearest(base.join(broadcast(cent0)), Seq(col("vec_id")),
+    val asg0 = eagerCache(nearest(base.join(broadcast(cent0)), Seq(col("vec_id")),
         d2(col("qe"), col("ce")), col("cid"), "embedding", "nrm", "qe")
       .select(col("vec_id"), col("embedding"), col("nrm"), col("qe"),
         col("best.cid").as("cell")))
@@ -465,7 +457,7 @@ object Vectors {
       // the Lloyd E-step routes through the SHARED staged seed layer
       // (r17) — the same artifact the knn-graph build reads, so the
       // geometries not only use one formula, they use one LAYER
-      val cent = maybeCache(scaledLloydCent(microVecs(s, d), perCell,
+      val cent = eagerCache(scaledLloydCent(microVecs(s, d), perCell,
         seedLay = Some(seedLayer(s, d, perCell))))
       cent.coalesce(1).write.mode("overwrite").parquet(s"$stage/centroids")
       // the TWO-LEVEL routing tables, derived ONCE per geometry and
@@ -485,7 +477,7 @@ object Vectors {
       // n/125 geometry); the quantizer artifact stays self-contained —
       // downstream layout unchanged, consumers keep reading one dir
       val centDir = stagedIvfCent(s, d, ivfPerCell)
-      val cent = maybeCache(s.read.parquet(s"$centDir/centroids"))
+      val cent = eagerCache(s.read.parquet(s"$centDir/centroids"))
       cent.coalesce(1).write.mode("overwrite").parquet(s"$stage/centroids")
       s.read.parquet(s"$centDir/supers").coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/supers")
@@ -583,7 +575,7 @@ object Vectors {
     // form shuffled + sorted the FULL n×8×256 (vector, subspace,
     // codeword) expand; the hash aggregate collapses it map-side to
     // n×8 code rows. `dist` is deliberately NOT cached any more (was
-    // maybeCache): the only other consumer is the query side, whose
+    // eagerCache): the only other consumer is the query side, whose
     // vec_id < 20 pushdown recomputes a 20-vector sliver from the
     // pruned scan — materializing 30M rows to save that sliver was a
     // net loss.
@@ -627,7 +619,7 @@ object Vectors {
           // 2^i exact in doubles for i ≤ 15; shiftleft only takes Int
           pow(lit(2.0), i).cast("long")).otherwise(lit(0L))),
       lit(0L), (acc, v) => acc + v)
-    maybeCache(base.unionByName(reenc)
+    eagerCache(base.unionByName(reenc)
       .select(col("doc_id"), blockOf(col("h0")).as("b0"), blockOf(col("h1")).as("b1"),
         blockOf(col("h2")).as("b2"), blockOf(col("h3")).as("b3")))
   }
@@ -668,7 +660,7 @@ object Vectors {
     * (vec_id, embedding, nrm, cell); both sides of a cell join read it.
     */
   private def flatAssign(e: DataFrame, cent: DataFrame): DataFrame =
-    maybeCache(nearest(e.join(broadcast(cent)), Seq(col("vec_id")),
+    eagerCache(nearest(e.join(broadcast(cent)), Seq(col("vec_id")),
         d2(col("embedding"), col("ce")), col("cid"), "embedding")
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
         col("best.cid").as("cell")))
@@ -754,7 +746,7 @@ object Vectors {
     else {
       val (scent, chl) = layer.getOrElse(superLayer(
         cent.select(col("cid"), microCol(col("ce")).as("ce"))))
-      maybeCache(twoLevelRanked(
+      eagerCache(twoLevelRanked(
           e.select(col("vec_id"), microCol(col("embedding")).as("qe")),
           "vec_id", "qe", scent, chl)
         .filter(col("rn") === 1)
@@ -785,7 +777,7 @@ object Vectors {
     // cosine with DIVIDE_BY_ZERO. (Dedup-by-id inside BeamTopW is a
     // no-op here: b_id is unique within an a_id's cell.)
     val nanFirst = lit(Double.NegativeInfinity)
-    maybeCache(
+    eagerCache(
       a.join(b, col("cell") === col("bcell") && col("b_id") =!= col("a_id"))
         .select(col("a_id"), col("b_id"),
           (dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
@@ -1297,7 +1289,7 @@ object Vectors {
     // callers cache `edges` when it isn't already derived from a
     // cached frame (the oracled key's knnEdges is — re-caching its
     // projection would double-materialize, round-13 review)
-    val nodes = maybeCache(edges.select(col("src").as("id"))
+    val nodes = eagerCache(edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct())
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
     var ranks = nodes.select(col("id"), lit(1000000L).as("r"))
@@ -1352,9 +1344,9 @@ object Vectors {
     * octaves.
     */
   private[graft] def triangleCountsOver(t: DataFrame, byDegree: Boolean): DataFrame = {
-    val und = maybeCache(t.select(least(col("a_id"), col("b_id")).as("u"),
+    val und = eagerCache(t.select(least(col("a_id"), col("b_id")).as("u"),
       greatest(col("a_id"), col("b_id")).as("v")).distinct())
-    val o = maybeCache(orientEdges(und, byDegree))
+    val o = eagerCache(orientEdges(und, byDegree))
     val e1 = o.select(col("src"), col("dst").as("b"), col("dkey").as("bk"))
     val e2 = o.select(col("src").as("src2"), col("dst").as("c"), col("dkey").as("ck"))
     // wedges at the orientation-minimal vertex; the bk < ck cut emits
@@ -1614,7 +1606,7 @@ object Vectors {
         (row_number().over(wIdx) - 1).cast("bigint").as("idx"))
       .filter(col("idx") % sstr === 0 && col("idx") < sstr * sups)
       .select(col("cid").as("sid"), col("ce").as("sse"))
-    val chl = maybeCache(nearest(cent.join(broadcast(sseed)), Seq(col("cid")),
+    val chl = eagerCache(nearest(cent.join(broadcast(sseed)), Seq(col("cid")),
         d2(col("ce"), col("sse")), col("sid"), "ce")
       .select(col("cid"), col("ce"), col("best.sid").as("sid")))
     val scent = chl.groupBy(col("sid"))
@@ -1872,7 +1864,7 @@ object Vectors {
     */
   private[graft] def ivfPqFlatParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (e0, enc, qd) = pqParts(s, d)
-    val ranked = maybeCache(coarseRanked(e0, quantCent(s, d),
+    val ranked = eagerCache(coarseRanked(e0, quantCent(s, d),
       layer = Some(quantLayer(s, d))))
     // inverted lists: each code row learns its cell once (the
     // build-time co-partitioning); the probe filter + ADC lookup is
@@ -1896,7 +1888,7 @@ object Vectors {
   private[graft] def ivfPqResidualAdist(s: SparkSession, d: String): DataFrame = {
     val e0 = microVecs(s, d)
     val cent = quantCent(s, d)
-    val ranked = maybeCache(coarseRanked(e0, cent,
+    val ranked = eagerCache(coarseRanked(e0, cent,
       layer = Some(quantLayer(s, d))))
     val asg = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("cid").as("cell"))
@@ -1922,7 +1914,7 @@ object Vectors {
     // integer residuals from the OWN-cell centroid (corpus side). No
     // broadcast hint on cent: the centroid frame grows ∝ n, so the
     // optimizer must stay free to shuffle-join on cell at scale
-    val resv = maybeCache(e0.join(asg, Seq("vec_id"))
+    val resv = eagerCache(e0.join(asg, Seq("vec_id"))
       .join(cent, col("cell") === col("cid"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("qe"), col("ce"), (x, y) => x - y).as("res")))
@@ -2166,7 +2158,7 @@ object Vectors {
     val idx = stagedIvfPqIndex(s, d)
     val e0q = microVecs(s, d).filter(col("vec_id") < qBound)
     val cent = s.read.parquet(s"$idx/centroids")
-    val probes = maybeCache(coarseRanked(e0q, cent, nprobe,
+    val probes = eagerCache(coarseRanked(e0q, cent, nprobe,
         layer = Some(dirLayer(s, idx)))
       .select(col("vec_id").as("q_id"), col("cid").as("pcell")))
     // the query router's cell plan: nprobe cells per query, distinct
@@ -2377,7 +2369,7 @@ object Vectors {
       listsPath: String, quantDir: String, e0q: DataFrame,
       nprobe: Int = 2, tombstones: Option[DataFrame] = None): DataFrame = {
     val cent = s.read.parquet(s"$quantDir/centroids")
-    val probes = maybeCache(coarseRanked(e0q, cent, nprobe,
+    val probes = eagerCache(coarseRanked(e0q, cent, nprobe,
         layer = Some(dirLayer(s, quantDir)))
       .select(col("vec_id").as("q_id"), col("cid").as("pcell")))
     // the cell plan: AT MOST ncells integers collected, never corpus
@@ -2440,7 +2432,7 @@ object Vectors {
     // DuckDB twin carries the SAME arithmetic — built by the ONE
     // shared serving-rule builder (r19 advice: this block and
     // filteredPerQueryW's must not drift)
-    val qw = maybeCache(widthRouteTable(e0L, n, ivfPerCell, cells,
+    val qw = eagerCache(widthRouteTable(e0L, n, ivfPerCell, cells,
       tierWantedCol, k, col("vec_id") < qBound))
     // ONE collect of the width table (≤ |Q| rows — the same
     // driver-value class as the cell plans) feeds the batch max
@@ -2452,7 +2444,7 @@ object Vectors {
     val e0q = e0.filter(col("vec_id") < qBound)
     val probeR = coarseRanked(e0q, cent, nprobe = wMax,
       layer = Some(dirLayer(s, idx)))
-    val probes = maybeCache(qw.filter(col("route") === "ivf")
+    val probes = eagerCache(qw.filter(col("route") === "ivf")
       .select(col("q_id"), col("w"), col("w_label"))
       .join(probeR.select(col("vec_id").as("q_id"),
         col("cid").as("pcell"), col("rn")), Seq("q_id"))
@@ -2898,11 +2890,11 @@ object Vectors {
     // query frame's rn ≤ nprobe here is bit-identical to filtering
     // the same items out of a whole-corpus wide routing (the w = 2
     // oracled keys are doubly unaffected: both calls route w = 2).
-    val asgR = maybeCache(coarseRanked(e0, centF,
+    val asgR = eagerCache(coarseRanked(e0, centF,
       nprobe = math.min(nprobe, 2), layer = Some(lay)))
     val probeR =
       if (nprobe <= 2) asgR
-      else maybeCache(coarseRanked(e0.filter(col("vec_id") < qBound),
+      else eagerCache(coarseRanked(e0.filter(col("vec_id") < qBound),
         centF, nprobe, layer = Some(lay)))
     val cand = e0.join(asgR.filter(col("rn") === 1)
         .select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
@@ -2959,7 +2951,7 @@ object Vectors {
     // batch-dependence spec serves SOLO queries through the same
     // chain; None = the oracled keys' vec_id < qBound batch
     val qp = qPred.getOrElse(col("vec_id") < qBound)
-    val qw = maybeCache(
+    val qw = eagerCache(
       widthRouteTable(e0L, n, perCell, cells, wantedOf, k, qp))
     // the batch's max width — ONE integer, the literal the wide
     // routing needs at plan time (same driver-value class as the
@@ -3072,7 +3064,7 @@ object Vectors {
   private[graft] def perQueryWServe(s: SparkSession, d: String,
       qPred: Option[Column] = None)
       : DataFrame = {
-    val e0 = maybeCache(microVecs(s, d))
+    val e0 = eagerCache(microVecs(s, d))
     val n = e0.count()
     val perCell = math.max(1L,
       n / (4L * math.ceil(math.sqrt(n.toDouble)).toLong))
@@ -3096,7 +3088,7 @@ object Vectors {
       .select(col("vec_id").as("q_id"), col("qe").as("qq"))
     val wCand = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("d2q"), col("c_id"))
-    val cand = maybeCache(
+    val cand = eagerCache(
       e0.select(col("vec_id").as("c_id"), col("qe").as("ce"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
         .select(col("q_id"), col("c_id"), col("ce"),
@@ -3448,7 +3440,7 @@ object Vectors {
       val e0 = microVecs(s, d)
       val q = e0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("qe").as("qq"))
-      val dist = maybeCache(e0.select(col("vec_id").as("c_id"), col("qe").as("ce"))
+      val dist = eagerCache(e0.select(col("vec_id").as("c_id"), col("qe").as("ce"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
         .select(col("q_id"), col("c_id"), sqd(col("qq"), col("ce")).as("d2")))
       val r2 = dist.groupBy(col("q_id"))
@@ -3469,7 +3461,7 @@ object Vectors {
          |             ${D.dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cos
          |      FROM b q JOIN b c ON q.bkt = c.bkt AND q.vec_id < 20 AND c.vec_id <> q.vec_id)
          |${cosineTopKSql(3)}""".stripMargin) { (s, d) =>
-      val b = maybeCache(emb(s, d)
+      val b = eagerCache(emb(s, d)
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
           bucket(col("embedding")).as("bkt")))
       val q = b.filter(col("vec_id") < 20)
@@ -3569,7 +3561,7 @@ object Vectors {
     }) { (s, d) =>
       val (asg0, refined) = lloydRefined(s, d)
       // E-step vs refined centroids, then cell-local cosine top-3
-      val asg1 = maybeCache(nearest(asg0.join(broadcast(refined)), Seq(col("vec_id")),
+      val asg1 = eagerCache(nearest(asg0.join(broadcast(refined)), Seq(col("vec_id")),
           d2(col("qe"), col("rce")), col("rcell").as("cid"), "embedding", "nrm")
         .select(col("vec_id"), col("embedding"), col("nrm"),
           col("best.cid").as("cell")))
@@ -3602,7 +3594,7 @@ object Vectors {
       val cent = fixedCent(e)
       val wAsg = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
-      val ranked = maybeCache(e.join(broadcast(cent))
+      val ranked = eagerCache(e.join(broadcast(cent))
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
           col("cid"), d2(col("embedding"), col("ce")).as("d2"))
         .withColumn("rn", row_number().over(wAsg))
@@ -3644,7 +3636,7 @@ object Vectors {
       // side (rn=1) and the query probes (rn≤2) read it
       val wAsg = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("rd2"), col("rcell"))
-      val ranked = maybeCache(asg0.join(broadcast(refined))
+      val ranked = eagerCache(asg0.join(broadcast(refined))
         .select(col("vec_id"), col("embedding"), col("nrm"), col("rcell"),
           d2(col("qe"), col("rce")).as("rd2"))
         .withColumn("rn", row_number().over(wAsg))
@@ -3693,7 +3685,7 @@ object Vectors {
          |        ON c.cell = q.pcell AND c.c_id <> q.q_id)
          |${topKSql("p", 3, "d2, c_id", "d2", "d2")}""".stripMargin
     }) { (s, d) =>
-      val e0 = maybeCache(microVecs(s, d))
+      val e0 = eagerCache(microVecs(s, d))
       val n = e0.count()
       val perCell = math.max(1L,
         n / (4L * math.ceil(math.sqrt(n.toDouble)).toLong))
@@ -3703,7 +3695,7 @@ object Vectors {
       // through stagedIvfCent and each call is serve-only, the same
       // build-once discipline as the n/125 chains
       val centDir = stagedIvfCent(s, d, perCell)
-      val ranked = maybeCache(coarseRanked(e0,
+      val ranked = eagerCache(coarseRanked(e0,
         s.read.parquet(s"$centDir/centroids"),
         layer = Some(dirLayer(s, centDir))))
       val cand = e0.join(ranked.filter(col("rn") === 1)
@@ -3811,7 +3803,7 @@ object Vectors {
         norm(col("embedding")).as("nrm"), microCol(col("embedding")).as("qe"))
       val cent = base.filter(col("vec_id").isin(ivfCentroidIds: _*))
         .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      val asg = maybeCache(nearest(base.join(broadcast(cent)), Seq(col("vec_id")),
+      val asg = eagerCache(nearest(base.join(broadcast(cent)), Seq(col("vec_id")),
           sqDist(col("qe"), col("ce")), col("cid"), "embedding", "nrm")
         .select(col("vec_id"), col("embedding"), col("nrm"),
           col("best.cid").as("cell"), col("best.d2").as("d2c")))
@@ -3876,7 +3868,7 @@ object Vectors {
       val base = emb(s, d).select(col("vec_id"), microCol(col("embedding")).as("qe"))
       val cent = base.filter(col("vec_id").isin(ivfCentroidIds: _*))
         .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      val asg = maybeCache(nearest(base.join(broadcast(cent)), Seq(col("vec_id")),
+      val asg = eagerCache(nearest(base.join(broadcast(cent)), Seq(col("vec_id")),
           sqDist(col("qe"), col("ce")), col("cid"))
         .select(col("vec_id"), col("best.cid").as("cell"),
           col("best.d2").cast("bigint").as("d2c")))
@@ -4756,7 +4748,7 @@ object Vectors {
          |SELECT id, r AS rank_micro FROM r3 ORDER BY id""".stripMargin
     }) { (s, d) =>
       // knnEdges is already cached inside the helper — a second
-      // maybeCache here would double-materialize (review finding);
+      // eagerCache here would double-materialize (review finding);
       // the projection below re-derives cheaply from that cache
       pageRankMicro(knnEdges(s, d)
         .select(col("a_id").as("src"), col("b_id").as("dst")), iters = 3)

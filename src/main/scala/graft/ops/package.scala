@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,21 +57,6 @@ package object ops {
     conv(substring(md5(concat(seed.cast("string"), lit(":"), c.cast("string"))), 1, 8), 16, 10)
       .cast(LongType)
 
-  /** Cache a frame that multiple branches of ONE query plan read —
-    * UNLESS `spark.graft.plan.cache=false`. Query builders cannot
-    * unpersist (the action runs in the caller), so in a long-lived
-    * serve session repeated executions would accumulate cached plans
-    * in the block manager (advisor finding, round 13); the flag is the
-    * escape hatch such a deployment flips, trading one extra
-    * computation per branch for bounded block-manager state — the same
-    * contract as Vectors.maybeCache (`spark.graft.ann.cache`). Lazy
-    * (no eager count): the branches run inside a single action, so the
-    * first evaluation fills the cache without a race.
-    */
-  def maybePlanCache(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("spark.graft.plan.cache", "true").toBoolean) df.cache()
-    else df
-
   /** ⌈N/3⌉-rank tercile thresholds over one bounded-domain column —
     * the quantize-then-rank move shared by quality_buckets and
     * rfm_segments so the rank convention cannot drift between keys
@@ -103,6 +89,15 @@ package object ops {
     * tokens per FIXTURES.md). DuckDB twin: `string_split(text, ' ')`.
     */
   def toks(c: Column): Column = split(c, " ")
+
+  /** Tokens of the `text` column — [[toks]] over `documents.text`. */
+  def tokens: Column = toks(col("text"))
+
+  /** `documents` spread across the cluster before per-row text work
+    * (a tiny single-file scan would otherwise serialize all hashing on
+    * one core — see [[spread]]).
+    */
+  def docs(s: SparkSession, d: String): DataFrame = spread(graft.Tables.documents(s, d))
 
   /** Session-derived scratch root for staged indexes, replay
     * directories and stream sinks: `spark.graft.scratchDir` when set,
@@ -289,6 +284,13 @@ package object ops {
       build: String => Unit): String = {
     import org.apache.hadoop.fs.Path
     val rootStr = s"${scratchRoot(spark)}/$name"
+    // an artifact keyed on a source under a purge-registered run dir
+    // (a per-run stream index, a staged fixture) can never be served
+    // again once that source is gone: it leaves with it
+    if (purgeRegistered.asScala.exists { p =>
+        val k = p.replaceAll("[^A-Za-z0-9.]", "_")
+        name.contains(k + "_") || name.endsWith(k)
+      }) purgeOnExit(rootStr)
     val (fs, root) = hfs(spark, rootStr)
     val tag = "g-" + java.security.MessageDigest.getInstance("MD5")
       .digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
@@ -347,7 +349,8 @@ package object ops {
 
   /** Register `path` for recursive deletion at JVM exit and return it
     * — for pid-scoped staging directories that would otherwise
-    * accumulate one copy per run.
+    * accumulate one copy per run. A [[stagedArtifact]] built over a
+    * source under `path` is purged with it.
     */
   def purgeOnExit(path: String): String = {
     // one hook per path: repeated calls from per-run operators (the

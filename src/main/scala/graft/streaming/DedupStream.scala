@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Text
 import BatchLog.{bandSchema, docSchema, hsSchema}
 
 /** Continuous-ingest dedup: a micro-batch stream of new documents is
@@ -52,40 +53,12 @@ object DedupStream {
   def seedIndex(spark: SparkSession, seed: DataFrame, idxDir: String): Unit = {
     val docs = seed.select(col("doc_id"), col("text"))
     BatchLog.write(docs, s"$idxDir/texts", "seed")
-    BatchLog.write(graft.ops.Text.shingleHashes(docs), s"$idxDir/hs", "seed")
+    BatchLog.write(Text.shingleHashes(docs), s"$idxDir/hs", "seed")
     BatchLog.write(
-      graft.ops.Text.minhashBands(
+      Text.minhashBands(
         spark.read.schema(hsSchema).parquet(s"$idxDir/hs/batch=seed")),
       s"$idxDir/bands", "seed")
     BatchLog.commit(spark, idxDir, "seed")
-  }
-
-  /** Admitted (non-duplicate) rows of `batch` vs the index at `idxDir`,
-    * including batch-internal exact dedup (min doc_id per text wins).
-    */
-  private def survivors(spark: SparkSession, batch: DataFrame, idxDir: String): DataFrame = {
-    import graft.ops.Text.{minhashBands, shingleHashes}
-    val newBatch = batch.select(col("doc_id"), col("text"))
-    val newHs = shingleHashes(newBatch)
-    val jac = size(array_intersect(col("nh.hs"), col("oh.hs"))).cast("double") /
-      size(array_union(col("nh.hs"), col("oh.hs")))
-    val nearDup = minhashBands(newHs).as("n")
-      .join(BatchLog.read(spark, idxDir, "bands", bandSchema).as("o"),
-        col("n.b") === col("o.b") && col("n.bkey") === col("o.bkey"))
-      .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
-      .distinct()
-      .join(newHs.as("nh"), col("nh.doc_id") === col("new_id"))
-      .join(BatchLog.read(spark, idxDir, "hs", hsSchema).as("oh"),
-        col("oh.doc_id") === col("old_id"))
-      .filter(jac >= 0.5)
-      .select(col("new_id").as("doc_id"))
-      .distinct()
-    val batchKeep = newBatch.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-    newBatch
-      .join(batchKeep.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .join(indexedTexts(spark, idxDir).select(col("text")),
-        Seq("text"), "left_anti")
-      .join(nearDup, Seq("doc_id"), "left_anti")
   }
 
   /** Run the continuous dedup over every file currently in `inDir`
@@ -121,8 +94,10 @@ object DedupStream {
     if (BatchLog.isCommitted(spark, idxDir, key)) 0L
     else admit(spark, batch, idxDir, key)
 
-  /** [[ingestBatch]] past the skip: admit `batch`'s survivors under
-    * `key` and commit it.
+  /** [[ingestBatch]] past the skip: admit `batch`'s survivors against
+    * the committed index (`Text.incrementalSurvivors`, batch-internal
+    * exact dedup included: min doc_id per text wins) under `key` and
+    * commit it.
     */
   private def admit(spark: SparkSession, batch: DataFrame, idxDir: String,
       key: String): Long = {
@@ -131,15 +106,18 @@ object DedupStream {
     // (r21): the count materializes the blocks in one pass — the eager
     // variant spent a dedicated job on it, and every write still reads
     // the persisted blocks, never the lineage
-    val keep = survivors(spark, batch, idxDir).localCheckpoint(false)
+    val newBatch = batch.select(col("doc_id"), col("text"))
+    val keep = Text.incrementalSurvivors(newBatch, Text.shingleHashes(newBatch),
+      indexedTexts(spark, idxDir), BatchLog.read(spark, idxDir, "hs", hsSchema),
+      BatchLog.read(spark, idxDir, "bands", bandSchema)).localCheckpoint(false)
     val n = keep.count()
     if (n > 0) {
       BatchLog.write(keep, s"$idxDir/texts", key)
       // lazy: the hs write is the materializing action; the bands
       // write then reads the persisted shingle blocks
-      val hs = graft.ops.Text.shingleHashes(keep).localCheckpoint(false)
+      val hs = Text.shingleHashes(keep).localCheckpoint(false)
       BatchLog.write(hs, s"$idxDir/hs", key)
-      BatchLog.write(graft.ops.Text.minhashBands(hs), s"$idxDir/bands", key)
+      BatchLog.write(Text.minhashBands(hs), s"$idxDir/bands", key)
     }
     BatchLog.commit(spark, idxDir, key)
     n

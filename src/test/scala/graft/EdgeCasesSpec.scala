@@ -69,10 +69,13 @@ class EdgeCasesSpec extends SparkSpec {
   // operator (SparkEntry.queries) at it — same code path as the oracle
   // gate, degenerate data.
 
-  /** Stage (doc_id, source, text) rows as a documents.parquet dir. */
+  /** Stage (doc_id, source, text) rows as a documents.parquet dir under
+    * a per-run scratch dir, purged at exit with the staged artifacts
+    * built over it.
+    */
   private def stageDocs(name: String, rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = s"${graft.ops.scratchRoot(spark)}/edge_${name}_${ProcessHandle.current().pid()}"
+    val dir = graft.ops.scratchRunDir(spark, s"edge_$name")
     rows.toDF("doc_id", "source", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"), col("source"),
         length(col("text")).cast("bigint").as("n_chars"))

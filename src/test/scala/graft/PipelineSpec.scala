@@ -357,20 +357,6 @@ class PipelineSpec extends SparkSpec {
     assert(train > 0.6 && train < 0.95, s"train fraction $train")
   }
 
-  test("plan-cache keys are cache-independent: spark.graft.plan.cache=false gives identical output") {
-    // query builders cannot unpersist (the action runs in the caller),
-    // so a long-lived serve session flips the flag instead; the plan
-    // must be correct uncached (advisor finding, round 13)
-    val uncached = spark.newSession()
-    uncached.conf.set("spark.graft.plan.cache", "false")
-    for (key <- Seq("mix_weighted", "decontaminate_fuzzy")) {
-      val warm = SparkEntry.queries(key)(spark, sfDir)
-      val cold = SparkEntry.queries(key)(uncached, sfDir)
-      assert(cold.exceptAll(warm).count() == 0, s"$key uncached ⊄ cached")
-      assert(warm.exceptAll(cold).count() == 0, s"$key cached ⊄ uncached")
-    }
-  }
-
   test("quality_buckets: terciles cover the corpus in disjoint ordered bands") {
     val rows = run("quality_buckets").collect()
     val n = Tables.documents(spark, sfDir).count()

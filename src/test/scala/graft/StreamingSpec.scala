@@ -227,6 +227,27 @@ class StreamingSpec extends SparkSpec {
     assert(batch.exceptAll(typed).count() == 0)
   }
 
+  test("batch and stream incremental dedup agree: DedupStream admits exactly dedup_incremental's docs") {
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.{BatchLog, DedupStream}
+    // the same old corpus (doc_id < 250) and the same planted new
+    // batch, once through the stored index a stream appends to and
+    // once through the batch key: the admitted ids must be equal
+    val idx = graft.ops.scratchRunDir(spark, "spec_dedup_agree")
+    val base = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    val old = base.filter(col("doc_id") < 250)
+    DedupStream.seedIndex(spark, old, idx)
+    val batch = graft.ops.Text.incrementalNewBatch(base, old)
+    val n = DedupStream.ingestBatch(spark, batch, idx, BatchLog.contentKey(batch))
+    val streamed = DedupStream.indexedTexts(spark, idx).filter(col("doc_id") >= 250)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val batched = SparkEntry.queries("dedup_incremental")(spark, sfDir)
+      .collect().map(_.getLong(0)).toSeq
+    assert(batched.nonEmpty && streamed == batched,
+      s"stream admitted ${streamed.diff(batched)} extra, ${batched.diff(streamed)} missing")
+    assert(n == batched.size)
+  }
+
   test("streaming dedup vs stored band index: dupes drop, novel docs index and dedup the NEXT batch") {
     import org.apache.spark.sql.functions._
     import graft.streaming.DedupStream

@@ -383,20 +383,6 @@ class VectorOpsSpec extends SparkSpec {
     }
   }
 
-  test("ANN keys are cache-independent: spark.graft.ann.cache=false gives identical output") {
-    // at 100 TB caching the bucketed corpus is a no-op-or-OOM choice;
-    // the plan must be correct uncached (it then recomputes only the
-    // map-side bucket projection per join branch — see Vectors.maybeCache)
-    val uncached = spark.newSession()
-    uncached.conf.set("spark.graft.ann.cache", "false")
-    for (key <- Seq("sim_ann_lsh", "sim_ann_multiprobe", "sim_ivf", "stream_embed_index")) {
-      val warm = SparkEntry.queries(key)(spark, sfDir)
-      val cold = SparkEntry.queries(key)(uncached, sfDir)
-      assert(cold.exceptAll(warm).count() == 0, s"$key uncached ⊄ cached")
-      assert(warm.exceptAll(cold).count() == 0, s"$key cached ⊄ uncached")
-    }
-  }
-
   test("graph_triangles: degree orientation equals id orientation, counts divisible by 3") {
     val byDeg = SparkEntry.queries("graph_triangles")(spark, sfDir)
     val byId = graft.ops.Vectors.triangleCounts(spark, sfDir, byDegree = false)
@@ -1497,11 +1483,11 @@ class VectorOpsSpec extends SparkSpec {
     assert(graft.ops.Vectors.readBucketed(spark, s"$vdir/vectors",
       graft.ops.Vectors.bucketVecSchema, Array.empty[Long]).count() == 0)
     // non-empty fetch against a dir with no shard subtree: loud
-    val bogus = java.nio.file.Files.createTempDirectory("nobuckets").toString
-    val ex = intercept[IllegalArgumentException] {
-      graft.ops.Vectors.readBucketed(spark, bogus,
+    val bogus = java.nio.file.Files.createTempDirectory("nobuckets").toFile
+    val ex = try intercept[IllegalArgumentException] {
+      graft.ops.Vectors.readBucketed(spark, bogus.toString,
         graft.ops.Vectors.bucketVecSchema, Array(0L, 1L))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(bogus)
     assert(ex.getMessage.contains("staged shard dirs missing"))
     // r21 (r20 advice): a PARTIALLY present layout — some wanted shard
     // dirs exist, some don't — is a torn artifact, not a smaller
