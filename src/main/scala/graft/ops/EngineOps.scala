@@ -29,8 +29,7 @@ object EngineOps {
   private val tmpRoots =
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession, String]()
   private def tmpRoot(s: org.apache.spark.sql.SparkSession): String =
-    tmpRoots.computeIfAbsent(s, s2 => graft.ops.purgeOnExit(
-      s"${graft.ops.scratchRoot(s2)}/run_${ProcessHandle.current().pid()}"))
+    tmpRoots.computeIfAbsent(s, s2 => graft.ops.pidScopedDir(s2, "run"))
 
   val defs: Seq[QueryDef] = Seq(
 

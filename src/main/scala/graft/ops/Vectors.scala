@@ -22,12 +22,22 @@ import graft.Tables
   * map-side projection, and candidate generation is a bucket-keyed
   * self-join — never all-pairs.
   *
-  * The stages every key repeats are defined once each: [[d2]] (the
-  * expanded-dot squared L2 of coarse rankings) and [[sqd]] (the exact
-  * [[sqDist]] fold as a bigint) score; [[nearest]] is the nearest-cell
-  * argmin; [[topK]] is the per-group top-k cut; [[cosineTopK]] is the
-  * cosine scorer + cut of the float-vector search keys. On the oracle
-  * side, [[topKSql]] is the twin of [[topK]] and [[dd2]] of [[d2]].
+  * Every ANN key composes route, score, cut and refine stages, each
+  * written once in Spark and once as a DuckDB fragment (mostly in
+  * [[D]]):
+  *  - route: [[coarseRanked]] over a [[superLayer]] (oracle
+  *    [[superLayerCtes]] + [[twoLevelRankCtes]], preamble [[D.ivf]]),
+  *    [[quantRoute]] ([[D.ivfAsg]], [[D.ivfProbes]]), the stored-index
+  *    probe [[storedProbe]] = [[cellPlan]] + [[readLists]];
+  *  - score: [[cosine]], [[sqDist]]/[[sqd]] ([[D.sqd]]), [[d2]]
+  *    ([[dd2]]), the PQ [[subspaces]] ([[D.subspaces]]), distance table
+  *    [[pqDist]] and encoder [[pqEncode]] ([[D.pqEncCtes]]), the ADC
+  *    aggregate [[adc]] ([[D.adist]]);
+  *  - cut: [[nearest]] (argmin), [[topK]] ([[topKSql]],
+  *    [[D.topKCte]]), [[cosineTopK]]; refine: [[exactRerank]]
+  *    ([[D.refineCtes]]);
+  *  - storage: [[writeLists]], [[writeLayer]], [[copyLayer]];
+  *    [[microCol]] ([[D.micro]]) is the one micro-unit projection.
   */
 object Vectors {
 
@@ -174,17 +184,29 @@ object Vectors {
         .partitionBy(part).orderBy(order: _*)).cast("bigint"))
       .filter(col("rnk") <= k)
 
+  /** THE cosine of vectors `a`, `b` with norms `an`, `bn`:
+    * dot/(an·bn), NULL when the norm product is 0 — a zero-norm
+    * embedding has no direction. DuckDB's x/0 is NULL as well, and both
+    * engines rank NULL last under `cos DESC` and drop it from a
+    * `cos >= t` filter; a bare ANSI `/` would fail the whole key with
+    * DIVIDE_BY_ZERO instead. A NaN component still scores NaN.
+    */
+  private def cosine(a: Column, b: Column, an: Column, bn: Column): Column = {
+    val nn = an * bn
+    dot(a, b) / when(nn =!= 0, nn)
+  }
+
   /** The cosine search shared by the float-vector keys: queries
     * (q_id, qe, qn) join candidates (c_id, ce, cn) on `on` minus the
-    * self pair, cos = dot/(qn·cn), per-query top-k by (cos DESC, c_id),
+    * self pair, [[cosine]], per-query top-k by (cos DESC, c_id),
     * emitted as (q_id, c_id, rnk, cosine) with a 6-decimal cosine.
     */
-  private def cosineTopK(q: DataFrame, c: DataFrame, k: Int,
+  private[graft] def cosineTopK(q: DataFrame, c: DataFrame, k: Int,
       on: Option[Column] = None): DataFrame = {
     val notSelf = col("c_id") =!= col("q_id")
     topK(q.join(c, on.fold(notSelf)(_ && notSelf))
         .select(col("q_id"), col("c_id"),
-          (dot(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("cos")),
+          cosine(col("qe"), col("ce"), col("qn"), col("cn")).as("cos")),
       col("q_id"), k, col("cos").desc, col("c_id"))
       .select(col("q_id"), col("c_id"), col("rnk"), pr6(col("cos")).as("cosine"))
       .orderBy(col("q_id"), col("rnk"))
@@ -277,6 +299,7 @@ object Vectors {
 
   // ---- DuckDB oracle fragments ------------------------------------------
 
+  /** The oracle's stages: each the DuckDB twin of one Spark stage. */
   private object D {
     val planesSql: String =
       planes.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -289,6 +312,103 @@ object Vectors {
          |  CASE WHEN list_sum(list_transform(range(1, ${dim + 1}),
          |         i -> planes[p + 1][i]::DOUBLE * $e[i]::DOUBLE)) >= 0
          |       THEN (1::BIGINT << p) ELSE 0 END))::BIGINT""".stripMargin
+
+    /** [[microCol]]'s twin: micro-unit projection of a float list. */
+    def micro(x: String): String =
+      s"list_transform($x, x -> floor(x::DOUBLE * 1000000 + 0.5))"
+
+    /** The micro-unit corpus CTE `name`(vec_id, `extra`…, qe). */
+    def microRel(name: String = "e", extra: String = "",
+        from: String = "embeddings"): String =
+      s"$name AS (SELECT vec_id, $extra${micro("embedding")} AS qe FROM $from)"
+
+    /** [[sqDist]]'s twin over two `n`-dim lists. */
+    def sqd(a: String, b: String, n: Int = dim): String =
+      s"list_sum(list_transform(range(1, ${n + 1}), j -> ($a[j] - $b[j]) * ($a[j] - $b[j])))"
+
+    /** [[Vectors.sqd]]'s twin: [[sqd]] as a BIGINT. */
+    def sqdInt(a: String, b: String): String = s"CAST(${sqd(a, b)} AS BIGINT)"
+
+    /** [[subspaces]]' twin: `cols`, m and `vec`'s m-th slice as `out`. */
+    def subspaces(cols: String, vec: String, out: String, from: String): String =
+      s"SELECT $cols, m.m, $vec[m.m * 8 + 1 : m.m * 8 + 8] AS $out FROM $from, range(0, 8) m(m)"
+
+    /** [[pqDist]] + [[pqEncode]]'s twin with `cb`(c, m, `cbVec`) in
+      * scope: `sub`, `dist`(keys, m, c, d2), `enc`(keys, m, code).
+      */
+    def pqEncCtes(keys: String, src: String, vec: String, cbVec: String): String =
+      s"""sub AS (${subspaces(keys, vec, "sv", src)}),
+         |dist AS (SELECT $keys, sub.m, cb.c, ${sqd("sv", cbVec, 8)} AS d2
+         |         FROM sub JOIN cb ON sub.m = cb.m),
+         |enc AS (SELECT $keys, m, c AS code FROM
+         |          (SELECT $keys, m, c,
+         |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
+         |           FROM dist) t
+         |        WHERE rn = 1)""".stripMargin
+
+    /** The ADC table lookup of codes `enc` in query tables `qd`. */
+    val codeMatch = "qd.m = enc.m AND qd.c = enc.code"
+
+    val cellCodeJoin = s"enc JOIN qd ON qd.pcell = enc.cell AND $codeMatch"
+
+    /** [[adc]]'s twin: `adist`(q_id, c_id, [carry,] ad) over `from`,
+      * which joins `enc` to `qd` on [[codeMatch]].
+      */
+    def adist(from: String, where: String = "", carry: Option[String] = None): String =
+      s"""adist AS (SELECT qd.q_id, enc.vec_id AS c_id, ${carry.fold("")(_ + ", ")}sum(qd.d2)::BIGINT AS ad
+         |          FROM $from
+         |          WHERE enc.vec_id <> qd.q_id$where
+         |          GROUP BY 1, 2${carry.fold("")(_ => ", 3")})""".stripMargin
+
+    /** [[exactRerank]]'s twin up to its cut: the top-32 shortlist `sl`
+      * of `adist`, then `name`(cols…, `out`) = its exact L2 over `e`.
+      */
+    def refineCtes(cols: Seq[String], name: String, out: String): String = {
+      val cs = cols.mkString(", ")
+      s"""sl AS (SELECT $cs FROM
+         |         (SELECT $cs,
+         |                 row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS srn
+         |          FROM adist) t
+         |       WHERE srn <= 32),
+         |$name AS (SELECT ${cols.map("sl." + _).mkString(", ")},
+         |              ${sqdInt("q.qe", "c.qe")} AS $out
+         |       FROM sl JOIN e q ON q.vec_id = sl.q_id
+         |               JOIN e c ON c.vec_id = sl.c_id)""".stripMargin
+    }
+
+    /** The corpus-scaled IVF preamble: `eCtes` (from `e`), the
+      * centroids `cent` at per-cell budget `pc`, their `cl` super layer
+      * and the w = 2 rank `dd` of every vector.
+      */
+    def ivf(eCtes: String, pc: String = ivfPerCell.toString): String =
+      s"""$eCtes,
+         |${scaledLloydCentCtesAt(pc)},
+         |${superLayerCtes("cl", "cent")},
+         |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")}""".stripMargin
+
+    /** [[quantRoute]]'s twin over the `dd` rank: `asg` and `probes`. */
+    val ivfAsg = "asg AS (SELECT vec_id, cid AS cell FROM dd WHERE rn = 1)"
+    val ivfProbes = """probes AS (SELECT vec_id AS q_id, cid AS pcell FROM dd
+                      |           WHERE rn <= 2 AND vec_id < 20)""".stripMargin
+
+    /** [[cellCand]]'s twin over `e` and the `dd` rank. */
+    def cellCand(extra: String = ""): String =
+      s"""cand AS (SELECT e.vec_id AS c_id, ${extra}e.qe AS ce2, dd.cid AS cell
+         |         FROM e JOIN dd ON dd.vec_id = e.vec_id AND dd.rn = 1)""".stripMargin
+
+    /** [[sqrtnPerCell]]'s twin over `n` in scope. */
+    val sqrtnPc = "n // (4 * CAST(ceil(sqrt(n)) AS BIGINT))"
+
+    /** [[topKSql]] as a CTE `name`(cols): no rank column; `inner` is
+      * the select list ranked (default `cols`).
+      */
+    def topKCte(name: String, cols: String, src: String, k: Int, order: String,
+        part: String = "q_id", inner: String = "",
+        materialized: Boolean = false): String =
+      s"""$name AS ${if (materialized) "MATERIALIZED " else ""}(SELECT $cols FROM (
+         |          SELECT ${if (inner.isEmpty) cols else inner},
+         |                 row_number() OVER (PARTITION BY $part ORDER BY $order) AS rn
+         |          FROM $src) x$name WHERE rn <= $k)""".stripMargin
   }
 
   /** Shared Lloyd-refinement stage (sim_ivf_refined,
@@ -326,13 +446,56 @@ object Vectors {
     */
   private[graft] def pqAdcChain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (e0, enc, qd) = pqParts(s, d)
-    val adist = enc.join(broadcast(qd),
-        col("m") === col("qm") && col("code") === col("c")
-          && col("c_id") =!= col("q_id"))
+    (e0, adc(enc, qd, byCell = false))
+  }
+
+  /** THE ADC aggregate (q_id, c_id, ad): codes (c_id, m, code[, cell])
+    * look up the broadcast, query-sized tables (q_id, qm, c, d2[, pcell])
+    * — `byCell` (every IVF serve) keeps a table to its probed cell,
+    * `extra` is one more predicate below the aggregate — so the code
+    * stream never shuffles before the partial aggregate.
+    */
+  private def adc(codes: DataFrame, qd: DataFrame, byCell: Boolean = true,
+      extra: Option[Column] = None): DataFrame = {
+    val code = col("m") === col("qm") && col("code") === col("c")
+    val on = (if (byCell) code && col("cell") === col("pcell") else code) &&
+      col("c_id") =!= col("q_id")
+    codes.join(broadcast(qd), extra.fold(on)(on && _))
       .groupBy(col("q_id"), col("c_id"))
       .agg(sum(col("d2")).cast("bigint").as("ad"))
-    (e0, adist)
   }
+
+  /** THE subspace split: per row and subspace m in 0..7, `keys`, m
+    * (named `mAs`) and `vec`'s m-th 8-dim slice as `out`.
+    */
+  private def subspaces(df: DataFrame, keys: Seq[String], vec: String, out: String,
+      mAs: String = "m"): DataFrame =
+    df.select(keys.map(col) ++ Seq(explode(sequence(lit(0), lit(7))).as("m"), col(vec)): _*)
+      .select(keys.map(col) ++ Seq(if (mAs == "m") col("m") else col("m").as(mAs),
+        slice(col(vec), col("m") * 8 + 1, lit(8)).as(out)): _*)
+
+  /** THE PQ distance table (keys…, m, c, d2) of `vecs`' slices against
+    * the broadcast codebook `cb`(c, m, `cbVec`): its argmin is the
+    * encoder, a query batch's rows are its ADC tables.
+    */
+  private def pqDist(vecs: DataFrame, keys: Seq[String], vec: String,
+      cb: DataFrame, cbVec: String): DataFrame =
+    subspaces(vecs, keys, vec, "sv").join(broadcast(cb), Seq("m"))
+      .select(keys.map(col) ++ Seq(col("m"), col("c"),
+        sqDist(col("sv"), col(cbVec)).as("d2")): _*)
+
+  /** THE PQ encoder: per (vector, m) the [[nearest]] code of a
+    * [[pqDist]] table — (c_id, keys.tail…, m, code), keys.tail
+    * functionally dependent on vec_id.
+    */
+  private def pqEncode(dist: DataFrame, keys: Seq[String]): DataFrame =
+    nearest(dist, (keys :+ "m").map(col), col("d2"), col("c"))
+      .select((col("vec_id").as("c_id") +: keys.tail.map(col)) ++
+        Seq(col("m"), col("best.c").as("code")): _*)
+
+  /** The logical-delete set (c_id) of every tombstoned serve. */
+  private def tombstones(e0: DataFrame): DataFrame =
+    e0.filter(col("vec_id") % 17 === 3).select(col("vec_id").as("c_id"))
 
   /** Micro-unit integer projection of the embeddings table —
     * (vec_id, qe) with qe = floor(x·1e6 + 0.5) per component: the ONE
@@ -378,17 +541,11 @@ object Vectors {
     val cCol = seedIds.zipWithIndex.foldLeft(lit(-1)) {
       case (acc, (sid, c)) => when(col("vec_id") === sid, lit(c)).otherwise(acc)
     }
-    val ms = explode(sequence(lit(0), lit(7))).as("m")
-    val cb0 = vecs.filter(col("vec_id").isin(seedIds: _*))
-      .select(cCol.as("c"), col(vecCol))
-      .select(col("c"), ms, col(vecCol))
-      .select(col("c"), col("m"),
-        slice(col(vecCol), col("m") * 8 + 1, lit(8)).as("ce0"))
-    val samp = vecs
-      .filter(col("vec_id") % 5 === 0 || col("vec_id").isin(seedIds: _*))
-      .select(col("vec_id"), ms, col(vecCol))
-      .select(col("vec_id"), col("m"),
-        slice(col(vecCol), col("m") * 8 + 1, lit(8)).as("sv"))
+    val cb0 = subspaces(vecs.filter(col("vec_id").isin(seedIds: _*))
+      .select(cCol.as("c"), col(vecCol)), Seq("c"), vecCol, "ce0")
+    val samp = subspaces(vecs
+      .filter(col("vec_id") % 5 === 0 || col("vec_id").isin(seedIds: _*)),
+      Seq("vec_id"), vecCol, "sv")
     val tasg = nearest(samp.join(broadcast(cb0), Seq("m")), Seq(col("vec_id"), col("m")),
         sqDist(col("sv"), col("ce0")), col("c"), "sv")
       .select(col("m"), col("best.c").as("c"), col("sv"))
@@ -408,16 +565,13 @@ object Vectors {
       .map { case (sid, c) => s"($c, $sid)" }.mkString(", ")
     val inList = seedIds.mkString("(", ", ", ")")
     s"""seeds(c, sid) AS (VALUES $seeds),
-       |cb0 AS (SELECT s.c, m.m, r.$v[m.m * 8 + 1 : m.m * 8 + 8] AS ce0
-       |        FROM seeds s JOIN $src r ON r.vec_id = s.sid, range(0, 8) m(m)),
-       |tsub AS (SELECT vec_id, m.m, $v[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-       |         FROM $src, range(0, 8) m(m)
+       |cb0 AS (${D.subspaces("s.c", s"r.$v", "ce0", s"seeds s JOIN $src r ON r.vec_id = s.sid")}),
+       |tsub AS (${D.subspaces("vec_id", v, "sv", src)}
        |         WHERE vec_id % 5 = 0 OR vec_id IN $inList),
        |tasg AS (SELECT m, c, sv FROM (
        |           SELECT t.vec_id, t.m, c0.c, t.sv,
        |                  row_number() OVER (PARTITION BY t.vec_id, t.m
-       |                    ORDER BY list_sum(list_transform(range(1, 9),
-       |                      j -> (t.sv[j] - c0.ce0[j]) * (t.sv[j] - c0.ce0[j]))),
+       |                    ORDER BY ${D.sqd("t.sv", "c0.ce0", 8)},
        |                      c0.c) AS rn
        |           FROM tsub t JOIN cb0 c0 ON c0.m = t.m) x
        |         WHERE rn = 1),
@@ -463,11 +617,24 @@ object Vectors {
       // the TWO-LEVEL routing tables, derived ONCE per geometry and
       // staged with the centroids (r16 review: every serve was
       // re-deriving the layer per call)
-      val (scent, chl) = superLayer(cent)
-      scent.coalesce(1).write.mode("overwrite").parquet(s"$stage/supers")
-      chl.select(col("cid"), col("sid")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/children")
+      writeLayer(superLayer(cent), stage)
     }
+
+  /** Stage a [[superLayer]] as `supers/` (sid, sce) + `children/`
+    * (cid, sid) under `stage` — [[dirLayer]]'s contract.
+    */
+  private def writeLayer(layer: (DataFrame, DataFrame), stage: String): Unit = {
+    layer._1.coalesce(1).write.mode("overwrite").parquet(s"$stage/supers")
+    layer._2.select(col("cid"), col("sid")).coalesce(1)
+      .write.mode("overwrite").parquet(s"$stage/children")
+  }
+
+  /** Copy a staged routing layer into another artifact: every
+    * artifact ships [[stagedIvfCent]]'s one derivation.
+    */
+  private def copyLayer(s: SparkSession, from: String, to: String): Unit =
+    Seq("supers", "children").foreach(t =>
+      s.read.parquet(s"$from/$t").coalesce(1).write.mode("overwrite").parquet(s"$to/$t"))
 
   private[graft] def stagedIvfQuant(s: SparkSession, d: String): String =
     stagedEmb(s, d, "ivfquant") { stage =>
@@ -479,10 +646,7 @@ object Vectors {
       val centDir = stagedIvfCent(s, d, ivfPerCell)
       val cent = eagerCache(s.read.parquet(s"$centDir/centroids"))
       cent.coalesce(1).write.mode("overwrite").parquet(s"$stage/centroids")
-      s.read.parquet(s"$centDir/supers").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/supers")
-      s.read.parquet(s"$centDir/children").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/children")
+      copyLayer(s, centDir, stage)
       val (scent, chl) = dirLayer(s, centDir)
       trainedCodebook(e0, "qe", pqSeedIds, "ce").coalesce(1)
         .write.mode("overwrite").parquet(s"$stage/cbflat")
@@ -506,13 +670,14 @@ object Vectors {
     * action, no window, no per-call Lloyd pass — and one derivation
     * means serve, build, and stream routing cannot drift.
     */
-  private def dirLayer(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val scent = s.read.parquet(s"$dir/supers")
-    val chl = s.read.parquet(s"$dir/children")
-      .join(s.read.parquet(s"$dir/centroids"), Seq("cid"))
-      .select(col("cid"), col("ce"), col("sid"))
-    (scent, chl)
-  }
+  private def dirLayer(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    readLayer(s, dir, s.read.parquet(s"$dir/centroids"))
+
+  /** [[writeLayer]]'s reader, children re-joined to `vecs`(cid, ce). */
+  private def readLayer(s: SparkSession, dir: String,
+      vecs: DataFrame): (DataFrame, DataFrame) =
+    (s.read.parquet(s"$dir/supers"), s.read.parquet(s"$dir/children")
+      .join(vecs, Seq("cid")).select(col("cid"), col("ce"), col("sid")))
 
   private def quantLayer(s: SparkSession, d: String): (DataFrame, DataFrame) =
     dirLayer(s, stagedIvfQuant(s, d))
@@ -535,10 +700,7 @@ object Vectors {
     stagedEmb(s, d, s"seedlayer_$perCell") { stage =>
       val seeds = strideSeedRows(microVecs(s, d), perCell, "stagedSeedLayer")
         .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      val (scent, chl) = superLayer(seeds)
-      scent.coalesce(1).write.mode("overwrite").parquet(s"$stage/supers")
-      chl.select(col("cid"), col("sid")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/children")
+      writeLayer(superLayer(seeds), stage)
     }
 
   /** Read [[stagedSeedLayer]] back as (scent, chl), the child seed
@@ -546,15 +708,9 @@ object Vectors {
     * layer was derived over).
     */
   private[graft] def seedLayer(s: SparkSession, d: String,
-      perCell: Long): (DataFrame, DataFrame) = {
-    val dir = stagedSeedLayer(s, d, perCell)
-    val scent = s.read.parquet(s"$dir/supers")
-    val chl = s.read.parquet(s"$dir/children")
-      .join(microVecs(s, d).select(col("vec_id").as("cid"),
-        col("qe").as("ce")), Seq("cid"))
-      .select(col("cid"), col("ce"), col("sid"))
-    (scent, chl)
-  }
+      perCell: Long): (DataFrame, DataFrame) =
+    readLayer(s, stagedSeedLayer(s, d, perCell),
+      microVecs(s, d).select(col("vec_id").as("cid"), col("qe").as("ce")))
 
   private def quantCent(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${stagedIvfQuant(s, d)}/centroids")
@@ -565,22 +721,12 @@ object Vectors {
 
   private[graft] def pqParts(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val e0 = microVecs(s, d)
-    val ms = explode(sequence(lit(0), lit(7))).as("m")
-    val cb = quantCbFlat(s, d)
-    val sub = e0.select(col("vec_id"), ms, col("qe"))
-      .select(col("vec_id"), col("m"), slice(col("qe"), col("m") * 8 + 1, lit(8)).as("sv"))
-    val dist = sub.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("m"), col("c"), sqDist(col("sv"), col("ce")).as("d2"))
-    // encoder argmin through [[nearest]] — r22, guide §2.3: the window
-    // form shuffled + sorted the FULL n×8×256 (vector, subspace,
-    // codeword) expand; the hash aggregate collapses it map-side to
-    // n×8 code rows. `dist` is deliberately NOT cached any more (was
-    // eagerCache): the only other consumer is the query side, whose
-    // vec_id < 20 pushdown recomputes a 20-vector sliver from the
-    // pruned scan — materializing 30M rows to save that sliver was a
-    // net loss.
-    val enc = nearest(dist, Seq(col("vec_id"), col("m")), col("d2"), col("c"))
-      .select(col("vec_id").as("c_id"), col("m"), col("best.c").as("code"))
+    val dist = pqDist(e0, Seq("vec_id"), "qe", quantCbFlat(s, d), "ce")
+    // `dist` is deliberately NOT cached (was eagerCache): the only
+    // other consumer is the query side, whose vec_id < 20 pushdown
+    // recomputes a 20-vector sliver from the pruned scan —
+    // materializing 30M rows to save that sliver was a net loss.
+    val enc = pqEncode(dist, Seq("vec_id"))
     val qd = dist.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("m").as("qm"), col("c"), col("d2"))
     (e0, enc, qd)
@@ -771,23 +917,26 @@ object Vectors {
     // rnk = 1 + position in the best-first array. An embedding with a
     // NaN component scores NaN cosines, which `cos DESC` ranks FIRST
     // (NaN sorts above every number in both engines) but BeamTopW
-    // would rank last as -NaN: their key is -∞ instead (cos is
-    // otherwise finite), mapped back to NaN on the way out; a
-    // zero-norm embedding never gets here, as ANSI mode fails its 0/0
-    // cosine with DIVIDE_BY_ZERO. (Dedup-by-id inside BeamTopW is a
+    // would rank last as -NaN: their key is -∞ instead; a zero-norm
+    // embedding scores NULL cosines ([[cosine]]), which `cos DESC`
+    // ranks LAST: their key is +∞ (cos is otherwise finite). Both are
+    // mapped back on the way out. (Dedup-by-id inside BeamTopW is a
     // no-op here: b_id is unique within an a_id's cell.)
     val nanFirst = lit(Double.NegativeInfinity)
+    val nullLast = lit(Double.PositiveInfinity)
     eagerCache(
       a.join(b, col("cell") === col("bcell") && col("b_id") =!= col("a_id"))
         .select(col("a_id"), col("b_id"),
-          (dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
+          cosine(col("ae"), col("be"), col("an"), col("bn")).as("cos"))
         .groupBy(col("a_id"))
         .agg(graft.functions.BeamTopW.topPairs(degree)(
-          when(isnan(col("cos")), nanFirst).otherwise(-col("cos")), col("b_id")).as("ps"))
+          when(isnan(col("cos")), nanFirst).when(col("cos").isNull, nullLast)
+            .otherwise(-col("cos")), col("b_id")).as("ps"))
         .select(col("a_id"), posexplode(col("ps")))
         .select(col("a_id"), col("col._2").as("b_id"),
           (col("pos") + 1).cast("bigint").as("rnk"),
           when(col("col._1") === nanFirst, lit(Double.NaN))
+            .when(col("col._1") === nullLast, lit(null).cast("double"))
             .otherwise(-col("col._1")).as("cos")))
   }
 
@@ -1011,8 +1160,7 @@ object Vectors {
     // broadcast anti-join the IVF route already serves
     // (sim_ivf_pq_deletes) — candidates drop BEFORE scoring and
     // before the float fetch, so a deleted vector is unreachable
-    val tsB = if (tomb) Some(broadcast(e0.filter(col("vec_id") % 17 === 3)
-      .select(col("vec_id").as("c_id")))) else None
+    val tsB = if (tomb) Some(broadcast(tombstones(e0))) else None
     def dropTombs(df: DataFrame): DataFrame =
       tsB.fold(df)(t => df.join(t, Seq("c_id"), "left_anti"))
     // the label predicate, INSIDE the per-round scoring: a scored
@@ -1195,17 +1343,12 @@ object Vectors {
       labelMod: Option[Int] = None, tomb: Boolean = false): String = {
     val tsEnt = if (tomb) " AND c.cid % 17 <> 3" else ""
     def tsNew(r: Int) = if (tomb) s" AND n$r.c_id % 17 <> 3" else ""
-    def accCut(src: String, name: String) =
-      s"""$name AS MATERIALIZED (SELECT q_id, c_id, d2 FROM (
-         |          SELECT q_id, c_id, d2,
-         |                 row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rn
-         |          FROM $src) x$name WHERE rn <= $beamW)""".stripMargin
+    def cut(name: String, src: String) =
+      D.topKCte(name, "q_id, c_id, d2", src, beamW, "d2, c_id", materialized = true)
     def matchPred(m: Int) = s"c_id % $m = (q_id % $m + 1) % $m"
     val roundCtes = (1 to rounds).map { r =>
       val scScore =
-        s"""SELECT n$r.q_id, n$r.c_id,
-           |                 CAST(list_sum(list_transform(range(1, 65),
-           |                   j -> (q.qq[j] - c.qe[j]) * (q.qq[j] - c.qe[j]))) AS BIGINT) AS d2
+        s"""SELECT n$r.q_id, n$r.c_id, ${D.sqdInt("q.qq", "c.qe")} AS d2
            |          FROM n$r JOIN e c ON c.vec_id = n$r.c_id
            |                 JOIN q ON q.q_id = n$r.q_id
            |          WHERE n$r.c_id <> n$r.q_id${tsNew(r)}""".stripMargin
@@ -1220,10 +1363,7 @@ object Vectors {
              |          UNION ALL
              |          $scScore) u$r
              |        GROUP BY q_id, c_id),
-             |b$r AS MATERIALIZED (SELECT q_id, c_id, d2 FROM (
-             |          SELECT q_id, c_id, d2,
-             |                 row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rn
-             |          FROM s$r) x$r WHERE rn <= $beamW)""".stripMargin
+             |${cut(s"b$r", s"s$r")}""".stripMargin
         case Some(m) =>
           s"""${base}
              |sc$r AS MATERIALIZED ($scScore),
@@ -1232,52 +1372,34 @@ object Vectors {
              |          UNION ALL
              |          SELECT q_id, c_id, d2 FROM sc$r) u$r
              |        GROUP BY q_id, c_id),
-             |${accCut(s"s$r", s"b$r")},
+             |${cut(s"b$r", s"s$r")},
              |sa$r AS (SELECT q_id, c_id, min(d2) AS d2 FROM (
              |          SELECT q_id, c_id, d2 FROM a${r - 1}
              |          UNION ALL
              |          SELECT q_id, c_id, d2 FROM sc$r WHERE ${matchPred(m)}) ua$r
              |        GROUP BY q_id, c_id),
-             |${accCut(s"sa$r", s"a$r")}""".stripMargin
+             |${cut(s"a$r", s"sa$r")}""".stripMargin
       }
     }.mkString(",\n")
+    val out = labelMod match {
+      case None => topKSql(s"b$rounds", 3, "d2, c_id", "d2", "d2")
+      case Some(m) =>
+        topKSql(s"(SELECT q_id, c_id, CAST(c_id % $m AS INT) AS c_label, d2 FROM a$rounds) f",
+          3, "d2, c_id", "d2", "d2", ids = "q_id, c_id, c_label")
+    }
     s"""WITH ${knnEdgeCtesOver(knnScaledCentCte, twoLevel = true, degree = 8)},
        |tm AS MATERIALIZED (SELECT a_id, b_id FROM t),
-       |e AS (SELECT vec_id,
-       |        list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-       |      FROM embeddings),
+       |${D.microRel()},
        |q AS (SELECT vec_id AS q_id, qe AS qq FROM e WHERE vec_id < 20),
-       |brt AS (SELECT q_id, qq, sid FROM (
-       |          SELECT q.q_id, q.qq, s.sid,
-       |                 row_number() OVER (PARTITION BY q.q_id
-       |                   ORDER BY ${dd2("q.qq", "s.sce")}, s.sid) AS rn
-       |          FROM q, klscent s) t0 WHERE rn <= 2),
-       |s0 AS (SELECT b.q_id, c.cid AS c_id,
-       |              CAST(list_sum(list_transform(range(1, 65),
-       |                j -> (b.qq[j] - c.ce[j]) * (b.qq[j] - c.ce[j]))) AS BIGINT) AS d2
+       |${D.topKCte("brt", "q_id, qq, sid", "q, klscent s", 2,
+           s"${dd2("q.qq", "s.sce")}, s.sid", part = "q.q_id", inner = "q.q_id, q.qq, s.sid")},
+       |s0 AS (SELECT b.q_id, c.cid AS c_id, ${D.sqdInt("b.qq", "c.ce")} AS d2
        |       FROM brt b JOIN klchl c ON c.sid = b.sid
        |       WHERE c.cid <> b.q_id$tsEnt),
-       |b0 AS MATERIALIZED (SELECT q_id, c_id, d2 FROM (
-       |         SELECT q_id, c_id, d2,
-       |                row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rn
-       |         FROM s0) x0 WHERE rn <= $beamW),
+       |${cut("b0", "s0")},
        |${labelMod.fold("")(m =>
-           accCut(s"(SELECT q_id, c_id, d2 FROM s0 WHERE ${matchPred(m)}) sa0",
-             "a0") + ",\n")}$roundCtes
-       |${labelMod match {
-           case None =>
-             s"""SELECT q_id, c_id, rnk, d2 FROM (
-                |  SELECT q_id, c_id, d2,
-                |         row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk
-                |  FROM b$rounds) f
-                |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
-           case Some(m) =>
-             s"""SELECT q_id, c_id, c_label, rnk, d2 FROM (
-                |  SELECT q_id, c_id, CAST(c_id % $m AS INT) AS c_label, d2,
-                |         row_number() OVER (PARTITION BY q_id ORDER BY d2, c_id) AS rnk
-                |  FROM a$rounds) f
-                |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
-         }}""".stripMargin
+           cut("a0", s"(SELECT q_id, c_id, d2 FROM s0 WHERE ${matchPred(m)}) sa0") + ",\n")}$roundCtes
+       |$out""".stripMargin
   }
 
   /** Integer-exact damped PageRank over an arbitrary (src, dst) edge
@@ -1370,12 +1492,9 @@ object Vectors {
   /** DuckDB twin of [[knnEdgesScaled]]'s corpus-sized centroid rule
     * (the integer formula mirrored exactly: cells = max(8, ⌈n/125⌉),
     * stride = n // cells, seeds = multiples of stride below
-    * stride·cells) — assignment through the TWO-LEVEL layer, like the
-    * Spark chain.
+    * stride·cells) — assigned through the TWO-LEVEL layer by
+    * [[knnEdgeCtesOver]], like the Spark chain.
     */
-  private lazy val knnEdgeCtesScaled: String = knnEdgeCtesOver(
-    knnScaledCentCte, twoLevel = true)
-
   private def knnScaledCentCte: String =
     """nn AS (SELECT count(*) AS n FROM embeddings),
       |par AS (SELECT greatest(8, (n + 124) // 125) AS cells,
@@ -1393,12 +1512,8 @@ object Vectors {
       degree: Int = 3): String = {
     val asgCte = if (!twoLevel) flatAsgCte
     else
-      s"""km AS (SELECT vec_id,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |       FROM embeddings),
-         |cm2 AS (SELECT cid,
-         |              list_transform(ce, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS ce
-         |        FROM cent),
+      s"""${D.microRel("km")},
+         |cm2 AS (SELECT cid, ${D.micro("ce")} AS ce FROM cent),
          |${superLayerCtes("kl", "cm2")},
          |${twoLevelRankCtes("kl", "km", "vec_id", "qe", "ka")},
          |asg AS (SELECT e.vec_id, e.embedding, ${D.norm("e.embedding")} AS nrm,
@@ -1425,20 +1540,12 @@ object Vectors {
     * back to).
     */
   private def ivfPqAdistCtes: String = {
-    s"""$pqQdCtes,
-       |$scaledLloydCentCtes,
-       |${superLayerCtes("cl", "cent")},
-       |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
-       |asg AS (SELECT vec_id, cid AS cell FROM dd WHERE rn = 1),
-       |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM dd
-       |           WHERE rn <= 2 AND vec_id < 20),
-       |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, sum(qd.d2)::BIGINT AS ad
-       |          FROM enc JOIN asg ON asg.vec_id = enc.vec_id
+    s"""${D.ivf(pqQdCtes)},
+       |${D.ivfAsg},
+       |${D.ivfProbes},
+       |${D.adist(s"""enc JOIN asg ON asg.vec_id = enc.vec_id
        |               JOIN probes pr ON pr.pcell = asg.cell
-       |               JOIN qd ON qd.q_id = pr.q_id
-       |                      AND qd.m = enc.m AND qd.c = enc.code
-       |          WHERE enc.vec_id <> qd.q_id
-       |          GROUP BY 1, 2)""".stripMargin
+       |               JOIN qd ON qd.q_id = pr.q_id AND ${D.codeMatch}""")}""".stripMargin
   }
 
   /** Shared DuckDB oracle for `sim_ivf_pq` AND `sim_ivf_pq_indexed` —
@@ -1458,74 +1565,34 @@ object Vectors {
     * (argmin by (d2, c)) and the `qd` tables of queries 0-19.
     */
   private def pqQdCtes: String =
-    s"""e AS (SELECT vec_id,
-       |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-       |           FROM embeddings),
+    s"""${D.microRel()},
        |${trainedCbCtes(pqSeedIds, "e", "qe", "ce")},
-       |sub AS (SELECT vec_id, m.m, qe[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-       |        FROM e, range(0, 8) m(m)),
-       |dist AS (SELECT vec_id, sub.m, cb.c,
-       |                list_sum(list_transform(range(1, 9),
-       |                  j -> (sv[j] - ce[j]) * (sv[j] - ce[j]))) AS d2
-       |         FROM sub JOIN cb ON sub.m = cb.m),
-       |enc AS (SELECT vec_id, m, c AS code FROM
-       |          (SELECT vec_id, m, c,
-       |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
-       |           FROM dist) t
-       |        WHERE rn = 1),
+       |${D.pqEncCtes("vec_id", "e", "qe", "ce")},
        |qd AS (SELECT vec_id AS q_id, m, c, d2 FROM dist WHERE vec_id < 20)""".stripMargin
 
   /** `sim_pq_adc`'s flat ADC aggregate over [[pqQdCtes]] — `adist`. */
   private def pqAdcCtes: String =
     s"""$pqQdCtes,
-       |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, sum(qd.d2)::BIGINT AS ad
-       |          FROM enc JOIN qd ON enc.m = qd.m AND enc.code = qd.c
-       |          WHERE enc.vec_id <> qd.q_id
-       |          GROUP BY 1, 2)""".stripMargin
+       |${D.adist(s"enc JOIN qd ON ${D.codeMatch}")}""".stripMargin
 
   /** The oracle twin of [[exactRerank]] with its default dials: the
     * top-32 `adist` shortlist, exact micro-unit L2 against `e`, top-3.
     */
   private def exactRerankSql: String =
-    s"""sl AS (SELECT q_id, c_id FROM
-       |         (SELECT q_id, c_id,
-       |                 row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS srn
-       |          FROM adist) t
-       |       WHERE srn <= 32),
-       |ex AS (SELECT sl.q_id, sl.c_id,
-       |              CAST(list_sum(list_transform(range(1, 65),
-       |                j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS exact_d2
-       |       FROM sl JOIN e q ON q.vec_id = sl.q_id
-       |               JOIN e c ON c.vec_id = sl.c_id)
+    s"""${D.refineCtes(Seq("q_id", "c_id"), "ex", "exact_d2")}
        |${topKSql("ex", 3, "exact_d2, c_id", "exact_d2", "exact_d2")}""".stripMargin
 
-  /** Shared ADC-serve tail of `sim_ivf_pq` and `sim_ivf_pq_indexed`
-    * (the persisted-index key must hash-equal the in-memory
-    * composition, so the probe-filtered ADC aggregate + top-3 is ONE
-    * code path): `lists` = cell-tagged PQ codes (c_id, m, code, cell),
-    * `qd` = query distance tables (q_id, qm, c, d2), `probes` =
-    * (q_id, pcell). The query side (tables × probes) broadcasts; the
-    * code stream never shuffles before the per-(q,c) partial
-    * aggregate.
+  /** The probe-filtered ADC aggregate of `sim_ivf_pq` and
+    * `sim_ivf_pq_indexed` (the persisted-index key must hash-equal the
+    * in-memory composition): `lists` = cell-tagged PQ codes
+    * (c_id, m, code, cell), `qd` = query distance tables
+    * (q_id, qm, c, d2) fanned out to each query's `probes`
+    * (q_id, pcell), then [[adc]].
     */
-  private def ivfPqServe(lists: DataFrame, qd: DataFrame, probes: DataFrame): DataFrame =
-    ivfPqTop3(ivfPqAdist(lists, qd, probes))
-
-  /** The probe-filtered ADC aggregate alone — (q_id, c_id, ad) over
-    * exactly the probed cells' candidates. Shared by [[ivfPqServe]]
-    * and [[ivfPqFlatParts]], so both probe through the same join.
-    */
-  private[graft] def ivfPqAdist(lists: DataFrame, qd: DataFrame, probes: DataFrame): DataFrame = {
-    val qside = qd.withColumnRenamed("q_id", "pq_id")
+  private[graft] def ivfPqAdist(lists: DataFrame, qd: DataFrame, probes: DataFrame): DataFrame =
+    adc(lists, qd.withColumnRenamed("q_id", "pq_id")
       .join(probes, col("pq_id") === col("q_id"))
-      .select(col("q_id"), col("qm"), col("c"), col("d2"), col("pcell"))
-    lists
-      .join(broadcast(qside),
-        col("m") === col("qm") && col("code") === col("c")
-          && col("cell") === col("pcell") && col("c_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(sum(col("d2")).cast("bigint").as("ad"))
-  }
+      .select(col("q_id"), col("qm"), col("c"), col("d2"), col("pcell")))
 
   /** The corpus-scaled, Lloyd-refined coarse quantizer of the IVF×PQ
     * family — (cid, ce) with ce integer micro-units — shared by every
@@ -1700,12 +1767,6 @@ object Vectors {
         transform(col("mv"), x => floor(x + lit(0.5d))).as("ce"))
   }
 
-  /** DuckDB twin of [[scaledLloydCent]] as a CTE suffix — requires a
-    * CTE `e(vec_id, qe)` already in scope and ends with
-    * `cent(cid, ce)`. The integer formula (cells, stride, seeds), the
-    * seed assignment, and the lattice-rounded mean mirror the Spark
-    * chain op for op.
-    */
   /** DuckDB d2 between two 64-dim list expressions — the expanded
     * dot-product form every coarse ranking uses (exact on micro-unit
     * integers in doubles, < 2⁵³).
@@ -1787,14 +1848,15 @@ object Vectors {
        |           FROM $itemRel i JOIN ${out}rt r ON r.$idCol = i.$idCol
        |                JOIN ${p}chl c ON c.sid = r.sid) z)""".stripMargin
 
-  private def scaledLloydCentCtes: String =
-    scaledLloydCentCtesAt(ivfPerCell.toString)
-
-  /** [[scaledLloydCentCtes]] with the per-cell budget as an SQL
-    * EXPRESSION over `n` (in scope from the `nn` CTE) instead of the
-    * n/125 constant — `sim_ivf_sqrtn` derives pc = n ÷ 4⌈√n⌉ (the
-    * PLANS.md production geometry rule) through the SAME CTE chain,
-    * so the two dials cannot fork. All arithmetic stays integer
+  /** DuckDB twin of [[scaledLloydCent]] as a CTE suffix — requires a
+    * CTE `e(vec_id, qe)` already in scope and ends with
+    * `cent(cid, ce)`. The integer formula (cells, stride, seeds), the
+    * seed assignment, and the lattice-rounded mean mirror the Spark
+    * chain op for op. The per-cell budget is an SQL EXPRESSION over
+    * `n` (in scope from the `nn` CTE): [[ivfPerCell]] for the n/125
+    * chains, [[D.sqrtnPc]] (pc = n ÷ 4⌈√n⌉, the PLANS.md production
+    * geometry rule) for the √n ones — one CTE chain, so the two dials
+    * cannot fork. All arithmetic stays integer
     * (greatest/`//`), and ⌈√n⌉ is ceil of the correctly-rounded IEEE
     * sqrt — bit-identical between java.lang.Math and DuckDB.
     */
@@ -1864,17 +1926,23 @@ object Vectors {
     */
   private[graft] def ivfPqFlatParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (e0, enc, qd) = pqParts(s, d)
-    val ranked = eagerCache(coarseRanked(e0, quantCent(s, d),
-      layer = Some(quantLayer(s, d))))
     // inverted lists: each code row learns its cell once (the
     // build-time co-partitioning); the probe filter + ADC lookup is
     // then ONE broadcast join of the query-sized (tables × probes)
     // side against the cell-tagged code stream
-    val asg = ranked.filter(col("rn") === 1)
-      .select(col("vec_id").as("c_id"), col("cid").as("cell"))
-    val probes = ranked.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
-    (e0, ivfPqAdist(enc.join(asg, Seq("c_id")), qd, probes))
+    val (asg, probes) = quantRoute(s, d, e0)
+    (e0, ivfPqAdist(enc.join(asg.withColumnRenamed("vec_id", "c_id"), Seq("c_id")),
+      qd, probes))
+  }
+
+  /** The in-memory IVF×PQ route: asg (vec_id, cell) and the probes
+    * (q_id, pcell) of queries 0-19 over the staged quantizer.
+    */
+  private def quantRoute(s: SparkSession, d: String, e0: DataFrame): (DataFrame, DataFrame) = {
+    val ranked = eagerCache(coarseRanked(e0, quantCent(s, d),
+      layer = Some(quantLayer(s, d))))
+    (ranked.filter(col("rn") === 1).select(col("vec_id"), col("cid").as("cell")),
+      ranked.filter(col("vec_id") < 20).select(col("vec_id").as("q_id"), col("cid").as("pcell")))
   }
 
   /** sim_ivf_pq_residual's chain up to the ADC aggregate (FAISS
@@ -1888,14 +1956,9 @@ object Vectors {
   private[graft] def ivfPqResidualAdist(s: SparkSession, d: String): DataFrame = {
     val e0 = microVecs(s, d)
     val cent = quantCent(s, d)
-    val ranked = eagerCache(coarseRanked(e0, cent,
-      layer = Some(quantLayer(s, d))))
-    val asg = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
+    val (asg, probes) = quantRoute(s, d, e0)
     val (cb, enc) = residualEncode(e0, cent, asg, quantCbRes(s, d))
-    val probes = ranked.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell"))
-    ivfPqCellAdist(enc, residualQueryTables(e0, cent, probes, cb))
+    adc(enc, residualQueryTables(e0, cent, probes, cb))
   }
 
   /** Residual PQ encode over own-cell assignments (FAISS
@@ -1918,20 +1981,10 @@ object Vectors {
       .join(cent, col("cell") === col("cid"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("qe"), col("ce"), (x, y) => x - y).as("res")))
-    val ms = explode(sequence(lit(0), lit(7))).as("m")
-    val sub = resv.select(col("vec_id"), col("cell"), ms, col("res"))
-      .select(col("vec_id"), col("cell"), col("m"),
-        slice(col("res"), col("m") * 8 + 1, lit(8)).as("sv"))
-    // encoder argmin through [[nearest]] — r22, same move as pqParts:
-    // collapse the n×8×256 expand map-side instead of shuffling +
-    // sorting it. `cell` joins the grouping key (functionally
-    // dependent on vec_id) so no first() is needed.
-    val enc = nearest(sub.join(broadcast(cb), Seq("m"))
-        .select(col("vec_id"), col("cell"), col("m"), col("c"),
-          sqDist(col("sv"), col("cv")).as("d2")),
-        Seq(col("vec_id"), col("cell"), col("m")), col("d2"), col("c"))
-      .select(col("vec_id").as("c_id"), col("cell"), col("m"), col("best.c").as("code"))
-    (cb, enc)
+    // `cell` joins the encoder's grouping key (functionally
+    // dependent on vec_id) so no first() is needed
+    (cb, pqEncode(pqDist(resv, Seq("vec_id", "cell"), "res", cb, "cv"),
+      Seq("vec_id", "cell")))
   }
 
   /** PER-CELL residual query distance tables — (q_id, pcell, qm, c,
@@ -1943,7 +1996,6 @@ object Vectors {
     */
   private[graft] def residualQueryTables(e0q: DataFrame, cent: DataFrame,
       probes: DataFrame, cb: DataFrame): DataFrame = {
-    val ms = explode(sequence(lit(0), lit(7))).as("m")
     // the query side is the tiny frame here — no broadcast hint on
     // the ∝-n centroid frame; AQE broadcasts the query side instead
     val qres = probes
@@ -1951,26 +2003,11 @@ object Vectors {
       .join(cent, col("pcell") === col("cid"))
       .select(col("q_id"), col("pcell"),
         zip_with(col("qe"), col("ce"), (x, y) => x - y).as("res"))
-    qres.select(col("q_id"), col("pcell"), ms, col("res"))
-      .select(col("q_id"), col("pcell"), col("m").as("qm"),
-        slice(col("res"), col("m") * 8 + 1, lit(8)).as("sv"))
+    subspaces(qres, Seq("q_id", "pcell"), "res", "sv", mAs = "qm")
       .join(broadcast(cb.withColumnRenamed("m", "cbm")), col("qm") === col("cbm"))
       .select(col("q_id"), col("pcell"), col("qm"), col("c"),
         sqDist(col("sv"), col("cv")).as("d2"))
   }
-
-  /** The per-cell ADC aggregate for residual serving: `qd` already
-    * carries its pcell (tables differ per probed cell), so the cell
-    * filter is part of the one broadcast join condition, below the
-    * aggregate — the same only-corpus-scaled-shuffle guarantee as
-    * [[ivfPqAdist]].
-    */
-  private[graft] def ivfPqCellAdist(lists: DataFrame, qd: DataFrame): DataFrame =
-    lists.join(broadcast(qd),
-        col("m") === col("qm") && col("code") === col("c")
-          && col("cell") === col("pcell") && col("c_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(sum(col("d2")).cast("bigint").as("ad"))
 
   /** Shared exact-re-rank tail of `sim_pq_rerank`,
     * `sim_ivf_pq_rerank` and `sim_ivf_pq_serve` (Jégou 2011 §5.3 over
@@ -2124,27 +2161,50 @@ object Vectors {
       val asg = coarseRanked(e0, cent, nprobe = 1,
           layer = Some(quantLayer(s, d)))
         .select(col("vec_id").as("c_id"), col("cid").as("cell"))
-      // cell-keyed repartition before the write: each cell lives in
-      // exactly one task, so partitionBy emits ONE file per cell and
-      // a serve reads exactly nprobe files regardless of build
-      // parallelism (without it every write task touches every cell —
-      // files/cell ∝ tasks, measured 10× in the ivfidx octave)
-      enc.join(asg, Seq("c_id")).repartition(col("cell"))
-        .withColumn("shard", listShard(col("cell")))
-        .write.mode("overwrite").partitionBy("shard", "cell")
-        .parquet(s"$stage/lists")
-      // quantizer copies alongside the lists (the self-contained FAISS
-      // index layout the serve paths read) — the SAME staged trained
-      // quantizers AND routing tables every chain uses, so artifact,
-      // codes, and serve routing cannot drift
-      cent.write.mode("overwrite").parquet(s"$stage/centroids")
-      quantCbFlat(s, d).write.mode("overwrite").parquet(s"$stage/codebook")
-      val quant = stagedIvfQuant(s, d)
-      s.read.parquet(s"$quant/supers").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/supers")
-      s.read.parquet(s"$quant/children").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/children")
+      writeIndex(s, d, stage, enc.join(asg, Seq("c_id")), cent, quantCbFlat(s, d))
     }
+
+  /** THE stored IVF×PQ index: `lists/` plus a copy of the quantizer
+    * it was encoded with (`centroids/`, `codebook/`, routing tables).
+    */
+  private def writeIndex(s: SparkSession, d: String, stage: String,
+      lists: DataFrame, cent: DataFrame, cb: DataFrame): Unit = {
+    writeLists(lists, s"$stage/lists")
+    cent.write.mode("overwrite").parquet(s"$stage/centroids")
+    cb.write.mode("overwrite").parquet(s"$stage/codebook")
+    copyLayer(s, stagedIvfQuant(s, d), stage)
+  }
+
+  /** THE inverted-list writer: (c_id, m, code, cell) as
+    * `shard=K/cell=N/`, cell-repartitioned so each cell is ONE file and
+    * a serve reads nprobe files whatever the build parallelism.
+    */
+  private def writeLists(lists: DataFrame, path: String,
+      parts: Option[Int] = None): Unit =
+    parts.fold(lists.repartition(col("cell")))(n => lists.repartition(n, col("cell")))
+      .withColumn("shard", listShard(col("cell")))
+      .write.mode("overwrite").partitionBy("shard", "cell")
+      .parquet(path)
+
+  /** THE cell plan: the distinct probed cells of (…, pcell), sorted —
+    * ≤ ncells integers, the literal list [[readLists]] prunes by.
+    */
+  private def cellPlan(probes: DataFrame): Array[Long] =
+    probes.select(col("pcell").cast("bigint")).distinct()
+      .collect().map(_.getLong(0)).sorted
+
+  /** THE stored-index probe: route `e0q`(vec_id, qe) to `nprobe`
+    * cells through the quantizer under `quantDir` and read only those
+    * cells of `listsPath` — (centroids, cached probes, lists).
+    */
+  private def storedProbe(s: SparkSession, quantDir: String, listsPath: String,
+      e0q: DataFrame, nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
+    val cent = s.read.parquet(s"$quantDir/centroids")
+    val probes = eagerCache(coarseRanked(e0q, cent, nprobe,
+        layer = Some(dirLayer(s, quantDir)))
+      .select(col("vec_id").as("q_id"), col("cid").as("pcell")))
+    (cent, probes, readLists(s, listsPath, cellPlan(probes)))
+  }
 
   /** The three serve-side frames of `sim_ivf_pq_indexed` — (lists =
     * partition-PRUNED inverted-list scan, qd = query distance tables
@@ -2157,26 +2217,10 @@ object Vectors {
       qBound: Long, nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
     val idx = stagedIvfPqIndex(s, d)
     val e0q = microVecs(s, d).filter(col("vec_id") < qBound)
-    val cent = s.read.parquet(s"$idx/centroids")
-    val probes = eagerCache(coarseRanked(e0q, cent, nprobe,
-        layer = Some(dirLayer(s, idx)))
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell")))
-    // the query router's cell plan: nprobe cells per query, distinct
-    // across the (broadcast-sized) query batch — a driver-side
-    // collect of AT MOST ncells integers, never corpus data. The
-    // literal IN list is what turns into the scan's PartitionFilters
-    // (readLists also restricts the LISTING to the probed shards).
-    val cells = probes.select(col("pcell").cast("bigint")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists = readLists(s, s"$idx/lists", cells)
+    val (_, probes, lists) = storedProbe(s, idx, s"$idx/lists", e0q, nprobe)
     // query distance tables from the STORED codebook (32 rows)
-    val ms = explode(sequence(lit(0), lit(7))).as("m")
-    val sub = e0q.select(col("vec_id"), ms, col("qe"))
-      .select(col("vec_id"), col("m"),
-        slice(col("qe"), col("m") * 8 + 1, lit(8)).as("sv"))
-    val qd = sub.join(broadcast(s.read.parquet(s"$idx/codebook")), Seq("m"))
-      .select(col("vec_id").as("q_id"), col("m").as("qm"), col("c"),
-        sqDist(col("sv"), col("ce")).as("d2"))
+    val qd = pqDist(e0q, Seq("vec_id"), "qe", s.read.parquet(s"$idx/codebook"), "ce")
+      .select(col("vec_id").as("q_id"), col("m").as("qm"), col("c"), col("d2"))
     (lists, qd, probes)
   }
 
@@ -2188,7 +2232,7 @@ object Vectors {
   private[graft] def ivfPqIndexedServe(s: SparkSession, d: String,
       qBound: Long = 20L, nprobe: Int = 2): DataFrame = {
     val (lists, qd, probes) = ivfPqIndexedParts(s, d, qBound, nprobe)
-    ivfPqServe(lists, qd, probes)
+    ivfPqTop3(ivfPqAdist(lists, qd, probes))
   }
 
   /** Staged, stamped on-disk RESIDUAL IVF×PQ index — the
@@ -2207,28 +2251,11 @@ object Vectors {
           layer = Some(quantLayer(s, d)))
         .select(col("vec_id"), col("cid").as("cell"))
       val (cb, enc) = residualEncode(e0, cent, asg, quantCbRes(s, d))
-      // one file per cell — see the flat-index builder's note. `cell`
-      // stays BIGINT end-to-end: cell ids are seed vec_ids, which on
-      // the corpora this design targets exceed Int range — an
+      // `cell` stays BIGINT end-to-end: cell ids are seed vec_ids,
+      // which on the corpora this design targets exceed Int range — an
       // ANSI-mode int cast would turn the build into a runtime crash
-      // (r15 advice). shard = cell % 256 bounds serve-time listing
-      // (see the flat builder's layout note).
-      enc.repartition(col("cell"))
-        .withColumn("shard", listShard(col("cell")))
-        .write.mode("overwrite").partitionBy("shard", "cell")
-        .parquet(s"$stage/lists")
-      cent.write.mode("overwrite").parquet(s"$stage/centroids")
-      cb.write.mode("overwrite").parquet(s"$stage/codebook")
-      // the TWO-LEVEL routing tables, copied from the ONE staged
-      // derivation in stagedIvfQuant (FAISS ships its coarse assigner
-      // with the index): `supers/` = (sid, sce), `children/` =
-      // (cid, sid) E-step membership. The streaming add() path and
-      // the serves read these — a single derivation, no drift.
-      val quant = stagedIvfQuant(s, d)
-      s.read.parquet(s"$quant/supers").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/supers")
-      s.read.parquet(s"$quant/children").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stage/children")
+      // (r15 advice)
+      writeIndex(s, d, stage, enc, cent, cb)
     }
 
   /** Serve a query batch from the persisted RESIDUAL index — the
@@ -2368,16 +2395,7 @@ object Vectors {
   private[graft] def resIndexAdistQ(s: SparkSession,
       listsPath: String, quantDir: String, e0q: DataFrame,
       nprobe: Int = 2, tombstones: Option[DataFrame] = None): DataFrame = {
-    val cent = s.read.parquet(s"$quantDir/centroids")
-    val probes = eagerCache(coarseRanked(e0q, cent, nprobe,
-        layer = Some(dirLayer(s, quantDir)))
-      .select(col("vec_id").as("q_id"), col("cid").as("pcell")))
-    // the cell plan: AT MOST ncells integers collected, never corpus
-    // data. readLists keeps the literal BIGINT partition filter AND
-    // restricts listing to the probed shards — see ivfPqIndexedParts.
-    val cells = probes.select(col("pcell").cast("bigint")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists0 = readLists(s, listsPath, cells)
+    val (cent, probes, lists0) = storedProbe(s, quantDir, listsPath, e0q, nprobe)
     // logical deletes: the tombstone anti-join sits BELOW the ADC
     // aggregate, so a deleted vector can never reach a shortlist (a
     // post-top-k filter would silently under-return instead) — the
@@ -2385,7 +2403,7 @@ object Vectors {
     val lists = tombstones.fold(lists0)(t =>
       lists0.join(broadcast(t.select(col("c_id"))), Seq("c_id"), "left_anti"))
     val cb = s.read.parquet(s"$quantDir/codebook")
-    ivfPqCellAdist(lists, residualQueryTables(e0q, cent, probes, cb))
+    adc(lists, residualQueryTables(e0q, cent, probes, cb))
   }
 
   /** The PER-QUERY-WIDTH production serve (r19, VERDICT r18 #2):
@@ -2450,33 +2468,22 @@ object Vectors {
         col("cid").as("pcell"), col("rn")), Seq("q_id"))
       .filter(col("rn") <= col("w"))
       .select(col("q_id"), col("pcell"), col("w"), col("w_label")))
-    // the cell plan: the union of per-query probe sets — AT MOST
-    // ncells integers collected, never corpus data; readLists turns
-    // the literal IN list into PartitionFilters and lists only the
-    // probed shards
-    val cellsArr = probes.select(col("pcell").cast("bigint")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    // the cell plan: the union of per-query probe sets
+    val cellsArr = cellPlan(probes)
     // logical deletes below every distance: the same % 17 tombstone
     // set as sim_ivf_pq_deletes/_serve, anti-joined under the ADC
     // aggregate AND under the exact-route scan
-    val ts = e0.filter(col("vec_id") % 17 === 3)
-      .select(col("vec_id").as("c_id"))
     val lists = readLists(s, s"$idx/lists", cellsArr)
-      .join(broadcast(ts), Seq("c_id"), "left_anti")
+      .join(broadcast(tombstones(e0)), Seq("c_id"), "left_anti")
     val cb = s.read.parquet(s"$idx/codebook")
     val qd = residualQueryTables(e0q, cent,
       probes.select(col("q_id"), col("pcell")), cb)
     // per-query width + wanted label ride into the broadcast side of
     // the ADC join; the label predicate pairs each query only with
     // its wanted candidates — computed from c_id, below the aggregate
-    val qdl = qd.join(broadcast(qw.select(col("q_id"), col("w"),
-      col("w_label"))), Seq("q_id"))
-    val adist = lists.join(broadcast(qdl),
-        col("m") === col("qm") && col("code") === col("c")
-          && col("cell") === col("pcell") && col("c_id") =!= col("q_id")
-          && tierLabelCol("c_id") === col("w_label"))
-      .groupBy(col("q_id"), col("c_id"))
-      .agg(sum(col("d2")).cast("bigint").as("ad"))
+    val adist = adc(lists, qd.join(broadcast(qw.select(col("q_id"), col("w"),
+        col("w_label"))), Seq("q_id")),
+      extra = Some(tierLabelCol("c_id") === col("w_label")))
     // ivf route: ADC top-`shortlist` → EXACT re-rank through the
     // bucket-staged float fetch (the capstone's refine tier, at
     // per-query widths); w re-attaches from the width table
@@ -2746,22 +2753,10 @@ object Vectors {
         // max(1, …): commits whose every row was tombstoned leave zero
         // cells in the rewrite input — keep repartition legal
         val nc = math.max(1, lists.select(col("cell")).distinct().count().toInt)
-        lists.repartition(nc, col("cell"))
-          .withColumn("shard", listShard(col("cell")))
-          .write.mode("overwrite").partitionBy("shard", "cell")
-          .parquet(s"$stage/lists")
+        writeLists(lists, s"$stage/lists", Some(nc))
       }
     }
   }
-
-  /** DuckDB twin of the filtered-IVF chain (shared by
-    * `sim_ivf_filtered` and the adaptive key's dense branch) — CTEs
-    * through `p` (q_id, c_id, c_label, d2); `labelExpr` is the label
-    * column expression over embeddings (fixture column or synthetic
-    * vec_id-derived), `labelMod` the wanted-label modulus.
-    */
-  private def filteredIvfCtes(labelExpr: String, labelMod: Int): String =
-    filteredIvfCtesW(labelExpr, labelMod, 2)
 
   /** Query-batch bound shared by the filtered-ANN twins: the oracle
     * CTEs carry the SAME literal as [[filteredTop3]]'s default — a
@@ -2771,37 +2766,32 @@ object Vectors {
     */
   private val filteredQBound: Long = 20L
 
-  /** [[filteredIvfCtes]] at an arbitrary probe width — the DuckDB
-    * twin of [[filteredTop3]]'s r17 SPLIT routing: the corpus
+  /** DuckDB twin of the filtered-IVF chain (`sim_ivf_filtered`, its
+    * probe-8 dial and the adaptive key's dense branch) — CTEs through
+    * `p` (q_id, c_id, c_label, d2); `labelExpr` is the label column
+    * expression over embeddings (fixture column or synthetic
+    * vec_id-derived), `labelMod` the wanted-label modulus. It mirrors
+    * [[filteredTop3]]'s r17 SPLIT routing: the corpus
     * ASSIGNMENT ranks through the w = 2 `dd` chain (only rn = 1 is
     * consumed), while nprobe > 2 adds a SECOND rank CTE (`dq`) over
     * the query frame alone at w = nprobe — mirroring, op for op, the
     * Spark side's refusal to multiply every corpus row's O(√cells)
     * routing by nprobe/2 when only 20 query rows need the width.
     */
-  private def filteredIvfCtesW(labelExpr: String, labelMod: Int,
-      nprobe: Int, qBound: Long = filteredQBound): String = {
+  private def filteredIvfCtes(labelExpr: String, labelMod: Int,
+      nprobe: Int = 2, qBound: Long = filteredQBound): String = {
     val wideQ =
       if (nprobe <= 2) ""
       else s"""qf AS (SELECT vec_id, qe FROM e WHERE vec_id < $qBound),
               |${twoLevelRankCtes("cl", "qf", "vec_id", "qe", "dq", nprobe)},
               |""".stripMargin
-    val (probeRel, probeRn) =
-      if (nprobe <= 2) ("dd", nprobe) else ("dq", nprobe)
-    s"""e AS (SELECT vec_id, $labelExpr AS label,
-       |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-       |           FROM embeddings),
-       |$scaledLloydCentCtes,
-       |${superLayerCtes("cl", "cent")},
-       |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
-       |${wideQ}cand AS (SELECT e.vec_id AS c_id, e.label AS c_label, e.qe AS ce2, dd.cid AS cell
-       |         FROM e JOIN dd ON dd.vec_id = e.vec_id AND dd.rn = 1),
+    val probeRel = if (nprobe <= 2) "dd" else "dq"
+    s"""${D.ivf(D.microRel(extra = s"$labelExpr AS label, "))},
+       |$wideQ${D.cellCand("e.label AS c_label, ")},
        |probes AS (SELECT e.vec_id AS q_id, e.label AS q_label, e.qe AS qq, $probeRel.cid AS pcell
-       |           FROM e JOIN $probeRel ON $probeRel.vec_id = e.vec_id AND $probeRel.rn <= $probeRn
+       |           FROM e JOIN $probeRel ON $probeRel.vec_id = e.vec_id AND $probeRel.rn <= $nprobe
        |           WHERE e.vec_id < $qBound),
-       |p AS (SELECT q.q_id, c.c_id, c.c_label,
-       |             CAST(list_sum(list_transform(range(1, 65),
-       |               j -> (q.qq[j] - c.ce2[j]) * (q.qq[j] - c.ce2[j]))) AS BIGINT) AS d2
+       |p AS (SELECT q.q_id, c.c_id, c.c_label, ${D.sqdInt("q.qq", "c.ce2")} AS d2
        |      FROM probes q JOIN cand c
        |        ON c.cell = q.pcell AND c.c_label = (q.q_label + 1) % $labelMod
        |           AND c.c_id <> q.q_id)""".stripMargin
@@ -2896,10 +2886,7 @@ object Vectors {
       if (nprobe <= 2) asgR
       else eagerCache(coarseRanked(e0.filter(col("vec_id") < qBound),
         centF, nprobe, layer = Some(lay)))
-    val cand = e0.join(asgR.filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
-      .select(col("vec_id").as("c_id"), col("label").as("c_label"),
-        col("qe").as("ce2"), col("cell"))
+    val cand = cellCand(e0, asgR, col("label").as("c_label"))
     val probes = e0.filter(col("vec_id") < qBound)
       .join(probeR.filter(col("vec_id") < qBound)
         .filter(col("rn") <= nprobe)
@@ -2911,6 +2898,12 @@ object Vectors {
           && col("c_label") === (col("q_label") + 1) % labelMod
           && col("c_id") =!= col("q_id")))
   }
+
+  /** Each vector of `e0` in its rn = 1 cell of `ranked`. */
+  private def cellCand(e0: DataFrame, ranked: DataFrame, extra: Column*): DataFrame =
+    e0.join(ranked.filter(col("rn") === 1)
+        .select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
+      .select((col("vec_id").as("c_id") +: extra) ++ Seq(col("qe").as("ce2"), col("cell")): _*)
 
   /** PER-QUERY probe width from the serving rule (r18, VERDICT r17
     * #4). SCALE.md's ivffilter table verified nprobe ≈ 2–3 ×
@@ -2962,11 +2955,8 @@ object Vectors {
     // IVF side: route the query frame once at wMax, trim per query
     val probeR = coarseRanked(e0L.filter(qp), cent,
       nprobe = wMax, layer = Some(lay))
-    val cand = e0L.join(coarseRanked(e0L, cent, nprobe = 2,
-        layer = Some(lay)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
-      .select(col("vec_id").as("c_id"), col("label").as("c_label"),
-        col("qe").as("ce2"), col("cell"))
+    val cand = cellCand(e0L, coarseRanked(e0L, cent, nprobe = 2, layer = Some(lay)),
+      col("label").as("c_label"))
     val probes = qw.filter(col("route") === "ivf")
       .join(probeR.select(col("vec_id").as("q_id"),
         col("cid").as("pcell"), col("rn")), Seq("q_id"))
@@ -3056,6 +3046,10 @@ object Vectors {
        |          WHEN $l < 25 THEN 5 + (($l - 4) % 20)
        |          ELSE 25 + (($l - 24) % 499) END AS INT)""".stripMargin
 
+  /** The √n geometry's per-cell budget (cells ≈ 4√n, PLANS.md). */
+  private def sqrtnPerCell(n: Long): Long =
+    math.max(1L, n / (4L * math.ceil(math.sqrt(n.toDouble)).toLong))
+
   /** The `sim_ivf_filtered_perq` chain (the key's lambda, extracted
     * so VectorOpsSpec's batch-dependence spec serves the key's REAL
     * code): the √n/4 per-cell geometry, the staged quantizer, the tier
@@ -3066,8 +3060,7 @@ object Vectors {
       : DataFrame = {
     val e0 = eagerCache(microVecs(s, d))
     val n = e0.count()
-    val perCell = math.max(1L,
-      n / (4L * math.ceil(math.sqrt(n.toDouble)).toLong))
+    val perCell = sqrtnPerCell(n)
     val centDir = stagedIvfCent(s, d, perCell)
     val e0L = e0.select(col("vec_id"),
       tierLabelCol("vec_id").as("label"), col("qe"))
@@ -3150,21 +3143,11 @@ object Vectors {
     */
   private def ivfPqResidualOracle(extraAdistPred: String = "",
       rerank: Boolean = false): String = {
-      s"""WITH e AS (SELECT vec_id,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |           FROM embeddings),
-         |$scaledLloydCentCtes,
-         |${superLayerCtes("cl", "cent")},
-         |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
+      s"""WITH ${D.ivf(D.microRel())},
          |$residualEncCtes,
-         |probes AS (SELECT vec_id AS q_id, cid AS pcell FROM dd
-         |           WHERE rn <= 2 AND vec_id < 20),
+         |${D.ivfProbes},
          |${residualQdCtes("probes")},
-         |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, sum(qd.d2)::BIGINT AS ad
-         |          FROM enc JOIN qd ON qd.pcell = enc.cell
-         |                          AND qd.m = enc.m AND qd.c = enc.code
-         |          WHERE enc.vec_id <> qd.q_id$extraAdistPred
-         |          GROUP BY 1, 2)
+         |${D.adist(D.cellCodeJoin, extraAdistPred)}
          |${residualTail(rerank)}""".stripMargin
   }
 
@@ -3175,23 +3158,13 @@ object Vectors {
     * in scope; ends in `enc`(vec_id, cell, m, code) with `cb` bound.
     */
   private def residualEncCtes: String =
-    s"""asg AS (SELECT vec_id, cid AS cell FROM dd WHERE rn = 1),
+    s"""${D.ivfAsg},
        |resv AS (SELECT e.vec_id, a.cell,
        |                list_transform(range(1, 65), j -> e.qe[j] - c.ce[j]) AS res
        |         FROM e JOIN asg a ON a.vec_id = e.vec_id
        |                JOIN cent c ON c.cid = a.cell),
        |${trainedCbCtes(pqResSeedIds, "resv", "res", "cv")},
-       |sub AS (SELECT vec_id, cell, m.m, res[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-       |        FROM resv, range(0, 8) m(m)),
-       |dist AS (SELECT vec_id, cell, sub.m, cb.c,
-       |                list_sum(list_transform(range(1, 9),
-       |                  j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-       |         FROM sub JOIN cb ON sub.m = cb.m),
-       |enc AS (SELECT vec_id, cell, m, c AS code FROM
-       |          (SELECT vec_id, cell, m, c,
-       |                  row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, c) AS rn
-       |           FROM dist) t
-       |        WHERE rn = 1)""".stripMargin
+       |${D.pqEncCtes("vec_id, cell", "resv", "res", "cv")}""".stripMargin
 
   /** Per-probed-cell QUERY distance tables from the stored residual
     * codebook — `$probesRel` must expose (q_id, pcell); ends in
@@ -3202,11 +3175,8 @@ object Vectors {
        |                list_transform(range(1, 65), j -> e.qe[j] - c.ce[j]) AS res
        |         FROM $probesRel p JOIN e ON e.vec_id = p.q_id
        |                JOIN cent c ON c.cid = p.pcell),
-       |qsub AS (SELECT q_id, pcell, m.m, res[m.m * 8 + 1 : m.m * 8 + 8] AS sv
-       |         FROM qres, range(0, 8) m(m)),
-       |qd AS (SELECT q_id, pcell, qsub.m, cb.c,
-       |              list_sum(list_transform(range(1, 9),
-       |                j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
+       |qsub AS (${D.subspaces("q_id, pcell", "res", "sv", "qres")}),
+       |qd AS (SELECT q_id, pcell, qsub.m, cb.c, ${D.sqd("sv", "cv", 8)} AS d2
        |       FROM qsub JOIN cb ON qsub.m = cb.m)""".stripMargin
 
   /** DuckDB twin of [[resIndexServePerQ]] — the residual-chain oracle
@@ -3219,39 +3189,20 @@ object Vectors {
     * output columns so the hash pins the formula.
     */
   private def ivfPqServePerQOracle: String =
-    s"""WITH e AS (SELECT vec_id, ${tierLabelDuck("vec_id")} AS label,
-       |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-       |           FROM embeddings),
-       |$scaledLloydCentCtes,
-       |${superLayerCtes("cl", "cent")},
-       |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
+    s"""WITH ${D.ivf(D.microRel(extra = s"${tierLabelDuck("vec_id")} AS label, "))},
        |$residualEncCtes,
        |$widthRouteCtes,
        |probes AS (SELECT q.q_id, dq.cid AS pcell, q.w, q.w_label
        |           FROM qr q JOIN dq ON dq.vec_id = q.q_id AND dq.rn <= q.w
        |           WHERE q.route = 'ivf'),
        |${residualQdCtes("(SELECT q_id, pcell FROM probes)")},
-       |adist AS (SELECT qd.q_id, enc.vec_id AS c_id, p.w, sum(qd.d2)::BIGINT AS ad
-       |          FROM enc JOIN qd ON qd.pcell = enc.cell
-       |                          AND qd.m = enc.m AND qd.c = enc.code
+       |${D.adist(s"""${D.cellCodeJoin}
        |               JOIN (SELECT DISTINCT q_id, w, w_label FROM probes) p
-       |                 ON p.q_id = qd.q_id
-       |          WHERE enc.vec_id <> qd.q_id AND enc.vec_id % 17 <> 3
-       |            AND ${tierLabelDuck("enc.vec_id")} = p.w_label
-       |          GROUP BY 1, 2, 3),
-       |sl AS (SELECT q_id, w, c_id FROM
-       |         (SELECT q_id, w, c_id,
-       |                 row_number() OVER (PARTITION BY q_id ORDER BY ad, c_id) AS srn
-       |          FROM adist) t
-       |       WHERE srn <= 32),
-       |pi AS (SELECT sl.q_id, sl.w, sl.c_id,
-       |              CAST(list_sum(list_transform(range(1, 65),
-       |                j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS d2
-       |       FROM sl JOIN e q ON q.vec_id = sl.q_id
-       |               JOIN e c ON c.vec_id = sl.c_id),
-       |pe AS (SELECT q.q_id, q.w, c.vec_id AS c_id,
-       |              CAST(list_sum(list_transform(range(1, 65),
-       |                j -> (q.qq[j] - c.qe[j]) * (q.qq[j] - c.qe[j]))) AS BIGINT) AS d2
+       |                 ON p.q_id = qd.q_id""",
+           s""" AND enc.vec_id % 17 <> 3
+       |            AND ${tierLabelDuck("enc.vec_id")} = p.w_label""", Some("p.w"))},
+       |${D.refineCtes(Seq("q_id", "w", "c_id"), "pi", "d2")},
+       |pe AS (SELECT q.q_id, q.w, c.vec_id AS c_id, ${D.sqdInt("q.qq", "c.qe")} AS d2
        |       FROM qr q JOIN e c ON c.label = q.w_label AND c.vec_id <> q.q_id
        |                         AND c.vec_id % 17 <> 3
        |       WHERE q.route = 'exact')
@@ -3345,13 +3296,12 @@ object Vectors {
     * centroids `rc`(cell, rce).
     */
   private def lloydRefinedCtes: String = {
-    val q = "list_transform(%s, x -> floor(x::DOUBLE * 1000000 + 0.5))"
     s"""cent AS (
-       |  SELECT vec_id AS cid, ${q.format("embedding")} AS ce FROM embeddings
+       |  SELECT vec_id AS cid, ${D.micro("embedding")} AS ce FROM embeddings
        |  WHERE vec_id IN ${ivfCentroidIds.mkString("(", ", ", ")")}),
        |b AS (
        |  SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-       |         ${q.format("embedding")} AS qe
+       |         ${D.micro("embedding")} AS qe
        |  FROM embeddings),
        |asg0 AS (
        |  SELECT vec_id, embedding, nrm, qe, cid AS cell FROM (
@@ -3365,8 +3315,36 @@ object Vectors {
        |rc AS (SELECT cell, list(mv ORDER BY i) AS rce FROM m GROUP BY cell)""".stripMargin
   }
 
+  /** The fixed-seed IVF tail: in-cell cosine top-3 of queries 0-19
+    * over `asg`(vec_id, embedding, nrm, cell).
+    */
+  private def cellCosine(asg: DataFrame): DataFrame =
+    cosineTopK(asg.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
+          col("nrm").as("qn"), col("cell")),
+      asg.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
+        col("nrm").as("cn"), col("cell").as("ccell")),
+      3, Some(col("cell") === col("ccell")))
+
+  /** [[cellCosine]] at nprobe = 2 over `scored`(vec_id, embedding,
+    * nrm, `cell`, `d`), 8 cells per vector ranked by (`d`, `cell`).
+    */
+  private def probe2Cosine(scored: DataFrame, cell: String, d: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id")).orderBy(col(d), col(cell))
+    val ranked = eagerCache(scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 2))
+    val asg = ranked.filter(col("rn") === 1)
+      .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
+        col("nrm").as("cn"), col(cell).as("cell"))
+    val qp = ranked.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
+        col("nrm").as("qn"), col(cell).as("probe"))
+    cosineTopK(qp, asg, 3, Some(col("probe") === col("cell")))
+  }
+
   /** In-cell cosine top-3 of queries 0-19 over an assignment
-    * `rel`(vec_id, embedding, nrm, cell) — the fixed-seed IVF tail.
+    * `rel`(vec_id, embedding, nrm, cell) — [[cellCosine]]'s twin.
     */
   private def cellCosineSql(rel: String): String =
     s"""p AS (
@@ -3427,12 +3405,8 @@ object Vectors {
     // cached distance frame; result sets are output-sized. At 100 TB
     // the distance stage rides the IVF probes unchanged.
     sql("sim_range_search",
-      """WITH e AS (SELECT vec_id,
-        |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-        |           FROM embeddings),
-        |p AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-        |             CAST(list_sum(list_transform(range(1, 65),
-        |               j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS d2
+      s"""WITH ${D.microRel()},
+        |p AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id, ${D.sqdInt("q.qe", "c.qe")} AS d2
         |      FROM e q JOIN e c ON q.vec_id < 20 AND c.vec_id <> q.vec_id),
         |r AS (SELECT q_id, (min(d2) * 105) // 100 AS r2 FROM p GROUP BY 1)
         |SELECT p.q_id, p.c_id, p.d2 FROM p JOIN r ON r.q_id = p.q_id
@@ -3522,13 +3496,7 @@ object Vectors {
          |${cellCosineSql("asg")}""".stripMargin
     }) { (s, d) =>
       val e = emb(s, d)
-      val asg = flatAssign(e, fixedCent(e))
-      val q = asg.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("cell"))
-      val c = asg.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-        col("nrm").as("cn"), col("cell").as("ccell"))
-      cosineTopK(q, c, 3, Some(col("cell") === col("ccell")))
+      cellCosine(flatAssign(e, fixedCent(e)))
     },
 
     // ---- IVF refined by one Lloyd iteration ----------------------------
@@ -3561,16 +3529,10 @@ object Vectors {
     }) { (s, d) =>
       val (asg0, refined) = lloydRefined(s, d)
       // E-step vs refined centroids, then cell-local cosine top-3
-      val asg1 = eagerCache(nearest(asg0.join(broadcast(refined)), Seq(col("vec_id")),
+      cellCosine(eagerCache(nearest(asg0.join(broadcast(refined)), Seq(col("vec_id")),
           d2(col("qe"), col("rce")), col("rcell").as("cid"), "embedding", "nrm")
         .select(col("vec_id"), col("embedding"), col("nrm"),
-          col("best.cid").as("cell")))
-      val qs = asg1.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("cell"))
-      val cs = asg1.select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-        col("nrm").as("cn"), col("cell").as("ccell"))
-      cosineTopK(qs, cs, 3, Some(col("cell") === col("ccell")))
+          col("best.cid").as("cell"))))
     },
 
     // ---- IVF with nprobe=2 ---------------------------------------------
@@ -3591,21 +3553,9 @@ object Vectors {
          |${probe2CosineSql("cid AS cell", "cid")}""".stripMargin
     }) { (s, d) =>
       val e = emb(s, d)
-      val cent = fixedCent(e)
-      val wAsg = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))
-      val ranked = eagerCache(e.join(broadcast(cent))
+      probe2Cosine(e.join(broadcast(fixedCent(e)))
         .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
-          col("cid"), d2(col("embedding"), col("ce")).as("d2"))
-        .withColumn("rn", row_number().over(wAsg))
-        .filter(col("rn") <= 2))
-      val asg = ranked.filter(col("rn") === 1)
-        .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("cid").as("cell"))
-      val qp = ranked.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("cid").as("probe"))
-      cosineTopK(qp, asg, 3, Some(col("probe") === col("cell")))
+          col("cid"), d2(col("embedding"), col("ce")).as("d2")), "cid", "d2")
     },
 
     // ---- IVF, refined centroids × nprobe=2 (the composed production dial)
@@ -3631,23 +3581,10 @@ object Vectors {
          |${probe2CosineSql("cell", "cell")}""".stripMargin
     }) { (s, d) =>
       val (asg0, refined) = lloydRefined(s, d)
-      // rank-2 re-assignment vs the refined centroids: window over the
-      // 8 candidate rows per vector (probe2's shape), both the corpus
-      // side (rn=1) and the query probes (rn≤2) read it
-      val wAsg = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("rd2"), col("rcell"))
-      val ranked = eagerCache(asg0.join(broadcast(refined))
+      // rank-2 re-assignment vs the refined centroids
+      probe2Cosine(asg0.join(broadcast(refined))
         .select(col("vec_id"), col("embedding"), col("nrm"), col("rcell"),
-          d2(col("qe"), col("rce")).as("rd2"))
-        .withColumn("rn", row_number().over(wAsg))
-        .filter(col("rn") <= 2))
-      val asg = ranked.filter(col("rn") === 1)
-        .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-          col("nrm").as("cn"), col("rcell").as("cell"))
-      val qp = ranked.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-          col("nrm").as("qn"), col("rcell").as("probe"))
-      cosineTopK(qp, asg, 3, Some(col("probe") === col("cell")))
+          d2(col("qe"), col("rce")).as("rd2")), "rcell", "rd2")
     },
 
     // ---- IVF serve at the √n PRODUCTION geometry --------------------
@@ -3667,28 +3604,18 @@ object Vectors {
     // SAME integer formula reproducing the geom table's 4√n row at
     // the 64× octave (1,439 cells, 178 cand/query, 0.043 recall).
     sql("sim_ivf_sqrtn", {
-      s"""WITH e AS (SELECT vec_id,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |           FROM embeddings),
-         |${scaledLloydCentCtesAt("n // (4 * CAST(ceil(sqrt(n)) AS BIGINT))")},
-         |${superLayerCtes("cl", "cent")},
-         |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
-         |cand AS (SELECT e.vec_id AS c_id, e.qe AS ce2, dd.cid AS cell
-         |         FROM e JOIN dd ON dd.vec_id = e.vec_id AND dd.rn = 1),
+      s"""WITH ${D.ivf(D.microRel(), D.sqrtnPc)},
+         |${D.cellCand()},
          |probes AS (SELECT e.vec_id AS q_id, e.qe AS qq, dd.cid AS pcell
          |           FROM e JOIN dd ON dd.vec_id = e.vec_id AND dd.rn <= 2
          |           WHERE e.vec_id < 20),
-         |p AS (SELECT q.q_id, c.c_id,
-         |             CAST(list_sum(list_transform(range(1, 65),
-         |               j -> (q.qq[j] - c.ce2[j]) * (q.qq[j] - c.ce2[j]))) AS BIGINT) AS d2
+         |p AS (SELECT q.q_id, c.c_id, ${D.sqdInt("q.qq", "c.ce2")} AS d2
          |      FROM probes q JOIN cand c
          |        ON c.cell = q.pcell AND c.c_id <> q.q_id)
          |${topKSql("p", 3, "d2, c_id", "d2", "d2")}""".stripMargin
     }) { (s, d) =>
       val e0 = eagerCache(microVecs(s, d))
-      val n = e0.count()
-      val perCell = math.max(1L,
-        n / (4L * math.ceil(math.sqrt(n.toDouble)).toLong))
+      val perCell = sqrtnPerCell(e0.count())
       // the √n-geometry quantizer is STAGED per (corpus, perCell) —
       // r18: this key previously retrained its Lloyd centroids every
       // call (the anchor's heaviest key); now training runs once
@@ -3698,9 +3625,7 @@ object Vectors {
       val ranked = eagerCache(coarseRanked(e0,
         s.read.parquet(s"$centDir/centroids"),
         layer = Some(dirLayer(s, centDir))))
-      val cand = e0.join(ranked.filter(col("rn") === 1)
-          .select(col("vec_id"), col("cid").as("cell")), Seq("vec_id"))
-        .select(col("vec_id").as("c_id"), col("qe").as("ce2"), col("cell"))
+      val cand = cellCand(e0, ranked)
       val probes = e0.filter(col("vec_id") < 20)
         .join(ranked.filter(col("vec_id") < 20)
           .select(col("vec_id"), col("cid").as("pcell")), Seq("vec_id"))
@@ -3738,7 +3663,7 @@ object Vectors {
       b.count() // eager cache fill
       val a2 = b.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
         col("nrm").as("nb"), col("bkt").as("bkt2"))
-      val cos = dot(col("embedding"), col("eb")) / (col("nrm") * col("nb"))
+      val cos = cosine(col("embedding"), col("eb"), col("nrm"), col("nb"))
       b.join(a2, col("bkt") === col("bkt2") && col("vec_id") < col("vec_b"))
         .filter(cos >= 0.999)
         .select(col("vec_id").as("vec_a"), col("vec_b"), pr6(cos).as("cosine"))
@@ -3771,17 +3696,13 @@ object Vectors {
       val cids = ivfCentroidIds.mkString("(", ", ", ")")
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 10000, embedding FROM embeddings),
-         |e AS (SELECT vec_id, embedding, ${D.norm("embedding")} AS nrm,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |      FROM corpus),
+         |${D.microRel(extra = s"embedding, ${D.norm("embedding")} AS nrm, ", from = "corpus")},
          |cent AS (SELECT vec_id AS cid, qe AS ce FROM e WHERE vec_id IN $cids),
          |asg AS (SELECT vec_id, embedding, nrm, cell, d2c FROM
          |          (SELECT e.vec_id, e.embedding, e.nrm, c.cid AS cell,
-         |                  list_sum(list_transform(range(1, ${dim + 1}),
-         |                    j -> (qe[j] - ce[j]) * (qe[j] - ce[j]))) AS d2c,
+         |                  ${D.sqd("qe", "ce")} AS d2c,
          |                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |                    list_sum(list_transform(range(1, ${dim + 1}),
-         |                      j -> (qe[j] - ce[j]) * (qe[j] - ce[j]))), c.cid) AS rn
+         |                    ${D.sqd("qe", "ce")}, c.cid) AS rn
          |           FROM e, cent c) t
          |        WHERE rn = 1),
          |pairs AS (SELECT a.vec_id, count(*)::BIGINT AS dup_cnt,
@@ -3809,7 +3730,7 @@ object Vectors {
           col("best.cid").as("cell"), col("best.d2").as("d2c")))
       val b = asg.select(col("vec_id").as("vid2"), col("embedding").as("e2"),
         col("nrm").as("n2"), col("cell").as("cell2"), col("d2c").as("d2c2"))
-      val cos = dot(col("embedding"), col("e2")) / (col("nrm") * col("n2"))
+      val cos = cosine(col("embedding"), col("e2"), col("nrm"), col("n2"))
       val pairs = asg.join(b, col("cell") === col("cell2") && col("vec_id") =!= col("vid2"))
         .filter(cos >= 0.999)
         .groupBy(col("vec_id"))
@@ -3845,17 +3766,13 @@ object Vectors {
     // SemDeDup itself.
     sql("embed_outliers", {
       val cids = ivfCentroidIds.mkString("(", ", ", ")")
-      s"""WITH e AS (SELECT vec_id,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |           FROM embeddings),
+      s"""WITH ${D.microRel()},
          |cent AS (SELECT vec_id AS cid, qe AS ce FROM e WHERE vec_id IN $cids),
          |asg AS (SELECT vec_id, cell, CAST(d2c AS BIGINT) AS d2c FROM
          |          (SELECT e.vec_id, c.cid AS cell,
-         |                  list_sum(list_transform(range(1, ${dim + 1}),
-         |                    j -> (qe[j] - ce[j]) * (qe[j] - ce[j]))) AS d2c,
+         |                  ${D.sqd("qe", "ce")} AS d2c,
          |                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |                    list_sum(list_transform(range(1, ${dim + 1}),
-         |                      j -> (qe[j] - ce[j]) * (qe[j] - ce[j]))), c.cid) AS rn
+         |                    ${D.sqd("qe", "ce")}, c.cid) AS rn
          |           FROM e, cent c) t
          |        WHERE rn = 1),
          |st AS (SELECT cell, count(*) AS n_cell, sum(d2c) AS s_d2c
@@ -4037,10 +3954,8 @@ object Vectors {
     // repeat no-ops) — spec-asserted equal to this logical serve.
     sql("sim_ivf_pq_deletes", ivfPqResidualOracle(
         extraAdistPred = " AND enc.vec_id % 17 <> 3")) { (s, d) =>
-      val ts = microVecs(s, d).filter(col("vec_id") % 17 === 3)
-        .select(col("vec_id").as("c_id"))
       val idx = stagedIvfPqResIndex(s, d)
-      resIndexServe(s, d, s"$idx/lists", idx, tombstones = Some(ts))
+      resIndexServe(s, d, s"$idx/lists", idx, tombstones = Some(tombstones(microVecs(s, d))))
     },
 
     // ---- the one-call production serve (capstone composition) ----------
@@ -4057,10 +3972,9 @@ object Vectors {
     // refine tail — so the composition cannot drift from the parts.
     sql("sim_ivf_pq_serve", ivfPqResidualOracle(
         extraAdistPred = " AND enc.vec_id % 17 <> 3", rerank = true)) { (s, d) =>
-      val ts = microVecs(s, d).filter(col("vec_id") % 17 === 3)
-        .select(col("vec_id").as("c_id"))
       val idx = stagedIvfPqResIndex(s, d)
-      val adist = resIndexAdist(s, d, s"$idx/lists", idx, tombstones = Some(ts))
+      val adist = resIndexAdist(s, d, s"$idx/lists", idx,
+        tombstones = Some(tombstones(microVecs(s, d))))
       exactRerank(s, d, adist)
     },
 
@@ -4116,21 +4030,16 @@ object Vectors {
     // query-sized, never corpus-sized. At 100 TB the shortlist would
     // come from the IVFPQ serve instead (same downstream shape).
     sql("sim_mmr",
-      """WITH e AS (SELECT vec_id,
-        |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-        |           FROM embeddings),
+      s"""WITH ${D.microRel()},
         |cand AS (SELECT * FROM (
         |    SELECT q.vec_id AS q_id, c.vec_id AS c_id, c.qe AS ce,
-        |           CAST(list_sum(list_transform(range(1, 65),
-        |             j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))) AS BIGINT) AS d2q,
+        |           ${D.sqdInt("q.qe", "c.qe")} AS d2q,
         |           row_number() OVER (PARTITION BY q.vec_id
-        |             ORDER BY list_sum(list_transform(range(1, 65),
-        |               j -> (q.qe[j] - c.qe[j]) * (q.qe[j] - c.qe[j]))), c.vec_id) AS rn
+        |             ORDER BY ${D.sqd("q.qe", "c.qe")}, c.vec_id) AS rn
         |    FROM e q JOIN e c ON q.vec_id < 20 AND c.vec_id <> q.vec_id) t
         |  WHERE rn <= 8),
         |pd AS (SELECT a.q_id, a.c_id AS a_id, b.c_id AS b_id,
-        |              CAST(list_sum(list_transform(range(1, 65),
-        |                j -> (a.ce[j] - b.ce[j]) * (a.ce[j] - b.ce[j]))) AS BIGINT) AS d2ab
+        |              ${D.sqdInt("a.ce", "b.ce")} AS d2ab
         |       FROM cand a JOIN cand b ON a.q_id = b.q_id AND a.c_id <> b.c_id),
         |p1 AS (SELECT q_id, c_id, d2q FROM cand WHERE rn = 1),
         |s2 AS (SELECT c.q_id, c.c_id, c.d2q, pd.d2ab - c.d2q AS score,
@@ -4168,13 +4077,10 @@ object Vectors {
     // sim_topk scan shape. At 100 TB the candidate stage rides the
     // IVF route (probe cells, then the label filter) unchanged.
     sql("mine_hard_negatives",
-      s"""WITH e AS (SELECT vec_id, label,
-        |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-        |           FROM embeddings),
+      s"""WITH ${D.microRel(extra = "label, ")},
         |p AS (SELECT a.vec_id AS a_id, a.label AS a_label,
         |             c.vec_id AS neg_id, c.label AS neg_label,
-        |             CAST(list_sum(list_transform(range(1, 65),
-        |               j -> (a.qe[j] - c.qe[j]) * (a.qe[j] - c.qe[j]))) AS BIGINT) AS d2
+        |             ${D.sqdInt("a.qe", "c.qe")} AS d2
         |      FROM e a JOIN e c ON a.vec_id < 20 AND c.label <> a.label)
         |${topKSql("p", 3, "d2, neg_id", "d2", "d2",
             ids = "a_id, a_label, neg_id, neg_label", part = "a_id")}""".stripMargin) { (s, d) =>
@@ -4230,7 +4136,7 @@ object Vectors {
     // (≥ min(nprobe, cells) probed cells) is what makes the plan
     // structurally identical on any corpus, not just this fixture.
     sql("sim_ivf_filtered_probe8", {
-      s"""WITH ${filteredIvfCtesW("label", 10, 8)}
+      s"""WITH ${filteredIvfCtes("label", 10, 8)}
          |${topKSql("p", 3, "d2, c_id", "d2", "d2", ids = "q_id, c_id, c_label")}""".stripMargin
     }) { (s, d) =>
       filteredTop3(microVecsL(s, d), nprobe = 8,
@@ -4259,14 +4165,11 @@ object Vectors {
     // whose oracle twin it equals in each regime.
     sql("sim_ivf_filtered_adaptive", {
       s"""WITH ${filteredIvfCtes("CAST(vec_id % 10 AS INT)", 10)},
-         |e2 AS (SELECT vec_id, CAST(vec_id % 200 AS INT) AS label,
-         |         list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |       FROM embeddings),
+         |${D.microRel("e2", "CAST(vec_id % 200 AS INT) AS label, ")},
          |q2 AS (SELECT vec_id AS q_id, label AS q_label, qe AS qq FROM e2
          |       WHERE vec_id < 20),
          |p2 AS (SELECT q.q_id, c.vec_id AS c_id, c.label AS c_label,
-         |              CAST(list_sum(list_transform(range(1, 65),
-         |                j -> (q.qq[j] - c.qe[j]) * (q.qq[j] - c.qe[j]))) AS BIGINT) AS d2
+         |              ${D.sqdInt("q.qq", "c.qe")} AS d2
          |       FROM q2 q JOIN e2 c
          |         ON c.label = (q.q_label + 1) % 200 AND c.vec_id <> q.q_id)
          |SELECT * FROM (
@@ -4316,25 +4219,16 @@ object Vectors {
     // formula, not just the neighbors). The probe8 key stays as the
     // fixed-width pin.
     sql("sim_ivf_filtered_perq", {
-      s"""WITH e AS (SELECT vec_id, ${tierLabelDuck("vec_id")} AS label,
-         |             list_transform(embedding, x -> floor(x::DOUBLE * 1000000 + 0.5)) AS qe
-         |           FROM embeddings),
-         |${scaledLloydCentCtesAt("n // (4 * CAST(ceil(sqrt(n)) AS BIGINT))")},
-         |${superLayerCtes("cl", "cent")},
-         |${twoLevelRankCtes("cl", "e", "vec_id", "qe", "dd")},
+      s"""WITH ${D.ivf(D.microRel(extra = s"${tierLabelDuck("vec_id")} AS label, "), D.sqrtnPc)},
          |$widthRouteCtes,
-         |cand AS (SELECT e.vec_id AS c_id, e.label AS c_label, e.qe AS ce2, dd.cid AS cell
-         |         FROM e JOIN dd ON dd.vec_id = e.vec_id AND dd.rn = 1),
-         |pi AS (SELECT q.q_id, q.w, c.c_id, c.c_label,
-         |              CAST(list_sum(list_transform(range(1, 65),
-         |                j -> (q.qq[j] - c.ce2[j]) * (q.qq[j] - c.ce2[j]))) AS BIGINT) AS d2
+         |${D.cellCand("e.label AS c_label, ")},
+         |pi AS (SELECT q.q_id, q.w, c.c_id, c.c_label, ${D.sqdInt("q.qq", "c.ce2")} AS d2
          |       FROM qr q JOIN dq ON dq.vec_id = q.q_id AND dq.rn <= q.w
          |            JOIN cand c ON c.cell = dq.cid AND c.c_label = q.w_label
          |                       AND c.c_id <> q.q_id
          |       WHERE q.route = 'ivf'),
          |pe AS (SELECT q.q_id, q.w, c.vec_id AS c_id, c.label AS c_label,
-         |              CAST(list_sum(list_transform(range(1, 65),
-         |                j -> (q.qq[j] - c.qe[j]) * (q.qq[j] - c.qe[j]))) AS BIGINT) AS d2
+         |              ${D.sqdInt("q.qq", "c.qe")} AS d2
          |       FROM qr q JOIN e c ON c.label = q.w_label AND c.vec_id <> q.q_id
          |       WHERE q.route = 'exact')
          |${routeUnionSql("q_id, w, c_id, c_label")}""".stripMargin
@@ -4382,7 +4276,7 @@ object Vectors {
         col("embedding").as("ee"), norm(col("embedding")).as("en"))
       val tr = corpus.select(col("vec_id"), col("embedding"),
         norm(col("embedding")).as("nrm"))
-      val cos = dot(col("embedding"), col("ee")) / (col("nrm") * col("en"))
+      val cos = cosine(col("embedding"), col("ee"), col("nrm"), col("en"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("cos").desc, col("eval_id"))
       tr.join(broadcast(ev))
@@ -4450,12 +4344,12 @@ object Vectors {
          |              * (embedding[i]::DOUBLE - qv[i] / scale)))) * 1000000 + 0.5) / 1000000 AS recon_err
          |FROM q ORDER BY vec_id""".stripMargin) { (s, d) =>
       val mx = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-      val scale = lit(127.0) / col("mx")
+      // a zero vector has no scale: NULL, as DuckDB's 127.0 / 0 is
+      val scale = lit(127.0) / when(col("mx") =!= 0, col("mx"))
       emb(s, d)
         .select(col("vec_id"), col("embedding"), mx.as("mx"))
         .select(col("vec_id"), col("embedding"), col("mx"), scale.as("scale"),
-          transform(col("embedding"),
-            x => floor(x.cast("double") * (lit(127.0) / col("mx")) + 0.5)).as("qv"))
+          transform(col("embedding"), x => floor(x.cast("double") * scale + 0.5)).as("qv"))
         .select(col("vec_id"),
           array_max(col("qv")).cast("bigint").as("qmax"),
           array_min(col("qv")).cast("bigint").as("qmin"),
@@ -4577,7 +4471,7 @@ object Vectors {
     // non-default index geometry verified by the oracle, which mirrors
     // the integer sizing formula exactly.
     sql("knn_graph_scaled", {
-      s"""WITH $knnEdgeCtesScaled
+      s"""WITH ${knnEdgeCtesOver(knnScaledCentCte, twoLevel = true)}
          |SELECT t.a_id, t.b_id, t.rnk,
          |       floor(t.cos * 1000000 + 0.5) / 1000000 AS cosine,
          |       (r.a_id IS NOT NULL) AS mutual

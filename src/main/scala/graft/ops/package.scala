@@ -373,14 +373,49 @@ package object ops {
     path
   }
 
+  /** `<scratchRoot>/<name>_<pid>`, purged at JVM exit; the first call
+    * per root also runs [[sweepDeadRuns]].
+    */
+  def pidScopedDir(spark: SparkSession, name: String): String = {
+    val root = scratchRoot(spark)
+    sweepDeadRuns(spark, root)
+    purgeOnExit(s"$root/${name}_${ProcessHandle.current().pid()}")
+  }
+
   /** A fresh directory for one run of a staging or streaming operator:
     * `<scratchRoot>/<name>_<pid>/<uuid>`. The pid-scoped parent is
     * purged at JVM exit, and the uuid keeps concurrent and repeated
     * runs in one JVM apart.
     */
   def scratchRunDir(spark: SparkSession, name: String): String =
-    purgeOnExit(s"${scratchRoot(spark)}/${name}_${ProcessHandle.current().pid()}") +
-      s"/${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    pidScopedDir(spark, name) + s"/${java.util.UUID.randomUUID.toString.replace("-", "")}"
+
+  private val sweptRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val PidScoped = """[^_].*_(\d{1,18})""".r
+
+  /** Reclaim what dead JVMs left under a local scratch `root` (a
+    * killed JVM runs no exit hook): each `<name>_<pid>` directory whose
+    * pid has no live process — no `__` in the name, which every staged
+    * artifact over an absolute path has — and each artifact keyed on a
+    * source under one, present or not. Once per root and JVM; remote
+    * stores are skipped, as a pid names a process on one host only.
+    */
+  private[graft] def sweepDeadRuns(spark: SparkSession, root: String): Unit =
+    if (sweptRoots.add(root)) {
+      val (fs, hp) = hfs(spark, root)
+      if (fs.getUri.getScheme == "file") {
+        // the first `_<digits>` after the root in an artifact's
+        // embedded source path: the pid of the run dir it sits under
+        val KeyedOn = (java.util.regex.Pattern.quote(root.replaceAll("[^A-Za-z0-9.]", "_")) +
+          """_[A-Za-z0-9._]*?_(\d{1,18})(?:_|$)""").r.unanchored
+        def dead(pid: String) = !ProcessHandle.of(pid.toLong).isPresent
+        hfsList(spark, root).map(_.getPath.getName).filter {
+          case n @ PidScoped(pid) if !n.contains("__") => dead(pid)
+          case n @ KeyedOn(pid) if n.contains("__") => dead(pid)
+          case _ => false
+        }.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(hp, n), true))
+      }
+    }
 
   /** Spread a small-file scan across the cluster before heavy per-row
     * compute. A sub-split-size parquet file arrives as ONE partition,

@@ -4,6 +4,28 @@ package graft.tools
   * and which module owns it. Run: sbt "runMain graft.tools.KeyInventory"
   */
 object KeyInventory {
+  /** What the keys answer on degenerate input, where no fixture row
+    * shows it.
+    */
+  private val degenerate =
+    """## Degenerate inputs
+      |
+      |- **Zero-norm embedding, cosine keys** (`sim_topk`, `sim_ann_lsh`,
+      |  `sim_ann_multiprobe`, `stream_embed_index`, `sim_ivf`,
+      |  `sim_ivf_refined`, `sim_ivf_probe2`, `sim_ivf_refined_probe2`,
+      |  `knn_graph`, `knn_graph_scaled`, the `graph_*` keys over its
+      |  edges, `dedup_embedding`, `dedup_semantic`,
+      |  `decontaminate_semantic`): the cosine of a zero vector with any
+      |  vector is NULL, as DuckDB's x/0 is. A NULL cosine ranks after
+      |  every number under `cos DESC`, so a zero query's top-k are its
+      |  first k candidates by id with NULL cosines, and it fails every
+      |  `cos >= t` test, so a zero vector is never a near-duplicate or a
+      |  contamination hit. A NaN component scores NaN, which ranks
+      |  first. `embed_quantize` gives a zero vector no int8 scale: its
+      |  `qmax`, `qmin` and `recon_err` are NULL (127.0 / 0 is NULL in
+      |  DuckDB). The micro-unit L2 keys treat a zero vector as the origin.
+      |""".stripMargin
+
   def main(args: Array[String]): Unit = {
     val mods: Seq[(String, Seq[graft.ops.QueryDef])] = Seq(
       "Relational (§2B SQL verb surface)" -> graft.ops.Relational.defs,
@@ -35,6 +57,7 @@ object KeyInventory {
       }
       sb ++= "\n"
     }
+    sb ++= degenerate
     java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/KEYS.md"), sb.toString)
     println(s"KEYS.md written: $total keys, $oracled oracled")
   }

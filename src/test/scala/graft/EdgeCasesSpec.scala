@@ -450,4 +450,28 @@ class EdgeCasesSpec extends SparkSpec {
     before.unpersist()
     ()
   }
+
+  test("sweepDeadRuns: a dead JVM's pid dirs and the artifacts keyed on them go; live ones stay") {
+    import graft.ops.{hfsList, sweepDeadRuns}
+    val root = java.nio.file.Files.createTempDirectory("sweep").toString
+    try {
+      val live = ProcessHandle.current().pid()
+      // above any pid_max (at most 2^22 on Linux): no live process
+      val dead = 99999999L
+      def key(p: String) = p.replaceAll("[^A-Za-z0-9.]", "_")
+      val planted = Seq(s"edge_x_$dead", s"edge_x_$live",
+        s"cc_index_${key(s"$root/edge_x_$dead")}_documents.parquet",
+        s"cc_index_${key(s"$root/edge_x_$live")}_documents.parquet",
+        s"ivfpq_compact_${key(s"$root/ivfpq_stream_$dead")}_0123abcd",
+        "ivfcent_125__tmp_fixture_123_embeddings.parquet")
+      planted.foreach(n => java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(root, n, "g-1")))
+      sweepDeadRuns(spark, root)
+      val left = hfsList(spark, root).map(_.getPath.getName).toSet
+      // the compacted artifact goes although its run dir is gone
+      assert(left == Set(s"edge_x_$live",
+        s"cc_index_${key(s"$root/edge_x_$live")}_documents.parquet",
+        "ivfcent_125__tmp_fixture_123_embeddings.parquet"), s"left: $left")
+    } finally graft.ops.hfsDelete(spark, root)
+  }
 }

@@ -704,13 +704,15 @@ class VectorOpsSpec extends SparkSpec {
   test("knnEdgesOver: a NaN embedding's NaN cosines rank where the window form puts them") {
     // vec 5 carries a NaN component: every cosine against it is NaN,
     // which `cos DESC` ranks FIRST (NaN sorts above every number) —
-    // the oracle's order. (A zero-norm vector cannot stand in: ANSI
-    // mode fails its 0/0 cosine with DIVIDE_BY_ZERO.) One centroid
-    // puts every vector in one cell, so the window form is the plain
-    // all-pairs rank.
+    // the oracle's order. vec 7 is the zero vector: its cosines are
+    // NULL (0/0 — DuckDB's x/0 is NULL too), which `cos DESC` ranks
+    // LAST, except against vec 5, where the norm product is NaN. One
+    // centroid puts every vector in one cell, so the window form is
+    // the plain all-pairs rank.
     val e = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 60)
       .select(col("vec_id"), when(col("vec_id") === 5L,
           transform(col("embedding"), (x, i) => when(i === 0, lit(Float.NaN)).otherwise(x)))
+        .when(col("vec_id") === 7L, transform(col("embedding"), x => x * 0))
         .otherwise(col("embedding")).as("embedding"))
     val cent = e.filter(col("vec_id") === 0L)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -720,18 +722,39 @@ class VectorOpsSpec extends SparkSpec {
       sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
+    val nn = col("an") * col("bn")
     val want = n.select(col("vec_id").as("a_id"), col("embedding").as("ae"), col("nrm").as("an"))
       .join(n.select(col("vec_id").as("b_id"), col("embedding").as("be"), col("nrm").as("bn")),
         col("b_id") =!= col("a_id"))
       .select(col("a_id"), col("b_id"),
-        (dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
+        when(nn =!= 0, dot(col("ae"), col("be")) / nn).as("cos"))
       .withColumn("rnk", row_number().over(win).cast("bigint"))
       .filter(col("rnk") <= 3)
       .select("a_id", "b_id", "rnk", "cos")
     assert(got.filter(col("b_id") === 5L && col("rnk") === 1L).count() == 59,
       "the NaN-cosine neighbor must rank first for every other vector")
+    assert(got.filter(col("b_id") === 7L).count() == 0,
+      "a zero-norm neighbor's NULL cosines must rank last")
+    val zeroRow = got.filter(col("a_id") === 7L).orderBy("rnk")
+      .select("b_id", "cos").collect().map(r => (r.getLong(0), r.isNullAt(1))).toSeq
+    assert(zeroRow == Seq((5L, false), (0L, true), (1L, true)),
+      s"the zero vector's own edges: NaN first, then NULLs by id: $zeroRow")
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-      "knnEdgesOver disagrees with the window form on a zero-norm embedding")
+      "knnEdgesOver disagrees with the window form on NaN and zero-norm embeddings")
+    // the cosine scorer + cut of the float-vector search keys: a zero
+    // query's candidates all score NULL (kept, by c_id), and a zero
+    // candidate ranks below every finite cosine
+    val b = n.filter(col("vec_id") =!= 5L)
+    val top = graft.ops.Vectors.cosineTopK(
+      b.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"),
+        col("embedding").as("qe"), col("nrm").as("qn")),
+      b.select(col("vec_id").as("c_id"), col("embedding").as("ce"), col("nrm").as("cn")), 3)
+    val zq = top.filter(col("q_id") === 7L).select("c_id", "cosine").collect()
+      .map(r => (r.getLong(0), r.isNullAt(1))).toSeq
+    assert(zq == Seq((0L, true), (1L, true), (2L, true)), s"zero query: $zq")
+    assert(top.filter(col("q_id") =!= 7L && (col("c_id") === 7L || col("cosine").isNull))
+      .count() == 0, "a zero-norm candidate must never outrank a finite cosine")
+    assert(top.count() == 27)
   }
 
   test("topK: ties break on the id column, short groups keep every row, rnk is a bigint 1..n") {

@@ -2,6 +2,9 @@
 """Dev-loop twin of the driver's correctness gate: compare each
 Verify-dumped parquet against its DuckDB oracle on the same testdata.
 Usage: localcheck.py <sfDir> <verifyOutDir> [key ...]
+The summary counts only the keys compared (all oracle keys, or those
+named), how many passed and how many had no Verify output.
+Exit 1 if any compared key fails.
 """
 import duckdb, glob, json, sys
 import pandas as pd
@@ -14,12 +17,14 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
-fails = []
+fails, missing, compared = [], [], 0
 for name in sorted(oracle):
     if only and name not in only: continue
+    compared += 1
     files = glob.glob(f"{out}/{name}/*.parquet")
     if not files:
-        print(f"MISSING  {name} (no verify output)"); fails.append(name); continue
+        print(f"MISSING  {name} (no verify output)")
+        fails.append(name); missing.append(name); continue
     try:
         exp = con.sql(oracle[name]).df()
         act = con.sql(f"SELECT * FROM read_parquet({files!r})").df()
@@ -45,5 +50,9 @@ for name in sorted(oracle):
         print("  spark :", a2.iloc[i].to_dict())
         fails.append(name); continue
     print(f"PASS     {name} ({len(e2)} rows)")
-print(f"\n{len(oracle)-len(fails)}/{len(oracle)} pass; fails: {fails}")
+unknown = sorted(only - set(oracle))
+if unknown:
+    print(f"\nno oracle for: {unknown}")
+print(f"\n{compared - len(fails)}/{compared} pass, {len(missing)} missing "
+      f"(of {len(oracle)} oracle keys); fails: {fails}")
 sys.exit(1 if fails else 0)
